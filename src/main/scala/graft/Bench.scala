@@ -42,10 +42,14 @@ object Bench {
       "org.apache.spark.util.SparkStringUtils",
       org.apache.logging.log4j.Level.ERROR)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // parsed before the session starts: the artifact name below depends
+    // on it, and a bad value must not surface only after the whole run
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(v =>
+      v.toIntOption.filter(_ > 0).getOrElse(
+        sys.error(s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       // Let AQE re-optimize cached plans (off by default only to keep
       // cached output partitioning stable for RDD-level consumers,
@@ -371,7 +375,7 @@ object Bench {
     val hostCores = Runtime.getRuntime.availableProcessors
     val outPath =
       if (args.nonEmpty) "/tmp/BENCH_partial.json"
-      else if (cpus.toInt < hostCores) s"BENCH_full_c$cpus.json"
+      else if (cpus < hostCores) s"BENCH_full_c$cpus.json"
       else "BENCH_full.json"
     try {
       java.nio.file.Files.write(

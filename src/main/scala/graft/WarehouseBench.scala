@@ -187,13 +187,14 @@ object WarehouseBench {
     // CacheManager warning) — same plans, same data, zero benefit
     val sources = graft.models.Loader.loadAll(spark, batch)
     val timings = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
+    val write = Warehouse.writeThenRead(spark, out)
     val wh = new Warehouse(sources,
       (name, df) => {
-        df.write.mode("overwrite").parquet(s"$out/$name")
+        val table = write(name, df)
         val now = System.nanoTime()
         timings += name -> (now - last) / 1e9
         last = now
-        spark.read.parquet(s"$out/$name")
+        table
       })
     wh.all.foreach(_ => ())
     val buildSec = (System.nanoTime() - t0) / 1e9

@@ -1,30 +1,42 @@
 package graft.models
 
+import java.util.concurrent.{Executors, TimeUnit}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import org.apache.spark.sql.functions.col
+import scala.collection.mutable
 
-/** Explicit-dependency DAG runner — the dbt-scheduler analog
-  * (20 threads in the reference build, README.md:215): independent
-  * branches (e.g. the FINWIRE/company spine vs the trade spine vs the
-  * CRM spine) materialize concurrently, with Spark's scheduler
-  * interleaving their jobs across the executor slots.
+/** The TPC-DI warehouse DAG, declared once: 17 bronze, 14 silver and 13
+  * gold models, mirroring the reference's dbt project
+  * (dbt_project.yml:29-50) — each [[Node]] is a model, its `deps` are
+  * dbt's `ref()` edges and its `fn` is the model's SQL. The ephemeral
+  * work model (wrk_company_financials) is inlined into its one
+  * consumer, like the reference.
   *
-  * Nodes mirror `Warehouse`'s lazy vals 1:1 but take their inputs from
-  * the materialized outputs of their dependencies, so each model still
-  * computes exactly once and the parallelism is driver-side job
-  * submission only — no recomputation, no shared-lazy-val lock (Scala
-  * lazy vals hold the object monitor during initialization, which would
-  * serialize a naive parallel force).
+  * Two schedulers evaluate this one table:
+  *  - [[Warehouse]]: serial, memoised per instance, forced in declared
+  *    order (which is topological) — the composable, lazily planned form
+  *    that the incremental batch apply and the query gates build on;
+  *  - [[runParallel]]: the dbt-scheduler analog (20 threads in the
+  *    reference build, README.md:215) — independent branches (the
+  *    FINWIRE/company spine, the trade spine, the CRM spine) materialize
+  *    concurrently, with Spark's scheduler interleaving their jobs across
+  *    the executor slots.
   */
 object Dag {
 
+  /** One model. Bronze models read no model: `source` names the loader
+    * table they scan.
+    */
   final case class Node(name: String, deps: Seq[String],
-                        fn: Map[String, DataFrame] => DataFrame)
+                        fn: Map[String, DataFrame] => DataFrame,
+                        source: Option[String] = None)
 
-  /** The 44 materialized models (work model stays ephemeral/inlined). */
+  /** The 44 materialized models in dependency order (bronze → silver →
+    * gold; observed build order README.md:216-305).
+    */
   def nodes(sources: Map[String, DataFrame]): Seq[Node] = {
-    def src(model: String, key: String) = Node(model, Nil, _ => sources(key))
+    def src(model: String, key: String, typed: DataFrame => DataFrame = identity) =
+      Node(model, Nil, _ => typed(sources(key)), Some(key))
     Seq(
       src("brokerage_cash_transaction", "cash_transaction"),
       src("brokerage_daily_market", "daily_market"),
@@ -34,11 +46,12 @@ object Dag {
       src("brokerage_watch_history", "watch_history"),
       src("crm_customer_mgmt", "customer_mgmt"),
       src("finwire_company", "cmp"),
-      Node("finwire_financial", Nil, _ => Finwire.finTyped(sources("fin"))),
-      Node("finwire_security", Nil, _ => Finwire.secTyped(sources("sec"))),
+      // bronze finwire typing (finwire_financial.sql / finwire_security.sql)
+      src("finwire_financial", "fin", Finwire.finTyped),
+      src("finwire_security", "sec", Finwire.secTyped),
       src("hr_employee", "hr"),
-      Node("reference_date", Nil, _ => sources("date")
-        .withColumn("sk_date_id", org.apache.spark.sql.functions.col("date_value"))),
+      // reference_date.sql:1-20 — SK_DATE_ID replaced by the date value
+      src("reference_date", "date", _.withColumn("sk_date_id", col("date_value"))),
       src("reference_industry", "industry"),
       src("reference_status_type", "status_type"),
       src("reference_tax_rate", "tax_rate"),
@@ -106,73 +119,77 @@ object Dag {
   /** Source table key → the bronze model that scans it (the roots a
     * source delta dirties in the DAG).
     */
-  val sourceModel: Map[String, String] = Map(
-    "cash_transaction" -> "brokerage_cash_transaction",
-    "daily_market" -> "brokerage_daily_market",
-    "holding_history" -> "brokerage_holding_history",
-    "trade" -> "brokerage_trade",
-    "trade_history" -> "brokerage_trade_history",
-    "watch_history" -> "brokerage_watch_history",
-    "customer_mgmt" -> "crm_customer_mgmt",
-    "cmp" -> "finwire_company",
-    "fin" -> "finwire_financial",
-    "sec" -> "finwire_security",
-    "hr" -> "hr_employee",
-    "date" -> "reference_date",
-    "industry" -> "reference_industry",
-    "status_type" -> "reference_status_type",
-    "tax_rate" -> "reference_tax_rate",
-    "trade_type" -> "reference_trade_type",
-    "prospect" -> "syndicated_prospect")
+  val sourceModel: Map[String, String] =
+    nodes(Map.empty).flatMap(n => n.source.map(_ -> n.name)).toMap
 
   /** Models transitively downstream of `roots` (inclusive) — structural
-    * only, no DataFrames touched. This is what lets an incremental
-    * batch apply skip every model whose upstream closure the delta
-    * can't reach ([[Warehouse.applyBatch2]]).
+    * only, no DataFrames touched. One pass suffices because declared
+    * order is topological. This is what lets an incremental batch apply
+    * skip every model whose upstream closure the delta can't reach
+    * ([[Warehouse.applyBatch2]]).
     */
-  def downstream(roots: Set[String]): Set[String] = {
-    val ns = nodes(Map.empty)
-    var affected = roots
-    var changed = true
-    while (changed) {
-      changed = false
-      ns.foreach { n =>
-        if (!affected(n.name) && n.deps.exists(affected)) {
-          affected += n.name; changed = true
-        }
-      }
+  def downstream(roots: Set[String]): Set[String] =
+    nodes(Map.empty).foldLeft(roots) { (affected, n) =>
+      if (n.deps.exists(affected)) affected + n.name else affected
     }
-    affected
-  }
 
   /** Materialize the whole DAG with `parallelism` concurrent model
-    * builds. Returns per-model wall seconds (overlapping).
+    * builds, each through [[Warehouse.writeThenRead]], so every model
+    * computes exactly once and downstream models scan its table. Returns
+    * per-model wall seconds (overlapping).
+    *
+    * A model starts once all its dependencies are written. When one
+    * fails, no further model starts; the call waits for the builds
+    * already running, then throws the first failure, naming its model.
     */
   def runParallel(spark: SparkSession, sources: Map[String, DataFrame],
                   outDir: String, parallelism: Int = 8): Map[String, Double] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val ns = nodes(sources)
-    val futures = scala.collection.mutable.Map.empty[String, Future[DataFrame]]
-    val timings = new java.util.concurrent.ConcurrentHashMap[String, Double]()
+    val write = Warehouse.writeThenRead(spark, outDir)
+    val dependents = ns.flatMap(n => n.deps.map(_ -> n)).groupMap(_._1)(_._2)
+    val waitingOn = mutable.Map.from(ns.map(n => n.name -> n.deps.size))
+    val built = mutable.Map.empty[String, DataFrame]
+    val wall = mutable.Map.empty[String, Double]
+    var running = 0
+    var failure: Option[Throwable] = None
+    val lock = new Object
+    val pool = Executors.newFixedThreadPool(parallelism)
 
-    def futureOf(n: Node): Future[DataFrame] = synchronized {
-      futures.getOrElseUpdate(n.name, {
-        val depF = Future.sequence(
-          n.deps.map(dn => futureOf(ns.find(_.name == dn).get)))
-        depF.map { depDfs =>
-          val t0 = System.nanoTime()
-          val df = n.fn(n.deps.zip(depDfs).toMap)
-          df.write.mode("overwrite").parquet(s"$outDir/${n.name}")
-          timings.put(n.name, (System.nanoTime() - t0) / 1e9)
-          spark.read.parquet(s"$outDir/${n.name}")
+    // callers hold `lock`
+    def start(n: Node): Unit = { running += 1; pool.execute(() => build(n)) }
+
+    def build(n: Node): Unit = {
+      val inputs = lock.synchronized(
+        if (failure.isEmpty) Some(n.deps.map(d => d -> built(d)).toMap) else None)
+      val t0 = System.nanoTime()
+      val result = inputs.map(in =>
+        try Right(write(n.name, n.fn(in))) catch { case e: Throwable => Left(e) })
+      lock.synchronized {
+        running -= 1
+        result.foreach {
+          case Right(df) =>
+            built(n.name) = df
+            wall(n.name) = (System.nanoTime() - t0) / 1e9
+            if (failure.isEmpty) dependents.getOrElse(n.name, Nil).foreach { d =>
+              waitingOn(d.name) -= 1
+              if (waitingOn(d.name) == 0) start(d)
+            }
+          case Left(e) =>
+            if (failure.isEmpty)
+              failure = Some(new RuntimeException(s"warehouse model ${n.name} failed", e))
         }
-      })
+        lock.notifyAll()
+      }
     }
-    try {
-      Await.result(Future.sequence(ns.map(futureOf)), Duration.Inf)
-      import scala.jdk.CollectionConverters._
-      timings.asScala.toMap
-    } finally pool.shutdown()
+
+    try lock.synchronized {
+      ns.filter(_.deps.isEmpty).foreach(start)
+      while (running > 0) lock.wait()
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
+    failure.foreach(e => throw e)
+    wall.toMap
   }
 }

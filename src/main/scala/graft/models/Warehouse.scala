@@ -3,21 +3,27 @@ package graft.models
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The full TPC-DI warehouse DAG (17 bronze + 14 silver + 13 gold models
-  * + 1 ephemeral work model), mirroring the reference's dbt project
-  * (dbt_project.yml:29-50). Each model is a lazy val — the DAG is the
-  * Scala evaluation order, memoized per Warehouse instance; Spark keeps
-  * everything lazy until a sink materializes it (the Dynamic Table
-  * refresh semantics reduce to batch recompute in dependency order,
-  * SURVEY §2.9).
+/** The TPC-DI warehouse as one memoised evaluation of the [[Dag]]
+  * table: `wh("fact_trade")` builds a model from its dependencies' frames,
+  * at most once per Warehouse instance (one lazy cell per model, so
+  * concurrent callers share it). Spark keeps everything lazy until a
+  * sink materializes it (the Dynamic Table refresh semantics reduce to
+  * batch recompute in dependency order, SURVEY §2.9); [[all]] forces the
+  * models in declared order — the serial scheduler beside
+  * [[Dag.runParallel]].
   *
-  * `mat` is the materialization hook, applied to every model as its
-  * lazy val is first evaluated. Default = identity (fully lazy, for
-  * composition). `Warehouse.build` passes write-then-reread, which is
-  * dbt's semantics: each model computes ONCE and downstream models scan
-  * its table — without it, every gold fact re-derives its whole
-  * upstream from the raw files (measured 2× the total build time on
+  * `mat` is the materialization hook, applied to every model as it is
+  * first evaluated. Default = identity (fully lazy, for composition).
+  * `Warehouse.build` passes [[Warehouse.writeThenRead]], which is dbt's
+  * semantics: each model computes ONCE and downstream models scan its
+  * table — without it, every gold fact re-derives its whole upstream
+  * from the raw files (measured 2× the total build time on
   * fact_holdings alone at 500k trades).
+  *
+  * `overrides` replaces a model wholesale (its upstream plan is never
+  * built, and `mat` never sees it) — how [[Warehouse.applyBatch2]] makes
+  * DOWNSTREAM models read the incrementally-merged dims instead of
+  * re-deriving full rebuilds.
   *
   * @param sources the 17 loader tables (Loader.loadAll or test fixtures)
   * @param mat     materialization hook (name, plan) => DataFrame seen
@@ -27,124 +33,29 @@ final class Warehouse(val sources: Map[String, DataFrame],
                       mat: (String, DataFrame) => DataFrame = (_, df) => df,
                       overrides: Map[String, DataFrame] = Map.empty) {
 
-  /** `overrides` replaces a model wholesale (its upstream plan is never
-    * built) — how [[Warehouse.applyBatch2]] makes DOWNSTREAM models read
-    * the incrementally-merged dims instead of re-deriving full rebuilds.
-    */
-  private def m(name: String)(df: => DataFrame): DataFrame =
-    overrides.getOrElse(name, mat(name, df))
+  private final class Cell(f: => DataFrame) { lazy val df: DataFrame = f }
 
-  // ---- bronze (models/bronze/, pass-throughs + typing) -----------------
-  lazy val brokerageCashTransaction: DataFrame = m("brokerage_cash_transaction")(sources("cash_transaction"))
-  lazy val brokerageDailyMarket: DataFrame = m("brokerage_daily_market")(sources("daily_market"))
-  lazy val brokerageHoldingHistory: DataFrame = m("brokerage_holding_history")(sources("holding_history"))
-  lazy val brokerageTrade: DataFrame = m("brokerage_trade")(sources("trade"))
-  lazy val brokerageTradeHistory: DataFrame = m("brokerage_trade_history")(sources("trade_history"))
-  lazy val brokerageWatchHistory: DataFrame = m("brokerage_watch_history")(sources("watch_history"))
-  lazy val crmCustomerMgmt: DataFrame = m("crm_customer_mgmt")(sources("customer_mgmt"))
-  lazy val finwireCompany: DataFrame = m("finwire_company")(sources("cmp"))
-  /** bronze finwire typing (finwire_financial.sql / finwire_security.sql) */
-  lazy val finwireFinancial: DataFrame = m("finwire_financial")(Finwire.finTyped(sources("fin")))
-  lazy val finwireSecurity: DataFrame = m("finwire_security")(Finwire.secTyped(sources("sec")))
-  lazy val hrEmployee: DataFrame = m("hr_employee")(sources("hr"))
-  /** reference_date.sql:1-20 — SK_DATE_ID replaced by the date value. */
-  lazy val referenceDate: DataFrame = m("reference_date")(sources("date").withColumn("sk_date_id", col("date_value")))
-  lazy val referenceIndustry: DataFrame = m("reference_industry")(sources("industry"))
-  lazy val referenceStatusType: DataFrame = m("reference_status_type")(sources("status_type"))
-  lazy val referenceTaxRate: DataFrame = m("reference_tax_rate")(sources("tax_rate"))
-  lazy val referenceTradeType: DataFrame = m("reference_trade_type")(sources("trade_type"))
-  lazy val syndicatedProspect: DataFrame = m("syndicated_prospect")(sources("prospect"))
+  private val nodes = Dag.nodes(sources)
+  private val cells: Map[String, Cell] = nodes.map { n =>
+    n.name -> new Cell(overrides.getOrElse(n.name,
+      mat(n.name, n.fn(n.deps.map(d => d -> apply(d)).toMap))))
+  }.toMap
 
-  // ---- silver (models/silver/) ----------------------------------------
-  lazy val date: DataFrame = m("date")(Silver.date(referenceDate))
-  lazy val employees: DataFrame = m("employees")(Silver.employees(hrEmployee))
-  lazy val accounts: DataFrame = m("accounts")(Silver.accounts(crmCustomerMgmt, referenceTaxRate))
-  lazy val customers: DataFrame = m("customers")(Silver.customers(crmCustomerMgmt, referenceTaxRate))
-  lazy val companies: DataFrame = m("companies")(Silver.companies(finwireCompany, referenceStatusType, referenceIndustry))
-  lazy val financials: DataFrame = m("financials")(Silver.financials(finwireFinancial, companies))
-  lazy val securities: DataFrame = m("securities")(Silver.securities(finwireSecurity, companies))
-  lazy val tradesHistory: DataFrame = m("trades_history")(Silver.tradesHistory(
-    brokerageTrade, brokerageTradeHistory, referenceTradeType, referenceStatusType))
-  lazy val trades: DataFrame = m("trades")(Silver.trades(tradesHistory))
-  lazy val cashTransactions: DataFrame = m("cash_transactions")(Silver.cashTransactions(brokerageCashTransaction, accounts))
-  lazy val dailyMarket: DataFrame = m("daily_market")(Silver.dailyMarket(brokerageDailyMarket))
-  lazy val watchesHistory: DataFrame = m("watches_history")(Silver.watchesHistory(brokerageWatchHistory, securities))
-  lazy val watches: DataFrame = m("watches")(Silver.watches(watchesHistory))
-  lazy val holdingsHistory: DataFrame = m("holdings_history")(Silver.holdingsHistory(brokerageHoldingHistory, trades))
+  /** The model `name`, built on first use. */
+  def apply(name: String): DataFrame = cells(name).df
 
-  // ---- gold (models/gold/) --------------------------------------------
-  lazy val dimDate: DataFrame = m("dim_date")(Gold.dimDate(date))
-  lazy val dimBroker: DataFrame = m("dim_broker")(Gold.dimBroker(employees))
-  lazy val dimCompany: DataFrame = m("dim_company")(Gold.dimCompany(companies))
-  lazy val dimCustomer: DataFrame = m("dim_customer")(Gold.dimCustomer(customers, syndicatedProspect))
-  lazy val dimAccount: DataFrame = m("dim_account")(Gold.dimAccount(accounts, dimCustomer, dimBroker))
-  lazy val dimSecurity: DataFrame = m("dim_security")(Gold.dimSecurity(securities, dimCompany))
-  lazy val dimTrade: DataFrame = m("dim_trade")(Gold.dimTrade(tradesHistory))
-  lazy val factTrade: DataFrame = m("fact_trade")(Gold.factTrade(trades, dimTrade, dimAccount, dimSecurity))
-  lazy val factCashTransactions: DataFrame = m("fact_cash_transactions")(Gold.factCashTransactions(cashTransactions, dimAccount))
-  lazy val factCashBalances: DataFrame = m("fact_cash_balances")(Gold.factCashBalances(factCashTransactions))
-  lazy val factHoldings: DataFrame = m("fact_holdings")(Gold.factHoldings(holdingsHistory, dimTrade, dimAccount, dimSecurity))
-  lazy val factWatches: DataFrame = m("fact_watches")(Gold.factWatches(watches, dimCustomer, dimSecurity))
-  lazy val wrkCompanyFinancials: DataFrame =
-    Gold.wrkCompanyFinancials(financials, dimCompany)
-  lazy val factMarketHistory: DataFrame = m("fact_market_history")(Gold.factMarketHistory(dailyMarket, dimSecurity, wrkCompanyFinancials))
+  /** All 44 models in declared (dependency) order, each forced. */
+  def all: Seq[(String, DataFrame)] = nodes.map(n => n.name -> apply(n.name))
+
+  def accounts: DataFrame = apply("accounts")
+  def customers: DataFrame = apply("customers")
 
   /** tests/fact_trade__unique_trade.sql:1-6 — sk_trade_id must be unique
     * in fact_trade; non-empty result = violation.
     */
-  lazy val uniqueTradeViolations: DataFrame =
-    factTrade.groupBy("sk_trade_id").agg(count(lit(1)).as("cnt"))
+  def uniqueTradeViolations: DataFrame =
+    apply("fact_trade").groupBy("sk_trade_id").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") > 1)
-
-  /** All materialized models in reference dependency order (bronze →
-    * silver → gold; observed build order README.md:216-305). The work
-    * model is ephemeral and excluded, like the reference.
-    */
-  def all: Seq[(String, DataFrame)] = Seq(
-    "brokerage_cash_transaction" -> brokerageCashTransaction,
-    "brokerage_daily_market" -> brokerageDailyMarket,
-    "brokerage_holding_history" -> brokerageHoldingHistory,
-    "brokerage_trade" -> brokerageTrade,
-    "brokerage_trade_history" -> brokerageTradeHistory,
-    "brokerage_watch_history" -> brokerageWatchHistory,
-    "crm_customer_mgmt" -> crmCustomerMgmt,
-    "finwire_company" -> finwireCompany,
-    "finwire_financial" -> finwireFinancial,
-    "finwire_security" -> finwireSecurity,
-    "hr_employee" -> hrEmployee,
-    "reference_date" -> referenceDate,
-    "reference_industry" -> referenceIndustry,
-    "reference_status_type" -> referenceStatusType,
-    "reference_tax_rate" -> referenceTaxRate,
-    "reference_trade_type" -> referenceTradeType,
-    "syndicated_prospect" -> syndicatedProspect,
-    "date" -> date,
-    "employees" -> employees,
-    "accounts" -> accounts,
-    "customers" -> customers,
-    "companies" -> companies,
-    "financials" -> financials,
-    "securities" -> securities,
-    "trades_history" -> tradesHistory,
-    "trades" -> trades,
-    "cash_transactions" -> cashTransactions,
-    "daily_market" -> dailyMarket,
-    "watches_history" -> watchesHistory,
-    "watches" -> watches,
-    "holdings_history" -> holdingsHistory,
-    "dim_date" -> dimDate,
-    "dim_broker" -> dimBroker,
-    "dim_company" -> dimCompany,
-    "dim_customer" -> dimCustomer,
-    "dim_account" -> dimAccount,
-    "dim_security" -> dimSecurity,
-    "dim_trade" -> dimTrade,
-    "fact_trade" -> factTrade,
-    "fact_cash_transactions" -> factCashTransactions,
-    "fact_cash_balances" -> factCashBalances,
-    "fact_holdings" -> factHoldings,
-    "fact_watches" -> factWatches,
-    "fact_market_history" -> factMarketHistory)
 }
 
 object Warehouse {
@@ -152,29 +63,29 @@ object Warehouse {
   def fromBatchDir(spark: SparkSession, batchDir: String): Warehouse =
     new Warehouse(Loader.loadAll(spark, batchDir))
 
+  /** dbt's `table` materialization: write the model's parquet under
+    * `outDir` and hand back the table read from it.
+    */
+  def writeThenRead(spark: SparkSession, outDir: String): (String, DataFrame) => DataFrame =
+    (name, df) => {
+      df.write.mode("overwrite").parquet(s"$outDir/$name")
+      spark.read.parquet(s"$outDir/$name")
+    }
+
   /** Materialize every model to parquet under outDir in dependency
     * order — the dbt-build analog (zone target_lag reduces to batch
-    * recompute, SURVEY §3.2-3.3). Each model is computed exactly once:
-    * the materializer writes its parquet as the lazy val first
-    * evaluates, and every downstream model reads the written table
-    * instead of re-deriving the upstream plan.
+    * recompute, SURVEY §3.2-3.3). Each model is computed exactly once
+    * and every downstream model reads the written table instead of
+    * re-deriving the upstream plan.
     *
     * Returns the materialized Warehouse (all models backed by parquet).
     */
   def build(spark: SparkSession, sources: Map[String, DataFrame],
             outDir: String): Warehouse = {
-    val wh = new Warehouse(sources, (name, df) => {
-      df.write.mode("overwrite").parquet(s"$outDir/$name")
-      spark.read.parquet(s"$outDir/$name")
-    })
+    val wh = new Warehouse(sources, writeThenRead(spark, outDir))
     wh.all.foreach(_ => ()) // force every model in dependency order
     wh
   }
-
-  /** Convenience: generate + build straight from a Batch1 directory. */
-  def buildFromBatchDir(spark: SparkSession, batchDir: String,
-                        outDir: String): Warehouse =
-    build(spark, Loader.loadAll(spark, batchDir), outDir)
 
   /** Warehouse-level Batch2/3 refresh — the incremental path the
     * reference names as future work (README.md:325, SURVEY §7.6).
@@ -317,21 +228,21 @@ object Warehouse {
       batch2.get("customer_mgmt") match {
         case Some(crmDelta) =>
           val acc = mat("accounts", Incremental.mergeScd2Batch(
-            existing.accounts,
+            existing("accounts"),
             Silver.accountsBase(crmDelta, unioned("tax_rate")),
             Seq("account_id"), "action_ts"))
           val cust = mat("customers", Incremental.mergeScd2Batch(
-            existing.customers,
+            existing("customers"),
             Silver.customersBase(crmDelta, unioned("tax_rate")),
             Seq("customer_id"), "action_ts"))
           val dc = mat("dim_customer",
             Gold.dimCustomer(cust, unioned("prospect")))
           // dim_broker sits outside the delta's reach (guard above)
           val da = mat("dim_account",
-            Gold.dimAccount(acc, dc, existingByName("dim_broker")))
+            Gold.dimAccount(acc, dc, existing("dim_broker")))
           (acc, cust, dc, da)
-        case None => (existing.accounts, existing.customers,
-          existingByName("dim_customer"), existingByName("dim_account"))
+        case None => (existing("accounts"), existing("customers"),
+          existing("dim_customer"), existing("dim_account"))
       }
 
     // FINWIRE spine: companies SCD2-merge the CMP delta through the
@@ -350,11 +261,11 @@ object Warehouse {
     val (companies2, dimCompany2) = cmpDelta match {
       case Some(d) =>
         val c2 = mat("companies", Incremental.mergeScd2Batch(
-          existing.companies,
+          existing("companies"),
           Silver.companiesBase(d, unioned("status_type"), unioned("industry")),
           Seq("company_id"), "pts"))
         (c2, mat("dim_company", Gold.dimCompany(c2)))
-      case None => (existing.companies, existingByName("dim_company"))
+      case None => (existing("companies"), existing("dim_company"))
     }
     val secTouchedSyms: Option[DataFrame] = secDelta.map(d =>
       Finwire.secTyped(d).select(col("symbol")).distinct())
@@ -364,16 +275,16 @@ object Warehouse {
         val touched = Finwire.secTyped(unioned("sec"))
           .join(syms, Seq("symbol"), "left_semi")
         val s2 = mat("securities", Incremental.mergeFactBatch(
-          existing.securities, syms,
+          existing("securities"), syms,
           Silver.securities(touched, companies2), Seq("symbol")))
         (s2, mat("dim_security", Gold.dimSecurity(s2, dimCompany2)))
       case None if cmpDelta.nonEmpty =>
         // old security versions still match their (possibly re-closed)
         // company versions under the watermark; the dim-sized recompute
         // over the merged dim_company avoids carrying that proof
-        (existing.securities,
-          mat("dim_security", Gold.dimSecurity(existing.securities, dimCompany2)))
-      case None => (existing.securities, existingByName("dim_security"))
+        (existing("securities"),
+          mat("dim_security", Gold.dimSecurity(existing("securities"), dimCompany2)))
+      case None => (existing("securities"), existing("dim_security"))
     }
     // financials: resolve the delta's company keys through the same
     // dual-key (cik-or-name) join, then rebuild those companies' full
@@ -394,9 +305,9 @@ object Warehouse {
         val touched = finAll.join(broadcast(keyAttrs),
           finAll("cik") === col("__fk_id") ||
             finAll("company_name") === col("__fk_name"), "left_semi")
-        mat("financials", Incremental.mergeFactBatch(existing.financials,
+        mat("financials", Incremental.mergeFactBatch(existing("financials"),
           keys, Silver.financials(touched, companies2), Seq("company_id")))
-      case None => existingByName("financials")
+      case None => existing("financials")
     }
     val finwireModels: Map[String, DataFrame] =
       if (!anyFinwire) Map.empty
@@ -409,9 +320,9 @@ object Warehouse {
     val thDelta = batch2.get("trade_history")
     val tradeModels: Map[String, DataFrame] =
       if (tradeDelta.isEmpty && thDelta.isEmpty)
-        Map("trades_history" -> existing.tradesHistory,
-          "trades" -> existing.trades, "dim_trade" -> existing.dimTrade,
-          "fact_trade" -> existing.factTrade)
+        Map("trades_history" -> existing("trades_history"),
+          "trades" -> existing("trades"), "dim_trade" -> existing("dim_trade"),
+          "fact_trade" -> existing("fact_trade"))
       else {
         val affected = (tradeDelta.map(_.select(col("t_id").as("trade_id"))).toSeq ++
             thDelta.map(_.select(col("th_t_id").as("trade_id"))).toSeq)
@@ -441,13 +352,13 @@ object Warehouse {
             // double chain evaluation eats the entire write saving)
             val rebuilt = factTouched.withColumn(fp.partCol, fp.partExpr)
               .localCheckpoint()
-            Incremental.mergeFactBatchPartitioned(existing.factTrade,
+            Incremental.mergeFactBatchPartitioned(existing("fact_trade"),
               affected, rebuilt, Seq("trade_id"), fp.partCol)
           case None =>
             // existing fact lacks the grain key — recover it through
             // dim_trade exactly as the rebuilt side does
-            val existingFactWithId = existing.factTrade.join(
-              existing.dimTrade.select(col("sk_trade_id"), col("trade_id")),
+            val existingFactWithId = existing("fact_trade").join(
+              existing("dim_trade").select(col("sk_trade_id"), col("trade_id")),
               Seq("sk_trade_id"))
             Incremental.mergeFactBatch(
               existingFactWithId, affected, factTouched, Seq("trade_id"))
@@ -455,11 +366,11 @@ object Warehouse {
         }
         Map(
           "trades_history" -> Incremental.mergeFactBatch(
-            existing.tradesHistory, affected, thTouched, Seq("trade_id")),
+            existing("trades_history"), affected, thTouched, Seq("trade_id")),
           "trades" -> Incremental.mergeFactBatch(
-            existing.trades, affected, Silver.trades(thTouched), Seq("trade_id")),
+            existing("trades"), affected, Silver.trades(thTouched), Seq("trade_id")),
           "dim_trade" -> Incremental.mergeFactBatch(
-            existing.dimTrade, affected, dimTradeTouched, Seq("trade_id")),
+            existing("dim_trade"), affected, dimTradeTouched, Seq("trade_id")),
           "fact_trade" -> (factPart match {
             case Some(_) => mat("fact_trade", factMerged)
             case None => factMerged
@@ -476,10 +387,10 @@ object Warehouse {
       .map { ctDelta =>
         val ctNew = mat("cash_transactions_new",
           Silver.cashTransactions(ctDelta, accounts2))
-        val cash2 = existing.cashTransactions.unionByName(ctNew)
+        val cash2 = existing("cash_transactions").unionByName(ctNew)
         val factNew = mat("fact_cash_transactions_new",
           Gold.factCashTransactions(ctNew, dimAccount2))
-        val factCash2 = existing.factCashTransactions.unionByName(factNew)
+        val factCash2 = existing("fact_cash_transactions").unionByName(factNew)
         val balKeys = Seq("sk_customer_id", "sk_account_id",
           "sk_transaction_date", "description")
         val affectedBal = factNew.select(balKeys.map(col): _*).distinct()
@@ -489,7 +400,7 @@ object Warehouse {
           "cash_transactions" -> cash2,
           "fact_cash_transactions" -> factCash2,
           "fact_cash_balances" -> Incremental.mergeFactBatch(
-            existing.factCashBalances, affectedBal, rebuiltBal, balKeys))
+            existing("fact_cash_balances"), affectedBal, rebuiltBal, balKeys))
       }.getOrElse(Map.empty)
 
     // watches stream: per-(customer, symbol) local — rebuild touched
@@ -530,13 +441,13 @@ object Warehouse {
           .select(col("sk_security_id"), col("symbol")).distinct()
         val factWTouched = Gold.factWatches(wTouched, dimCustomer2, dimSecurity2)
           .join(custMap, Seq("sk_customer_id")).join(secMap, Seq("sk_security_id"))
-        val existingFw = existing.factWatches
+        val existingFw = existing("fact_watches")
           .join(custMap, Seq("sk_customer_id")).join(secMap, Seq("sk_security_id"))
         Map(
           "watches_history" -> Incremental.mergeFactBatch(
-            existing.watchesHistory, keys, whTouched, Seq("customer_id", "symbol")),
+            existing("watches_history"), keys, whTouched, Seq("customer_id", "symbol")),
           "watches" -> Incremental.mergeFactBatch(
-            existing.watches, keys, wTouched, Seq("customer_id", "symbol")),
+            existing("watches"), keys, wTouched, Seq("customer_id", "symbol")),
           "fact_watches" -> Incremental.mergeFactBatch(
             existingFw, keys, factWTouched, Seq("customer_id", "symbol"))
             .drop("customer_id", "symbol"))
@@ -558,10 +469,10 @@ object Warehouse {
       case Some(_) =>
         val syms = dmSilverSyms.get
         val touched = unioned("daily_market").join(syms, Seq("dm_s_symb"), "left_semi")
-        Incremental.mergeFactBatch(existing.dailyMarket, syms,
+        Incremental.mergeFactBatch(existing("daily_market"), syms,
           mat("daily_market_touched", Silver.dailyMarket(touched)),
           Seq("dm_s_symb"))
-      case None => existing.dailyMarket
+      case None => existing("daily_market")
     }
     val fmhSymFrames = dmSilverSyms.toSeq ++
       secTouchedSyms.map(_.select(col("symbol").as("dm_s_symb"))).toSeq ++
@@ -577,7 +488,7 @@ object Warehouse {
           val dmRows = dailyMarket2.join(syms, Seq("dm_s_symb"), "left_semi")
           val fmhTouched = Gold.factMarketHistory(dmRows, dimSecurity2, wrk)
             .join(secMap, Seq("sk_security_id"))
-          val existingFmh = existing.factMarketHistory
+          val existingFmh = existing("fact_market_history")
             .join(secMap, Seq("sk_security_id"))
           dmDelta.map(_ => Map("daily_market" -> dailyMarket2))
             .getOrElse(Map.empty[String, DataFrame]) +
@@ -624,8 +535,8 @@ object Warehouse {
           .distinct().select(col("hh_t_id").as("trade_id"))
         val touchedHh = hh.join(dirtyKeys.select(col("trade_id").as("hh_t_id")),
           Seq("hh_t_id"), "left_semi")
-        val trades2 = tradeModels.getOrElse("trades", existing.trades)
-        val dimTrade2 = tradeModels.getOrElse("dim_trade", existing.dimTrade)
+        val trades2 = tradeModels.getOrElse("trades", existing("trades"))
+        val dimTrade2 = tradeModels.getOrElse("dim_trade", existing("dim_trade"))
         val hhTouched = mat("holdings_history_touched",
           Silver.holdingsHistory(touchedHh, trades2))
         // dedup: duplicate (trade_id, ts) source rows mint two dim_trade
@@ -637,11 +548,11 @@ object Warehouse {
         val factHTouched = Gold.factHoldings(hhTouched, dimTrade2,
             dimAccount2, dimSecurity2)
           .join(tradeMap, Seq("sk_current_trade_id"))
-        val existingFh = existing.factHoldings
+        val existingFh = existing("fact_holdings")
           .join(tradeMap, Seq("sk_current_trade_id"))
         Map(
           "holdings_history" -> Incremental.mergeFactBatch(
-            existing.holdingsHistory, dirtyKeys, hhTouched, Seq("trade_id")),
+            existing("holdings_history"), dirtyKeys, hhTouched, Seq("trade_id")),
           "fact_holdings" -> Incremental.mergeFactBatch(
             existingFh, dirtyKeys, factHTouched, Seq("trade_id"))
             .drop("trade_id"))

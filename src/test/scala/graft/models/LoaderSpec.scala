@@ -2,6 +2,7 @@ package graft.models
 
 import graft.SparkSpec
 import java.nio.file.{Files, Path}
+import org.apache.spark.sql.functions.{lit, raise_error}
 
 /** End-to-end through the REAL file formats: writes a miniature DIGen
   * Batch1 directory (pipe/comma-delimited, fixed-width FINWIRE quarter
@@ -92,23 +93,23 @@ class LoaderSpec extends SparkSpec {
   }
 
   test("full DAG builds from files: facts resolve, uniqueness test passes") {
-    wh.factTrade.count() shouldBe 1
-    wh.factCashTransactions.count() shouldBe 1
-    wh.factMarketHistory.count() shouldBe 3
-    wh.factWatches.count() shouldBe 1
+    wh("fact_trade").count() shouldBe 1
+    wh("fact_cash_transactions").count() shouldBe 1
+    wh("fact_market_history").count() shouldBe 3
+    wh("fact_watches").count() shouldBe 1
     wh.uniqueTradeViolations.count() shouldBe 0
-    val ft = wh.factTrade.collect()(0)
+    val ft = wh("fact_trade").collect()(0)
     ft.isNullAt(ft.fieldIndex("sk_security_id")) shouldBe false
     ft.isNullAt(ft.fieldIndex("sk_customer_id")) shouldBe false
   }
 
   test("Warehouse.build materializes every model once, downstream reads parquet") {
     val out = Files.createTempDirectory("whout").toString
-    val built = Warehouse.buildFromBatchDir(spark, batchDir.toString, out)
+    val built = Warehouse.build(spark, Loader.loadAll(spark, batchDir.toString), out)
     new java.io.File(out).list().toSet.size shouldBe built.all.size
     spark.read.parquet(s"$out/fact_trade").count() shouldBe 1
     // materialized warehouse models are parquet-backed scans
-    built.factTrade.queryExecution.executedPlan.toString should
+    built("fact_trade").queryExecution.executedPlan.toString should
       include("Scan parquet")
     built.uniqueTradeViolations.count() shouldBe 0
   }
@@ -120,13 +121,25 @@ class LoaderSpec extends SparkSpec {
     Warehouse.build(spark, sources, seqOut)
     val timings = Dag.runParallel(spark, sources, parOut, parallelism = 4)
     timings.size shouldBe 44
-    for (m <- Seq("fact_trade", "fact_market_history", "dim_customer",
-        "trades_history", "fact_cash_balances")) {
+    for (m <- Dag.nodes(Map.empty).map(_.name)) withClue(s"$m: ") {
       val a = spark.read.parquet(s"$seqOut/$m")
       val b = spark.read.parquet(s"$parOut/$m")
       a.count() shouldBe b.count()
       a.exceptAll(b).count() shouldBe 0L
       b.exceptAll(a).count() shouldBe 0L
     }
+  }
+
+  test("parallel DAG runner names the failed model and starts nothing after it") {
+    val out = Files.createTempDirectory("whfail").toString
+    val sources = Loader.loadAll(spark, batchDir.toString)
+    val hr = sources("hr").withColumn("employee_first_name",
+      raise_error(lit("injected hr failure")).cast("string"))
+    val e = intercept[RuntimeException](
+      Dag.runParallel(spark, sources + ("hr" -> hr), out, parallelism = 4))
+    e.getMessage should include("hr_employee")
+    val written = new java.io.File(out).list().toSet
+    written should not contain "employees"
+    written should not contain "dim_broker"
   }
 }

@@ -146,7 +146,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("silver accounts: one SCD2 version per account action, ca filter") {
-    val a = wh.accounts.orderBy("account_id").collect()
+    val a = wh("accounts").orderBy("account_id").collect()
     a.length shouldBe 3 // ca 7 (NEW), 8 (ADDACCT), 9 (NEW); UPDCUST has null ca
     a.map(_.getAs[String]("account_id")) shouldBe Array("7", "8", "9")
     all(a.map(_.getAs[Boolean]("is_current"))) shouldBe true
@@ -156,7 +156,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("silver customers: NEW/UPDCUST only, SCD2 chain closes v1") {
-    val c42 = wh.customers.filter($"customer_id" === 42).orderBy("effective_timestamp").collect()
+    val c42 = wh("customers").filter($"customer_id" === 42).orderBy("effective_timestamp").collect()
     c42.length shouldBe 2
     c42(0).getAs[java.sql.Timestamp]("end_timestamp") shouldBe ts("2020-03-01 08:59:59.999")
     c42(0).getAs[Boolean]("is_current") shouldBe false
@@ -164,7 +164,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("silver companies: 2 SCD2 versions from 2 CMP records") {
-    val c = wh.companies.orderBy("effective_timestamp").collect()
+    val c = wh("companies").orderBy("effective_timestamp").collect()
     c.length shouldBe 2
     c(0).getAs[Long]("company_id") shouldBe 12345L
     c(0).getAs[String]("name") shouldBe "Acme Corporation" // trimmed
@@ -175,12 +175,12 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("silver securities + financials: dual-key temporal match by cik") {
-    val s = wh.securities.collect()
+    val s = wh("securities").collect()
     s.length shouldBe 1
     s(0).getAs[Long]("company_id") shouldBe 12345L
     s(0).getAs[String]("company_name") shouldBe "Acme Corporation"
     s(0).getAs[String]("name") shouldBe "ACME Common" // SEC's own name survives
-    val f = wh.financials.orderBy("quarter").collect()
+    val f = wh("financials").orderBy("quarter").collect()
     f.length shouldBe 2
     f(0).getAs[Long]("company_id") shouldBe 12345L
     f(0).getAs[Double]("eps") shouldBe 1.25
@@ -188,8 +188,8 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("silver trades_history/trades: 5-way join + W4 create/close") {
-    wh.tradesHistory.count() shouldBe 4
-    val t = wh.trades.orderBy("trade_id").collect()
+    wh("trades_history").count() shouldBe 4
+    val t = wh("trades").orderBy("trade_id").collect()
     t.length shouldBe 2
     t(0).getAs[java.sql.Timestamp]("create_timestamp") shouldBe ts("2020-03-10 10:00:00")
     t(0).getAs[java.sql.Timestamp]("close_timestamp") shouldBe ts("2020-03-10 11:00:00")
@@ -199,13 +199,13 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("silver cash_transactions resolves customer via temporal account") {
-    val ct = wh.cashTransactions.orderBy("transaction_timestamp").collect()
+    val ct = wh("cash_transactions").orderBy("transaction_timestamp").collect()
     ct.length shouldBe 2
     all(ct.map(_.getAs[Long]("customer_id"))) shouldBe 42L
   }
 
   test("silver daily_market: 52wk extremes with dates, deduped") {
-    val dm = wh.dailyMarket.orderBy("dm_date").collect()
+    val dm = wh("daily_market").orderBy("dm_date").collect()
     dm.length shouldBe 5
     dm(4).getAs[Double]("fifty_two_week_high") shouldBe 14.0
     dm(4).getAs[java.sql.Date]("fifty_two_week_high_date") shouldBe d("2020-03-06")
@@ -214,7 +214,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("silver watches: one row per watch with placed/removed + status") {
-    val w = wh.watches.orderBy("customer_id").collect()
+    val w = wh("watches").orderBy("customer_id").collect()
     w.length shouldBe 2
     w(0).getAs[String]("watch_status") shouldBe "Inactive"  // c42 cancelled
     w(1).getAs[String]("watch_status") shouldBe "Active"    // c43 open
@@ -223,7 +223,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("gold dim_customer: gap-fill carries city forward, prospect match") {
-    val v = wh.dimCustomer.filter($"customer_id" === 42)
+    val v = wh("dim_customer").filter($"customer_id" === 42)
       .orderBy("effective_timestamp").collect()
     v.length shouldBe 2
     v(1).getAs[String]("city") shouldBe "Oakland"
@@ -232,21 +232,21 @@ class WarehouseSpec extends SparkSpec {
     // prospect enrichment matched for customer 43 (5-col USING with nulls
     // on address_line2 fails equality — reference semantics; 43 has
     // non-null line1 but null line2 on both sides -> no match either)
-    val p42 = wh.dimCustomer.filter($"customer_id" === 42).collect()
+    val p42 = wh("dim_customer").filter($"customer_id" === 42).collect()
     all(p42.map(_.isNullAt(p42.head.fieldIndex("net_worth")))) shouldBe true
   }
 
   test("gold dims: surrogate keys unique") {
-    Seq(wh.dimAccount -> "sk_account_id", wh.dimCustomer -> "sk_customer_id",
-      wh.dimCompany -> "sk_company_id", wh.dimSecurity -> "sk_security_id",
-      wh.dimTrade -> "sk_trade_id", wh.dimBroker -> "sk_broker_id")
+    Seq(wh("dim_account") -> "sk_account_id", wh("dim_customer") -> "sk_customer_id",
+      wh("dim_company") -> "sk_company_id", wh("dim_security") -> "sk_security_id",
+      wh("dim_trade") -> "sk_trade_id", wh("dim_broker") -> "sk_broker_id")
       .foreach { case (df, k) =>
         df.groupBy(k).count().filter($"count" > 1).count() shouldBe 0L
       }
   }
 
   test("gold fact_trade: one row per trade, all SKs resolved; uniqueness test") {
-    val ft = wh.factTrade.orderBy("sk_create_date").collect()
+    val ft = wh("fact_trade").orderBy("sk_create_date").collect()
     ft.length shouldBe 2
     ft.foreach { r =>
       r.isNullAt(r.fieldIndex("sk_trade_id")) shouldBe false
@@ -259,13 +259,13 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("gold fact_cash_balances aggregates per day/account") {
-    val b = wh.factCashBalances.collect()
+    val b = wh("fact_cash_balances").collect()
     b.length shouldBe 2 // two descriptions
     b.map(_.getAs[Double]("amount")).sorted shouldBe Array(-40.0, 100.0)
   }
 
   test("gold fact_holdings: current+previous trade SKs resolve") {
-    val fh = wh.factHoldings.orderBy("trade_timestamp").collect()
+    val fh = wh("fact_holdings").orderBy("trade_timestamp").collect()
     fh.length should be >= 2 // 2 holding events (x dim_trade versions)
     fh.foreach { r =>
       r.isNullAt(r.fieldIndex("sk_current_trade_id")) shouldBe false
@@ -274,11 +274,12 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("gold fact_watches + fact_market_history resolve temporal lookups") {
-    wh.factWatches.count() shouldBe 2
-    val fmh = wh.factMarketHistory.orderBy("sk_date_id").collect()
+    wh("fact_watches").count() shouldBe 2
+    val fmh = wh("fact_market_history").orderBy("sk_date_id").collect()
     fmh.length shouldBe 5
     fmh(0).getAs[Double]("yield") shouldBe (0.42 / 10.0) / 100 +- 1e-12
-    val wf = wh.wrkCompanyFinancials.orderBy("quarter_start_date").collect()
+    val wf = Gold.wrkCompanyFinancials(wh("financials"), wh("dim_company"))
+      .orderBy("quarter_start_date").collect()
     wf.length shouldBe 2
     wf(0).getAs[Double]("sum_basic_eps") shouldBe 0.0  // first quarter: no priors
     wf(1).getAs[Double]("sum_basic_eps") shouldBe 1.25
@@ -398,9 +399,9 @@ class WarehouseSpec extends SparkSpec {
     wave2.count() shouldBe 1
     val root = java.nio.file.Files.createTempDirectory("streamwh")
     val cases = Seq(
-      ("accounts", Seq("account_id"), wh1.accounts,
+      ("accounts", Seq("account_id"), wh1("accounts"),
         (crm: DataFrame) => Silver.accountsBase(crm, src("tax_rate"))),
-      ("customers", Seq("customer_id"), wh1.customers,
+      ("customers", Seq("customer_id"), wh1("customers"),
         (crm: DataFrame) => Silver.customersBase(crm, src("tax_rate"))))
     for ((name, idCols, seed, baseOf) <- cases) {
       val dimDir = root.resolve(s"${name}_dim").toString
@@ -447,8 +448,8 @@ class WarehouseSpec extends SparkSpec {
       // key and the (immutable) event-month partition column
       val wh1 = new Warehouse(b1)
       val factDir = s"$tmp/fact_trade"
-      wh1.factTrade
-        .join(wh1.dimTrade.select($"sk_trade_id", $"trade_id"), Seq("sk_trade_id"))
+      wh1("fact_trade")
+        .join(wh1("dim_trade").select($"sk_trade_id", $"trade_id"), Seq("sk_trade_id"))
         .withColumn("p_month", pExpr)
         .write.mode("overwrite").partitionBy("p_month").parquet(factDir)
       val existing = new Warehouse(b1,
@@ -463,8 +464,8 @@ class WarehouseSpec extends SparkSpec {
       val refreshed = Warehouse.applyBatch(existing, b2, mat,
         factPart = Some(Warehouse.FactPartition("p_month", pExpr)))
       factWrites shouldBe 1
-      val f = wh.factTrade
-      val got = refreshed.factTrade.drop("trade_id", "p_month")
+      val f = wh("fact_trade")
+      val got = refreshed("fact_trade").drop("trade_id", "p_month")
         .select(f.columns.map(col): _*)
       got.exceptAll(f).count() shouldBe 0L
       f.exceptAll(got).count() shouldBe 0L
