@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import graft.engine.Tables
 
 /** Per-round benchmark: one JSON line with total + per-query seconds.
@@ -31,41 +30,10 @@ import graft.engine.Tables
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    // the two benign environment notices (no native-hadoop lib in this
-    // container; plan-string truncation in debug output) are the only
-    // WARNs left in a clean run — drop them so any WARN in the log is a
-    // real signal
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.hadoop.util.NativeCodeLoader",
-      org.apache.logging.log4j.Level.ERROR)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.util.SparkStringUtils",
-      org.apache.logging.log4j.Level.ERROR)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // parsed before the session starts: the artifact name below depends
-    // on it, and a bad value must not surface only after the whole run
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(v =>
-      v.toIntOption.filter(_ > 0).getOrElse(
-        sys.error(s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Let AQE re-optimize cached plans (off by default only to keep
-      // cached output partitioning stable for RDD-level consumers,
-      // which this engine has none of): without it every .cache()
-      // materializes at the full shuffle-partition count and AQE can
-      // never coalesce it, so each later stage over the cached relation
-      // pays one fixed-cost task per configured partition regardless of
-      // data size - measured ~20-50% of the components/LSH family's
-      // task CPU at sf0.1, and at production scale it lets cached
-      // relations coalesce to data-sized partitions the same way
-      // un-cached shuffles already do.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the artifact name below depends on it
+    val cpus = Session.envCpus
+    val spark = Session(cpus)
 
     // Per-task counters, bus-drained between samples so attribution is
     // exact. CPU is the contention-robust headline; GC time and

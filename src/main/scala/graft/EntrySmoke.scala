@@ -1,29 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke runner for SparkEntry.entry (the driver's t1 check). */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Let AQE re-optimize cached plans (off by default only to keep
-      // cached output partitioning stable for RDD-level consumers,
-      // which this engine has none of): without it every .cache()
-      // materializes at the full shuffle-partition count and AQE can
-      // never coalesce it, so each later stage over the cached relation
-      // pays one fixed-cost task per configured partition regardless of
-      // data size - measured ~20-50% of the components/LSH family's
-      // task CPU at sf0.1, and at production scale it lets cached
-      // relations coalesce to data-sized partitions the same way
-      // un-cached shuffles already do.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
     val df = SparkEntry.entry(spark)
     println("ENTRY_ROWS=" + df.count())
     df.show(5)

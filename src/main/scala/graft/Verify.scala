@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,26 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet // optional query-name filter
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Let AQE re-optimize cached plans (off by default only to keep
-      // cached output partitioning stable for RDD-level consumers,
-      // which this engine has none of): without it every .cache()
-      // materializes at the full shuffle-partition count and AQE can
-      // never coalesce it, so each later stage over the cached relation
-      // pays one fixed-cost task per configured partition regardless of
-      // data size - measured ~20-50% of the components/LSH family's
-      // task CPU at sf0.1, and at production scale it lets cached
-      // relations coalesce to data-sized partitions the same way
-      // un-cached shuffles already do.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

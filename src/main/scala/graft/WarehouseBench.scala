@@ -126,39 +126,10 @@ object WarehouseBench {
   }
 
   def main(args: Array[String]): Unit = {
-    // the two benign environment notices (no native-hadoop lib in this
-    // container; plan-string truncation in debug output) are the only
-    // WARNs left in a clean run — drop them so any WARN in the log is a
-    // real signal
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.hadoop.util.NativeCodeLoader",
-      org.apache.logging.log4j.Level.ERROR)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.util.SparkStringUtils",
-      org.apache.logging.log4j.Level.ERROR)
     val nCust = args.headOption.map(_.toInt).getOrElse(20000)
     val nTrades = args.lift(1).map(_.toInt).getOrElse(100000)
     val work = args.lift(2).getOrElse("/tmp/graft-whbench")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Let AQE re-optimize cached plans (off by default only to keep
-      // cached output partitioning stable for RDD-level consumers,
-      // which this engine has none of): without it every .cache()
-      // materializes at the full shuffle-partition count and AQE can
-      // never coalesce it, so each later stage over the cached relation
-      // pays one fixed-cost task per configured partition regardless of
-      // data size - measured ~20-50% of the components/LSH family's
-      // task CPU at sf0.1, and at production scale it lets cached
-      // relations coalesce to data-sized partitions the same way
-      // un-cached shuffles already do.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     println(s"""{"metric":"warehouse_build",${run(spark, nCust, nTrades,
       work)}}""")

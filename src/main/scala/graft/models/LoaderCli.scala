@@ -1,7 +1,5 @@
 package graft.models
 
-import org.apache.spark.sql.SparkSession
-
 /** User-facing loader entry point mirroring the reference CLI's
   * `process_files` command (tpcdi.py:46-77): ingest a DIGen Batch1
   * directory, then either `--show` a sample of each table (the
@@ -35,14 +33,7 @@ object LoaderCli {
     val show = args.contains("--show")
     val out = opt("--out").getOrElse("/tmp/graft_wh")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     val tables = (opt("--batch2"), opt("--batch3")) match {
       case (Some(d2), Some(d3)) =>

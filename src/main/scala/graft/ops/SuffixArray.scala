@@ -69,8 +69,8 @@ import org.apache.spark.sql.functions._
   * SHRINKS each round: positions whose class is already a singleton
   * are dropped (exact — see the pruning note in [[lengthKeys]]), so
   * on natural text later rounds shuffle only the small surviving
-  * repeated core rather than the whole corpus (OpsScaleBench's
-  * substr_survivor curve measures the collapse).
+  * repeated core rather than the whole corpus
+  * ([[refinementSurvivorCounts]] reports the collapse per round).
   */
 object SuffixArray {
 
@@ -114,9 +114,11 @@ object SuffixArray {
 
   /** [[repeatedSpans]] with the singleton pruning toggleable —
     * MEASUREMENT ONLY (package-private): identical spans either way
-    * (the pruning argument in [[lengthKeys]]); OpsScaleBench times
-    * both settings so the pruning win is a measured ratio in the
-    * artifact, not an asserted one.
+    * (the pruning argument in [[lengthKeys]]; SuffixArraySpec pins it
+    * against this unpruned reference). Timing both settings made the
+    * pruning win a measured ratio, not an asserted one: CPU 0.64-0.71
+    * of unpruned (PLANS.md, Round-12, "Singleton-pruning CPU claim
+    * re-pinned").
     */
   private[graft] def repeatedSpansPruneToggle(docs: DataFrame,
       textCol: String, idCol: String, minLen: Int,
@@ -132,8 +134,7 @@ object SuffixArray {
     * the count
     * collapses within a few rounds: most windows go corpus-unique
     * fast, and pruned rounds shuffle only the repeated core.
-    * Diagnostic companion to [[repeatedSpans]]; OpsScaleBench prints
-    * it as `substr_survivors`.
+    * Diagnostic companion to [[repeatedSpans]].
     */
   def refinementSurvivorCounts(docs: DataFrame, textCol: String,
                                idCol: String, minLen: Int)
@@ -220,7 +221,7 @@ object SuffixArray {
     // rows to the end.
     // prune=false: the measurement-only unpruned variant (identical
     // spans — see the correctness argument above; the toggle exists so
-    // OpsScaleBench can measure the win instead of asserting it)
+    // the win is measured instead of asserted, PLANS.md Round-12)
     def keepRepeated(df: DataFrame): DataFrame =
       if (prune) df.filter(col("__sz") >= 2) else df
     // checkpointed: the seed round reads this relation TWICE (class
@@ -769,8 +770,8 @@ object SuffixArray {
     * dictionary (∝ corpus) over the network every round, the
     * broadcast path ships only the batch. In local mode an exchange
     * is a memcpy, so the two time within ~25% of each other there
-    * (OpsScaleBench) — the threshold guards driver/broadcast memory,
-    * not local wall.
+    * (PLANS.md, "Incremental substring index: gated (d28)") — the
+    * threshold guards driver/broadcast memory, not local wall.
     */
   def appendToSubstrIndex(index: SubstrIndex, batch: DataFrame,
                           textCol: String, idCol: String,

@@ -1463,8 +1463,8 @@ object TextOps {
     */
   def bm25(df: org.apache.spark.sql.DataFrame, textCol: String,
            idCol: String, queryTerms: org.apache.spark.sql.DataFrame,
-           k1: Double = 1.2, b: Double = 0.75,
-           cacheTf: Boolean = true): org.apache.spark.sql.DataFrame = {
+           k1: Double = 1.2, b: Double = 0.75)
+      : org.apache.spark.sql.DataFrame = {
     val id = col(idCol)
     val terms = df.select(id,
       explode(filter(split(normalize(col(textCol)), " "), w => w =!= ""))
@@ -1473,11 +1473,8 @@ object TextOps {
     // dl, df, avgdl) — cache the collapsed relation once instead of
     // re-tokenizing the corpus per consumer (and instead of leaking one
     // CacheManager entry per bm25 call on repeated invocation).
-    // cacheTf=false recomputes it per consumer — only right when the
-    // caller measures the full pipeline (OpsScaleBench) or indexes a
-    // corpus too large to pin
-    val tfPlan = terms.groupBy(id, col("term")).agg(count(lit(1)).as("tf"))
-    val tf = if (cacheTf) graft.engine.CacheOnce(tfPlan) else tfPlan
+    val tf = graft.engine.CacheOnce(
+      terms.groupBy(id, col("term")).agg(count(lit(1)).as("tf")))
     val dl = tf.groupBy(id).agg(sum(col("tf")).as("dl"))
     val dfq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val stats = df.agg(count(lit(1)).cast("double").as("__n_docs"))

@@ -6566,13 +6566,13 @@ object OpsQueries {
     // skewed codebooks still balance the build jobs), which confines
     // shard co-occupancy to probe spillover at the range boundaries
     // and makes the merge boundary-priced (the scale note the verbs
-    // carry; measured on a clustered corpus in OpsScaleBench). The
-    // gate pins: the assignment is DETERMINISTIC (two invocations
-    // agree cell-for-cell), the ranges are contiguous and
-    // non-decreasing with every shard represented, every row lands in
-    // [0, nShards), and the sharded build + merge reproduces the
-    // one-shot union build exactly (the n46 equality under the
-    // PRODUCED shards instead of hand-written filters).
+    // carry; measured on a clustered corpus, PLANS.md Round-13 "The
+    // boundary-priced claim"). The gate pins: the assignment is
+    // DETERMINISTIC (two invocations agree cell-for-cell), the ranges
+    // are contiguous and non-decreasing with every shard represented,
+    // every row lands in [0, nShards), and the sharded build + merge
+    // reproduces the one-shot union build exactly (the n46 equality
+    // under the PRODUCED shards instead of hand-written filters).
     QueryDef("n54_spatial_shard_merge",
       (s, dir) => {
         val e = embs(s, dir).filter(col("vec_id") < 500)

@@ -5,25 +5,16 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** Shared local SparkSession for all specs (one JVM-wide session —
-  * SparkSession.builder.getOrCreate reuses it across suites).
+  * [[Session]]'s getOrCreate reuses it across suites). Specs pin plans
+  * under the engine's own settings at the default thread count,
+  * whatever `SPARK_GRAFT_CPUS` the test run exports.
   */
 trait SparkSpec extends AnyFunSuite with Matchers {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // match the driver mains: AQE may re-optimize cached plans (see
-    // Bench.scala) — specs must pin plans under the regime the engine
-    // actually runs
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-      "true")
+  lazy val spark: SparkSession = Session(Session.DefaultCpus, Map(
     // unique per JVM: a fixed path leaves orphan table dirs behind that a
     // fresh in-memory catalog then refuses to overwrite (LOCATION_ALREADY_EXISTS)
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-test-warehouse").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-test-warehouse").toString))
 
   def ts(s: String): java.sql.Timestamp = java.sql.Timestamp.valueOf(s)
   def d(s: String): java.sql.Date = java.sql.Date.valueOf(s)
