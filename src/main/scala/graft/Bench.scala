@@ -312,15 +312,8 @@ object Bench {
         e.printStackTrace()
         s""""warehouse_build":"failed: ${e.getClass.getSimpleName}""""
       }
-    // shared_fixtures: gates whose timed sample EXCLUDES work another
-    // gate's evaluation already paid inside the same session — today
-    // only the memoized OPQ training (OpsQueries.opqMemo): the first
-    // gate of the suite to need it (n28 in sorted order) trains it in
-    // its timed region, these later consumers reuse the driver-side
-    // arrays. Same design as the documented warmFirst tier; listed so
-    // the artifact is self-describing.
-    val sharedFixtures =
-      """"shared_fixtures":["n36_ann_graph_opq","n42_ann_hnsw_pq","n43_hnsw_pq_persist"]"""
+    val sharedFixtures = graft.queries.OpsQueries.sharedFixtures
+      .map(n => s"\"$n\"").mkString("\"shared_fixtures\":[", ",", "]")
     val fullLine =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpu_sec":${fmt(totalCpu)},"gc_sec":${fmt(totalGc)},"gc_frac":${fmt(gcFrac)},"gc_frac_p95":${fmt(gcFracP95)},"poisoned_pct":${fmt(poisonedPct)},"spill_bytes":${fmt(totalSpill)},"iters":$iters,$sharedFixtures,$whJson,"queries":$qs,"queries_mean":$qsMean,"queries_cpu":$qsCpu,"queries_gc":$qsGc,"queries_spill":$qsSpill,"sf":"$sfDir"}"""
     // Full per-query results: one stdout line (for complete logs) plus a

@@ -63,46 +63,4 @@ object Incremental {
     existingFact.join(affected.select(keyCols.map(col): _*).distinct(),
         keyCols, "left_anti")
       .unionByName(rebuilt.select(existingFact.columns.map(col): _*))
-
-  /** Partition-scoped fact merge for PARTITIONED storage — the write
-    * path [[mergeFactBatch]] needs at 100 TB: a whole-table merge
-    * rewrites every byte of the fact no matter how small the batch,
-    * so at scale the rewrite IO, not the merge compute, dominates.
-    * When the fact is stored partitioned on `partCol` (e.g. a month of
-    * the event time), only partitions that CONTAIN an affected key need
-    * to change; this returns exactly those partitions' merged rows —
-    * write them with `partitionBy(partCol)` under
-    * `spark.sql.sources.partitionOverwriteMode=dynamic` and every other
-    * partition's files are untouched. Write IO then scales with the
-    * touched time slice (for a late batch: the tail partitions), not
-    * the table.
-    *
-    * Reading `existingFact` from the partitioned table lets dynamic
-    * partition pruning confine the scan to the affected partitions too
-    * (the semi-join key IS the partition column).
-    *
-    * REQUIRES stable partition values per key: dynamic overwrite only
-    * replaces partitions it emits rows for, so a rebuilt key that MOVES
-    * partition would leave its old row on disk if its old partition
-    * ends up with nothing to emit. Event-time-partitioned facts satisfy
-    * this trivially (the event time is immutable); partition on a
-    * mutable attribute and this merge is the wrong tool.
-    *
-    * @param partCol partition column name, present in existingFact and
-    *                rebuilt
-    */
-  def mergeFactBatchPartitioned(existingFact: DataFrame, affected: DataFrame,
-                                rebuilt: DataFrame, keyCols: Seq[String],
-                                partCol: String): DataFrame = {
-    val aff = affected.select(keyCols.map(col): _*).distinct()
-    // partitions holding a new/rebuilt row, plus partitions holding an
-    // existing row of a touched key (a rebuilt key may move partitions)
-    val parts = rebuilt.select(col(partCol))
-      .unionByName(existingFact.join(aff, keyCols, "left_semi")
-        .select(col(partCol)))
-      .distinct()
-    existingFact.join(parts, Seq(partCol), "left_semi")
-      .join(aff, keyCols, "left_anti")
-      .unionByName(rebuilt.select(existingFact.columns.map(col): _*))
-  }
 }

@@ -434,16 +434,16 @@ object GraphAnn {
                        beam: Int, hops: Int,
                        score: (DataFrame, DataFrame, Boolean) => DataFrame,
                        bcast: Boolean): DataFrame = {
-    // the pool and the expanded set accumulate as LAZY unions of
-    // per-hop CHECKPOINTED pieces: each hop's expensive work (the
-    // scoring join, the frontier pick) is still materialized once,
-    // but the union-and-re-checkpoint actions the loop used to pay on
-    // top (re-writing the whole accumulated pool every hop — 3
-    // driver-sequenced actions per hop instead of 2, plus O(hops)
-    // re-materialized bytes) are gone; consumers scan the flat list
-    // of in-memory pieces. Plan depth grows linearly in hops (each
-    // piece is a checkpoint leaf), so the exponential join-on-join
-    // lineage the old re-checkpointing guarded against never forms.
+    // every hop checkpoints the frontier, then unions it into the
+    // expanded set and the newly scored candidates into the pool, and
+    // re-checkpoints BOTH whole accumulations: 3 driver-sequenced
+    // actions per hop and the whole pool re-materialized every hop, in
+    // exchange for a plan that stays one checkpoint leaf deep (no
+    // join-on-join lineage across hops). Whether the r15 lazy
+    // piece-list (per-hop checkpointed pieces, unioned lazily) or a
+    // consolidate-every-k variant should replace this is an open A/B,
+    // tied to the round-16 serve/lifecycle regressions: ROADMAP
+    // direction 3.
     var scored = score(entryCand, q, bcast).localCheckpoint()
     var expanded = scored.select("q_id", "n_id").limit(0).localCheckpoint()
     var h = 0

@@ -45,34 +45,6 @@ class IncrementalSpec extends SparkSpec {
     merged.count() shouldBe existing.count()
   }
 
-  test("mergeFactBatchPartitioned: touched partitions only, equal to full merge") {
-    val existing = Seq(
-      (1L, "2020-01", 10.0), (2L, "2020-01", 20.0),
-      (3L, "2020-02", 30.0), (5L, "2020-02", 50.0), (4L, "2020-03", 40.0))
-      .toDF("key", "p", "v")
-    // key 3 rebuilt in place (stable partition), key 9 brand new
-    val affected = Seq(3L, 9L).toDF("key")
-    val rebuilt = Seq((3L, "2020-02", 31.0), (9L, "2020-04", 90.0))
-      .toDF("key", "p", "v")
-    val part = Incremental.mergeFactBatchPartitioned(
-      existing, affected, rebuilt, Seq("key"), "p")
-    // emitted partitions = exactly those holding an affected key; the
-    // untouched co-resident of 2020-02 (key 5) is re-emitted with it
-    part.select("p").distinct().as[String].collect().sorted shouldBe
-      Array("2020-02", "2020-04")
-    part.orderBy("key").collect().map(r =>
-      (r.getLong(0), r.getString(1), r.getDouble(2))) shouldBe
-      Array((3L, "2020-02", 31.0), (5L, "2020-02", 50.0), (9L, "2020-04", 90.0))
-    // restricting the whole-table merge to those partitions equals it
-    val full = Incremental.mergeFactBatch(existing, affected, rebuilt, Seq("key"))
-      .join(part.select("p").distinct(), Seq("p"), "left_semi")
-      .select(part.columns.map(col): _*)
-    part.exceptAll(full).count() shouldBe 0L
-    full.exceptAll(part).count() shouldBe 0L
-    // untouched partitions are never emitted (their files stay on disk)
-    part.filter($"p" === "2020-01" || $"p" === "2020-03").count() shouldBe 0L
-  }
-
   test("only affected entities flow through the rebuild path") {
     val b2 = log.filter($"id" === 1 && $"payload" === "v3")
     val existing = Scd2.scd2(log.filter($"payload" =!= "v3").filter($"id" =!= 4L),

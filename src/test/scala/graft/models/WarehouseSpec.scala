@@ -285,34 +285,79 @@ class WarehouseSpec extends SparkSpec {
     wf(1).getAs[Double]("sum_basic_eps") shouldBe 1.25
   }
 
-  test("applyBatch2: warehouse-level incremental refresh == full rebuild") {
-    // Split the CRM action log and the trade stream at a cutoff that
-    // leaves real work on both sides: batch2 carries the ADDACCT action
-    // (a new account entity) and trade 101 with its full history, while
-    // batch1 keeps customer NEW/UPDCUST versions and trade 100.
+  /** The CRM action log and the trade and cash streams split at a
+    * cutoff that leaves real work on both sides: batch2 carries the
+    * ADDACCT action (a new account entity) and trade 101 with its full
+    * history, while batch1 keeps customer NEW/UPDCUST versions and trade
+    * 100.
+    */
+  private def crmTradeCashSplit(src: Map[String, DataFrame])
+      : (Map[String, DataFrame], Map[String, DataFrame]) = {
     val cutoff = ts("2020-03-11 00:00:00")
-    val src = wh.sources
-    val b1 = src ++ Map(
-      "customer_mgmt" -> src("customer_mgmt").filter($"action_ts" < cutoff),
-      "trade" -> src("trade").filter($"t_dts" < cutoff),
-      "trade_history" -> src("trade_history").filter($"th_dts" < cutoff),
-      "cash_transaction" -> src("cash_transaction").filter($"ct_dts" < cutoff))
-    val b2 = Map(
-      "customer_mgmt" -> src("customer_mgmt").filter($"action_ts" >= cutoff),
-      "trade" -> src("trade").filter($"t_dts" >= cutoff),
-      "trade_history" -> src("trade_history").filter($"th_dts" >= cutoff),
-      "cash_transaction" -> src("cash_transaction").filter($"ct_dts" >= cutoff))
+    val tsCols = Map("customer_mgmt" -> "action_ts", "trade" -> "t_dts",
+      "trade_history" -> "th_dts", "cash_transaction" -> "ct_dts")
+    (src ++ tsCols.map { case (k, c) => k -> src(k).filter(col(c) < cutoff) },
+      tsCols.map { case (k, c) => k -> src(k).filter(col(c) >= cutoff) })
+  }
+
+  private def assertSameRows(model: String, got: DataFrame, want: DataFrame): Unit =
+    withClue(s"model $model: ") {
+      val g = got.select(want.columns.map(col): _*)
+      g.exceptAll(want).count() shouldBe 0L
+      want.exceptAll(g).count() shouldBe 0L
+      g.count() shouldBe want.count()
+    }
+
+  private lazy val modelNames = Dag.nodes(Map.empty).map(_.name)
+
+  test("applyBatch2: warehouse-level incremental refresh == full rebuild") {
+    val (b1, b2) = crmTradeCashSplit(wh.sources)
     val refreshed = Warehouse.applyBatch2(new Warehouse(b1), b2)
     val full = wh.all.toMap
-    for (m <- allStreamModels) {
-      withClue(s"model $m: ") {
-        val f = full(m)
-        val inc = refreshed(m).select(f.columns.map(col): _*)
-        inc.exceptAll(f).count() shouldBe 0L
-        f.exceptAll(inc).count() shouldBe 0L
-        inc.count() shouldBe f.count()
+    for (m <- allStreamModels) assertSameRows(m, refreshed(m), full(m))
+  }
+
+  test("applyBatch: each reached model passes through mat once, the rest are the existing frames") {
+    val (b1, b2) = crmTradeCashSplit(wh.sources)
+    val existing = new Warehouse(b1)
+    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+    val refreshed = Warehouse.applyBatch(existing, b2, (n, df) => { seen += n; df })
+      .all.toMap
+    val calls = seen.groupBy(identity).map { case (n, ns) => n -> ns.size }
+    val reached = Dag.downstream(b2.keySet.map(Dag.sourceModel))
+    for (m <- modelNames) withClue(s"model $m: ") {
+      if (reached(m)) calls.get(m) shouldBe Some(1)
+      else {
+        calls.get(m) shouldBe None
+        (refreshed(m) eq existing(m)) shouldBe true
       }
     }
+    (calls.keySet -- modelNames) should contain only ("trades_history_touched",
+      "dim_trade_touched", "cash_transactions_new", "fact_cash_transactions_new",
+      "holdings_history_touched")
+    Warehouse.mergeRules(existing, b2, (_, df) => df, _ => fail("no rule runs"))
+      .keySet.foreach(modelNames should contain(_))
+    Warehouse.incrementalSources.foreach(Dag.sourceModel.keySet should contain(_))
+  }
+
+  test("applyBatch: a lookup-table delta falls back to the full rebuild") {
+    // batch1's customer 43 names a local tax rate only batch2 adds, next
+    // to the CRM/trade/cash delta: an entity-scoped merge would leave
+    // its untouched account without the rate
+    val src = wh.sources + ("customer_mgmt" -> wh.sources("customer_mgmt")
+      .withColumn("c_lcl_tx_id", when($"c_id" === 43L, lit("NV1")).otherwise($"c_lcl_tx_id")))
+    val (b1, crmTradeCash) = crmTradeCashSplit(src)
+    val b2 = crmTradeCash + ("tax_rate" ->
+      Seq(("NV1", "Nevada", 0.05)).toDF("tx_id", "tx_name", "tx_rate"))
+    val existing = new Warehouse(b1)
+    def localRate(accounts: DataFrame) = accounts.filter($"account_id" === "9")
+      .select($"local_tax_rate").as[Option[Double]].collect().toSeq
+    localRate(existing("accounts")) shouldBe Seq(None)
+    val full = new Warehouse(b1.map { case (k, v) =>
+      k -> b2.get(k).map(v.unionByName(_)).getOrElse(v) }).all.toMap
+    localRate(full("accounts")) shouldBe Seq(Some(0.05))
+    val refreshed = Warehouse.applyBatch2(existing, b2)
+    for (m <- modelNames) assertSameRows(m, refreshed(m), full(m))
   }
 
   private def slice3(cut1: java.sql.Timestamp, cut2: java.sql.Timestamp) = {
@@ -367,15 +412,7 @@ class WarehouseSpec extends SparkSpec {
     val chained = Warehouse.applyBatch(
       Warehouse.applyBatch(new Warehouse(b1), b2), b3).all.toMap
     val full = wh.all.toMap
-    for (m <- allStreamModels) {
-      withClue(s"model $m: ") {
-        val f = full(m)
-        val inc = chained(m).select(f.columns.map(col): _*)
-        inc.exceptAll(f).count() shouldBe 0L
-        f.exceptAll(inc).count() shouldBe 0L
-        inc.count() shouldBe f.count()
-      }
-    }
+    for (m <- allStreamModels) assertSameRows(m, chained(m), full(m))
   }
 
   test("streaming merge-on-arrival == batch applyBatch2 == full rebuild") {
@@ -426,51 +463,5 @@ class WarehouseSpec extends SparkSpec {
         }
       }
     }
-  }
-
-  test("applyBatch factPart: partition-scoped fact merge == whole-table merge") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-factpart").toString
-    val prevMode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val cutoff = ts("2020-03-11 00:00:00")
-      val src = wh.sources
-      val b1 = src ++ Map(
-        "customer_mgmt" -> src("customer_mgmt").filter($"action_ts" < cutoff),
-        "trade" -> src("trade").filter($"t_dts" < cutoff),
-        "trade_history" -> src("trade_history").filter($"th_dts" < cutoff),
-        "cash_transaction" -> src("cash_transaction").filter($"ct_dts" < cutoff))
-      val b2 = Map(
-        "trade" -> src("trade").filter($"t_dts" >= cutoff),
-        "trade_history" -> src("trade_history").filter($"th_dts" >= cutoff))
-      val pExpr = date_format(col("create_timestamp"), "yyyy-MM")
-      // partitioned storage layout: the stored fact carries its grain
-      // key and the (immutable) event-month partition column
-      val wh1 = new Warehouse(b1)
-      val factDir = s"$tmp/fact_trade"
-      wh1("fact_trade")
-        .join(wh1("dim_trade").select($"sk_trade_id", $"trade_id"), Seq("sk_trade_id"))
-        .withColumn("p_month", pExpr)
-        .write.mode("overwrite").partitionBy("p_month").parquet(factDir)
-      val existing = new Warehouse(b1,
-        overrides = Map("fact_trade" -> spark.read.parquet(factDir)))
-      var factWrites = 0
-      val mat: (String, DataFrame) => DataFrame = (name, df) =>
-        if (name == "fact_trade") {
-          factWrites += 1
-          df.write.mode("overwrite").partitionBy("p_month").parquet(factDir)
-          spark.read.parquet(factDir)
-        } else df
-      val refreshed = Warehouse.applyBatch(existing, b2, mat,
-        factPart = Some(Warehouse.FactPartition("p_month", pExpr)))
-      factWrites shouldBe 1
-      val f = wh("fact_trade")
-      val got = refreshed("fact_trade").drop("trade_id", "p_month")
-        .select(f.columns.map(col): _*)
-      got.exceptAll(f).count() shouldBe 0L
-      f.exceptAll(got).count() shouldBe 0L
-      got.count() shouldBe f.count()
-    } finally
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
   }
 }
