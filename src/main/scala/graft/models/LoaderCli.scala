@@ -13,7 +13,7 @@ package graft.models
   *   --show        print a 20-row sample instead of writing
   *   --out DIR     write each table to DIR/NAME (parquet; default /tmp/graft_wh)
   *   --batch2 DIR  incremental refresh: apply the delta batch in DIR to
-  *                 the Batch1 warehouse via Warehouse.applyBatch2 and
+  *                 the Batch1 warehouse via Warehouse.applyBatchDirs and
   *                 show/write the refreshed MODELS instead of the raw
   *                 source tables (the reference's named future work,
   *                 README.md:325)
@@ -36,9 +36,8 @@ object LoaderCli {
     val spark = graft.Session()
 
     val tables = (opt("--batch2"), opt("--batch3")) match {
-      case (Some(d2), Some(d3)) =>
-        Warehouse.applyBatchDirs(spark, batchDir, Seq(d2, d3))
-      case (Some(d2), None) => Warehouse.applyBatch2Dir(spark, batchDir, d2)
+      case (Some(d2), d3) =>
+        Warehouse.applyBatchDirs(spark, batchDir, Seq(d2) ++ d3)
       case (None, Some(_)) =>
         sys.error("--batch3 requires --batch2 (batches apply in order)")
       case (None, None) => Loader.loadAll(spark, batchDir)

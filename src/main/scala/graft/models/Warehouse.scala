@@ -395,18 +395,11 @@ object Warehouse {
       }))
   }
 
-  /** [[applyBatch2]] straight from batch directories (DIGen-style file
-    * layouts; the delta directory holds the same file shapes as Batch1).
-    */
-  def applyBatch2Dir(spark: SparkSession, batch1Dir: String,
-                     batch2Dir: String): Map[String, DataFrame] =
-    applyBatch2(fromBatchDir(spark, batch1Dir),
-      Loader.loadAll(spark, batch2Dir))
-
-  /** Chained [[applyBatch]] straight from batch directories — the full
-    * TPC-DI batch sequence (Batch2, Batch3, …) applied in order, each
-    * step merging only its delta's reach (gate q49 pins the chained
-    * equality).
+  /** Chained [[applyBatch]] straight from batch directories
+    * (DIGen-style file layouts; each delta directory holds the same
+    * file shapes as Batch1) — the full TPC-DI batch sequence (Batch2,
+    * Batch3, …) applied in order, each step merging only its delta's
+    * reach (gate q49 pins the chained equality).
     */
   def applyBatchDirs(spark: SparkSession, batch1Dir: String,
                      deltaDirs: Seq[String]): Map[String, DataFrame] =

@@ -893,18 +893,32 @@ object GraphAnn {
 
   /** Append a batch WITHOUT touching unaffected nodes, yet EXACTLY
     * rebuild-equivalent (gate n33 pins index equality with a from-
-    * scratch build over the union). The argument is heap dominance
-    * plus one structural fact: a stored neighbor list is the union of
-    * a top-`degree` intra list and a top-`crossDegree` cross list over
-    * DISJOINT pools (an edge is intra iff the neighbor's home cell is
-    * the node's own), so the split reconstructs from the stored edges,
-    * and topK(pool ∪ batch) = topK(topK(pool) ∪ batch) per pool.
-    * Work is proportional to the batch and the members of cells it
-    * touches, never the corpus: untouched nodes and entries carry
-    * over verbatim. Cells and routing stay FROZEN — the n22 trade —
-    * with drift monitored/retrained by the same policy shape as n30.
+    * scratch build over the union). Under the α-prune rule, or on a
+    * single-cell grid, this is a one-shard call of the batched redo
+    * ([[moveGraphShardsBatched]]). Under the kNN rule on a multi-cell
+    * grid it merges by heap dominance instead ([[appendByHeapDominance]]).
+    * Cells and routing stay FROZEN — the n22 trade — with drift
+    * monitored/retrained by the same policy shape as n30.
     */
   def appendToGraphIndex(index: GraphIndex, newVecs: DataFrame)
+      : GraphIndex =
+    if (index.alpha.nonEmpty || index.cells.length < 2)
+      moveGraphShardsBatched("appendToGraphIndex", Seq(index), Set(0),
+        None, arrivalsOf(newVecs)).head
+    else appendByHeapDominance(index, newVecs)
+
+  /** The kNN append: a stored neighbor list is the union of a
+    * top-`degree` intra list and a top-`crossDegree` cross list over
+    * DISJOINT pools (an edge is intra iff the neighbor's home cell is
+    * the node's own), so the split reconstructs from the stored edges,
+    * and topK(pool ∪ batch) = topK(topK(pool) ∪ batch) per pool. The
+    * α-prune rule has no such dominance (pruning is pool-geometry-
+    * dependent), and a single-cell grid has no disjoint split, so
+    * neither comes here. Work is proportional to the batch and the
+    * members of cells it touches, never the corpus: untouched nodes
+    * and entries carry over verbatim.
+    */
+  private def appendByHeapDominance(index: GraphIndex, newVecs: DataFrame)
       : GraphIndex = {
     val cells = index.cells
     val deg = index.degree
@@ -920,12 +934,7 @@ object GraphAnn {
     IndexIo.requireBatchIdsUnique("appendToGraphIndex", nu, "n_id")
     IndexIo.requireIdsNotIndexed("appendToGraphIndex", index.nodes, nu,
       "n_id")
-    // cell2 is stored at build time since r10; a pre-r10 node table
-    // (loaded from disk) recomputes it once here and the appended
-    // index carries it forward
-    val oldNodes =
-      if (index.nodes.columns.contains("cell2")) index.nodes
-      else index.nodes.withColumn("cell2", secondCell(col("emb"), cells))
+    val oldNodes = withCell2(index.nodes, cells)
     val oldC = oldNodes.select("n_id", "emb", "cell", "cell2")
     // affected old nodes: home or second cell received new members —
     // a semi-join on STORED columns, no per-node geometry
@@ -936,13 +945,10 @@ object GraphAnn {
         "left_semi"))
       .dropDuplicates("n_id")
       .localCheckpoint()
-    // peers restricted to the redo rows' (batch + affected) home and
-    // second cells — the edge rules read no other cell, so the peer
-    // scan shrinks to the touched neighborhood (the merge discipline)
+    // peers restricted to the new nodes' home and second cells — the
+    // edge rule reads no other cell (the merge discipline)
     val redoCells = nu.select("cell")
       .unionByName(nu.select(col("cell2").as("cell")))
-      .unionByName(affected.select("cell"))
-      .unionByName(affected.select(col("cell2").as("cell")))
       .distinct()
     val all = oldC.select("n_id", "emb", "cell")
       .unionByName(nu.select("n_id", "emb", "cell"))
@@ -950,129 +956,73 @@ object GraphAnn {
       .select(col("cell"), col("n_id").as("m_id"),
         col("emb").as("m_emb"))
     val emptyNbrs = expr("cast(array() as array<bigint>)")
-    val nodes2 = (index.alpha match {
-      case Some(a) =>
-        // α-pruned edges cannot be merged from stored lists: pruning
-        // is pool-geometry-dependent, so heap dominance does not
-        // apply. Instead the affected set re-runs the BUILD RULE
-        // against the union's full cell membership — rebuild
-        // equivalence is immediate because a node's pruned list
-        // depends only on its home + second cells' members, and an
-        // unaffected node's cells gained none. Work ∝ members of
-        // touched cells × their cell sizes, never the corpus.
-        // resolve the pool the way build does: GraphIndex is a public
-        // case class whose defaults allow alpha = Some(a) with
-        // poolSize = 0 (a hand-constructed index); passing 0 through
-        // would hit topEdges with k = 0 and yield an edge-less graph
-        val poolN = resolvePool(index.alpha, index.poolSize, deg, cross)
-        val redo = nu.unionByName(affected)
-        // explicit join regime (the mergeHnswIndexes note): both
-        // inputs derive from checkpointed leaves, so a bounded redo
-        // side broadcasts by hand or a skewed cell serializes it
-        val redoSide =
-          if (withinBroadcastBudget(redo, cells))
-            redo.hint("broadcast")
-          else redo
-        val redoNbrs = prunedNeighbors(
-          redoSide.select("cell", "n_id", "emb"),
-          allPeers, cells, deg, cross, a, poolN)
-        val redoNodes = redo.join(redoNbrs, Seq("n_id"), "left")
-          .select(col("n_id"), col("emb"), col("cell"), col("cell2"),
-            coalesce(col("neighbors"), emptyNbrs).as("neighbors"))
-        oldNodes.join(affected.select("n_id"), Seq("n_id"), "left_anti")
-          .unionByName(redoNodes)
-      case None if cells.length < 2 =>
-        // single-cell index: there is no disjoint intra/cross split to
-        // merge by (the build rule degrades to ONE pool at the full
-        // degree budget), so affected nodes re-run the build rule —
-        // the same shape as the α branch
-        val redo = nu.unionByName(affected)
-        // one cell ⇒ one join key: the broadcast regime is the ONLY
-        // parallel plan here (a shuffle join would put the whole
-        // corpus-vs-redo product in a single partition)
-        val redoSide1 =
-          if (withinBroadcastBudget(redo, cells))
-            redo.hint("broadcast")
-          else redo
-        val redoNbrs = knnNeighbors(
-          redoSide1.select("cell", "n_id", "emb"),
-          allPeers, cells, deg, cross)
-        val redoNodes = redo.join(redoNbrs, Seq("n_id"), "left")
-          .select(col("n_id"), col("emb"), col("cell"), col("cell2"),
-            coalesce(col("neighbors"), emptyNbrs).as("neighbors"))
-        oldNodes.join(affected.select("n_id"), Seq("n_id"), "left_anti")
-          .unionByName(redoNodes)
-      case None =>
-        // kNN edge rule: incremental merge by heap dominance —
-        // topK(pool ∪ batch) = topK(topK(pool) ∪ batch) per disjoint
-        // intra/cross pool, so stored edges + batch candidates suffice
-        // new nodes: exactly the build rule against the full member set
-        val nuSide =
-          if (withinBroadcastBudget(nu, cells))
-            nu.hint("broadcast")
-          else nu
-        val nuNbrs = knnNeighbors(nuSide.select("cell", "n_id", "emb"),
-          allPeers, cells, deg, cross)
-        val nuNodes = nu.join(nuNbrs, Seq("n_id"), "left")
-          .select(col("n_id"), col("emb"), col("cell"), col("cell2"),
-            coalesce(col("neighbors"), emptyNbrs).as("neighbors"))
-        // stored edges of affected nodes, re-scored and split
-        // intra/cross by the neighbor's home cell. When the affected
-        // set is bounded, the neighbor-side pickup is confined to the
-        // ids its lists actually name (≤ |affected|·degree, broadcast
-        // semi) — an unrestricted corpus-wide m_id join would shuffle
-        // every embedding to re-score a batch-sized edge set. Past the
-        // bound (a batch touching most cells) the named set approaches
-        // the corpus and the shuffle join is the right plan.
-        val mSideAll = oldC.select(col("n_id").as("m_id"),
-          col("emb").as("m_emb"), col("cell").as("m_cell"))
-        val mSide =
-          if (withinBroadcastBudget(affected, cells)) {
-            val namedIds = oldNodes
-              .join(affected.select("n_id"), Seq("n_id"), "left_semi")
-              .select(explode(col("neighbors")).as("m_id")).distinct()
-            mSideAll.join(broadcast(namedIds), Seq("m_id"), "left_semi")
-          } else mSideAll
-        val oldEdges = oldNodes
+    // new nodes: exactly the build rule against the full member set
+    val nuSide =
+      if (withinBroadcastBudget(nu, cells)) nu.hint("broadcast")
+      else nu
+    val nuNbrs = knnNeighbors(nuSide.select("cell", "n_id", "emb"),
+      allPeers, cells, deg, cross)
+    val nuNodes = nu.join(nuNbrs, Seq("n_id"), "left")
+      .select(col("n_id"), col("emb"), col("cell"), col("cell2"),
+        coalesce(col("neighbors"), emptyNbrs).as("neighbors"))
+    // stored edges of affected nodes, re-scored and split intra/cross
+    // by the neighbor's home cell. When the affected set is bounded,
+    // the neighbor-side pickup is confined to the ids its lists
+    // actually name (≤ |affected|·degree, broadcast semi) — an
+    // unrestricted corpus-wide m_id join would shuffle every embedding
+    // to re-score a batch-sized edge set. Past the bound (a batch
+    // touching most cells) the named set approaches the corpus and the
+    // shuffle join is the right plan.
+    val mSideAll = oldC.select(col("n_id").as("m_id"),
+      col("emb").as("m_emb"), col("cell").as("m_cell"))
+    val mSide =
+      if (withinBroadcastBudget(affected, cells)) {
+        val namedIds = oldNodes
           .join(affected.select("n_id"), Seq("n_id"), "left_semi")
-          .select(col("n_id"), col("cell"), col("emb"),
-            explode(col("neighbors")).as("m_id"))
-          .join(mSide, Seq("m_id"))
-          .select(col("n_id"), col("m_id"),
-            Similarity.cosine(col("emb"), col("m_emb")).as("sim"),
-            (col("m_cell") === col("cell")).as("is_intra"))
-        // candidate edges into the batch, per pool
-        val newPeers = nu.select(col("cell"), col("n_id").as("m_id"),
-          col("emb").as("m_emb"))
-        def fresh(side: DataFrame): DataFrame =
-          side.join(newPeers, Seq("cell"))
-            .select(col("n_id"), col("m_id"),
-              Similarity.cosine(col("emb"), col("m_emb")).as("sim"))
-        def pool(existing: DataFrame, candidates: DataFrame,
-                 d: Int): DataFrame =
-          existing.select("n_id", "m_id", "sim").unionByName(candidates)
-            .groupBy("n_id")
-            .agg(TopK.topK(col("sim"), col("m_id"), d).as("top"))
-            .select(col("n_id"), explode(col("top")).as("e"))
-            .select(col("n_id"), col("e.id").as("m_id"),
-              col("e.score").as("sim"))
-        val intraTop = pool(oldEdges.filter(col("is_intra")),
-          fresh(affected.select("cell", "n_id", "emb")), deg)
-        val merged =
-          if (cross == 0) intraTop
-          else intraTop.unionByName(pool(oldEdges.filter(!col("is_intra")),
-            fresh(affected.select(col("cell2").as("cell"), col("n_id"),
-              col("emb"))), cross))
-        val affNbrs = merged.groupBy("n_id")
-          .agg(TopK.topK(col("sim"), col("m_id"), deg + cross).as("top"))
-          .select(col("n_id"), col("top.id").as("neighbors"))
-        val affNodes = affected.select("n_id", "emb", "cell", "cell2")
-          .join(affNbrs, Seq("n_id"), "left")
-          .select(col("n_id"), col("emb"), col("cell"), col("cell2"),
-            coalesce(col("neighbors"), emptyNbrs).as("neighbors"))
-        oldNodes.join(affected.select("n_id"), Seq("n_id"), "left_anti")
-          .unionByName(affNodes).unionByName(nuNodes)
-    }).localCheckpoint()
+          .select(explode(col("neighbors")).as("m_id")).distinct()
+        mSideAll.join(broadcast(namedIds), Seq("m_id"), "left_semi")
+      } else mSideAll
+    val oldEdges = oldNodes
+      .join(affected.select("n_id"), Seq("n_id"), "left_semi")
+      .select(col("n_id"), col("cell"), col("emb"),
+        explode(col("neighbors")).as("m_id"))
+      .join(mSide, Seq("m_id"))
+      .select(col("n_id"), col("m_id"),
+        Similarity.cosine(col("emb"), col("m_emb")).as("sim"),
+        (col("m_cell") === col("cell")).as("is_intra"))
+    // candidate edges into the batch, per pool
+    val newPeers = nu.select(col("cell"), col("n_id").as("m_id"),
+      col("emb").as("m_emb"))
+    def fresh(side: DataFrame): DataFrame =
+      side.join(newPeers, Seq("cell"))
+        .select(col("n_id"), col("m_id"),
+          Similarity.cosine(col("emb"), col("m_emb")).as("sim"))
+    def pool(existing: DataFrame, candidates: DataFrame,
+             d: Int): DataFrame =
+      existing.select("n_id", "m_id", "sim").unionByName(candidates)
+        .groupBy("n_id")
+        .agg(TopK.topK(col("sim"), col("m_id"), d).as("top"))
+        .select(col("n_id"), explode(col("top")).as("e"))
+        .select(col("n_id"), col("e.id").as("m_id"),
+          col("e.score").as("sim"))
+    val intraTop = pool(oldEdges.filter(col("is_intra")),
+      fresh(affected.select("cell", "n_id", "emb")), deg)
+    val merged =
+      if (cross == 0) intraTop
+      else intraTop.unionByName(pool(oldEdges.filter(!col("is_intra")),
+        fresh(affected.select(col("cell2").as("cell"), col("n_id"),
+          col("emb"))), cross))
+    val affNbrs = merged.groupBy("n_id")
+      .agg(TopK.topK(col("sim"), col("m_id"), deg + cross).as("top"))
+      .select(col("n_id"), col("top.id").as("neighbors"))
+    val affNodes = affected.select("n_id", "emb", "cell", "cell2")
+      .join(affNbrs, Seq("n_id"), "left")
+      .select(col("n_id"), col("emb"), col("cell"), col("cell2"),
+        coalesce(col("neighbors"), emptyNbrs).as("neighbors"))
+    val nodes2 = oldNodes.join(affected.select("n_id"), Seq("n_id"),
+        "left_anti")
+      .unionByName(affNodes).unionByName(nuNodes)
+      .localCheckpoint()
     // entries: recompute only cells that gained members
     val entries2 = index.entries
       .join(touched, Seq("cell"), "left_anti")
@@ -1083,248 +1033,167 @@ object GraphAnn {
     index.copy(nodes = nodes2, entries = entries2)
   }
 
+  /** cell2 is stored at build time since r10; a pre-r10 node table
+    * (loaded from disk) recomputes it once here and the maintained
+    * index carries it forward.
+    */
+  private def withCell2(nodes: DataFrame,
+                        cells: Array[Array[Double]]): DataFrame =
+    if (nodes.columns.contains("cell2")) nodes
+    else nodes.withColumn("cell2", secondCell(col("emb"), cells))
+
+  /** A single index's departing ids (`vec_id`) as the shard-0
+    * departure leg of a batched redo. */
+  private def departuresOf(ids: DataFrame): Option[DataFrame] =
+    Some(ids.select(lit(0).as("shard"), col("vec_id").as("n_id")))
+
+  /** A single index's arriving rows (`vec_id`, `embedding`) as the
+    * shard-0 arrival leg of a batched redo. */
+  private def arrivalsOf(rows: DataFrame): Option[DataFrame] =
+    Some(rows.select(lit(0).as("shard"), col("vec_id"), col("embedding")))
+
   /** Delete vectors WITHOUT touching unaffected nodes, yet EXACTLY
     * rebuild-equivalent (gate n37 pins index equality with a
-    * from-scratch build over the remaining corpus) — the FreshDiskANN
-    * consolidation contract done exactly rather than lazily. Unlike
-    * [[appendToGraphIndex]]'s kNN path, stored edges cannot be merged
-    * under EITHER edge rule: a deleted neighbor's replacement is the
-    * (k+1)-th pool member, which the stored top-k dropped — so every
-    * affected node re-runs the build rule against its pools' REMAINING
-    * members. Affected = remaining nodes whose home or second cell is
-    * among the deleted nodes' home cells (pool membership flows only
-    * through home cells, so an unaffected node's stored list cannot
-    * point at a deleted node). Entries recompute for touched cells
-    * only. Work ∝ members of touched cells × their cell sizes, never
-    * the corpus; cells and routing stay FROZEN (the n22/n33 trade).
-    *
-    * `ids`: one `vec_id` column; ids absent from the index are
-    * ignored. Deleting every member of a cell leaves the cell
-    * entry-less (queries probing it fall back per [[beamSearch]]).
+    * from-scratch build over the remaining corpus): a one-shard call
+    * of the batched redo ([[moveGraphShardsBatched]]). `ids`: one
+    * `vec_id` column; ids absent from the index are ignored. Deleting
+    * every member of a cell leaves the cell entry-less (queries
+    * probing it fall back per [[beamSearch]]).
     */
   def deleteFromGraphIndex(index: GraphIndex, ids: DataFrame)
-      : GraphIndex = {
-    val cells = index.cells
-    val deg = index.degree
-    val cross = index.crossDegree
-    val delIds = ids.select(col("vec_id").cast("long").as("n_id"))
-      .distinct().localCheckpoint()
-    val oldNodes =
-      if (index.nodes.columns.contains("cell2")) index.nodes
-      else index.nodes.withColumn("cell2", secondCell(col("emb"), cells))
-    val touched = oldNodes.join(delIds, Seq("n_id"), "left_semi")
-      .select("cell").distinct().localCheckpoint()
-    val remaining = oldNodes.join(delIds, Seq("n_id"), "left_anti")
-      .localCheckpoint()
-    val remC = remaining.select("n_id", "emb", "cell", "cell2")
-    val affected = remC.join(touched, Seq("cell"), "left_semi")
-      .unionByName(remC.join(
-        touched.withColumnRenamed("cell", "cell2"), Seq("cell2"),
-        "left_semi"))
-      .dropDuplicates("n_id")
-      .localCheckpoint()
-    // peers restricted to the affected rows' home/second cells +
-    // explicit join regime — the appendToGraphIndex notes
-    val redoCells = affected.select("cell")
-      .unionByName(affected.select(col("cell2").as("cell"))).distinct()
-    val peers = remC.join(broadcast(redoCells), Seq("cell"), "left_semi")
-      .select(col("cell"), col("n_id").as("m_id"),
-        col("emb").as("m_emb"))
-    val affectedSide =
-      if (withinBroadcastBudget(affected, cells))
-        affected.hint("broadcast")
-      else affected
-    val poolN = resolvePool(index.alpha, index.poolSize, deg, cross)
-    val redoNbrs = neighborRule(affectedSide.select("cell", "n_id", "emb"),
-      peers, cells, deg, cross, index.alpha, poolN)
-    val emptyNbrs = expr("cast(array() as array<bigint>)")
-    val redoNodes = affected.join(redoNbrs, Seq("n_id"), "left")
-      .select(col("n_id"), col("emb"), col("cell"), col("cell2"),
-        coalesce(col("neighbors"), emptyNbrs).as("neighbors"))
-    val nodes2 = remaining
-      .join(affected.select("n_id"), Seq("n_id"), "left_anti")
-      .unionByName(redoNodes)
-      .localCheckpoint()
-    val entries2 = index.entries
-      .join(touched, Seq("cell"), "left_anti")
-      .unionByName(hashEntries(
-        remC.join(touched, Seq("cell"), "left_semi"),
-        index.entriesPerCell))
-      .localCheckpoint()
-    index.copy(nodes = nodes2, entries = entries2)
-  }
+      : GraphIndex =
+    moveGraphShardsBatched("deleteFromGraphIndex", Seq(index), Set(0),
+      departuresOf(ids), None).head
 
   /** Fused move: delete `outIds` and append `inRows` in ONE redo pass
     * — exactly equal to `appendToGraphIndex(deleteFromGraphIndex(idx,
-    * outIds), inRows)` (both composands are rebuild-exact, so the
-    * composition is a fresh build over (members \ out) ∪ in; this verb
-    * reaches the same fresh build directly). The rebalance verb's cost
-    * floor was the composition's doubled bookkeeping: delete
-    * materializes its full post-state, append materializes ANOTHER,
-    * and the delete-affected ∩ append-affected rows re-run the edge
-    * rule twice. Fused, the affected set is computed ONCE over the
-    * union of touched cells (home cells of movers-out ∪ movers-in),
-    * the edge rule runs once per affected node against the FINAL
-    * member set, and exactly one full-state materialization remains —
-    * the result itself. Work ∝ movers + members of their touched
-    * cells, never the corpus.
+    * outIds), inRows)`, and so to a fresh build over (members \ out) ∪
+    * in. An arrival may re-home a departing id; one colliding with a
+    * kept row fails fast. A one-shard call of the batched redo
+    * ([[moveGraphShardsBatched]]).
     */
   def moveGraphIndex(index: GraphIndex, outIds: DataFrame,
-                     inRows: DataFrame): GraphIndex = {
-    val cells = index.cells
-    val deg = index.degree
-    val cross = index.crossDegree
-    val delIds = outIds.select(col("vec_id").cast("long").as("n_id"))
-      .distinct().localCheckpoint()
-    val nu = inRows.select(col("vec_id").cast("long").as("n_id"),
-        col("embedding").as("emb"),
-        Centroids.centroidAssign(col("embedding"), cells).as("cell"),
-        secondCell(col("embedding"), cells).as("cell2"))
-      .localCheckpoint()
-    IndexIo.requireBatchIdsUnique("moveGraphIndex", nu, "n_id")
-    val oldNodes =
-      if (index.nodes.columns.contains("cell2")) index.nodes
-      else index.nodes.withColumn("cell2", secondCell(col("emb"), cells))
-    // remaining is NOT checkpointed: its consumers re-run a scan of
-    // the (already materialized) old node state plus a broadcast anti
-    // join — scan-priced, while a checkpoint here was one of the two
-    // full-state copies the fused verb exists to remove
-    val remaining = oldNodes.join(delIds, Seq("n_id"), "left_anti")
-    IndexIo.requireIdsNotIndexed("moveGraphIndex", remaining, nu, "n_id")
-    val remC = remaining.select("n_id", "emb", "cell", "cell2")
-    // touched = home cells of movers-out ∪ movers-in: pool membership
-    // flows only through home cells, so these are the only cells whose
-    // member sets change
-    val touched = oldNodes.join(delIds, Seq("n_id"), "left_semi")
-      .select("cell")
-      .unionByName(nu.select("cell"))
-      .distinct().localCheckpoint()
-    val affected = remC.join(touched, Seq("cell"), "left_semi")
-      .unionByName(remC.join(
-        touched.withColumnRenamed("cell", "cell2"), Seq("cell2"),
-        "left_semi"))
-      .dropDuplicates("n_id")
-      .localCheckpoint()
-    val redo = affected.unionByName(nu).localCheckpoint()
-    // peers restricted to the redo rows' home/second cells over the
-    // FINAL member set + explicit join regime — the append/delete notes
-    val redoCells = redo.select("cell")
-      .unionByName(redo.select(col("cell2").as("cell"))).distinct()
-    val all = remC.select("n_id", "emb", "cell")
-      .unionByName(nu.select("n_id", "emb", "cell"))
-    val peers = all.join(broadcast(redoCells), Seq("cell"), "left_semi")
-      .select(col("cell"), col("n_id").as("m_id"),
-        col("emb").as("m_emb"))
-    val poolN = resolvePool(index.alpha, index.poolSize, deg, cross)
-    val redoSide =
-      if (withinBroadcastBudget(redo, cells)) redo.hint("broadcast")
-      else redo
-    val redoNbrs = neighborRule(redoSide.select("cell", "n_id", "emb"),
-      peers, cells, deg, cross, index.alpha, poolN)
-    val emptyNbrs = expr("cast(array() as array<bigint>)")
-    val redoNodes = redo.join(redoNbrs, Seq("n_id"), "left")
-      .select(col("n_id"), col("emb"), col("cell"), col("cell2"),
-        coalesce(col("neighbors"), emptyNbrs).as("neighbors"))
-    val nodes2 = remaining
-      .join(affected.select("n_id"), Seq("n_id"), "left_anti")
-      .unionByName(redoNodes)
-      .localCheckpoint()
-    val entries2 = index.entries
-      .join(touched, Seq("cell"), "left_anti")
-      .unionByName(hashEntries(
-        all.join(touched, Seq("cell"), "left_semi"),
-        index.entriesPerCell))
-      .localCheckpoint()
-    index.copy(nodes = nodes2, entries = entries2)
-  }
+                     inRows: DataFrame): GraphIndex =
+    moveGraphShardsBatched("moveGraphIndex", Seq(index), Set(0),
+      departuresOf(outIds), arrivalsOf(inRows)).head
 
-  /** [[moveGraphIndex]] batched across a deployment's shards: ONE job
-    * family processes every touched shard's movers instead of ~15
-    * bounded driver jobs PER shard. At a boundary re-cut the per-shard
-    * form is fine (two shards move); at a large drift re-cut touching
-    * hundreds of shards, per-shard job submission becomes a
-    * driver-side scale axis (the q47/q49 lesson: driver planning is a
-    * cost term too) — here every step is one shard-tagged plan, so
-    * driver work is constant in the shard count and the final state
-    * is ONE materialization for the whole fleet. Pool scoping rides
-    * the `(shard, cell)` join keys through the one shared edge rule,
-    * so no shard's pools ever see another shard's members; ids must
-    * be globally unique across shards (they partition one corpus —
-    * the deployment invariant every sharded verb assumes).
-    *
-    * `movers` carries (from_shard, to_shard, vec_id, embedding), one
-    * row per moving vector. Untouched shards are returned verbatim;
-    * touched shards get views filtered off the SHARED checkpoints.
-    * Equality with the per-shard [[moveGraphIndex]] composition (and
-    * so with fresh builds over the new slices) is spec-pinned.
+  /** Shard `j`'s rows of a batched redo's shard-tagged state. When `j`
+    * is the only touched shard every row is its own, so the checkpoint
+    * is handed over unfiltered: a shard filter left in the returned
+    * state costs each later maintenance call over it extra jobs.
     */
-  private[ops] def moveGraphShardsBatched(shards: Seq[GraphIndex],
+  private def shardSlice(state: DataFrame, touchedShards: Set[Int],
+                         j: Int): DataFrame =
+    (if (touchedShards.size == 1) state
+     else state.filter(col("shard") === j)).drop("shard")
+
+  /** The flat tier's ONE rebuild-exact redo: every delete, move,
+    * α-pruned or single-cell append, routed append, routed delete and
+    * rebalance is a call of it (a single index is a one-shard fleet).
+    * Touched cells are the home cells of departures ∪ arrivals — pool
+    * membership flows only through home cells, so these are the only
+    * cells whose member sets change. Affected = remaining nodes whose
+    * home or second cell is touched; the edge rule re-runs once per
+    * affected node and arrival against the FINAL member set (stored
+    * edges cannot be merged: a departed neighbor's replacement is the
+    * (k+1)-th pool member the stored top-k dropped), and entries
+    * recompute for touched cells only. Work ∝ movers + members of
+    * their touched cells, never the corpus; cells and routing stay
+    * FROZEN (the n22/n33 trade).
+    *
+    * Batched across shards, every step is one shard-tagged plan, so
+    * driver work is constant in the shard count (the q47/q49 lesson:
+    * driver planning is a cost term too) and the final state is ONE
+    * materialization for the whole fleet. Pool scoping rides the
+    * `(shard, cell)` join keys through the one shared edge rule, so no
+    * shard's pools ever see another shard's members; ids must be
+    * globally unique across shards (they partition one corpus — the
+    * deployment invariant every sharded verb assumes).
+    *
+    * `departures` carries (shard, n_id), `arrivals` (shard, vec_id,
+    * embedding); at least one is present. `what` names the caller's
+    * verb in fail-fast messages. Untouched shards are returned
+    * verbatim; touched shards get their slices of the SHARED
+    * checkpoints ([[shardSlice]]).
+    */
+  private[ops] def moveGraphShardsBatched(what: String,
+                                          shards: Seq[GraphIndex],
                                           touchedShards: Set[Int],
-                                          movers: DataFrame)
+                                          departures: Option[DataFrame],
+                                          arrivals: Option[DataFrame])
       : Seq[GraphIndex] = {
+    require(departures.nonEmpty || arrivals.nonEmpty,
+      s"$what: neither departures nor arrivals")
     val head = shards.head
     val cells = head.cells
     require(shards.forall(s => s.degree == head.degree &&
       s.crossDegree == head.crossDegree && s.alpha == head.alpha &&
       s.poolSize == head.poolSize &&
       s.entriesPerCell == head.entriesPerCell),
-      "moveGraphShardsBatched: shard build parameters differ — a " +
-        "sharded deployment must share one frozen edge rule")
+      s"$what: shard build parameters differ — a sharded deployment " +
+        "must share one frozen edge rule")
     val touched = touchedShards.toSeq.sorted
     val sc = Seq("shard", "cell")
+    val sn = Seq("shard", "n_id")
     val oldNodesU = touched.map { j =>
-      val n = shards(j).nodes
-      val withC2 =
-        if (n.columns.contains("cell2")) n
-        else n.withColumn("cell2", secondCell(col("emb"), cells))
-      withC2.select(lit(j).as("shard"), col("n_id"), col("emb"),
-        col("cell"), col("cell2"), col("neighbors"))
+      withCell2(shards(j).nodes, cells).select(lit(j).as("shard"),
+        col("n_id"), col("emb"), col("cell"), col("cell2"),
+        col("neighbors"))
     }.reduce(_.unionByName(_))
-    // sentinel shard −1 on either side means "no departure" (a routed
-    // append) / "no arrival" (a routed delete) — drop those legs here
-    // so one job-family skeleton serves all three routed verbs
-    val delIds = movers.filter(col("from_shard") >= 0)
-      .select(col("from_shard").as("shard"),
-        col("vec_id").cast("long").as("n_id"))
-      .distinct().localCheckpoint()
-    val nu = movers.filter(col("to_shard") >= 0)
-      .select(col("to_shard").as("shard"),
+    val delIds = departures.map(_.select(col("shard"),
+        col("n_id").cast("long").as("n_id"))
+      .distinct().localCheckpoint())
+    val nu = arrivals.map(_.select(col("shard"),
         col("vec_id").cast("long").as("n_id"),
         col("embedding").as("emb"),
         Centroids.centroidAssign(col("embedding"), cells).as("cell"),
         secondCell(col("embedding"), cells).as("cell2"))
-      .localCheckpoint()
-    // one destination per mover ⇒ ids unique across the whole batch
-    IndexIo.requireBatchIdsUnique("moveGraphShardsBatched", nu, "n_id")
-    val remaining = oldNodesU.join(delIds, Seq("shard", "n_id"),
-      "left_anti")
+      .localCheckpoint())
+    // one destination per arrival ⇒ ids unique across the whole batch
+    nu.foreach(IndexIo.requireBatchIdsUnique(what, _, "n_id"))
+    // remaining is NOT checkpointed: its consumers re-run a scan of the
+    // (already materialized) old node state plus a broadcast anti join
+    // — scan-priced, while a checkpoint here would be a second
+    // full-state copy next to the result
+    val remaining =
+      delIds.fold(oldNodesU)(oldNodesU.join(_, sn, "left_anti"))
     // an arriving id's source shard is touched by construction, so a
     // global id check suffices (its old row left `remaining` above)
-    IndexIo.requireIdsNotIndexed("moveGraphShardsBatched", remaining,
-      nu, "n_id")
+    nu.foreach(IndexIo.requireIdsNotIndexed(what, remaining, _, "n_id"))
     val remC = remaining.select("shard", "n_id", "emb", "cell", "cell2")
-    val touchedCells = oldNodesU
-      .join(delIds, Seq("shard", "n_id"), "left_semi")
-      .select("shard", "cell")
-      .unionByName(nu.select("shard", "cell"))
+    val touchedCells = (delIds.map(d =>
+        oldNodesU.join(d, sn, "left_semi").select("shard", "cell")) ++
+        nu.map(_.select("shard", "cell")))
+      .reduce(_.unionByName(_))
       .distinct().localCheckpoint()
-    val affected = remC.join(touchedCells, sc, "left_semi")
+    // touched cells are at most shards · nlist rows: broadcast by hand.
+    // A checkpoint inherits its producing plan's size estimate, which
+    // can be far too large, and the planner would shuffle the
+    // state-sized side instead
+    val affected = remC.join(broadcast(touchedCells), sc, "left_semi")
       .unionByName(remC.join(
-        touchedCells.withColumnRenamed("cell", "cell2"),
+        broadcast(touchedCells.withColumnRenamed("cell", "cell2")),
         Seq("shard", "cell2"), "left_semi"))
       .dropDuplicates("shard", "n_id")
       .localCheckpoint()
-    val redo = affected.unionByName(nu).localCheckpoint()
+    // both legs are checkpoints, so their union is scan-priced
+    val redo = nu.fold(affected)(affected.unionByName(_))
+    // peers restricted to the redo rows' home/second cells over the
+    // FINAL member set: the edge rule reads no other cell
     val redoCells = redo.select("shard", "cell")
       .unionByName(redo.select(col("shard"), col("cell2").as("cell")))
       .distinct()
-    val all = remC.select("shard", "n_id", "emb", "cell")
-      .unionByName(nu.select("shard", "n_id", "emb", "cell"))
+    val remAll = remC.select("shard", "n_id", "emb", "cell")
+    val all = nu.fold(remAll)(n =>
+      remAll.unionByName(n.select("shard", "n_id", "emb", "cell")))
     val peers = all.join(broadcast(redoCells), sc, "left_semi")
       .select(col("shard"), col("cell"), col("n_id").as("m_id"),
         col("emb").as("m_emb"))
     val poolN = resolvePool(head.alpha, head.poolSize, head.degree,
       head.crossDegree)
+    // explicit join regime: checkpointed inputs carry no statistics,
+    // so a bounded redo side broadcasts by hand or a skewed cell (or a
+    // single-cell grid's one join key) serializes the redo
     val redoSide =
       if (withinBroadcastBudget(redo, cells)) redo.hint("broadcast")
       else redo
@@ -1337,23 +1206,23 @@ object GraphAnn {
         col("cell2"),
         coalesce(col("neighbors"), emptyNbrs).as("neighbors"))
     val nodes2U = remaining
-      .join(affected.select("shard", "n_id"), Seq("shard", "n_id"),
-        "left_anti")
+      .join(affected.select("shard", "n_id"), sn, "left_anti")
       .unionByName(redoNodes)
       .localCheckpoint()
     val entriesU = touched.map(j => shards(j).entries.select(
         lit(j).as("shard"), col("cell"), col("entry_id")))
       .reduce(_.unionByName(_))
-    val entries2U = entriesU.join(touchedCells, sc, "left_anti")
+    val entries2U = entriesU.join(broadcast(touchedCells), sc, "left_anti")
       .unionByName(hashEntries(
-        all.join(touchedCells, sc, "left_semi"), head.entriesPerCell,
+        all.join(broadcast(touchedCells), sc, "left_semi"),
+        head.entriesPerCell,
         keys = sc))
       .localCheckpoint()
     shards.zipWithIndex.map { case (s, j) =>
       if (!touchedShards(j)) s
       else s.copy(
-        nodes = nodes2U.filter(col("shard") === j).drop("shard"),
-        entries = entries2U.filter(col("shard") === j).drop("shard"))
+        nodes = shardSlice(nodes2U, touchedShards, j),
+        entries = shardSlice(entries2U, touchedShards, j))
     }
   }
 
@@ -2237,10 +2106,11 @@ object GraphAnn {
     * n·nlist·dim FLOPs, a corpus-sized job at 100 TB, measured ~25%
     * of the whole rebalance wall at bench scale). This also removes
     * the stale-corpus failure mode — the state IS the membership.
-    * Each shard then applies its movers-out and movers-in in ONE
-    * fused pass ([[moveGraphIndex]] — one redo, one state
-    * materialization, instead of the delete∘append composition's
-    * two), so work is ∝ moved rows + their touched cells — at 100 TB
+    * Every touched shard applies its movers-out and movers-in in ONE
+    * fused batched redo ([[moveGraphShardsBatched]] — one redo, one
+    * state materialization for the fleet, instead of the
+    * delete∘append composition's two per shard), so work is ∝ moved
+    * rows + their touched cells — at 100 TB
     * a boundary shift that moves 2% of cells costs 2% of a rebuild.
     * EXACTLY equal to fresh builds over the new slices (gate n58)
     * because append/delete are each rebuild-equivalent (n33/n37) and
@@ -2284,7 +2154,7 @@ object GraphAnn {
                                stateRows: I => DataFrame,
                                oldMap: Array[Int],
                                newMap: Array[Int])(
-      moveBatched: (Seq[I], Set[Int], DataFrame) => Seq[I]): Seq[I] = {
+      moveBatched: MoveBatched[I]): Seq[I] = {
     require(shards.nonEmpty, s"$what: no shards")
     val cells = requireSharedCells(what, shardCells)
     for ((m, which) <- Seq(oldMap -> "oldMap", newMap -> "newMap"))
@@ -2317,16 +2187,18 @@ object GraphAnn {
       .unionByName(movers.select(col("to_shard").as("s")))
       .distinct().collect().map(_.getInt(0)).toSet
     if (touchedShards.isEmpty) shards
-    else moveBatched(shards, touchedShards, movers)
+    else moveBatched(what, shards, touchedShards,
+      Some(movers.select(col("from_shard").as("shard"),
+        col("vec_id").as("n_id"))),
+      Some(movers.select(col("to_shard").as("shard"), col("vec_id"),
+        col("embedding"))))
   }
 
-  /** Default concurrency for per-shard ROUTED appends (the rebalance
-    * moves themselves are batched into one job family — see
-    * [[moveGraphShardsBatched]]): enough to keep a CLUSTER's scheduler
-    * fed with independent jobs, small enough that one verb cannot
-    * monopolize the driver's job-submission threads.
-    */
-  val RebalanceMoveParallelism: Int = 16
+  /** A tier's batched redo ([[moveGraphShardsBatched]] /
+    * [[moveHnswShardsBatched]]): (what, shards, touched shards,
+    * departures, arrivals) ⇒ the updated fleet. */
+  private type MoveBatched[I] = (String, Seq[I], Set[Int],
+    Option[DataFrame], Option[DataFrame]) => Seq[I]
 
   /** Frozen-codebook handshake shared by every cross-shard verb. */
   private[ops] def requireSharedCells(what: String,
@@ -2342,10 +2214,9 @@ object GraphAnn {
   }
 
   /** Append an arriving batch to a SHARDED graph deployment: route by
-    * the deployment's frozen cell→shard map and run the rebuild-exact
-    * per-shard append on each touched shard, concurrently — the
-    * [[IndexIo.appendRouted]] skeleton, so routing logic cannot drift
-    * between tiers. Exactly equal to slicing the batch by
+    * the deployment's frozen cell→shard map and run every touched
+    * shard's arrivals through ONE batched redo
+    * ([[routedAppendBatched]]). Exactly equal to slicing the batch by
     * [[Similarity.routeByCellMap]] and appending each slice by hand
     * (spec-pinned); with a streaming source, call this from
     * `foreachBatch` (the nightly-ingest shape — see
@@ -2374,8 +2245,8 @@ object GraphAnn {
     * shard comes from the shards' own stored state (one lazy-unioned
     * semi-join over the bounded delete set — ONE job, no corpus, no
     * routing map needed: membership IS ownership), then everything
-    * runs as a movers-out-only batched move (sentinel `to_shard = -1`
-    * — no arrivals), so the whole fleet's delete is one job family
+    * runs as a departures-only batched redo (no arrival leg), so the
+    * whole fleet's delete is one job family
     * with one state materialization. Ids absent from every shard
     * no-op, matching [[deleteFromGraphIndex]]. Completes the sharded
     * CRUD set next to [[appendToGraphShards]] and
@@ -2386,7 +2257,7 @@ object GraphAnn {
       : Seq[GraphIndex] = {
     require(shards.nonEmpty, "deleteFromGraphShards: no shards")
     requireSharedCells("deleteFromGraphShards", shards.map(_.cells))
-    routedDeleteBatched(shards, ids,
+    routedDeleteBatched("deleteFromGraphShards", shards, ids,
       (s: GraphIndex) => s.nodes)(moveGraphShardsBatched)
   }
 
@@ -2395,24 +2266,24 @@ object GraphAnn {
       : Seq[HnswIndex] = {
     require(shards.nonEmpty, "deleteFromHnswShards: no shards")
     requireSharedCells("deleteFromHnswShards", shards.map(_.cells))
-    routedDeleteBatched(shards, ids,
+    routedDeleteBatched("deleteFromHnswShards", shards, ids,
       (s: HnswIndex) => s.nodes)(moveHnswShardsBatched)
   }
 
-  private def routedDeleteBatched[I](shards: Seq[I], ids: DataFrame,
+  private def routedDeleteBatched[I](what: String, shards: Seq[I],
+                                     ids: DataFrame,
                                      nodesOf: I => DataFrame)(
-      moveBatched: (Seq[I], Set[Int], DataFrame) => Seq[I]): Seq[I] = {
+      moveBatched: MoveBatched[I]): Seq[I] = {
     val del = ids.select(col("vec_id").cast("long").as("n_id"))
       .distinct().localCheckpoint()
-    val movers = shards.zipWithIndex.map { case (s, j) =>
+    val departures = shards.zipWithIndex.map { case (s, j) =>
       nodesOf(s).join(del, Seq("n_id"), "left_semi")
-        .select(lit(j).as("from_shard"), lit(-1).as("to_shard"),
-          col("n_id").as("vec_id"), col("emb").as("embedding"))
+        .select(lit(j).as("shard"), col("n_id"))
     }.reduce(_.unionByName(_)).localCheckpoint()
-    val touched = movers.select("from_shard").distinct().collect()
+    val touched = departures.select("shard").distinct().collect()
       .map(_.getInt(0)).toSet
     if (touched.isEmpty) shards
-    else moveBatched(shards, touched, movers)
+    else moveBatched(what, shards, touched, Some(departures), None)
   }
 
   /** The routed-append skeleton for the graph-tier families: route the
@@ -2422,9 +2293,7 @@ object GraphAnn {
     * touched shard, the [[moveGraphShardsBatched]] driver-scale
     * argument applied to the nightly-ingest verb (an arriving batch
     * routinely touches MANY shards, where per-shard appends pay
-    * per-shard job submission). A sentinel `from_shard = -1` carries
-    * "no departures": it can never match a real shard in the delete
-    * anti-joins and is excluded from the touched set. The code-table
+    * per-shard job submission). The code-table
     * tier keeps [[IndexIo.appendRouted]] (its per-shard append is one
     * row-independent projection — nothing to batch).
     */
@@ -2432,7 +2301,7 @@ object GraphAnn {
                                      cells: Array[Array[Double]],
                                      batch: DataFrame,
                                      cellMap: Array[Int])(
-      moveBatched: (Seq[I], Set[Int], DataFrame) => Seq[I]): Seq[I] = {
+      moveBatched: MoveBatched[I]): Seq[I] = {
     val routed = Similarity.routeByCellMap(
         batch.select("vec_id", "embedding"), cells, cellMap,
         shards.length)
@@ -2440,9 +2309,8 @@ object GraphAnn {
     val touched = routed.select("shard").distinct().collect()
       .map(_.getInt(0)).toSet
     if (touched.isEmpty) shards
-    else moveBatched(shards, touched,
-      routed.select(lit(-1).as("from_shard"),
-        col("shard").as("to_shard"), col("vec_id"), col("embedding")))
+    else moveBatched(what, shards, touched, None,
+      Some(routed.select("shard", "vec_id", "embedding")))
   }
 
   /** Metadata-FILTERED layered serve (the filtered-DiskANN shape, the
@@ -2775,292 +2643,105 @@ object GraphAnn {
 
   /** Append a batch to the layered index, EXACTLY rebuild-equivalent
     * (gate n41 pins per-layer neighbor-list equality with a
-    * from-scratch build over the union). Levels are pure hash, so new
-    * members' layer memberships are frozen facts; per layer, the
-    * affected old members — home or second cell (on that layer's
-    * stored grid columns) received new members — re-run the build rule
-    * against the layer's full member set, and untouched rows carry
-    * over verbatim. Work per layer ∝ batch + members of touched cells;
-    * the geometric layer sizes make the upper-layer terms vanish.
-    * Cells and routing stay FROZEN (the n22/n33 trade).
+    * from-scratch build over the union): a one-shard call of the
+    * batched redo ([[moveHnswShardsBatched]]). Cells and routing stay
+    * FROZEN (the n22/n33 trade).
     */
   def appendToHnswIndex(index: HnswIndex, newVecs: DataFrame)
-      : HnswIndex = {
-    val poolN = hnswPool(index)
-    // cast-to-long before hashLevel: same xxhash64 type-sensitivity
-    // note as the build — batch and corpus must hash identically
-    val nu0 = newVecs.select(col("vec_id").cast("long").as("n_id"),
-        col("embedding").as("emb"))
-      .withColumn("level",
-        hashLevel(col("n_id"), index.levelFanout, index.maxLevel)
-          .cast("int"))
-      .localCheckpoint()
-    // duplicate ids would put two node rows and conflicting adjacency
-    // rows into the index with no error — fail fast (the d33 append
-    // contract), both directions
-    IndexIo.requireBatchIdsUnique("appendToHnswIndex", nu0, "n_id")
-    IndexIo.requireIdsNotIndexed("appendToHnswIndex", index.nodes, nu0,
-      "n_id")
-    val nodes2 = index.nodes.unionByName(
-        nu0.select(col("n_id"), col("emb"),
-          Centroids.centroidAssign(col("emb"), index.cells).as("cell"),
-          col("level")))
-      .localCheckpoint()
-    val embById = index.nodes.select(col("n_id"), col("emb"))
-    val adj2 = (0 to index.maxLevel).map { l =>
-      val cellsL = hnswLayerCells(index.cells, index.levelFanout, l)
-      val nuL = nu0.filter(col("level") >= l)
-        .select(col("n_id"), col("emb"),
-          Centroids.centroidAssign(col("emb"), cellsL).as("cell"),
-          secondCell(col("emb"), cellsL).as("cell2"))
-      val oldL = index.adj.filter(col("layer") === l)
-      val touched = nuL.select("cell").distinct().localCheckpoint()
-      val affected = oldL.join(touched, Seq("cell"), "left_semi")
-        .unionByName(oldL.join(
-          touched.withColumnRenamed("cell", "cell2"), Seq("cell2"),
-          "left_semi"))
-        .dropDuplicates("n_id")
-        .join(embById, Seq("n_id"))
-        .select("n_id", "emb", "cell", "cell2")
-      // checkpointed: consumed by the edge rule (multiple legs), the
-      // carry-over anti join, and the regime count below — unmaterialized
-      // it would re-run the corpus-sized embedding fetch per consumer
-      val redo = affected.unionByName(nuL).localCheckpoint()
-      // peers restricted to the redo rows' home/second cells (the
-      // merge discipline): the edge rule reads no other cell, so the
-      // peer relation — and its embedding fetch — shrinks to the
-      // touched neighborhood instead of spanning the layer; re-spread
-      // + checkpoint so the bounded relation is materialized once with
-      // parallelism the skewed-cell joins can use
-      val redoCells = redo.select("cell")
-        .unionByName(redo.select(col("cell2").as("cell"))).distinct()
-      val peersL = oldL.select("cell", "n_id")
-        .join(broadcast(redoCells), Seq("cell"), "left_semi")
-        .join(embById, Seq("n_id"))
-        .select(col("cell"), col("n_id").as("m_id"), col("emb").as("m_emb"))
-        .unionByName(nuL
-          .join(broadcast(redoCells), Seq("cell"), "left_semi")
-          .select(col("cell"), col("n_id").as("m_id"),
-            col("emb").as("m_emb")))
-        .repartition(index.nodes.sparkSession.sessionState.conf
-          .numShufflePartitions)
-        .localCheckpoint()
-      // explicit join regime (the mergeHnswIndexes note): checkpointed
-      // inputs carry no statistics, so a bounded redo side must be
-      // broadcast by hand or a skewed cell serializes the redo
-      val side =
-        if (withinBroadcastBudget(redo, index.cells)) redo.hint("broadcast")
-        else redo
-      val redoRows = hnswLayerRows(side, cellsL, l, index.degree,
-        index.crossDegree, index.alpha, poolN, Some(peersL),
-        projectFrom = Some(redo))
-      oldL.join(redo.select("n_id"), Seq("n_id"), "left_anti")
-        .unionByName(redoRows)
-        .select("layer", "n_id", "cell", "cell2", "neighbors")
-    }.reduce(_.unionByName(_)).localCheckpoint()
-    index.copy(nodes = nodes2, adj = adj2)
-  }
+      : HnswIndex =
+    moveHnswShardsBatched("appendToHnswIndex", Seq(index), Set(0), None,
+      arrivalsOf(newVecs)).head
 
   /** Delete vectors from the layered index, EXACTLY rebuild-equivalent
-    * (gate n41). Per layer: affected = remaining members whose home or
-    * second cell (stored grid columns) is among the deleted members'
-    * home cells — pool membership flows only through home cells, so an
-    * unaffected node's stored list provably cannot dangle — and stored
-    * edges cannot be merged (the (k+1)-th pool member was dropped), so
-    * affected members re-run the build rule against the layer's
-    * remaining member set. Deleting a whole top layer degrades the
-    * serve's entry search to the next layer (topLevel is read off the
-    * node table). `ids`: one vec_id column; non-members are ignored.
+    * (gate n41): a one-shard call of the batched redo
+    * ([[moveHnswShardsBatched]]). Deleting a whole top layer degrades
+    * the serve's entry search to the next layer (topLevel is read off
+    * the node table). `ids`: one vec_id column; non-members are
+    * ignored.
     */
-  def deleteFromHnswIndex(index: HnswIndex, ids: DataFrame): HnswIndex = {
-    val poolN = hnswPool(index)
-    val delIds = ids.select(col("vec_id").cast("long").as("n_id"))
-      .distinct().localCheckpoint()
-    val embById = index.nodes.select(col("n_id"), col("emb"))
-    val nodes2 = index.nodes.join(delIds, Seq("n_id"), "left_anti")
-      .localCheckpoint()
-    val adj2 = (0 to index.maxLevel).map { l =>
-      val cellsL = hnswLayerCells(index.cells, index.levelFanout, l)
-      val oldL = index.adj.filter(col("layer") === l)
-      val touched = oldL.join(delIds, Seq("n_id"), "left_semi")
-        .select("cell").distinct().localCheckpoint()
-      val remaining = oldL.join(delIds, Seq("n_id"), "left_anti")
-      val affected = remaining.join(touched, Seq("cell"), "left_semi")
-        .unionByName(remaining.join(
-          touched.withColumnRenamed("cell", "cell2"), Seq("cell2"),
-          "left_semi"))
-        .dropDuplicates("n_id")
-        .join(embById, Seq("n_id"))
-        .select("n_id", "emb", "cell", "cell2")
-        .localCheckpoint()
-      // peers restricted to the affected rows' home/second cells +
-      // re-spread + explicit regime — the appendToHnswIndex notes
-      val redoCells = affected.select("cell")
-        .unionByName(affected.select(col("cell2").as("cell"))).distinct()
-      val peersL = remaining.select("cell", "n_id")
-        .join(broadcast(redoCells), Seq("cell"), "left_semi")
-        .join(embById, Seq("n_id"))
-        .select(col("cell"), col("n_id").as("m_id"), col("emb").as("m_emb"))
-        .repartition(index.nodes.sparkSession.sessionState.conf
-          .numShufflePartitions)
-        .localCheckpoint()
-      val side =
-        if (withinBroadcastBudget(affected, index.cells))
-          affected.hint("broadcast")
-        else affected
-      val redoRows = hnswLayerRows(side, cellsL, l, index.degree,
-        index.crossDegree, index.alpha, poolN, Some(peersL),
-        projectFrom = Some(affected))
-      remaining.join(affected.select("n_id"), Seq("n_id"), "left_anti")
-        .unionByName(redoRows)
-        .select("layer", "n_id", "cell", "cell2", "neighbors")
-    }.reduce(_.unionByName(_)).localCheckpoint()
-    index.copy(nodes = nodes2, adj = adj2)
-  }
+  def deleteFromHnswIndex(index: HnswIndex, ids: DataFrame): HnswIndex =
+    moveHnswShardsBatched("deleteFromHnswIndex", Seq(index), Set(0),
+      departuresOf(ids), None).head
 
-  /** Fused move at the layered tier — the [[moveGraphIndex]] recipe
-    * per layer: exactly equal to `appendToHnswIndex(
-    * deleteFromHnswIndex(idx, outIds), inRows)` (each composand is
-    * rebuild-exact per (layer, n_id), gate n41, so the composition is
-    * a fresh build over the moved member set — this verb reaches it
-    * with ONE redo pass per layer and one adjacency materialization
-    * instead of two full-state rounds). Per layer: touched = layer-grid
-    * home cells of movers-out ∪ movers-in, affected = remaining rows
-    * with home/second cell touched, and the one shared edge rule
-    * re-runs over affected ∪ arrivals against the layer's FINAL
-    * membership. Levels are pure id hash, so arrivals' layer
-    * memberships are frozen facts.
+  /** Fused move at the layered tier: exactly equal to
+    * `appendToHnswIndex(deleteFromHnswIndex(idx, outIds), inRows)`,
+    * and so to a fresh build over the moved member set, in ONE redo
+    * pass per layer. A one-shard call of the batched redo
+    * ([[moveHnswShardsBatched]]).
     */
   def moveHnswIndex(index: HnswIndex, outIds: DataFrame,
-                    inRows: DataFrame): HnswIndex = {
-    val poolN = hnswPool(index)
-    val delIds = outIds.select(col("vec_id").cast("long").as("n_id"))
-      .distinct().localCheckpoint()
-    // cast-to-long before hashLevel: the build's xxhash64
-    // type-sensitivity note — batch and corpus must hash identically
-    val nu0 = inRows.select(col("vec_id").cast("long").as("n_id"),
-        col("embedding").as("emb"))
-      .withColumn("level",
-        hashLevel(col("n_id"), index.levelFanout, index.maxLevel)
-          .cast("int"))
-      .localCheckpoint()
-    IndexIo.requireBatchIdsUnique("moveHnswIndex", nu0, "n_id")
-    // NOT checkpointed (the moveGraphIndex note): consumers re-run a
-    // scan + broadcast anti join of already-materialized state
-    val remainingNodes = index.nodes.join(delIds, Seq("n_id"),
-      "left_anti")
-    IndexIo.requireIdsNotIndexed("moveHnswIndex", remainingNodes, nu0,
-      "n_id")
-    val nodes2 = remainingNodes.unionByName(
-        nu0.select(col("n_id"), col("emb"),
-          Centroids.centroidAssign(col("emb"), index.cells).as("cell"),
-          col("level")))
-      .localCheckpoint()
-    val embById = index.nodes.select(col("n_id"), col("emb"))
-    val adj2 = (0 to index.maxLevel).map { l =>
-      val cellsL = hnswLayerCells(index.cells, index.levelFanout, l)
-      val nuL = nu0.filter(col("level") >= l)
-        .select(col("n_id"), col("emb"),
-          Centroids.centroidAssign(col("emb"), cellsL).as("cell"),
-          secondCell(col("emb"), cellsL).as("cell2"))
-      val oldL = index.adj.filter(col("layer") === l)
-      val remaining = oldL.join(delIds, Seq("n_id"), "left_anti")
-      // touched on THIS layer's stored grid columns: home cells of the
-      // layer's departures and arrivals
-      val touched = oldL.join(delIds, Seq("n_id"), "left_semi")
-        .select("cell")
-        .unionByName(nuL.select("cell"))
-        .distinct().localCheckpoint()
-      val affected = remaining.join(touched, Seq("cell"), "left_semi")
-        .unionByName(remaining.join(
-          touched.withColumnRenamed("cell", "cell2"), Seq("cell2"),
-          "left_semi"))
-        .dropDuplicates("n_id")
-        .join(embById, Seq("n_id"))
-        .select("n_id", "emb", "cell", "cell2")
-      val redo = affected.unionByName(nuL).localCheckpoint()
-      // peers restricted to the redo rows' home/second cells over the
-      // layer's FINAL membership + re-spread + explicit regime — the
-      // append/delete notes
-      val redoCells = redo.select("cell")
-        .unionByName(redo.select(col("cell2").as("cell"))).distinct()
-      val peersL = remaining.select("cell", "n_id")
-        .join(broadcast(redoCells), Seq("cell"), "left_semi")
-        .join(embById, Seq("n_id"))
-        .select(col("cell"), col("n_id").as("m_id"),
-          col("emb").as("m_emb"))
-        .unionByName(nuL
-          .join(broadcast(redoCells), Seq("cell"), "left_semi")
-          .select(col("cell"), col("n_id").as("m_id"),
-            col("emb").as("m_emb")))
-        .repartition(index.nodes.sparkSession.sessionState.conf
-          .numShufflePartitions)
-        .localCheckpoint()
-      val side =
-        if (withinBroadcastBudget(redo, index.cells))
-          redo.hint("broadcast")
-        else redo
-      val redoRows = hnswLayerRows(side, cellsL, l, index.degree,
-        index.crossDegree, index.alpha, poolN, Some(peersL),
-        projectFrom = Some(redo))
-      remaining.join(redo.select("n_id"), Seq("n_id"), "left_anti")
-        .unionByName(redoRows)
-        .select("layer", "n_id", "cell", "cell2", "neighbors")
-    }.reduce(_.unionByName(_)).localCheckpoint()
-    index.copy(nodes = nodes2, adj = adj2)
-  }
+                    inRows: DataFrame): HnswIndex =
+    moveHnswShardsBatched("moveHnswIndex", Seq(index), Set(0),
+      departuresOf(outIds), arrivalsOf(inRows)).head
 
-  /** [[moveHnswIndex]] batched across a deployment's shards — the
-    * [[moveGraphShardsBatched]] recipe at the layered tier: per layer,
-    * every touched shard's redo runs in ONE shard-tagged job family
-    * ((shard, cell) join keys through the one shared edge rule), so
-    * driver jobs are O(layers) for the WHOLE fleet instead of
-    * O(layers · shards), and the final node/adjacency states are one
-    * materialization each. Untouched shards return verbatim; touched
-    * shards get views filtered off the shared checkpoints. Equality
-    * with the per-shard [[moveHnswIndex]] composition is spec-pinned.
+  /** The layered tier's ONE rebuild-exact redo — the
+    * [[moveGraphShardsBatched]] recipe per layer, shared by every
+    * append, delete, move, routed append, routed delete and rebalance
+    * (a single index is a one-shard fleet). Levels are pure id hash,
+    * so arrivals' layer memberships are frozen facts. Per layer:
+    * touched = layer-grid home cells (stored columns) of departures ∪
+    * arrivals, affected = remaining rows with home/second cell
+    * touched, and the one shared edge rule re-runs over affected ∪
+    * arrivals against the layer's FINAL membership; untouched rows
+    * carry over verbatim. Work per layer ∝ movers + members of touched
+    * cells; the geometric layer sizes make the upper-layer terms
+    * vanish. Every touched shard's redo runs in ONE shard-tagged job
+    * family ((shard, cell) join keys), so driver jobs are O(layers)
+    * for the WHOLE fleet instead of O(layers · shards), and the final
+    * node/adjacency states are one materialization each.
+    *
+    * Legs, `what` and the untouched-shard pass-through as in
+    * [[moveGraphShardsBatched]].
     */
-  private[ops] def moveHnswShardsBatched(shards: Seq[HnswIndex],
+  private[ops] def moveHnswShardsBatched(what: String,
+                                         shards: Seq[HnswIndex],
                                          touchedShards: Set[Int],
-                                         movers: DataFrame)
+                                         departures: Option[DataFrame],
+                                         arrivals: Option[DataFrame])
       : Seq[HnswIndex] = {
+    require(departures.nonEmpty || arrivals.nonEmpty,
+      s"$what: neither departures nor arrivals")
     val head = shards.head
     require(shards.forall(s => s.degree == head.degree &&
       s.crossDegree == head.crossDegree && s.alpha == head.alpha &&
       s.poolSize == head.poolSize &&
       s.levelFanout == head.levelFanout &&
       s.maxLevel == head.maxLevel),
-      "moveHnswShardsBatched: shard build parameters differ — a " +
-        "sharded deployment must share one frozen edge rule")
+      s"$what: shard build parameters differ — a sharded deployment " +
+        "must share one frozen edge rule")
     val poolN = hnswPool(head)
     val touched = touchedShards.toSeq.sorted
     val sc = Seq("shard", "cell")
-    // sentinel shard −1 legs dropped — the moveGraphShardsBatched note
-    val delIds = movers.filter(col("from_shard") >= 0)
-      .select(col("from_shard").as("shard"),
-        col("vec_id").cast("long").as("n_id"))
-      .distinct().localCheckpoint()
-    val nu0 = movers.filter(col("to_shard") >= 0)
-      .select(col("to_shard").as("shard"),
+    val sn = Seq("shard", "n_id")
+    val delIds = departures.map(_.select(col("shard"),
+        col("n_id").cast("long").as("n_id"))
+      .distinct().localCheckpoint())
+    // cast-to-long before hashLevel: the build's xxhash64
+    // type-sensitivity note — batch and corpus must hash identically
+    val nu0 = arrivals.map(_.select(col("shard"),
         col("vec_id").cast("long").as("n_id"),
         col("embedding").as("emb"))
       .withColumn("level",
         hashLevel(col("n_id"), head.levelFanout, head.maxLevel)
           .cast("int"))
-      .localCheckpoint()
-    IndexIo.requireBatchIdsUnique("moveHnswShardsBatched", nu0, "n_id")
+      .localCheckpoint())
+    // duplicate ids would put two node rows and conflicting adjacency
+    // rows into the index with no error — fail fast, both directions
+    nu0.foreach(IndexIo.requireBatchIdsUnique(what, _, "n_id"))
     val oldNodesU = touched.map(j => shards(j).nodes.select(
         lit(j).as("shard"), col("n_id"), col("emb"), col("cell"),
         col("level")))
       .reduce(_.unionByName(_))
-    val remainingNodes = oldNodesU.join(delIds, Seq("shard", "n_id"),
-      "left_anti")
-    IndexIo.requireIdsNotIndexed("moveHnswShardsBatched",
-      remainingNodes, nu0, "n_id")
-    val nodes2U = remainingNodes.unionByName(
-        nu0.select(col("shard"), col("n_id"), col("emb"),
+    // NOT checkpointed (the moveGraphShardsBatched note): consumers
+    // re-run a scan + broadcast anti join of materialized state
+    val remainingNodes =
+      delIds.fold(oldNodesU)(oldNodesU.join(_, sn, "left_anti"))
+    nu0.foreach(IndexIo.requireIdsNotIndexed(what, remainingNodes, _,
+      "n_id"))
+    val nodes2U = nu0.fold(remainingNodes)(n => remainingNodes.unionByName(
+        n.select(col("shard"), col("n_id"), col("emb"),
           Centroids.centroidAssign(col("emb"), head.cells).as("cell"),
-          col("level")))
+          col("level"))))
       .localCheckpoint()
     // ids are globally unique across shards, so ONE embedding fetch
     // relation serves every layer's affected join
@@ -3071,42 +2752,57 @@ object GraphAnn {
       .reduce(_.unionByName(_))
     val adj2U = (0 to head.maxLevel).map { l =>
       val cellsL = hnswLayerCells(head.cells, head.levelFanout, l)
-      val nuL = nu0.filter(col("level") >= l)
+      val nuL = nu0.map(_.filter(col("level") >= l)
         .select(col("shard"), col("n_id"), col("emb"),
           Centroids.centroidAssign(col("emb"), cellsL).as("cell"),
-          secondCell(col("emb"), cellsL).as("cell2"))
+          secondCell(col("emb"), cellsL).as("cell2")))
       val oldL = adjU.filter(col("layer") === l)
-      val remaining = oldL.join(delIds, Seq("shard", "n_id"),
-        "left_anti")
-      val touchedL = oldL.join(delIds, Seq("shard", "n_id"),
-          "left_semi")
-        .select("shard", "cell")
-        .unionByName(nuL.select("shard", "cell"))
+      val remaining = delIds.fold(oldL)(oldL.join(_, sn, "left_anti"))
+      // touched on THIS layer's stored grid columns: home cells of the
+      // layer's departures and arrivals
+      val touchedL = (delIds.map(d =>
+          oldL.join(d, sn, "left_semi").select("shard", "cell")) ++
+          nuL.map(_.select("shard", "cell")))
+        .reduce(_.unionByName(_))
         .distinct().localCheckpoint()
-      val affected = remaining.join(touchedL, sc, "left_semi")
+      // broadcast by hand — the moveGraphShardsBatched touchedCells note
+      val affected = remaining.join(broadcast(touchedL), sc, "left_semi")
         .unionByName(remaining.join(
-          touchedL.withColumnRenamed("cell", "cell2"),
+          broadcast(touchedL.withColumnRenamed("cell", "cell2")),
           Seq("shard", "cell2"), "left_semi"))
-        .dropDuplicates("shard", "n_id")
+        // keyed on n_id alone (ids are unique across shards): the
+        // planner then knows the embedding join below keeps one row per
+        // id, so the checkpointed redo carries a small size estimate and
+        // its later joins plan as broadcasts
+        .dropDuplicates("n_id")
         .join(embById, Seq("n_id"))
         .select("shard", "n_id", "emb", "cell", "cell2")
-      val redo = affected.unionByName(nuL).localCheckpoint()
+      // checkpointed: consumed by the edge rule (multiple legs), the
+      // carry-over anti join, and the regime count below — unmaterialized
+      // it would re-run the corpus-sized embedding fetch per consumer
+      val redo = nuL.fold(affected)(affected.unionByName(_))
+        .localCheckpoint()
+      // peers restricted to the redo rows' home/second cells over the
+      // layer's FINAL membership (the merge discipline), re-spread +
+      // checkpointed so the bounded relation is materialized once with
+      // parallelism the skewed-cell joins can use. Arrivals need no
+      // restriction: their home cells are redo cells by construction.
       val redoCells = redo.select("shard", "cell")
         .unionByName(redo.select(col("shard"),
           col("cell2").as("cell")))
         .distinct()
-      val peersL = remaining.select("shard", "cell", "n_id")
+      val remPeers = remaining.select("shard", "cell", "n_id")
         .join(broadcast(redoCells), sc, "left_semi")
         .join(embById, Seq("n_id"))
         .select(col("shard"), col("cell"), col("n_id").as("m_id"),
           col("emb").as("m_emb"))
-        .unionByName(nuL
-          .join(broadcast(redoCells), sc, "left_semi")
-          .select(col("shard"), col("cell"), col("n_id").as("m_id"),
-            col("emb").as("m_emb")))
+      val peersL = nuL.fold(remPeers)(n => remPeers.unionByName(
+          n.select(col("shard"), col("cell"), col("n_id").as("m_id"),
+            col("emb").as("m_emb"))))
         .repartition(head.nodes.sparkSession.sessionState.conf
           .numShufflePartitions)
         .localCheckpoint()
+      // explicit join regime (the mergeHnswIndexes note)
       val side =
         if (withinBroadcastBudget(redo, head.cells))
           redo.hint("broadcast")
@@ -3114,8 +2810,7 @@ object GraphAnn {
       val redoRows = hnswLayerRows(side, cellsL, l, head.degree,
         head.crossDegree, head.alpha, poolN, Some(peersL), keys = sc,
         projectFrom = Some(redo))
-      remaining.join(redo.select("shard", "n_id"), Seq("shard", "n_id"),
-          "left_anti")
+      remaining.join(redo.select("shard", "n_id"), sn, "left_anti")
         .unionByName(redoRows
           .select("shard", "layer", "n_id", "cell", "cell2",
             "neighbors"))
@@ -3124,8 +2819,8 @@ object GraphAnn {
     shards.zipWithIndex.map { case (s, j) =>
       if (!touchedShards(j)) s
       else s.copy(
-        nodes = nodes2U.filter(col("shard") === j).drop("shard"),
-        adj = adj2U.filter(col("shard") === j).drop("shard"))
+        nodes = shardSlice(nodes2U, touchedShards, j),
+        adj = shardSlice(adj2U, touchedShards, j))
     }
   }
 

@@ -1746,6 +1746,13 @@ object Similarity {
         (-col("col.score")).as("adc"))
   }
 
+  /** Concurrent per-shard appends in [[appendToIvfPqShards]]: enough
+    * to keep a CLUSTER's scheduler fed with independent jobs, small
+    * enough that one verb cannot monopolize the driver's
+    * job-submission threads.
+    */
+  private val RoutedAppendParallelism: Int = 16
+
   /** [[GraphAnn.appendToGraphShards]] at the code-table tier: route
     * the batch by the deployment's frozen map, append each touched
     * shard's slice through the rebuild-exact [[appendToIvfPqIndex]] —
@@ -1757,7 +1764,7 @@ object Similarity {
     requireSharedIvfPqArtifacts("appendToIvfPqShards", shards)
     IndexIo.appendRouted("appendToIvfPqShards", shards,
       shards.head.cells, batch, cellMap,
-      GraphAnn.RebalanceMoveParallelism)(appendToIvfPqIndex)
+      RoutedAppendParallelism)(appendToIvfPqIndex)
   }
 
   /** Re-cut a sharded IVF-PQ deployment to a NEW cell→shard map by

@@ -493,12 +493,23 @@ class GraphAnnSpec extends SparkSpec {
       GraphAnn.appendToGraphIndex(idx, corpus.filter(col("vec_id") < 3))
     }
     e1.getMessage should include("already indexed")
+    e1.getMessage should include("appendToGraphIndex")
+    // the α-pruned append runs the batched redo; its message still
+    // names the verb the caller called
+    val idxA = GraphAnn.buildGraphIndex(corpus, nlist = 4, degree = 3,
+      alpha = Some(1.2))
+    val e1a = intercept[IllegalArgumentException] {
+      GraphAnn.appendToGraphIndex(idxA, corpus.filter(col("vec_id") < 3))
+    }
+    e1a.getMessage should include("already indexed")
+    e1a.getMessage should include("appendToGraphIndex")
     val h = GraphAnn.buildHnswIndex(corpus, nlist = 4, degree = 3,
       crossDegree = 2, levelFanout = 4, maxLevel = 1)
     val e2 = intercept[IllegalArgumentException] {
       GraphAnn.appendToHnswIndex(h, corpus.filter(col("vec_id") < 3))
     }
     e2.getMessage should include("already indexed")
+    e2.getMessage should include("appendToHnswIndex")
     // a fully-deleted layered index degrades to zero results, the
     // flat tier's behavior, instead of an NPE off the null max(level)
     val emptied = GraphAnn.deleteFromHnswIndex(h,
@@ -902,12 +913,14 @@ class GraphAnnSpec extends SparkSpec {
       GraphAnn.appendToGraphIndex(flat, dupBatch)
     }
     eFlat.getMessage should include("repeats")
+    eFlat.getMessage should include("appendToGraphIndex")
     val layered = GraphAnn.buildHnswIndex(corpus, nlist = 3, degree = 4,
       levelFanout = 4, maxLevel = 1)
     val eLay = intercept[IllegalArgumentException] {
       GraphAnn.appendToHnswIndex(layered, dupBatch)
     }
     eLay.getMessage should include("repeats")
+    eLay.getMessage should include("appendToHnswIndex")
     // a clean batch still appends fine
     GraphAnn.appendToGraphIndex(flat, batch).nodes.count() shouldBe 50L
   }
@@ -1649,9 +1662,12 @@ class GraphAnnSpec extends SparkSpec {
     // contract); one colliding with a DEPARTING row is a legal re-home
     val idx = GraphAnn.buildGraphIndex(base, nlist = 6, degree = 4,
       crossDegree = 2, centroids = Some(cells))
-    an[IllegalArgumentException] should be thrownBy
+    val eMove = intercept[IllegalArgumentException] {
       GraphAnn.moveGraphIndex(idx, out,
         base.filter(col("vec_id") === 1))
+    }
+    eMove.getMessage should include("already indexed")
+    eMove.getMessage should include("moveGraphIndex")
     GraphAnn.moveGraphIndex(idx, base.filter(col("vec_id") === 0)
         .select("vec_id"), base.filter(col("vec_id") === 0))
       .nodes.count() shouldBe idx.nodes.count()
@@ -1670,5 +1686,13 @@ class GraphAnnSpec extends SparkSpec {
       GraphAnn.deleteFromHnswIndex(h, out), in)
     adjMap(hFused) shouldBe adjMap(hComposed)
     nodeSet(hFused) shouldBe nodeSet(hComposed)
+    // both sides above run the same batched redo, so pin the fused
+    // move against the fresh layered build over the moved member set
+    val hFresh = GraphAnn.buildHnswIndex(
+      base.join(out, Seq("vec_id"), "left_anti").unionByName(in),
+      nlist = 6, degree = 4, crossDegree = 2, levelFanout = 4,
+      maxLevel = 1, centroids = Some(cells))
+    adjMap(hFused) shouldBe adjMap(hFresh)
+    nodeSet(hFused) shouldBe nodeSet(hFresh)
   }
 }
