@@ -587,7 +587,6 @@ object Dedup {
           coalesce(col("jc"), col("x.comp")).as("comp"))
         .localCheckpoint()
       converged = jumped.filter(col("comp") =!= col("oc")).isEmpty
-      labels.unpersist() // jumped is checkpointed; last round's blocks can go
       labels = jumped
       i += 1
     }

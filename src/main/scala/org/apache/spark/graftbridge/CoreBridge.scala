@@ -1,6 +1,8 @@
 package org.apache.spark.graftbridge
 
+import scala.reflect.ClassTag
 import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.SparkListenerInterface
 
 /** Core-side private-API shim (the scheduler twin of
   * [[org.apache.spark.sql.graftbridge.Bridge]]).
@@ -14,4 +16,8 @@ import org.apache.spark.SparkContext
 object CoreBridge {
   def drainListenerBus(sc: SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** The listeners of class `T` attached to `sc`. */
+  def listeners[T <: SparkListenerInterface: ClassTag](sc: SparkContext): Seq[T] =
+    sc.listenerBus.findListenersByClass[T]()
 }

@@ -1459,19 +1459,10 @@ class GraphAnnSpec extends SparkSpec {
       GraphAnn.buildGraphIndex(c, nlist = 8, degree = 4,
         crossDegree = 2, centroids = Some(cells))
     def countJobs(f: => Unit): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart)
-            : Unit = n.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        f
-        org.apache.spark.graftbridge.CoreBridge
-          .drainListenerBus(spark.sparkContext)
-      } finally spark.sparkContext.removeSparkListener(l)
-      n.get()
+      val metrics = graft.Metrics(spark)
+      val m0 = metrics.snapshot()
+      f
+      (metrics.snapshot() - m0).jobs.toInt
     }
     def recut(nShards: Int): Int = {
       val map1 = Similarity.shardCellMap(corpus, cells, nShards)
