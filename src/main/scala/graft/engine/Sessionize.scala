@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * frame (lag-1). Skewed power users are bounded by per-user event
   * counts, not corpus size; AQE skew-split covers pathological keys.
   *
-  * Streaming analog: `streaming/StreamingWindowAgg.sessionWindow`
+  * Streaming analog: `streaming/StreamingWindowAgg.sessionCounts`
   * (event-time session windows with watermark eviction).
   */
 object Sessionize {

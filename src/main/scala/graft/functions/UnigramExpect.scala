@@ -114,8 +114,7 @@ object UnigramExpectations {
         val p = vocab.map.get(piece)
         if (p != null && a(j) != 0.0 && b(j + l) != 0.0) {
           val e = a(j) * p * b(j + l) / z
-          val prev = acc.get(piece)
-          acc.put(piece, (if (prev == null) 0.0 else prev.doubleValue) + e)
+          acc.merge(piece, e, _ + _)
         }
         l += 1
       }

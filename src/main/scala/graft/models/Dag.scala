@@ -126,7 +126,7 @@ object Dag {
     * only, no DataFrames touched. One pass suffices because declared
     * order is topological. This is what lets an incremental batch apply
     * skip every model whose upstream closure the delta can't reach
-    * ([[Warehouse.applyBatch2]]).
+    * ([[Warehouse.applyBatch]]).
     */
   def downstream(roots: Set[String]): Set[String] =
     nodes(Map.empty).foldLeft(roots) { (affected, n) =>

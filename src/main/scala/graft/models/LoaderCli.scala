@@ -11,7 +11,8 @@ package graft.models
   *
   *   --table NAME  process one source table (default: all 17)
   *   --show        print a 20-row sample instead of writing
-  *   --out DIR     write each table to DIR/NAME (parquet; default /tmp/graft_wh)
+  *   --out DIR     write each table to DIR/NAME (parquet; default /tmp/graft_wh),
+  *                 swapped in atomically (Warehouse.publish)
   *   --batch2 DIR  incremental refresh: apply the delta batch in DIR to
   *                 the Batch1 warehouse via Warehouse.applyBatchDirs and
   *                 show/write the refreshed MODELS instead of the raw
@@ -48,7 +49,7 @@ object LoaderCli {
     selected.toSeq.sortBy(_._1).foreach { case (name, df) =>
       if (show) { println(s"== $name"); df.show(20, truncate = false) }
       else {
-        df.write.mode("overwrite").parquet(s"$out/$name")
+        Warehouse.publish(spark, out)(name, df)
         println(s"wrote $out/$name")
       }
     }

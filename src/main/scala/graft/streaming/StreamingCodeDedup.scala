@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Streaming near-dup suppression for BINARY perceptual codes (image
   * dHash, audio fingerprints, sign codes) — the visual/audio sibling
-  * of [[StreamingDedup]] (exact text) and [[StreamingDecontaminate]]
-  * (lexical/semantic): an ingest pipeline computes codes with the
-  * partition-wise decode sweep ([[graft.ops.Multimodal.imageDHash]] /
+  * of [[StreamingDedup]] (exact text): an ingest pipeline computes
+  * codes with the partition-wise decode sweep
+  * ([[graft.ops.Multimodal.imageDHash]] /
   * [[graft.ops.Multimodal.audioHash]]) and suppresses arrivals that
   * near-duplicate what the corpus already holds.
   *
@@ -16,10 +16,11 @@ import org.apache.spark.sql.functions._
   *    horizon drop inside the streaming plan (built-in state store,
   *    bounded by the horizon) — catches re-encodes that preserve the
   *    code bit-for-bit.
-  *  - [[nearDupBatch]]/[[dedupBatch]]: the `foreachBatch` kernels
-  *    (dynamic-table refresh idiom): each micro-batch runs the SAME
-  *    asymmetric banded pass the d22 oracle gates against the
-  *    accumulated code table, and the caller appends the survivors —
+  *  - [[dedupBatch]]: the `foreachBatch` kernel (dynamic-table
+  *    refresh idiom): each micro-batch runs the SAME asymmetric banded
+  *    pass the d22 oracle gates
+  *    ([[graft.ops.Similarity.hammingNearDupPairsIncremental]]) against
+  *    the accumulated code table, and the caller appends the survivors —
   *    so streaming and batch near-dup detection are one
   *    implementation with one gate.
   */
@@ -38,18 +39,6 @@ object StreamingCodeDedup {
       .dropDuplicatesWithinWatermark("__k")
       .drop("__k")
 
-  /** Near-dup PAIRS of an arriving micro-batch against the accumulated
-    * code table (in-batch pairs included) — a named delegate to the
-    * batch kernel ([[graft.ops.Similarity.hammingNearDupPairsIncremental]],
-    * the StreamingScd2/fuzzyBatch pattern), so the streaming path runs
-    * exactly the code path gate d22 verifies.
-    */
-  def nearDupBatch(batch: DataFrame, accumulated: DataFrame,
-                   idCol: String, codeCol: String,
-                   maxHamming: Int = 3, maxBucket: Int = 1000): DataFrame =
-    graft.ops.Similarity.hammingNearDupPairsIncremental(
-      batch, accumulated, idCol, codeCol, maxHamming, maxBucket)
-
   /** The KEEP set of an arriving micro-batch: batch rows that
     * near-duplicate the accumulated corpus are dropped (arrival order
     * wins — accumulated rows always beat batch rows), and within the
@@ -61,8 +50,9 @@ object StreamingCodeDedup {
   def dedupBatch(batch: DataFrame, accumulated: DataFrame,
                  idCol: String, codeCol: String,
                  maxHamming: Int = 3, maxBucket: Int = 1000): DataFrame = {
-    val pairs = nearDupBatch(batch, accumulated, idCol, codeCol,
-      maxHamming, maxBucket)
+    // near-dup pairs against the accumulated table, in-batch pairs included
+    val pairs = graft.ops.Similarity.hammingNearDupPairsIncremental(
+      batch, accumulated, idCol, codeCol, maxHamming, maxBucket)
     val bIds = batch.select(col(idCol).as("__b")).distinct()
     // doc_b always drops (its partner is either accumulated or a
     // smaller batch id); doc_a drops only when its partner doc_b is

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
 
 /** Streaming counterpart of the SCD2 kernel: maintain versioned
@@ -18,14 +17,16 @@ import java.sql.Timestamp
   * Scale: state is one small record per entity key, hash-partitioned by
   * the key — the same shuffle a batch SCD2 window would do, but
   * incremental: each micro-batch touches only changed entities.
+  *
+  * The dynamic-table refresh of whole models on arrival of new files is
+  * the batch path, `graft.models.Warehouse.applyBatchDirs`.
   */
 object StreamingScd2 {
 
   val SentinelEnd: Timestamp = Timestamp.valueOf("9999-12-31 23:59:59.999")
 
-  /** One SCD2 version row (payload carried as JSON-ish string map kept
-    * simple: callers project their payload to a single string column;
-    * richer payloads use the generic DataFrame API below).
+  /** One SCD2 version row (payload kept simple: callers project their
+    * payload to a single string column).
     */
   case class Version(id: Long, payload: String,
                      effective_timestamp: Timestamp,
@@ -75,109 +76,5 @@ object StreamingScd2 {
           }
           out.result().iterator
       }
-  }
-
-  /** Dynamic-table refresh analog (SURVEY §3.3): recompute a batch model
-    * over all data whenever new files land, via Trigger.AvailableNow +
-    * foreachBatch overwrite. `model` maps the accumulated source to the
-    * target table — the same pure functions as the batch Warehouse.
-    *
-    * This is the faithful capability: Snowflake decides incremental vs
-    * full refresh internally; our unit of incrementality is the
-    * micro-batch, and the model recompute stays declarative.
-    */
-  def refreshOnArrival(spark: SparkSession, sourceDir: String,
-                       schema: org.apache.spark.sql.types.StructType,
-                       model: DataFrame => DataFrame,
-                       targetDir: String,
-                       checkpointDir: String): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(sourceDir)
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // batch = newly-arrived rows; the model may need full history:
-        // read the accumulated source fresh (cheap metadata-only check
-        // when nothing changed) and overwrite the target.
-        val full = batch.sparkSession.read.schema(schema).parquet(sourceDir)
-        model(full).write.mode("overwrite").parquet(targetDir)
-        ()
-      }
-      .start()
-      .awaitTermination()
-  }
-
-  /** Streaming Batch2/3 for an SCD2 dimension: each arriving
-    * micro-batch of change rows MERGES into the materialized dimension
-    * via [[graft.models.Incremental.mergeScd2Batch]] — work per batch
-    * scales with the touched entities, where [[refreshOnArrival]]
-    * recomputes the whole model. This is the streaming form of the
-    * warehouse-level batch apply (`Warehouse.applyBatch2`), one
-    * dimension at a time.
-    *
-    * Failure semantics — foreachBatch is at-least-once, and the dim is
-    * the only copy, so both replay and crash-mid-write are handled:
-    *  - IDEMPOTENT: change rows whose (entity, timestamp) already exist
-    *    as a version's effective_timestamp are dropped before the merge
-    *    — a replayed batch (crash between the write and the epoch
-    *    commit) merges to a no-op instead of minting duplicate
-    *    versions.
-    *  - STAGED SWAP, not in-place overwrite: the merge writes a
-    *    complete staging copy first, then the old dir is swapped out
-    *    via filesystem rename — at every instant a complete dim copy
-    *    exists on disk (an in-place overwrite is delete-then-write: a
-    *    mid-job crash would destroy the only copy). Writing to staging
-    *    also removes the read-then-overwrite-same-path hazard.
-    */
-  def mergeScd2OnArrival(spark: SparkSession, changeDir: String,
-                         schema: org.apache.spark.sql.types.StructType,
-                         dimDir: String, idCols: Seq[String], tsCol: String,
-                         checkpointDir: String,
-                         tieBreak: Seq[String] = Nil): Unit = {
-    val stream = spark.readStream.schema(schema).parquet(changeDir)
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.functions.col
-        val s = batch.sparkSession
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          s.sparkContext.hadoopConfiguration)
-        val dimPath = new org.apache.hadoop.fs.Path(dimDir)
-        val stagingPath = new org.apache.hadoop.fs.Path(s"$dimDir.staging-$batchId")
-        val oldPath = new org.apache.hadoop.fs.Path(s"$dimDir.old-$batchId")
-        // Crash recovery BEFORE touching the dim: a prior attempt of this
-        // batch (foreachBatch is at-least-once, so a replay reuses the
-        // batchId) may have died between the two renames — dim absent,
-        // old-<id> holding the only good copy. Restore it, then clear any
-        // stale staging/old dirs so the renames below cannot silently
-        // no-op (or nest dirs on HDFS) against leftover targets.
-        if (!fs.exists(dimPath) && fs.exists(oldPath)) {
-          require(fs.rename(oldPath, dimPath),
-            s"SCD2 swap recovery failed: cannot restore $oldPath -> $dimPath")
-        }
-        if (fs.exists(stagingPath)) fs.delete(stagingPath, true)
-        if (fs.exists(oldPath)) fs.delete(oldPath, true)
-        val existing = s.read.parquet(dimDir)
-        // replay guard: drop changes already folded into the dim
-        val seen = existing.select(
-          (idCols.map(col) :+ col("effective_timestamp").as(tsCol)): _*)
-        val fresh = batch.join(seen, idCols :+ tsCol, "left_anti")
-        val merged = graft.models.Incremental
-          .mergeScd2Batch(existing, fresh, idCols, tsCol, tieBreak)
-        merged.write.mode("overwrite").parquet(stagingPath.toString)
-        def renameOrFail(src: org.apache.hadoop.fs.Path,
-                         dst: org.apache.hadoop.fs.Path): Unit =
-          require(fs.rename(src, dst),
-            s"SCD2 swap rename failed: $src -> $dst (batch $batchId)")
-        renameOrFail(dimPath, oldPath)
-        renameOrFail(stagingPath, dimPath)
-        fs.delete(oldPath, true)
-        ()
-      }
-      .start()
-      .awaitTermination()
   }
 }

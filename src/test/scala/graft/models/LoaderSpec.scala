@@ -121,7 +121,10 @@ class LoaderSpec extends SparkSpec {
     Warehouse.build(spark, sources, seqOut)
     val timings = Dag.runParallel(spark, sources, parOut, parallelism = 4)
     timings.size shouldBe 44
-    for (m <- Dag.nodes(Map.empty).map(_.name)) withClue(s"$m: ") {
+    // each model swapped in whole: no staging or old copy is left behind
+    val names = Dag.nodes(Map.empty).map(_.name)
+    for (dir <- Seq(seqOut, parOut)) new java.io.File(dir).list().toSet shouldBe names.toSet
+    for (m <- names) withClue(s"$m: ") {
       val a = spark.read.parquet(s"$seqOut/$m")
       val b = spark.read.parquet(s"$parOut/$m")
       a.count() shouldBe b.count()

@@ -415,13 +415,13 @@ class WarehouseSpec extends SparkSpec {
     for (m <- allStreamModels) assertSameRows(m, chained(m), full(m))
   }
 
-  test("streaming merge-on-arrival == batch applyBatch2 == full rebuild") {
-    // The composition gate: replaying batch2's CRM actions as TWO
-    // micro-batch arrivals through StreamingScd2.mergeScd2OnArrival
-    // must leave the accounts and customers dims equal to (a) the batch
-    // applyBatch2 merge and (b) a clean full rebuild — the streaming
-    // path and the batch path are the same merge kernel fed at
-    // different granularity, and this pins it three ways.
+  test("two arrivals == one batch == full rebuild") {
+    // The composition gate: batch2's CRM actions arrive as TWO deltas,
+    // each chained through Warehouse.applyBatch and published to its own
+    // directory (the dynamic-table refresh on arrival). The accounts and
+    // customers dims must equal (a) the one-batch applyBatch2 merge and
+    // (b) a clean full rebuild — the same merge fed at different
+    // granularity, pinned three ways.
     val cutoff = ts("2020-02-01 00:00:00")
     val src = wh.sources
     val crmB2 = src("customer_mgmt").filter($"action_ts" >= cutoff)
@@ -434,34 +434,63 @@ class WarehouseSpec extends SparkSpec {
     val wave2 = crmB2.filter($"action_ts" >= ts("2020-03-15 00:00:00"))
     wave1.count() shouldBe 1
     wave2.count() shouldBe 1
-    val root = java.nio.file.Files.createTempDirectory("streamwh")
-    val cases = Seq(
-      ("accounts", Seq("account_id"), wh1("accounts"),
-        (crm: DataFrame) => Silver.accountsBase(crm, src("tax_rate"))),
-      ("customers", Seq("customer_id"), wh1("customers"),
-        (crm: DataFrame) => Silver.customersBase(crm, src("tax_rate"))))
-    for ((name, idCols, seed, baseOf) <- cases) {
-      val dimDir = root.resolve(s"${name}_dim").toString
-      val chDir = root.resolve(s"${name}_changes").toString
-      val chk = root.resolve(s"${name}_chk").toString
-      seed.write.parquet(dimDir)
-      val base1 = baseOf(wave1)
-      base1.write.mode("append").parquet(chDir)
-      graft.streaming.StreamingScd2.mergeScd2OnArrival(spark, chDir,
-        base1.schema, dimDir, idCols, "action_ts", chk)
-      baseOf(wave2).write.mode("append").parquet(chDir)
-      graft.streaming.StreamingScd2.mergeScd2OnArrival(spark, chDir,
-        base1.schema, dimDir, idCols, "action_ts", chk)
-      val got = spark.read.parquet(dimDir)
-      for ((label, target) <- Seq("full rebuild" -> full(name),
-          "applyBatch2" -> refreshed(name))) {
-        withClue(s"$name vs $label: ") {
-          val t = target.select(got.columns.map(col): _*)
-          got.exceptAll(t).count() shouldBe 0L
-          t.exceptAll(got).count() shouldBe 0L
-          got.count() shouldBe t.count()
-        }
-      }
+    val arrived = Seq(wave1, wave2).foldLeft(wh1) { (w, wave) =>
+      Warehouse.applyBatch(w, Map("customer_mgmt" -> wave), Warehouse.writeThenRead(
+        spark, java.nio.file.Files.createTempDirectory("arrival").toString))
+    }
+    for (name <- Seq("accounts", "customers");
+         (label, target) <- Seq("full rebuild" -> full(name),
+           "applyBatch2" -> refreshed(name)))
+      assertSameRows(s"$name vs $label", arrived(name), target)
+  }
+
+  test("publish: recovers from a crash between the swap renames") {
+    val out = java.nio.file.Files.createTempDirectory("publishcrash").toString
+    val mat = Warehouse.writeThenRead(spark, out)
+    mat("dim", Seq((1L, "v1")).toDF("id", "payload"))
+    // the worst crash window of a prior publish: the table renamed away
+    // (<name>.old holds the only good copy), a stale staging copy left
+    // behind — the next publish must restore, clear the leftovers and
+    // swap in the new table
+    val fs = new org.apache.hadoop.fs.Path(out)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.rename(new org.apache.hadoop.fs.Path(s"$out/dim"),
+      new org.apache.hadoop.fs.Path(s"$out/dim.old")))
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$out/dim.staging"))
+    val want = Seq((1L, "v1"), (2L, "w1")).toDF("id", "payload")
+    // the old copy is restored before the write, so even a failing
+    // publish leaves it as the table
+    intercept[Exception](mat("dim", want.withColumn("payload",
+      raise_error(lit("injected publish failure")).cast("string"))))
+    spark.read.parquet(s"$out/dim").as[(Long, String)].collect() shouldBe Array((1L, "v1"))
+    assertSameRows("dim", mat("dim", want), want)
+    new java.io.File(out).list().toSet shouldBe Set("dim")
+  }
+
+  test("publish: a failure keeps the last good table; rerun == clean build") {
+    val out = java.nio.file.Files.createTempDirectory("publishfault").toString
+    def tables() = modelNames.map(m => m -> spark.read.parquet(s"$out/$m").collect().toSeq).toMap
+    Warehouse.build(spark, wh.sources, out)
+    val clean = tables()
+    // a plan that fails mid-job, on one row
+    val faulty = wh("accounts").withColumn("account_desc",
+      when($"account_id" === "8", raise_error(lit("injected publish failure")).cast("string"))
+        .otherwise($"account_desc"))
+    val e = intercept[Exception](Warehouse.writeThenRead(spark, out)("accounts", faulty))
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("injected publish failure")) shouldBe true
+    spark.read.parquet(s"$out/accounts").collect().toSeq should contain theSameElementsAs
+      clean("accounts")
+    // fail one model mid-build, then rerun into the same directory
+    val hr = wh.sources("hr").withColumn("employee_first_name",
+      raise_error(lit("injected hr failure")).cast("string"))
+    intercept[Exception](Warehouse.build(spark, wh.sources + ("hr" -> hr), out))
+    Warehouse.build(spark, wh.sources, out)
+    // the rerun clears the staging copies the failed attempts left
+    new java.io.File(out).list().toSet shouldBe modelNames.toSet
+    val rerun = tables()
+    for (m <- modelNames) withClue(s"model $m: ") {
+      rerun(m) should contain theSameElementsAs clean(m)
     }
   }
 }

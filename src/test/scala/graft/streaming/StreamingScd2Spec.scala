@@ -50,115 +50,4 @@ class StreamingScd2Spec extends SparkSpec {
     e2.map(_.payload) shouldBe Seq("w1")
     e2.head.is_current shouldBe true
   }
-
-  test("mergeScd2OnArrival: arriving batches merge to == full-log scd2") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
-    import spark.implicits._
-    import graft.engine.Scd2
-    val dir = java.nio.file.Files.createTempDirectory("scd2arrival")
-    val changes = dir.resolve("changes").toString
-    val dim = dir.resolve("dim").toString
-    val chk = dir.resolve("chk").toString
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("change_ts", TimestampType), StructField("payload", StringType)))
-    val b1 = Seq(
-      (1L, ts("2020-01-01 00:00:00"), "v1"),
-      (2L, ts("2020-02-01 00:00:00"), "w1")).toDF("id", "change_ts", "payload")
-    // seed: materialized SCD2 dim from batch1
-    Scd2.scd2(b1, Seq("id"), "change_ts").drop("change_ts")
-      .write.parquet(dim)
-    // two delta arrivals: an update to entity 1, then a brand-new entity
-    val b2 = Seq((1L, ts("2020-06-01 00:00:00"), "v2"))
-      .toDF("id", "change_ts", "payload")
-    val b3 = Seq((3L, ts("2020-07-01 00:00:00"), "x1"))
-      .toDF("id", "change_ts", "payload")
-    b2.write.mode("append").parquet(changes)
-    StreamingScd2.mergeScd2OnArrival(spark, changes, schema, dim,
-      Seq("id"), "change_ts", chk)
-    b3.write.mode("append").parquet(changes)
-    StreamingScd2.mergeScd2OnArrival(spark, changes, schema, dim,
-      Seq("id"), "change_ts", chk)
-
-    val got = spark.read.parquet(dim)
-    val full = Scd2.scd2(b1.unionByName(b2).unionByName(b3),
-        Seq("id"), "change_ts").drop("change_ts")
-      .select(got.columns.map(col): _*)
-    got.exceptAll(full).count() shouldBe 0L
-    full.exceptAll(got).count() shouldBe 0L
-    got.filter($"id" === 1 && $"is_current").select("payload")
-      .as[String].collect() shouldBe Array("v2")
-
-    // at-least-once replay: a fresh checkpoint redelivers EVERY change
-    // file; the (entity, ts)-already-folded guard must make it a no-op
-    StreamingScd2.mergeScd2OnArrival(spark, changes, schema, dim,
-      Seq("id"), "change_ts", dir.resolve("chk2").toString)
-    val replayed = spark.read.parquet(dim)
-      .select(full.columns.map(col): _*)
-    replayed.exceptAll(full).count() shouldBe 0L
-    full.exceptAll(replayed).count() shouldBe 0L
-  }
-
-  test("mergeScd2OnArrival recovers from a crash between the swap renames") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
-    import spark.implicits._
-    import graft.engine.Scd2
-    val dir = java.nio.file.Files.createTempDirectory("scd2crash")
-    val changes = dir.resolve("changes").toString
-    val dim = dir.resolve("dim").toString
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("change_ts", TimestampType), StructField("payload", StringType)))
-    val b1 = Seq((1L, ts("2020-01-01 00:00:00"), "v1"))
-      .toDF("id", "change_ts", "payload")
-    Scd2.scd2(b1, Seq("id"), "change_ts").drop("change_ts").write.parquet(dim)
-    val b2 = Seq((1L, ts("2020-06-01 00:00:00"), "v2"))
-      .toDF("id", "change_ts", "payload")
-    b2.write.mode("append").parquet(changes)
-    // simulate the worst crash window of a PRIOR attempt of batch 0:
-    // dim renamed away (old-0 holds the only good copy), a stale
-    // staging-0 left behind — the swap must restore the dim, clear the
-    // leftovers, and complete the merge
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dimPath = new org.apache.hadoop.fs.Path(dim)
-    require(fs.rename(dimPath, new org.apache.hadoop.fs.Path(s"$dim.old-0")))
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dim.staging-0"))
-    StreamingScd2.mergeScd2OnArrival(spark, changes, schema, dim,
-      Seq("id"), "change_ts", dir.resolve("chk").toString)
-    val got = spark.read.parquet(dim)
-    val full = Scd2.scd2(b1.unionByName(b2), Seq("id"), "change_ts")
-      .drop("change_ts").select(got.columns.map(col): _*)
-    got.exceptAll(full).count() shouldBe 0L
-    full.exceptAll(got).count() shouldBe 0L
-    // leftovers cleaned up: only the dim remains
-    fs.exists(new org.apache.hadoop.fs.Path(s"$dim.old-0")) shouldBe false
-    fs.exists(new org.apache.hadoop.fs.Path(s"$dim.staging-0")) shouldBe false
-  }
-
-  test("refreshOnArrival recomputes the model when files land") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("dynref")
-    val src = dir.resolve("src").toString
-    val tgt = dir.resolve("tgt").toString
-    val chk = dir.resolve("chk").toString
-    val schema = StructType(Seq(StructField("k", LongType),
-      StructField("amount", DoubleType)))
-    Seq((1L, 10.0), (2L, 5.0)).toDF("k", "amount")
-      .write.mode("append").parquet(src)
-    StreamingScd2.refreshOnArrival(spark, src, schema,
-      df => df.groupBy("k").agg(sum("amount").as("total")), tgt, chk)
-    val round1 = spark.read.parquet(tgt).orderBy("k")
-      .as[(Long, Double)].collect()
-    round1 shouldBe Array((1L, 10.0), (2L, 5.0))
-    // new file lands -> AvailableNow run picks it up and refreshes
-    Seq((1L, 2.0)).toDF("k", "amount").write.mode("append").parquet(src)
-    StreamingScd2.refreshOnArrival(spark, src, schema,
-      df => df.groupBy("k").agg(sum("amount").as("total")), tgt, chk)
-    val round2 = spark.read.parquet(tgt).orderBy("k")
-      .as[(Long, Double)].collect()
-    round2 shouldBe Array((1L, 12.0), (2L, 5.0))
-  }
 }
