@@ -56,7 +56,7 @@ object Sources {
     * and the pipeline must count/quarantine them rather than abort
     * (FAILFAST) or silently null them out (the default DROPMALFORMED
     * trap). Returns rows for every input line; callers split on
-    * `_corrupt_record IS NULL` — see [[jsonlSplit]].
+    * `_corrupt_record IS NULL` — see [[jsonlSplitManaged]].
     */
   def jsonl(spark: SparkSession, path: String,
             schema: StructType): DataFrame = {
@@ -68,30 +68,14 @@ object Sources {
       .json(path)
   }
 
-  /** Split a [[jsonl]] read into (clean rows, quarantine rows). The
-    * quarantine keeps the raw offending line for repair/audit.
+  /** Split a [[jsonl]] read into (clean rows, quarantine rows, release).
+    * The quarantine keeps the raw offending line for repair/audit.
     *
     * The cache is REQUIRED, not an optimization: on an uncached raw
     * JSON scan Spark refuses a query whose referenced columns are only
     * the internal corrupt-record column (AnalysisException), so the
     * quarantine side is unreadable without materializing first. One
-    * cached scan then serves both sides. The cache pins the parsed
-    * corpus in storage until released — batch pipelines that consume
-    * both sides and move on should use [[jsonlSplitManaged]] and call
-    * the release.
-    *
-    * This 2-tuple signature has no release path BY DESIGN and leaks
-    * the cache into LRU eviction in a long-lived session; it survives
-    * for interactive use only. New call sites should prefer
-    * [[jsonlSplitManaged]].
-    */
-  @deprecated("use jsonlSplitManaged and call the release thunk", "r10")
-  def jsonlSplit(df: DataFrame): (DataFrame, DataFrame) = {
-    val (clean, quarantine, _) = jsonlSplitManaged(df)
-    (clean, quarantine)
-  }
-
-  /** [[jsonlSplit]] plus the cache-release handle: call the thunk once
+    * cached scan then serves both sides; call the release thunk once
     * both sides are consumed to free the materialized parse.
     * MEMORY_AND_DISK explicitly (also the `cache()` default, pinned
     * here so a Spark default change can't turn an over-memory parse

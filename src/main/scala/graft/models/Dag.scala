@@ -12,15 +12,14 @@ import scala.collection.mutable
   * work model (wrk_company_financials) is inlined into its one
   * consumer, like the reference.
   *
-  * Two schedulers evaluate this one table:
-  *  - [[Warehouse]]: serial, memoised per instance, forced in declared
-  *    order (which is topological) — the composable, lazily planned form
-  *    that the incremental batch apply and the query gates build on;
-  *  - [[runParallel]]: the dbt-scheduler analog (20 threads in the
-  *    reference build, README.md:215) — independent branches (the
-  *    FINWIRE/company spine, the trade spine, the CRM spine) materialize
-  *    concurrently, with Spark's scheduler interleaving their jobs across
-  *    the executor slots.
+  * [[Warehouse]] is the one evaluator of this table: its memoised cell
+  * is the only place a node's `fn` meets `mat`. [[force]] is the one
+  * scheduler over those cells, the dbt-scheduler analog (20 threads in
+  * the reference build, README.md:215): the serial build runs it at
+  * parallelism 1, [[runParallel]] lets independent branches (the
+  * FINWIRE/company spine, the trade spine, the CRM spine) materialize
+  * concurrently, with Spark's scheduler interleaving their jobs across
+  * the executor slots.
   */
 object Dag {
 
@@ -116,11 +115,13 @@ object Dag {
           Gold.wrkCompanyFinancials(d("financials"), d("dim_company")))))
   }
 
+  private val declared = nodes(Map.empty)
+
   /** Source table key → the bronze model that scans it (the roots a
     * source delta dirties in the DAG).
     */
   val sourceModel: Map[String, String] =
-    nodes(Map.empty).flatMap(n => n.source.map(_ -> n.name)).toMap
+    declared.flatMap(n => n.source.map(_ -> n.name)).toMap
 
   /** Models transitively downstream of `roots` (inclusive) — structural
     * only, no DataFrames touched. One pass suffices because declared
@@ -129,61 +130,63 @@ object Dag {
     * ([[Warehouse.applyBatch]]).
     */
   def downstream(roots: Set[String]): Set[String] =
-    nodes(Map.empty).foldLeft(roots) { (affected, n) =>
+    declared.foldLeft(roots) { (affected, n) =>
       if (n.deps.exists(affected)) affected + n.name else affected
     }
 
-  /** Materialize the whole DAG with `parallelism` concurrent model
-    * builds, each through [[Warehouse.writeThenRead]], so every model
-    * computes exactly once and downstream models scan its table. Returns
-    * per-model wall seconds (overlapping).
-    *
-    * A model starts once all its dependencies are written. When one
-    * fails, no further model starts; the call waits for the builds
-    * already running, then throws the first failure, naming its model.
+  /** Materialize the whole DAG through [[Warehouse.writeThenRead]] with
+    * `parallelism` concurrent model builds ([[force]]), so every model
+    * computes exactly once and downstream models scan its table.
+    * Returns per-model wall seconds (overlapping).
     */
   def runParallel(spark: SparkSession, sources: Map[String, DataFrame],
-                  outDir: String, parallelism: Int = 8): Map[String, Double] = {
-    val ns = nodes(sources)
-    val write = Warehouse.writeThenRead(spark, outDir)
-    val dependents = ns.flatMap(n => n.deps.map(_ -> n)).groupMap(_._1)(_._2)
-    val waitingOn = mutable.Map.from(ns.map(n => n.name -> n.deps.size))
-    val built = mutable.Map.empty[String, DataFrame]
-    val wall = mutable.Map.empty[String, Double]
+                  outDir: String, parallelism: Int = 8): Map[String, Double] =
+    force(new Warehouse(sources, Warehouse.writeThenRead(spark, outDir)), parallelism)
+
+  /** Force every model of `wh`, at most `parallelism` at once. A model
+    * starts once all its dependencies are forced, so no pool thread
+    * waits on another's cell. Models start in the order they become
+    * ready (the bronze roots first, in declared order), which starts a
+    * long chain such as the trade spine as soon as its inputs exist.
+    * Returns each model's wall seconds.
+    *
+    * When one model fails, no further model starts; the call waits for
+    * the models already running, then throws the first failure, naming
+    * its model.
+    */
+  private[graft] def force(wh: Warehouse, parallelism: Int): Map[String, Double] = {
+    val ready = mutable.Queue.from(declared.filter(_.deps.isEmpty))
+    val wall = mutable.Map.empty[String, Double] // also the set of forced models
     var running = 0
     var failure: Option[Throwable] = None
     val lock = new Object
     val pool = Executors.newFixedThreadPool(parallelism)
 
     // callers hold `lock`
-    def start(n: Node): Unit = { running += 1; pool.execute(() => build(n)) }
+    def dispatch(): Unit =
+      while (failure.isEmpty && running < parallelism && ready.nonEmpty) {
+        val n = ready.dequeue()
+        running += 1
+        pool.execute(() => build(n.name))
+      }
 
-    def build(n: Node): Unit = {
-      val inputs = lock.synchronized(
-        if (failure.isEmpty) Some(n.deps.map(d => d -> built(d)).toMap) else None)
+    def build(name: String): Unit = {
       val t0 = System.nanoTime()
-      val result = inputs.map(in =>
-        try Right(write(n.name, n.fn(in))) catch { case e: Throwable => Left(e) })
+      val error = try { wh(name); None } catch { case e: Throwable => Some(e) }
       lock.synchronized {
         running -= 1
-        result.foreach {
-          case Right(df) =>
-            built(n.name) = df
-            wall(n.name) = (System.nanoTime() - t0) / 1e9
-            if (failure.isEmpty) dependents.getOrElse(n.name, Nil).foreach { d =>
-              waitingOn(d.name) -= 1
-              if (waitingOn(d.name) == 0) start(d)
-            }
-          case Left(e) =>
-            if (failure.isEmpty)
-              failure = Some(new RuntimeException(s"warehouse model ${n.name} failed", e))
-        }
+        if (error.isEmpty) {
+          wall(name) = (System.nanoTime() - t0) / 1e9
+          ready ++= declared.filter(n => n.deps.contains(name) && n.deps.forall(wall.contains))
+        } else if (failure.isEmpty)
+          failure = error.map(new RuntimeException(s"warehouse model $name failed", _))
+        dispatch()
         lock.notifyAll()
       }
     }
 
     try lock.synchronized {
-      ns.filter(_.deps.isEmpty).foreach(start)
+      dispatch()
       while (running > 0) lock.wait()
     } finally {
       pool.shutdown()

@@ -3,16 +3,14 @@ package graft.models
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.collection.mutable
 
 /** The TPC-DI warehouse as one memoised evaluation of the [[Dag]]
   * table: `wh("fact_trade")` builds a model from its dependencies' frames,
-  * at most once per Warehouse instance (one lazy cell per model, so
-  * concurrent callers share it). Spark keeps everything lazy until a
-  * sink materializes it (the Dynamic Table refresh semantics reduce to
-  * batch recompute in dependency order, SURVEY §2.9); [[all]] forces the
-  * models in declared order — the serial scheduler beside
-  * [[Dag.runParallel]].
+  * at most once per Warehouse instance (one lazy cell per model, the
+  * only place a node's `fn` meets `mat`). Spark keeps everything lazy
+  * until a sink materializes it (the Dynamic Table refresh semantics
+  * reduce to batch recompute in dependency order, SURVEY §2.9). [[all]]
+  * forces the models in declared order; [[Dag.force]] schedules them.
   *
   * `mat` is the materialization hook, applied to every model as it is
   * first evaluated. Default = identity (fully lazy, for composition).
@@ -26,24 +24,33 @@ import scala.collection.mutable
   * last good table in place.
   *
   * `overrides` replaces a model wholesale (its upstream plan is never
-  * built, and `mat` never sees it) — how [[Warehouse.applyBatch]] hands
-  * back the refreshed models, each of which already went through `mat`
-  * at most once.
+  * built, and `mat` never sees it); `rules`, given this Warehouse's own
+  * models, may hand a cell a frame for `mat` in place of its `fn` — how
+  * [[Warehouse.applyBatch]] refreshes.
   *
   * @param sources the 17 loader tables (Loader.loadAll or test fixtures)
   * @param mat     materialization hook (name, plan) => DataFrame seen
   *                by downstream models
   */
-final class Warehouse(val sources: Map[String, DataFrame],
-                      mat: (String, DataFrame) => DataFrame = (_, df) => df,
-                      overrides: Map[String, DataFrame] = Map.empty) {
+final class Warehouse private[models] (
+    val sources: Map[String, DataFrame],
+    mat: (String, DataFrame) => DataFrame,
+    overrides: Map[String, DataFrame],
+    rules: (String => DataFrame) => Map[String, () => Option[DataFrame]]) {
+
+  def this(sources: Map[String, DataFrame],
+           mat: (String, DataFrame) => DataFrame = (_, df) => df,
+           overrides: Map[String, DataFrame] = Map.empty) =
+    this(sources, mat, overrides, _ => Map.empty)
 
   private final class Cell(f: => DataFrame) { lazy val df: DataFrame = f }
 
   private val nodes = Dag.nodes(sources)
+  private val ruleOf = rules(apply)
   private val cells: Map[String, Cell] = nodes.map { n =>
+    def recompute = n.fn(n.deps.map(d => d -> apply(d)).toMap)
     n.name -> new Cell(overrides.getOrElse(n.name,
-      mat(n.name, n.fn(n.deps.map(d => d -> apply(d)).toMap))))
+      mat(n.name, ruleOf.get(n.name).flatMap(_()).getOrElse(recompute))))
   }.toMap
 
   /** The model `name`, built on first use. */
@@ -112,16 +119,17 @@ object Warehouse {
 
   /** Materialize every model to parquet under outDir in dependency
     * order — the dbt-build analog (zone target_lag reduces to batch
-    * recompute, SURVEY §3.2-3.3). Each model is computed exactly once
-    * and every downstream model reads the written table instead of
-    * re-deriving the upstream plan.
+    * recompute, SURVEY §3.2-3.3): [[Dag.force]] at parallelism 1, so the
+    * serial and parallel builds share one failure contract. Each model
+    * is computed exactly once and every downstream model reads the
+    * written table instead of re-deriving the upstream plan.
     *
     * Returns the materialized Warehouse (all models backed by parquet).
     */
   def build(spark: SparkSession, sources: Map[String, DataFrame],
             outDir: String): Warehouse = {
     val wh = new Warehouse(sources, writeThenRead(spark, outDir))
-    wh.all.foreach(_ => ()) // force every model in dependency order
+    Dag.force(wh, parallelism = 1)
     wh
   }
 
@@ -147,29 +155,30 @@ object Warehouse {
 
   /** Apply one batch of per-source DELTA frames (the shapes the Batch1
     * loader produces; only sources with new data need appear) to
-    * `existing`, as one pass over [[Dag.nodes]] in declared
-    * (topological) order. Each model gets exactly one treatment:
+    * `existing`. The result is a Warehouse over the unioned sources in
+    * which each model gets exactly one treatment:
     *
     *  1. the delta cannot reach it ([[Dag.downstream]] of the delta's
-    *     bronze models excludes it): the existing frame, verbatim — the
-    *     FINWIRE spine skips entirely for a brokerage/CRM batch, and
-    *     `mat` never sees it;
+    *     bronze models excludes it): the existing frame, as an override
+    *     — the FINWIRE spine skips entirely for a brokerage/CRM batch,
+    *     and `mat` never sees it;
     *  2. a [[mergeRules]] rule covers it and returns the whole refreshed
-    *     model, which goes through `mat`;
-    *  3. anything else: the node's own `fn` over the already-refreshed
+    *     model, which its cell passes through `mat`;
+    *  3. anything else: its cell's node `fn` over the refreshed
     *     dependencies, through `mat` — e.g. dim_customer/dim_account
     *     recompute dim-sized over the refreshed silver dims (a new version
     *     must be able to re-close its neighbours' end timestamps).
     *
-    * So every model the delta reaches passes through `mat` exactly once,
-    * and downstream models read the refreshed frames `mat` returned. The
-    * result is a Warehouse over the unioned sources with all 44 models
-    * as overrides — the chaining form: `applyBatch(applyBatch(wh, b2),
-    * b3)` applies the TPC-DI batch sequence, and a further apply reads
-    * exactly what a materialized deployment has on disk (gate q49 pins
-    * the chain equal to a full rebuild over b1∪b2∪b3; q50 audits SCD2
-    * continuity through the double merge). A delta outside
-    * [[incrementalSources]] returns `new Warehouse(unioned, mat)`.
+    * The rules read the refreshed models from that same Warehouse, so
+    * nothing runs until a model is forced, whatever order forces them:
+    * every model the delta reaches passes through `mat` exactly once,
+    * and downstream models read the frames `mat` returned. The chaining
+    * form: `applyBatch(applyBatch(wh, b2), b3)` applies the
+    * TPC-DI batch sequence, and a further apply reads exactly what a
+    * materialized deployment has on disk (gate q49 pins the chain equal
+    * to a full rebuild over b1∪b2∪b3; q50 audits SCD2 continuity through
+    * the double merge). A delta outside [[incrementalSources]] returns
+    * `new Warehouse(unioned, mat)`.
     *
     * Assumes standard warehouse batch semantics: delta timestamps are
     * not earlier than the existing watermark (TPC-DI batches are
@@ -183,25 +192,21 @@ object Warehouse {
     val unioned = existing.sources.map { case (k, v) =>
       k -> batch2.get(k).map(v.unionByName(_)).getOrElse(v)
     }
-    if (!batch2.keySet.subsetOf(incrementalSources))
-      return new Warehouse(unioned, mat)
-    val reached = Dag.downstream(batch2.keySet.map(Dag.sourceModel))
-    val refreshed = mutable.Map.empty[String, DataFrame]
-    val rules = mergeRules(existing, batch2, mat, refreshed)
-    Dag.nodes(unioned).foreach { n =>
-      refreshed(n.name) =
-        if (!reached(n.name)) existing(n.name)
-        else mat(n.name, rules.get(n.name).flatMap(_()).getOrElse(
-          n.fn(n.deps.map(d => d -> refreshed(d)).toMap)))
+    if (!batch2.keySet.subsetOf(incrementalSources)) new Warehouse(unioned, mat)
+    else {
+      val reached = Dag.downstream(batch2.keySet.map(Dag.sourceModel))
+      val kept = Dag.nodes(Map.empty).map(_.name).filterNot(reached)
+      new Warehouse(unioned, mat, kept.map(n => n -> existing(n)).toMap,
+        r => mergeRules(existing, batch2, mat, r))
     }
-    new Warehouse(unioned, mat, overrides = refreshed.toMap)
   }
 
   /** The models whose refresh differs from a recompute, keyed by model.
     * A rule is consulted only for a model the delta reaches; it returns
     * the WHOLE refreshed model, or None ("recompute") when its stream
-    * has no delta. `r` holds the already-refreshed models (every model
-    * declared before the one being refreshed). The rules of one stream
+    * has no delta. `r` reads the refreshed models (the refreshed
+    * Warehouse itself; a rule reads only models upstream of its own).
+    * The rules of one stream
     * share that stream's touched-key frames as lazy values, and the
     * rebuilt touched slices go through `mat` under `<model>_touched` /
     * `<model>_new` names.

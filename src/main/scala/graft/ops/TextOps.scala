@@ -302,19 +302,6 @@ object TextOps {
         .as("ll"))
       .head().getDouble(0)
 
-  /** Train with soft-EM: same seed → iterate [[unigramSoftEmStep]]. */
-  def unigramTrainSoft(df: org.apache.spark.sql.DataFrame, textCol: String,
-                       vocabSize: Int, maxPieceLen: Int = 4,
-                       emIters: Int = 2,
-                       maxWords: Int = 65536): UnigramModel = {
-    val table = bpeWordTable(df, textCol, maxWords).drop("syms")
-      .localCheckpoint()
-    var m = unigramSeedModel(table, vocabSize, maxPieceLen)
-    var i = 0
-    while (i < emIters) { m = unigramSoftEmStep(table, m); i += 1 }
-    m
-  }
-
   /** Min integer cost of segmenting `s` WITHOUT the full-span edge —
     * the "alternative segmentation" of SentencePiece's prune: since a
     * piece can never occur as a proper substring of itself, banning
@@ -486,21 +473,6 @@ object TextOps {
       rows.map(_.getAs[Long]("count")),
       rows.map(_.getAs[Long]("cost")),
       meta.getAs[Int]("max_piece_len"))
-  }
-
-  /** Sampling (subword-regularization) encode: per-word segmentation
-    * drawn ∝ its posterior probability from a (seed, word)-keyed
-    * splitmix64 stream — different epochs pass different seeds, same
-    * seed replays exactly. Zero-shuffle scan rider like
-    * [[unigramEncode]].
-    */
-  def unigramSampleEncode(text: Column, model: UnigramModel,
-                          seed: Long): Column = {
-    val words = filter(split(lower(trim(text)), "\\s+"), w => w =!= "")
-    flatten(filter(transform(words, w =>
-      graft.functions.UnigramExpectations.unigramSample(w,
-        model.pieces, model.counts, model.maxPieceLen, seed)),
-      a => a.isNotNull))
   }
 
   /** Train a unigram tokenizer: seed from substring statistics, then

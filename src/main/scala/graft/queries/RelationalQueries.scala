@@ -107,8 +107,6 @@ object RelationalQueries {
     * Holding events carry no timestamp of their own — they ride their
     * trade's batch (semi-join on the sliced trade keys).
     */
-  private[queries] def deltaSliceDebug(src: Map[String, DataFrame], lo: Option[Column], hi: Option[Column]): Map[String, DataFrame] = deltaSlice(src, lo, hi)
-
   private def deltaSlice(src: Map[String, DataFrame], lo: Option[Column],
                          hi: Option[Column]): Map[String, DataFrame] = {
     val tsCols = Map("customer_mgmt" -> "action_ts", "trade" -> "t_dts",

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Watermarked event-time window aggregation — the streaming analog of
@@ -52,20 +52,4 @@ object StreamingWindowAgg {
       .groupBy(session_window(col(eventTimeCol), gap).as("w") +:
         keys.map(col): _*)
       .agg(count(lit(1)).as("n")), keys, "w")
-
-  /** General windowed aggregate: caller-supplied agg columns over
-    * tumbling windows (the other shapes specialize this; kept separate
-    * so the common count path stays one-line simple).
-    */
-  def tumblingAgg(events: DataFrame, eventTimeCol: String,
-                  keys: Seq[String], width: String, horizon: String,
-                  aggs: Seq[Column]): DataFrame = {
-    require(aggs.nonEmpty, "at least one aggregate required")
-    events.withWatermark(eventTimeCol, horizon)
-      .groupBy(window(col(eventTimeCol), width).as("w") +: keys.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("window_start", col("w.start"))
-      .withColumn("window_end", col("w.end"))
-      .drop("w")
-  }
 }

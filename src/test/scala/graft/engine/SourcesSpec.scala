@@ -71,8 +71,7 @@ class SourcesSpec extends SparkSpec {
       StructField("doc_id", LongType), StructField("text", StringType)))
     val raw = Sources.jsonl(spark, dir.resolve("docs.jsonl").toString,
       schema).cache()
-    val (clean, bad) =
-      (Sources.jsonlSplit(raw): @annotation.nowarn("cat=deprecation"))
+    val (clean, bad, release) = Sources.jsonlSplitManaged(raw)
     clean.orderBy("doc_id").collect().map(r =>
       (r.getLong(0), r.getString(1))) shouldBe
       Array((1L, "alpha"), (3L, "gamma"))
@@ -80,5 +79,6 @@ class SourcesSpec extends SparkSpec {
     badLines.length shouldBe 2
     badLines.exists(_.contains("broken-no-comma")) shouldBe true
     badLines.exists(_.contains("not json at all")) shouldBe true
+    release()
   }
 }

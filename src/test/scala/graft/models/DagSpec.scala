@@ -3,8 +3,8 @@ package graft.models
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-/** Invariants of the one warehouse model table, [[Dag.nodes]], that both
-  * schedulers and the incremental batch apply rely on. Structural only:
+/** Invariants of the one warehouse model table, [[Dag.nodes]], that the
+  * scheduler and the incremental batch apply rely on. Structural only:
   * no DataFrame is built.
   */
 class DagSpec extends AnyFunSuite with Matchers {

@@ -116,33 +116,46 @@ class LoaderSpec extends SparkSpec {
 
   test("parallel DAG runner produces the same models as the sequential build") {
     val seqOut = Files.createTempDirectory("whseq").toString
-    val parOut = Files.createTempDirectory("whpar").toString
     val sources = Loader.loadAll(spark, batchDir.toString)
     Warehouse.build(spark, sources, seqOut)
-    val timings = Dag.runParallel(spark, sources, parOut, parallelism = 4)
-    timings.size shouldBe 44
-    // each model swapped in whole: no staging or old copy is left behind
     val names = Dag.nodes(Map.empty).map(_.name)
-    for (dir <- Seq(seqOut, parOut)) new java.io.File(dir).list().toSet shouldBe names.toSet
-    for (m <- names) withClue(s"$m: ") {
-      val a = spark.read.parquet(s"$seqOut/$m")
-      val b = spark.read.parquet(s"$parOut/$m")
-      a.count() shouldBe b.count()
-      a.exceptAll(b).count() shouldBe 0L
-      b.exceptAll(a).count() shouldBe 0L
+    for (parallelism <- Seq(4, 1)) withClue(s"parallelism $parallelism: ") {
+      val parOut = Files.createTempDirectory("whpar").toString
+      val timings = Dag.runParallel(spark, sources, parOut, parallelism)
+      timings.keySet shouldBe names.toSet
+      // each model swapped in whole: no staging or old copy is left behind
+      for (dir <- Seq(seqOut, parOut)) new java.io.File(dir).list().toSet shouldBe names.toSet
+      for (m <- names) withClue(s"$m: ") {
+        val a = spark.read.parquet(s"$seqOut/$m")
+        val b = spark.read.parquet(s"$parOut/$m")
+        a.count() shouldBe b.count()
+        a.exceptAll(b).count() shouldBe 0L
+        b.exceptAll(a).count() shouldBe 0L
+      }
     }
   }
 
   test("parallel DAG runner names the failed model and starts nothing after it") {
-    val out = Files.createTempDirectory("whfail").toString
     val sources = Loader.loadAll(spark, batchDir.toString)
     val hr = sources("hr").withColumn("employee_first_name",
       raise_error(lit("injected hr failure")).cast("string"))
-    val e = intercept[RuntimeException](
-      Dag.runParallel(spark, sources + ("hr" -> hr), out, parallelism = 4))
-    e.getMessage should include("hr_employee")
-    val written = new java.io.File(out).list().toSet
-    written should not contain "employees"
-    written should not contain "dim_broker"
+    val faulty = sources + ("hr" -> hr)
+    // the bronze roots start first, in declared order: at parallelism 1
+    // (and in Warehouse.build, which runs the same scheduler serially)
+    // no model declared after hr_employee starts
+    val afterHr = Dag.nodes(Map.empty).map(_.name).dropWhile(_ != "hr_employee").tail.toSet
+    val runs: Seq[(String, String => Unit, Boolean)] = Seq(
+      ("parallelism 4", out => Dag.runParallel(spark, faulty, out, parallelism = 4), false),
+      ("parallelism 1", out => Dag.runParallel(spark, faulty, out, parallelism = 1), true),
+      ("Warehouse.build", out => Warehouse.build(spark, faulty, out), true))
+    for ((label, run, serial) <- runs) withClue(s"$label: ") {
+      val out = Files.createTempDirectory("whfail").toString
+      val e = intercept[RuntimeException](run(out))
+      e.getMessage should include("hr_employee")
+      val written = new java.io.File(out).list().toSet
+      written should not contain "employees"
+      written should not contain "dim_broker"
+      if (serial) (written & afterHr) shouldBe empty
+    }
   }
 }

@@ -320,21 +320,31 @@ class WarehouseSpec extends SparkSpec {
   test("applyBatch: each reached model passes through mat once, the rest are the existing frames") {
     val (b1, b2) = crmTradeCashSplit(wh.sources)
     val existing = new Warehouse(b1)
-    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
-    val refreshed = Warehouse.applyBatch(existing, b2, (n, df) => { seen += n; df })
-      .all.toMap
-    val calls = seen.groupBy(identity).map { case (n, ns) => n -> ns.size }
     val reached = Dag.downstream(b2.keySet.map(Dag.sourceModel))
-    for (m <- modelNames) withClue(s"model $m: ") {
-      if (reached(m)) calls.get(m) shouldBe Some(1)
-      else {
-        calls.get(m) shouldBe None
-        (refreshed(m) eq existing(m)) shouldBe true
+    // forced in declared order; in reverse, where each cell must pull in
+    // its dependencies (and the rules' shared touched-key frames); and by
+    // the scheduler, four cells at a time
+    val orders: Seq[(String, Warehouse => Unit)] = Seq(
+      "declared" -> (w => modelNames.foreach(w(_))),
+      "reverse" -> (w => modelNames.reverse.foreach(w(_))),
+      "scheduled" -> (w => Dag.force(w, parallelism = 4)))
+    for ((order, force) <- orders) withClue(s"$order order: ") {
+      val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+      val refreshed = Warehouse.applyBatch(existing, b2,
+        (n, df) => { seen.synchronized(seen += n); df })
+      force(refreshed)
+      val calls = seen.groupBy(identity).map { case (n, ns) => n -> ns.size }
+      for (m <- modelNames) withClue(s"model $m: ") {
+        if (reached(m)) calls.get(m) shouldBe Some(1)
+        else {
+          calls.get(m) shouldBe None
+          (refreshed(m) eq existing(m)) shouldBe true
+        }
       }
+      (calls.keySet -- modelNames) should contain only ("trades_history_touched",
+        "dim_trade_touched", "cash_transactions_new", "fact_cash_transactions_new",
+        "holdings_history_touched")
     }
-    (calls.keySet -- modelNames) should contain only ("trades_history_touched",
-      "dim_trade_touched", "cash_transactions_new", "fact_cash_transactions_new",
-      "holdings_history_touched")
     Warehouse.mergeRules(existing, b2, (_, df) => df, _ => fail("no rule runs"))
       .keySet.foreach(modelNames should contain(_))
     Warehouse.incrementalSources.foreach(Dag.sourceModel.keySet should contain(_))
