@@ -1,47 +1,27 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftbridge.Bridge
 
-/** Semantic-dedup caching: `CacheOnce(df)` returns a previously-cached
-  * DataFrame whose plan is semantically equal to `df`'s, caching `df`
-  * only when no live equal entry exists.
+/** `CacheOnce(df)` caches `df` unless the session's CacheManager
+  * already holds data for a plan semantically equal to `df`'s, and
+  * returns `df` either way: a query over it reads that one cached copy.
   *
   * Why: operators that cache an internal frame (MinHash signatures,
   * pinned-layout ids) and gate fixtures that materialize shared models
-  * re-derive the SAME plan across invocations — every repeat `.cache()`
-  * triggers a CacheManager "already cached" warning and strands a
-  * duplicate entry, and repeated operator calls stack one leaked cache
-  * per call. Deduping by plan turns that into one shared entry per
-  * distinct plan (strictly less storage than the repeat-cache it
-  * replaces), and the reuse is free compute.
-  *
-  * Entries bound to a stopped SparkContext are swept on every call;
-  * entries a caller has since `unpersist()`ed are detected via
-  * `storageLevel` and re-cached rather than returned dead.
+  * re-derive the SAME plan across invocations. Spark keeps one entry
+  * per plan already, but a repeat `.cache()` logs a CacheManager
+  * "Asked to cache already cached data" warning each time; the lookup
+  * keeps that out of the logs. An entry a caller has `unpersist()`ed is
+  * gone from the CacheManager, so the next call caches again.
   */
 object CacheOnce {
 
-  private val registry =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, Int), List[DataFrame]]
-
-  // synchronized: the lookup-then-cache pair must be atomic, or two
-  // concurrent callers with the same plan both miss, both cache, and
-  // the last registry write strands the other's entry — exactly the
-  // duplicate CacheManager entry this class exists to prevent. The
-  // lock only covers registry bookkeeping + the (lazy) .cache() call,
-  // never an evaluation, so contention is negligible.
+  // synchronized: the lookup-then-cache pair is atomic across callers.
+  // It covers a lookup and the (lazy) .cache() call, never an
+  // evaluation, so contention is negligible.
   def apply(df: DataFrame): DataFrame = synchronized {
-    registry.keysIterator.filter(_._1.sparkContext.isStopped)
-      .foreach(registry.remove)
-    val key = (df.sparkSession, df.semanticHash())
-    val prior = registry.getOrElse(key, Nil)
-    prior.find(p => p.storageLevel != StorageLevel.NONE && p.sameSemantics(df))
-      .getOrElse {
-        val c = df.cache()
-        registry.update(key,
-          c :: prior.filter(_.storageLevel != StorageLevel.NONE))
-        c
-      }
+    if (!Bridge.isCached(df)) df.cache()
+    df
   }
 }

@@ -346,8 +346,8 @@ object Curation {
                    tokens: Column, budget: Long): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
     // pin partition ids: both prefix-sum branches must see one layout.
-    // CacheOnce so repeated invocations share one pinned entry instead
-    // of warning + stacking a duplicate cache per call.
+    // CacheOnce so repeated invocations share one pinned entry without
+    // a CacheManager warning per call.
     val staged = graft.engine.CacheOnce(df
       .withColumn("__grp", group).withColumn("__ord", orderCol)
       .withColumn("__tok", tokens.cast("long"))

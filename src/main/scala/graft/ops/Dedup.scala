@@ -114,8 +114,8 @@ object Dedup {
                  carrySignatures: Boolean = true): DataFrame = {
     // CacheOnce, not .cache(): repeated invocations (bench iterations,
     // the d02/d12 banding variants) re-derive the identical signature
-    // plan — dedup to ONE shared entry instead of stacking a leaked
-    // cache + CacheManager warning per call
+    // plan and share its one cached entry without a CacheManager
+    // "already cached" warning per call
     val sig = graft.engine.CacheOnce(
       minhashSignatures(docs, textCol, idCol, k, shingleN, seed))
     pairsFromSigs(sig, k, bands, threshold, maxBucket, carrySignatures)

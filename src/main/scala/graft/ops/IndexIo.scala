@@ -110,9 +110,11 @@ private[graft] object IndexIo {
       s"$what: $which names shard ids outside [0, $nShards)")
   }
 
-  /** The shared bounded-concurrency runner for independent per-shard
-    * jobs (rebalance moves, routed appends): a DEDICATED fixed pool —
-    * the moves block on Spark actions, and parking blocking work on
+  /** The shared bounded-concurrency runner for independent
+    * driver-sequenced job chains (per-shard save and load,
+    * [[appendRouted]]'s per-shard appends, and the gate-level overlap
+    * of `OpsQueries.par2`..`parSeq` and q32): a DEDICATED fixed pool —
+    * the chains block on Spark actions, and parking blocking work on
     * the global ExecutionContext starves its other users.
     */
   private[graft] def runConcurrently[A, B](items: Seq[A],

@@ -1443,8 +1443,7 @@ object TextOps {
         .as("term"))
     // CacheOnce: the (doc, term) combine feeds four consumers (scoring,
     // dl, df, avgdl) — cache the collapsed relation once instead of
-    // re-tokenizing the corpus per consumer (and instead of leaking one
-    // CacheManager entry per bm25 call on repeated invocation).
+    // re-tokenizing the corpus per consumer.
     val tf = graft.engine.CacheOnce(
       terms.groupBy(id, col("term")).agg(count(lit(1)).as("tf")))
     val dl = tf.groupBy(id).agg(sum(col("tf")).as("dl"))

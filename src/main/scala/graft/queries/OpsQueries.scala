@@ -75,6 +75,89 @@ object OpsQueries {
   private def embs(s: org.apache.spark.sql.SparkSession, dir: String) =
     Tables.load(s, dir, "embeddings")
 
+  /** The unigram-tokenizer gate fixture (t21, t28, t29, t30): the
+    * top-200 words of at most 12 chars, pinned by a localCheckpoint,
+    * and the 120-piece seed model over them.
+    */
+  private def unigramFixture(s: org.apache.spark.sql.SparkSession,
+                             dir: String)
+      : (org.apache.spark.sql.DataFrame, TextOps.UnigramModel) = {
+    val table = TextOps.bpeWordTable(docs(s, dir), "text",
+        maxWords = 100000).drop("syms")
+      .filter(length(col("word")) <= 12)
+      .orderBy(col("freq").desc, col("word")).limit(200)
+      .localCheckpoint()
+    (table, TextOps.unigramSeedModel(table, vocabSize = 120,
+      maxPieceLen = 3))
+  }
+
+  /** The n15/n16 SQ8 gate: the per-dim grid fit over the full corpus,
+    * then `serve(queries, corpus, model)` for the first 20 vectors. */
+  private def sq8Top5(s: org.apache.spark.sql.SparkSession, dir: String)(
+      serve: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
+        Embeddings.Sq8Model) => org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val e = embs(s, dir)
+    val model = Embeddings.sq8Fit(e, "embedding", dim = 64)
+    serve(e.filter(col("vec_id") < 20), e, model)
+      .select("q_id", "n_id", "rank")
+  }
+
+  /** The n14/n28 composition gate: rotate the corpus into `model`'s
+    * basis, train the residual IVF+PQ artifacts there, and check per
+    * query that probing all 32 cells reproduces the exhaustive
+    * residual-PQ scan rank for rank. */
+  private def rotatedIvfPqProbeAll(e: org.apache.spark.sql.DataFrame,
+                                   model: Embeddings.PcaModel)
+      : org.apache.spark.sql.DataFrame = {
+    val rot = Similarity.rotateToBasis(e, model)
+    val q = rot.filter(col("vec_id") < 20)
+    val cells = KMeans.trainCentroidsDistributed(rot, "vec_id",
+      "embedding", nlist = 32, iters = 5)
+    val cb = KMeans.trainResidualPqCodebook(rot, "vec_id", "embedding",
+      cells, m = 16, ks = 64, dim = 64)
+    val base = Similarity.pqResidualTopK(q, rot, 5, nlist = 32,
+        m = 16, ks = 64, centroids = Some(cells), codebook = Some(cb))
+      .select("q_id", "n_id", "rank")
+    val ivfpq = Similarity.ivfPqResidualTopK(q, rot, 5, nlist = 32,
+        nprobe = 32, m = 16, ks = 64,
+        centroids = Some(cells), codebook = Some(cb))
+      .select("q_id", "n_id", "rank")
+    val joint = base.withColumnRenamed("rank", "rank_base")
+      .join(ivfpq.withColumnRenamed("rank", "rank_ivfpq"),
+        Seq("q_id", "n_id"), "full")
+    joint.groupBy("q_id")
+      .agg((count(lit(1)) === sum(when(col("rank_base") === col("rank_ivfpq"), 1)
+        .otherwise(0))).as("probe_all_exact"))
+  }
+
+  /** BM25 corpus state of the documents in `d` (t24, t31, t34). */
+  private def bm25State(d: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    TextOps.bm25State(d, "text", "doc_id")
+
+  /** The fixed query table scored against `state` over the documents
+    * in `d`, in t22's output columns. */
+  private def bm25Serve(state: org.apache.spark.sql.DataFrame,
+                        d: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val spark = d.sparkSession
+    import spark.implicits._
+    TextOps.bm25ScoreWithState(state, d, "text", "doc_id",
+        bm25QueryTerms.toDF("query_id", "term"))
+      .select(col("query_id"), col("doc_id"),
+        round(col("score"), 4).as("score"), col("n_terms_hit"))
+  }
+
+  /** The t31/t34 delete step: subtract the doc_id % 5 == 2 slice's
+    * state from the corpus state of `d`, then serve the survivors. */
+  private def bm25DeleteServe(state: org.apache.spark.sql.DataFrame,
+                              d: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    bm25Serve(TextOps.subtractBm25State(state,
+      bm25State(d.filter(col("doc_id") % 5 === 2))),
+      d.filter(col("doc_id") % 5 =!= 2))
+
   /** Overlap independent EAGER sub-pipelines of one gate (index
     * builds, lifecycle chains, serve walks). Each chain is a
     * driver-sequenced series of Spark actions (localCheckpoints,
@@ -170,10 +253,10 @@ object OpsQueries {
     "t" -> "h", "th" -> "e", "i" -> "n", "a" -> "n",
     "an" -> "d", "e" -> "r", "o" -> "n", "r" -> "e")
 
-  /** Shared BM25 fixture + oracle fragments (t22, n17): the fixed
-    * query-term table and the DuckDB corpus-statistics CTEs / scoring
-    * expression, factored so the two gates cannot drift. 'zzz' proves
-    * absent query terms contribute nothing.
+  /** Shared BM25 fixture + oracle fragments (t22, t24, t27, t31, t34,
+    * n17): the fixed query-term table and the DuckDB corpus-statistics
+    * CTEs / scoring expression, factored so the gates cannot drift.
+    * 'zzz' proves absent query terms contribute nothing.
     */
   private val bm25QueryTerms: Seq[(String, String)] = Seq(
     "q1" -> "hash", "q1" -> "join",
@@ -184,29 +267,52 @@ object OpsQueries {
   private val bm25QueryValuesSql: String =
     bm25QueryTerms.map { case (q, t) => s"('$q', '$t')" }.mkString(", ")
 
-  private val bm25StatsSql =
-    """toks AS (
+  /** Every BM25 corpus statistic refit from scratch over the documents
+    * `where` keeps, plus the query table `q`: trailing CTE fragment. */
+  private def bm25StatsSql(where: String = ""): String =
+    s"""toks AS (
       |  SELECT doc_id, unnest(list_filter(
-      |    string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '),
+      |    string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '),
       |    x -> x <> '')) AS term
-      |  FROM documents),
+      |  FROM documents$where),
       |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
       |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
       |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |st AS (SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
+      |st AS (SELECT (SELECT count(*) FROM documents$where)::DOUBLE AS n_docs,
       |  (SELECT sum(tf) FROM tf)::DOUBLE /
-      |    (SELECT count(*) FROM documents)::DOUBLE AS avgdl)""".stripMargin
+      |    (SELECT count(*) FROM documents$where)::DOUBLE AS avgdl),
+      |q(query_id, term) AS (VALUES $bm25QueryValuesSql)""".stripMargin
 
   private val bm25ScoreSql =
     """ln(1.0 + (st.n_docs - dfq.df + 0.5) / (dfq.df + 0.5)) *
       |    (tf.tf * (1.2 + 1.0)) /
       |    (tf.tf + 1.2 * ((1.0 - 0.75) + 0.75 * dl.dl / st.avgdl))""".stripMargin
 
+  /** 4dp score per (query, doc) over [[bm25StatsSql]]; `cols` appends
+    * output columns. */
+  private def bm25ScoresSql(cols: String): String =
+    s"""SELECT q.query_id, tf.doc_id,
+       |  round(sum(
+       |    $bm25ScoreSql
+       |  ), 4) AS score$cols
+       |FROM tf
+       |JOIN q USING (term)
+       |JOIN dfq USING (term)
+       |JOIN dl USING (doc_id), st
+       |GROUP BY 1, 2""".stripMargin
+
+  /** The t22 oracle over the documents `where` keeps. A refit, so it is
+    * also the oracle of every state path whose counts must add up to
+    * the same corpus (t24 merge, t31 subtract, t34 save/load). */
+  private def bm25Sql(where: String = ""): String =
+    s"""WITH ${bm25StatsSql(where)}
+       |${bm25ScoresSql(",\n  count(*) AS n_terms_hit")}""".stripMargin
+
   private def occSql(x: String, marker: String): String =
     s"cast((length($x) - length(replace($x, '$marker', ''))) / ${marker.length} AS INT)"
 
   /** DuckDB replay of `Multimodal.dhashCode` over the quadrant-BMP
-    * fixture (m11, d21): NN floor mapping to the 9×8 grid, quadrant
+    * fixture (m11, d21, d22): NN floor mapping to the 9×8 grid, quadrant
     * integer gray sums, per-row comparisons, bits packed 32/word.
     * Trailing CTE fragment ending in `codes(doc_id, w0, w1)`.
     */
@@ -240,6 +346,87 @@ object OpsQueries {
       |      THEN (1::BIGINT << (bit % 32)) END), 0) AS BIGINT) AS w1
       |  FROM documents d LEFT JOIN bits ON d.doc_id = bits.doc_id
       |  GROUP BY 1)""".stripMargin
+
+  /** Exact cosine top-5 of the first 20 vectors (n01): the oracle of
+    * every ANN gate whose probe-all path must equal brute force. */
+  private val bruteTop5Sql =
+    """SELECT q.vec_id AS q_id, c.vec_id AS n_id,
+      |  row_number() OVER (PARTITION BY q.vec_id
+      |    ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC,
+      |             c.vec_id) AS rank
+      |FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
+      |WHERE q.vec_id < 20
+      |QUALIFY rank <= 5""".stripMargin
+
+  /** The SQ8 top-5 oracle (n15, n16): exact per-dim grid, the
+    * quantize-dequantize affine, cosine top-5 of the first 20 vectors
+    * against the dequantized corpus. */
+  private val sq8Top5Sql =
+    """WITH mm AS (
+      |  SELECT cast(t.i AS INT) AS d,
+      |    min(e.embedding[t.i]::DOUBLE) AS lo,
+      |    max(e.embedding[t.i]::DOUBLE) AS hi
+      |  FROM embeddings e,
+      |    unnest(range(1, len(e.embedding) + 1)) AS t(i)
+      |  GROUP BY 1),
+      |dq AS (
+      |  SELECT e.vec_id,
+      |    list(CASE WHEN m.hi - m.lo <= 0 THEN m.lo
+      |         ELSE m.lo + greatest(0.0, least(255.0,
+      |           floor((e.embedding[m.d]::DOUBLE - m.lo) /
+      |             (m.hi - m.lo) * 255.0 + 0.5))) *
+      |           (m.hi - m.lo) / 255.0 END ORDER BY m.d) AS dqv
+      |  FROM embeddings e JOIN mm m ON true
+      |  GROUP BY e.vec_id)
+      |SELECT q.vec_id AS q_id, c.vec_id AS n_id,
+      |  row_number() OVER (PARTITION BY q.vec_id
+      |    ORDER BY list_cosine_similarity(
+      |      list_transform(q.embedding, x -> x::DOUBLE), c.dqv) DESC,
+      |      c.vec_id) AS rank
+      |FROM embeddings q JOIN dq c ON q.vec_id <> c.vec_id
+      |WHERE q.vec_id < 20
+      |QUALIFY rank <= 5""".stripMargin
+
+  /** Exact decontamination (d07, d08): documents whose normalized-text
+    * md5 is not among the 10% hash-sampled eval split's. */
+  private val exactDecontaminationSql =
+    """WITH ev AS (
+      |  SELECT DISTINCT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
+      |  FROM documents
+      |  WHERE ('0x' || substr(md5(cast(doc_id AS VARCHAR)), 1, 4))::INT < 6553)
+      |SELECT doc_id, lang FROM documents
+      |WHERE md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))
+      |      NOT IN (SELECT fp FROM ev)""".stripMargin
+
+  /** Banded Hamming near-dup pairs over [[dhashCodesSql]] (d21, d22):
+    * 16-bit chunk buckets capped at 1000 codes, candidate pairs kept
+    * where `pred` holds, full distance at most 3. */
+  private def dhashPairsSql(pred: String = ""): String =
+    s"""WITH $dhashCodesSql,
+       |chunks AS (
+       |  SELECT doc_id, ci,
+       |    (CASE WHEN ci // 2 = 0 THEN w0 ELSE w1 END
+       |      >> ((ci % 2) * 16)) & 65535 AS chunk
+       |  FROM codes, range(0, 4) t(ci)),
+       |bsz AS (SELECT ci, chunk, count(*) AS n FROM chunks
+       |        GROUP BY 1, 2),
+       |sized AS (
+       |  SELECT c.doc_id, c.ci, c.chunk FROM chunks c
+       |  JOIN bsz ON c.ci = bsz.ci AND c.chunk = bsz.chunk
+       |  WHERE bsz.n <= 1000),
+       |cand AS (
+       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |  FROM sized a JOIN sized b
+       |    ON a.ci = b.ci AND a.chunk = b.chunk
+       |      AND a.doc_id < b.doc_id$pred)
+       |SELECT doc_a, doc_b, hamming FROM (
+       |  SELECT doc_a, doc_b,
+       |    bit_count(xor(ca.w0, cb.w0)) +
+       |    bit_count(xor(ca.w1, cb.w1)) AS hamming
+       |  FROM cand
+       |  JOIN codes ca ON ca.doc_id = cand.doc_a
+       |  JOIN codes cb ON cb.doc_id = cand.doc_b)
+       |WHERE hamming <= 3""".stripMargin
 
   /** DuckDB replay of `TextOps.hashedNgramFeatures` (t23, t25):
     * unigram+bigram grams, md5 16-bucket hashing, per-doc
@@ -348,6 +535,289 @@ object OpsQueries {
       |  SELECT p.u, w.comp FROM und p JOIN walk w ON w.node = p.v),
       |comps AS (SELECT node AS doc_id, min(comp) AS component
       |          FROM walk GROUP BY 1)""".stripMargin
+
+  /** The token-grain span oracle (d15, d16, p16): normalized tokens
+    * `n(doc_id, toks, n)`, every 8-token window repeated anywhere in
+    * the corpus, merged into maximal spans `sp(doc_id, isl, ss, se)`
+    * (1-based inclusive token positions). Trailing CTE fragment.
+    */
+  private val tokenSpansSql =
+    """t AS (SELECT doc_id,
+      |    string_split(trim(regexp_replace(lower(text), '\s+', ' ',
+      |                                     'g')), ' ') AS toks
+      |  FROM documents),
+      |n AS (SELECT doc_id, toks, len(toks) AS n FROM t),
+      |g AS (SELECT doc_id, cast(u.i AS INT) AS s,
+      |    cast(u.i + 7 AS INT) AS e,
+      |    array_to_string(toks[u.i:u.i+7], ' ') AS gram
+      |  FROM n, unnest(range(1, n - 6)) AS u(i) WHERE n >= 8),
+      |d AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
+      |m AS (SELECT g.doc_id, g.s, g.e FROM g JOIN d USING (gram)),
+      |i1 AS (SELECT doc_id, s, e,
+      |    CASE WHEN s > coalesce(max(e) OVER (PARTITION BY doc_id
+      |        ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING
+      |        AND 1 PRECEDING), -1) + 1
+      |      THEN 1 ELSE 0 END AS brk FROM m),
+      |i2 AS (SELECT doc_id, s, e,
+      |    sum(brk) OVER (PARTITION BY doc_id ORDER BY s) AS isl
+      |  FROM i1),
+      |sp AS (SELECT doc_id, isl, min(s) AS ss, max(e) AS se
+      |  FROM i2 GROUP BY doc_id, isl)""".stripMargin
+
+  /** `Dedup.dedupSpans(l = 8)` in full (d15, d16): span counts and the
+    * text rebuilt from the tokens no span covers. */
+  private val tokenSpanDedupSql =
+    s"""WITH $tokenSpansSql,
+       |spc AS (SELECT doc_id, count(*) AS n_spans FROM sp
+       |  GROUP BY doc_id),
+       |pos AS (SELECT doc_id, cast(u.i AS INT) AS p, toks[u.i] AS tok
+       |  FROM n, unnest(range(1, n + 1)) AS u(i)),
+       |keep AS (SELECT pos.doc_id, pos.p, pos.tok FROM pos
+       |  WHERE NOT EXISTS (SELECT 1 FROM sp
+       |    WHERE sp.doc_id = pos.doc_id
+       |      AND pos.p BETWEEN sp.ss AND sp.se)),
+       |k AS (SELECT doc_id, count(*) AS kept,
+       |    string_agg(tok, ' ' ORDER BY p) AS clean_text
+       |  FROM keep GROUP BY doc_id)
+       |SELECT n.doc_id, cast(n.n AS INT) AS n_tokens,
+       |  cast(coalesce(spc.n_spans, 0) AS INT) AS n_spans,
+       |  cast(n.n - coalesce(k.kept, 0) AS INT) AS tokens_removed,
+       |  coalesce(k.clean_text, '') AS clean_text
+       |FROM n LEFT JOIN spc USING (doc_id)
+       |LEFT JOIN k USING (doc_id)""".stripMargin
+
+  /** The exact-substring oracle (d25–d32, d37): brute force over every
+    * 40-char window, a different algorithm from the suffix-array
+    * refinement those gates run. [[charDocsSql]] is a document
+    * relation `name(doc_id, text, n)` over the documents `where` keeps;
+    * [[charGramsSql]] its 40-char windows, `cols` choosing
+    * `(doc_id, off, gram)` rows or DISTINCT grams, `pred` narrowing
+    * the documents further.
+    */
+  private def charDocsSql(name: String, where: String = ""): String =
+    s"""$name AS (SELECT doc_id, text, length(text) AS n
+       |  FROM documents$where)""".stripMargin
+
+  private val charOffCols = "doc_id, cast(u.i AS INT) AS off,"
+
+  private def charGramsSql(name: String, cols: String, from: String,
+                           pred: String = ""): String =
+    s"""$name AS (SELECT $cols
+       |    substr(text, cast(u.i + 1 AS INT), 40) AS gram
+       |  FROM $from, unnest(range(0, n - 39)) AS u(i) WHERE n >= 40$pred)""".stripMargin
+
+  /** Island merge of the marked window offsets `m(doc_id, off)`: a
+    * window starting past the end of every earlier one opens a new
+    * island, `i2(doc_id, off, isl)`. */
+  private val charIslandSql =
+    """i1 AS (SELECT doc_id, off,
+      |    CASE WHEN off > coalesce(max(off + 39) OVER (
+      |        PARTITION BY doc_id ORDER BY off
+      |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+      |      -2) + 1 THEN 1 ELSE 0 END AS brk FROM m),
+      |i2 AS (SELECT doc_id, off,
+      |    sum(brk) OVER (PARTITION BY doc_id ORDER BY off) AS isl
+      |  FROM i1)""".stripMargin
+
+  /** Query tail: each island as one `(doc_id, span_start, span_end,
+    * span_len)` row. */
+  private val charSpansSql =
+    s"""$charIslandSql
+       |SELECT doc_id, cast(min(off) AS INT) AS span_start,
+       |  cast(max(off) + 40 AS INT) AS span_end,
+       |  cast(max(off) + 40 - min(off) AS INT) AS span_len
+       |FROM i2 GROUP BY doc_id, isl""".stripMargin
+
+  /** Query tail: every island cut out of the `d` documents, the kept
+    * text reassembled from the gaps in order. */
+  private val charCutSql =
+    s"""$charIslandSql,
+       |sp AS (SELECT doc_id, cast(min(off) AS INT) AS ss,
+       |    cast(max(off) + 40 AS INT) AS se
+       |  FROM i2 GROUP BY doc_id, isl),
+       |gaps AS (
+       |  SELECT sp.doc_id,
+       |    coalesce(lag(sp.se) OVER (PARTITION BY sp.doc_id
+       |      ORDER BY sp.ss), 0) AS gs,
+       |    sp.ss AS ge
+       |  FROM sp
+       |  UNION ALL
+       |  SELECT d.doc_id, coalesce(max(sp.se), 0), max(d.n)
+       |  FROM d LEFT JOIN sp USING (doc_id) GROUP BY d.doc_id),
+       |k AS (SELECT g2.doc_id,
+       |    string_agg(substr(d.text, g2.gs + 1, g2.ge - g2.gs), ''
+       |      ORDER BY g2.gs) AS clean
+       |  FROM gaps g2 JOIN d USING (doc_id) GROUP BY g2.doc_id),
+       |spc AS (SELECT doc_id, count(*) AS ns FROM sp GROUP BY 1)
+       |SELECT d.doc_id, cast(d.n AS INT) AS n_chars,
+       |  cast(coalesce(spc.ns, 0) AS INT) AS n_spans,
+       |  cast(d.n - length(k.clean) AS INT) AS chars_removed,
+       |  k.clean AS clean_text
+       |FROM d JOIN k USING (doc_id)
+       |LEFT JOIN spc USING (doc_id)""".stripMargin
+
+  /** Windows that repeat within the documents `where` keeps, then
+    * `tail` ([[charSpansSql]] or [[charCutSql]]). */
+  private def charRepeatsSql(tail: String, where: String = ""): String =
+    s"""WITH ${charDocsSql("d", where)},
+       |${charGramsSql("g", charOffCols, "d")},
+       |r AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
+       |m AS (SELECT g.doc_id, g.off FROM g JOIN r USING (gram)),
+       |$tail""".stripMargin
+
+  /** Train windows (`gtr`) that also occur among the DISTINCT eval
+    * windows (`gev`), then `tail`. */
+  private def charOverlapSql(docs: String, gtr: String, gev: String,
+                             tail: String): String =
+    s"""WITH $docs,
+       |$gtr,
+       |$gev,
+       |m AS (SELECT gtr.doc_id, gtr.off FROM gtr
+       |  JOIN gev USING (gram)),
+       |$tail""".stripMargin
+
+  /** The d27/d29 contamination spans: train = doc_id % 7 <> 0, eval =
+    * doc_id % 7 = 0, both cut from one document relation. */
+  private val charContaminationSql = charOverlapSql(charDocsSql("d"),
+    charGramsSql("gtr", charOffCols, "d", " AND doc_id % 7 <> 0"),
+    charGramsSql("gev", "DISTINCT", "d", " AND doc_id % 7 = 0"),
+    charSpansSql)
+
+  /** The unigram-tokenizer oracle (t21, t28, t29, t30) over the gate
+    * fixture `wt(word, freq)`: the top-200 words of at most 12 chars.
+    * [[unigramSeedSql]] is the 120-piece seed vocabulary
+    * `v0sel(piece, cnt)` (every char plus the most frequent 2-3-char
+    * substrings), [[unigramCostSql]] its integer costs `v0` on the
+    * 1e-6 log grid, [[unigramProbSql]] its probabilities `vp`.
+    */
+  private val unigramWordsSql =
+    """wd AS (SELECT word, count(*) AS freq FROM (
+      |    SELECT unnest(list_filter(
+      |      string_split_regex(lower(trim(text)), '\s+'),
+      |      x -> x <> '')) AS word FROM documents) GROUP BY 1),
+      |wt AS (SELECT word, freq FROM wd WHERE length(word) <= 12
+      |       ORDER BY freq DESC, word LIMIT 200)""".stripMargin
+
+  private val unigramSeedSql =
+    """subs AS (SELECT substr(w.word, cast(t.i AS INT), cast(u.l AS INT)) AS piece,
+      |    w.freq
+      |  FROM wt w,
+      |    unnest(range(1, length(w.word) + 1)) AS t(i),
+      |    unnest(range(1, least(3, length(w.word) - t.i + 1) + 1)) AS u(l)),
+      |sc AS (SELECT piece, cast(sum(freq) AS BIGINT) AS cnt
+      |  FROM subs GROUP BY 1),
+      |v0sel AS (
+      |  SELECT piece, cnt FROM sc WHERE length(piece) = 1
+      |  UNION ALL
+      |  SELECT piece, cnt FROM (
+      |    SELECT piece, cnt,
+      |      row_number() OVER (ORDER BY cnt DESC, piece) AS rn
+      |    FROM sc WHERE length(piece) > 1)
+      |  WHERE rn <= 120 - (SELECT count(*) FROM sc
+      |                     WHERE length(piece) = 1))""".stripMargin
+
+  private val unigramCostSql =
+    """v0 AS (SELECT piece, cnt,
+      |    cast(-round(1e6 * ln(cnt::DOUBLE /
+      |      (SELECT sum(cnt)::DOUBLE FROM v0sel))) AS BIGINT) AS cost
+      |  FROM v0sel)""".stripMargin
+
+  private val unigramProbSql =
+    """vp AS (SELECT piece, cnt::DOUBLE /
+      |    (SELECT sum(cnt)::DOUBLE FROM v0sel) AS p
+      |  FROM v0sel)""".stripMargin
+
+  /** Forward-backward over every word's piece lattice under `vp`
+    * (3-slot sliding windows of alpha and beta): expected piece counts
+    * `occ(word, piece, e)` and their frequency-weighted sums
+    * `softc(piece, s)`. Trailing CTE fragment (t28, t30).
+    */
+  private val unigramLatticeSql =
+    """fwd AS (
+      |  SELECT word, 0 AS i, 1.0::DOUBLE AS a0, 0.0::DOUBLE AS am1,
+      |    0.0::DOUBLE AS am2
+      |  FROM wt
+      |  UNION ALL
+      |  SELECT f.word, f.i + 1,
+      |    coalesce(p1.p * f.a0, 0.0) + coalesce(p2.p * f.am1, 0.0)
+      |      + coalesce(p3.p * f.am2, 0.0),
+      |    f.a0, f.am1
+      |  FROM fwd f
+      |  LEFT JOIN vp p1 ON p1.piece = substr(f.word, f.i + 1, 1)
+      |  LEFT JOIN vp p2 ON f.i >= 1 AND p2.piece = substr(f.word, f.i, 2)
+      |  LEFT JOIN vp p3 ON f.i >= 2
+      |    AND p3.piece = substr(f.word, f.i - 1, 3)
+      |  WHERE f.i < length(f.word)),
+      |bwd AS (
+      |  SELECT word, length(word) AS j, 1.0::DOUBLE AS b0,
+      |    0.0::DOUBLE AS bp1, 0.0::DOUBLE AS bp2
+      |  FROM wt
+      |  UNION ALL
+      |  SELECT b.word, b.j - 1,
+      |    coalesce(q1.p * b.b0, 0.0) + coalesce(q2.p * b.bp1, 0.0)
+      |      + coalesce(q3.p * b.bp2, 0.0),
+      |    b.b0, b.bp1
+      |  FROM bwd b
+      |  LEFT JOIN vp q1 ON q1.piece = substr(b.word, b.j, 1)
+      |  LEFT JOIN vp q2 ON q2.piece = substr(b.word, b.j, 2)
+      |  LEFT JOIN vp q3 ON q3.piece = substr(b.word, b.j, 3)
+      |  WHERE b.j > 0),
+      |occ AS (
+      |  SELECT g.word, g.piece, fa.a0 * v.p * fb.b0 / fz.a0 AS e
+      |  FROM (SELECT w.word, cast(t.j AS INT) AS j,
+      |          cast(u.l AS INT) AS l,
+      |          substr(w.word, cast(t.j + 1 AS INT),
+      |            cast(u.l AS INT)) AS piece
+      |        FROM wt w,
+      |          unnest(range(0, length(w.word))) AS t(j),
+      |          unnest(range(1, least(3, length(w.word) - t.j) + 1))
+      |            AS u(l)) g
+      |  JOIN vp v USING (piece)
+      |  JOIN fwd fa ON fa.word = g.word AND fa.i = g.j
+      |  JOIN bwd fb ON fb.word = g.word AND fb.j = g.j + g.l
+      |  JOIN (SELECT word, a0 FROM fwd WHERE i = length(word)) fz
+      |    ON fz.word = g.word),
+      |softc AS (SELECT o.piece, sum(w.freq * o.e) AS s
+      |  FROM occ o JOIN wt w USING (word) GROUP BY 1)""".stripMargin
+
+  /** The DSIR refit (t16, t17, p17, p18): both hashed unigram+bigram
+    * models (md5 into 1024 buckets, Laplace smoothing, natural log)
+    * fit from scratch over `from`, target = the doc_id % 3 = 0 slice.
+    * Trailing CTE fragment ending in the bucketed grams
+    * `g(doc_id, tgt, b)` and the per-bucket log weight `w(b, lw)`.
+    */
+  private def dsirFitSql(from: String): String =
+    s"""t AS (SELECT doc_id, (doc_id % 3 = 0) AS tgt,
+       |    list_filter(string_split_regex(lower(trim(text)), '\\s+'),
+       |                x -> x <> '') AS toks FROM $from),
+       |u AS (SELECT doc_id, tgt, uu.w AS g
+       |  FROM t, unnest(toks) AS uu(w)),
+       |b2 AS (SELECT doc_id, tgt, toks[uu.j] || ' ' || toks[uu.j+1] AS g
+       |  FROM t, unnest(range(1, len(toks))) AS uu(j)),
+       |g AS (SELECT doc_id, tgt,
+       |    cast(('0x' || substr(md5(g), 1, 4))::INT % 1024 AS INT) AS b
+       |  FROM (SELECT * FROM u UNION ALL SELECT * FROM b2)),
+       |fit AS (SELECT b,
+       |    sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS ct,
+       |    sum(CASE WHEN NOT tgt THEN 1 ELSE 0 END) AS cr
+       |  FROM g GROUP BY 1),
+       |tot AS (SELECT sum(ct) AS tt, sum(cr) AS tr FROM fit),
+       |w AS (SELECT b,
+       |    ln(cast(ct + 1 AS DOUBLE) / cast(tt + 1024 AS DOUBLE))
+       |      - ln(cast(cr + 1 AS DOUBLE) / cast(tr + 1024 AS DOUBLE))
+       |      AS lw
+       |  FROM fit, tot)""".stripMargin
+
+  /** DSIR weights of the documents `where` keeps, under the full-corpus
+    * refit (t16, t17): gram count and 4dp log weight per doc. */
+  private def dsirWeightsSql(where: String = ""): String =
+    s"""WITH ${dsirFitSql("documents")},
+       |s AS (SELECT g.doc_id, count(*) AS ng, round(sum(w.lw), 4) AS lw
+       |  FROM g JOIN w USING (b) GROUP BY 1)
+       |SELECT d.doc_id, cast(coalesce(s.ng, 0) AS BIGINT) AS n_grams,
+       |  s.lw AS log_weight
+       |FROM (SELECT DISTINCT doc_id FROM documents$where) d
+       |LEFT JOIN s ON d.doc_id = s.doc_id""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -566,27 +1036,8 @@ object OpsQueries {
     QueryDef("n14_ann_opq_ivfpq",
       (s, dir) => {
         val e = embs(s, dir)
-        val model = Embeddings.pcaFitBalanced(e, "vec_id", "embedding",
-          k = 64, m = 16)
-        val rot = Similarity.rotateToBasis(e, model)
-        val q = rot.filter(col("vec_id") < 20)
-        val cells = KMeans.trainCentroidsDistributed(rot, "vec_id",
-          "embedding", nlist = 32, iters = 5)
-        val cb = KMeans.trainResidualPqCodebook(rot, "vec_id", "embedding",
-          cells, m = 16, ks = 64, dim = 64)
-        val base = Similarity.pqResidualTopK(q, rot, 5, nlist = 32,
-            m = 16, ks = 64, centroids = Some(cells), codebook = Some(cb))
-          .select("q_id", "n_id", "rank")
-        val ivfpq = Similarity.ivfPqResidualTopK(q, rot, 5, nlist = 32,
-            nprobe = 32, m = 16, ks = 64,
-            centroids = Some(cells), codebook = Some(cb))
-          .select("q_id", "n_id", "rank")
-        val joint = base.withColumnRenamed("rank", "rank_base")
-          .join(ivfpq.withColumnRenamed("rank", "rank_ivfpq"),
-            Seq("q_id", "n_id"), "full")
-        joint.groupBy("q_id")
-          .agg((count(lit(1)) === sum(when(col("rank_base") === col("rank_ivfpq"), 1)
-            .otherwise(0))).as("probe_all_exact"))
+        rotatedIvfPqProbeAll(e, Embeddings.pcaFitBalanced(e, "vec_id",
+          "embedding", k = 64, m = 16))
       },
       Some("""SELECT vec_id AS q_id, TRUE AS probe_all_exact
              |FROM embeddings WHERE vec_id < 20""".stripMargin)),
@@ -874,29 +1325,7 @@ object OpsQueries {
     // this gate pins that the trained rotation applies identically on
     // corpus and query paths through the whole retrieval stack.
     QueryDef("n28_ann_opq_parametric",
-      (s, dir) => {
-        val e = embs(s, dir)
-        val (model, _) = canonicalOpq(s, dir)
-        val rot = Similarity.rotateToBasis(e, model)
-        val q = rot.filter(col("vec_id") < 20)
-        val cells = KMeans.trainCentroidsDistributed(rot, "vec_id",
-          "embedding", nlist = 32, iters = 5)
-        val cb = KMeans.trainResidualPqCodebook(rot, "vec_id", "embedding",
-          cells, m = 16, ks = 64, dim = 64)
-        val base = Similarity.pqResidualTopK(q, rot, 5, nlist = 32,
-            m = 16, ks = 64, centroids = Some(cells), codebook = Some(cb))
-          .select("q_id", "n_id", "rank")
-        val ivfpq = Similarity.ivfPqResidualTopK(q, rot, 5, nlist = 32,
-            nprobe = 32, m = 16, ks = 64,
-            centroids = Some(cells), codebook = Some(cb))
-          .select("q_id", "n_id", "rank")
-        val joint = base.withColumnRenamed("rank", "rank_base")
-          .join(ivfpq.withColumnRenamed("rank", "rank_ivfpq"),
-            Seq("q_id", "n_id"), "full")
-        joint.groupBy("q_id")
-          .agg((count(lit(1)) === sum(when(col("rank_base") === col("rank_ivfpq"), 1)
-            .otherwise(0))).as("probe_all_exact"))
-      },
+      (s, dir) => rotatedIvfPqProbeAll(embs(s, dir), canonicalOpq(s, dir)._1),
       Some("""SELECT vec_id AS q_id, TRUE AS probe_all_exact
              |FROM embeddings WHERE vec_id < 20""".stripMargin)),
 
@@ -1052,13 +1481,7 @@ object OpsQueries {
             candidateK = 100000, nlist = 32, nprobe = 32, m = 16, ks = 64)
           .select("q_id", "n_id", "rank")
       },
-      Some("""SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-             |  row_number() OVER (PARTITION BY q.vec_id
-             |    ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC,
-             |             c.vec_id) AS rank
-             |FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-             |WHERE q.vec_id < 20
-             |QUALIFY rank <= 5""".stripMargin)),
+      Some(bruteTop5Sql)),
 
     // Embedding int8 quantization + L2 norm, exploded to scalars (array
     // columns break the driver's pandas hasher). Every arithmetic step
@@ -1365,44 +1788,7 @@ object OpsQueries {
       (s, dir) => Dedup.dedupSpans(docs(s, dir), "text", "doc_id", l = 8)
         .select("doc_id", "n_tokens", "n_spans", "tokens_removed",
           "clean_text"),
-      Some("""WITH t AS (SELECT doc_id,
-             |    string_split(trim(regexp_replace(lower(text), '\s+', ' ',
-             |                                     'g')), ' ') AS toks
-             |  FROM documents),
-             |n AS (SELECT doc_id, toks, len(toks) AS n FROM t),
-             |g AS (SELECT doc_id, cast(u.i AS INT) AS s,
-             |    cast(u.i + 7 AS INT) AS e,
-             |    array_to_string(toks[u.i:u.i+7], ' ') AS gram
-             |  FROM n, unnest(range(1, n - 6)) AS u(i) WHERE n >= 8),
-             |d AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-             |m AS (SELECT g.doc_id, g.s, g.e FROM g JOIN d USING (gram)),
-             |i1 AS (SELECT doc_id, s, e,
-             |    CASE WHEN s > coalesce(max(e) OVER (PARTITION BY doc_id
-             |        ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING
-             |        AND 1 PRECEDING), -1) + 1
-             |      THEN 1 ELSE 0 END AS brk FROM m),
-             |i2 AS (SELECT doc_id, s, e,
-             |    sum(brk) OVER (PARTITION BY doc_id ORDER BY s) AS isl
-             |  FROM i1),
-             |sp AS (SELECT doc_id, isl, min(s) AS ss, max(e) AS se
-             |  FROM i2 GROUP BY doc_id, isl),
-             |spc AS (SELECT doc_id, count(*) AS n_spans FROM sp
-             |  GROUP BY doc_id),
-             |pos AS (SELECT doc_id, cast(u.i AS INT) AS p, toks[u.i] AS tok
-             |  FROM n, unnest(range(1, n + 1)) AS u(i)),
-             |keep AS (SELECT pos.doc_id, pos.p, pos.tok FROM pos
-             |  WHERE NOT EXISTS (SELECT 1 FROM sp
-             |    WHERE sp.doc_id = pos.doc_id
-             |      AND pos.p BETWEEN sp.ss AND sp.se)),
-             |k AS (SELECT doc_id, count(*) AS kept,
-             |    string_agg(tok, ' ' ORDER BY p) AS clean_text
-             |  FROM keep GROUP BY doc_id)
-             |SELECT n.doc_id, cast(n.n AS INT) AS n_tokens,
-             |  cast(coalesce(spc.n_spans, 0) AS INT) AS n_spans,
-             |  cast(n.n - coalesce(k.kept, 0) AS INT) AS tokens_removed,
-             |  coalesce(k.clean_text, '') AS clean_text
-             |FROM n LEFT JOIN spc USING (doc_id)
-             |LEFT JOIN k USING (doc_id)""".stripMargin)),
+      Some(tokenSpanDedupSql)),
 
     // INCREMENTAL span dedup: batch 2 (doc_id%3==0) cleaned against
     // the batch-1 corpus through the gram-stats state — including the
@@ -1423,44 +1809,7 @@ object OpsQueries {
           .select("doc_id", "n_tokens", "n_spans", "tokens_removed",
             "clean_text")
       },
-      Some("""WITH t AS (SELECT doc_id,
-             |    string_split(trim(regexp_replace(lower(text), '\s+', ' ',
-             |                                     'g')), ' ') AS toks
-             |  FROM documents),
-             |n AS (SELECT doc_id, toks, len(toks) AS n FROM t),
-             |g AS (SELECT doc_id, cast(u.i AS INT) AS s,
-             |    cast(u.i + 7 AS INT) AS e,
-             |    array_to_string(toks[u.i:u.i+7], ' ') AS gram
-             |  FROM n, unnest(range(1, n - 6)) AS u(i) WHERE n >= 8),
-             |d AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-             |m AS (SELECT g.doc_id, g.s, g.e FROM g JOIN d USING (gram)),
-             |i1 AS (SELECT doc_id, s, e,
-             |    CASE WHEN s > coalesce(max(e) OVER (PARTITION BY doc_id
-             |        ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING
-             |        AND 1 PRECEDING), -1) + 1
-             |      THEN 1 ELSE 0 END AS brk FROM m),
-             |i2 AS (SELECT doc_id, s, e,
-             |    sum(brk) OVER (PARTITION BY doc_id ORDER BY s) AS isl
-             |  FROM i1),
-             |sp AS (SELECT doc_id, isl, min(s) AS ss, max(e) AS se
-             |  FROM i2 GROUP BY doc_id, isl),
-             |spc AS (SELECT doc_id, count(*) AS n_spans FROM sp
-             |  GROUP BY doc_id),
-             |pos AS (SELECT doc_id, cast(u.i AS INT) AS p, toks[u.i] AS tok
-             |  FROM n, unnest(range(1, n + 1)) AS u(i)),
-             |keep AS (SELECT pos.doc_id, pos.p, pos.tok FROM pos
-             |  WHERE NOT EXISTS (SELECT 1 FROM sp
-             |    WHERE sp.doc_id = pos.doc_id
-             |      AND pos.p BETWEEN sp.ss AND sp.se)),
-             |k AS (SELECT doc_id, count(*) AS kept,
-             |    string_agg(tok, ' ' ORDER BY p) AS clean_text
-             |  FROM keep GROUP BY doc_id)
-             |SELECT n.doc_id, cast(n.n AS INT) AS n_tokens,
-             |  cast(coalesce(spc.n_spans, 0) AS INT) AS n_spans,
-             |  cast(n.n - coalesce(k.kept, 0) AS INT) AS tokens_removed,
-             |  coalesce(k.clean_text, '') AS clean_text
-             |FROM n LEFT JOIN spc USING (doc_id)
-             |LEFT JOIN k USING (doc_id)""".stripMargin)),
+      Some(tokenSpanDedupSql)),
 
     // EXACT substring dedup via distributed suffix-array bucket
     // refinement (d25, the Lee et al. ExactSubstr shape): maximal
@@ -1476,25 +1825,7 @@ object OpsQueries {
     QueryDef("d25_substr_dedup_exact",
       (s, dir) => SuffixArray.repeatedSpans(docs(s, dir), "text",
         "doc_id", minLen = 40),
-      Some("""WITH d AS (SELECT doc_id, text, length(text) AS n
-             |  FROM documents),
-             |g AS (SELECT doc_id, cast(u.i AS INT) AS off,
-             |    substr(text, cast(u.i + 1 AS INT), 40) AS gram
-             |  FROM d, unnest(range(0, n - 39)) AS u(i) WHERE n >= 40),
-             |r AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-             |m AS (SELECT g.doc_id, g.off FROM g JOIN r USING (gram)),
-             |i1 AS (SELECT doc_id, off,
-             |    CASE WHEN off > coalesce(max(off + 39) OVER (
-             |        PARTITION BY doc_id ORDER BY off
-             |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-             |      -2) + 1 THEN 1 ELSE 0 END AS brk FROM m),
-             |i2 AS (SELECT doc_id, off,
-             |    sum(brk) OVER (PARTITION BY doc_id ORDER BY off) AS isl
-             |  FROM i1)
-             |SELECT doc_id, cast(min(off) AS INT) AS span_start,
-             |  cast(max(off) + 40 AS INT) AS span_end,
-             |  cast(max(off) + 40 - min(off) AS INT) AS span_len
-             |FROM i2 GROUP BY doc_id, isl""".stripMargin)),
+      Some(charRepeatsSql(charSpansSql))),
 
     // EXACT substring decontamination (d27) — the published
     // eval-overlap standard done exactly at character grain: maximal
@@ -1513,30 +1844,7 @@ object OpsQueries {
           d.filter(col("doc_id") % 7 === 0),
           "text", "doc_id", minLen = 40)
       },
-      Some("""WITH d AS (SELECT doc_id, text, length(text) AS n
-             |  FROM documents),
-             |gtr AS (SELECT doc_id, cast(u.i AS INT) AS off,
-             |    substr(text, cast(u.i + 1 AS INT), 40) AS gram
-             |  FROM d, unnest(range(0, n - 39)) AS u(i)
-             |  WHERE n >= 40 AND doc_id % 7 <> 0),
-             |gev AS (SELECT DISTINCT
-             |    substr(text, cast(u.i + 1 AS INT), 40) AS gram
-             |  FROM d, unnest(range(0, n - 39)) AS u(i)
-             |  WHERE n >= 40 AND doc_id % 7 = 0),
-             |m AS (SELECT gtr.doc_id, gtr.off FROM gtr
-             |  JOIN gev USING (gram)),
-             |i1 AS (SELECT doc_id, off,
-             |    CASE WHEN off > coalesce(max(off + 39) OVER (
-             |        PARTITION BY doc_id ORDER BY off
-             |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-             |      -2) + 1 THEN 1 ELSE 0 END AS brk FROM m),
-             |i2 AS (SELECT doc_id, off,
-             |    sum(brk) OVER (PARTITION BY doc_id ORDER BY off) AS isl
-             |  FROM i1)
-             |SELECT doc_id, cast(min(off) AS INT) AS span_start,
-             |  cast(max(off) + 40 AS INT) AS span_end,
-             |  cast(max(off) + 40 - min(off) AS INT) AS span_len
-             |FROM i2 GROUP BY doc_id, isl""".stripMargin)),
+      Some(charContaminationSql)),
 
     // Span CUT over the d25 spans (d26) — the "drop the duplicated
     // bytes" rebuild, Lee et al.'s actual output: every repeated
@@ -1548,44 +1856,7 @@ object OpsQueries {
     QueryDef("d26_substr_dedup_cut",
       (s, dir) => SuffixArray.cutRepeatedSpans(docs(s, dir), "text",
         "doc_id", minLen = 40),
-      Some("""WITH d AS (SELECT doc_id, text, length(text) AS n
-             |  FROM documents),
-             |g AS (SELECT doc_id, cast(u.i AS INT) AS off,
-             |    substr(text, cast(u.i + 1 AS INT), 40) AS gram
-             |  FROM d, unnest(range(0, n - 39)) AS u(i) WHERE n >= 40),
-             |r AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-             |m AS (SELECT g.doc_id, g.off FROM g JOIN r USING (gram)),
-             |i1 AS (SELECT doc_id, off,
-             |    CASE WHEN off > coalesce(max(off + 39) OVER (
-             |        PARTITION BY doc_id ORDER BY off
-             |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-             |      -2) + 1 THEN 1 ELSE 0 END AS brk FROM m),
-             |i2 AS (SELECT doc_id, off,
-             |    sum(brk) OVER (PARTITION BY doc_id ORDER BY off) AS isl
-             |  FROM i1),
-             |sp AS (SELECT doc_id, cast(min(off) AS INT) AS ss,
-             |    cast(max(off) + 40 AS INT) AS se
-             |  FROM i2 GROUP BY doc_id, isl),
-             |gaps AS (
-             |  SELECT sp.doc_id,
-             |    coalesce(lag(sp.se) OVER (PARTITION BY sp.doc_id
-             |      ORDER BY sp.ss), 0) AS gs,
-             |    sp.ss AS ge
-             |  FROM sp
-             |  UNION ALL
-             |  SELECT d.doc_id, coalesce(max(sp.se), 0), max(d.n)
-             |  FROM d LEFT JOIN sp USING (doc_id) GROUP BY d.doc_id),
-             |k AS (SELECT g2.doc_id,
-             |    string_agg(substr(d.text, g2.gs + 1, g2.ge - g2.gs), ''
-             |      ORDER BY g2.gs) AS clean
-             |  FROM gaps g2 JOIN d USING (doc_id) GROUP BY g2.doc_id),
-             |spc AS (SELECT doc_id, count(*) AS ns FROM sp GROUP BY 1)
-             |SELECT d.doc_id, cast(d.n AS INT) AS n_chars,
-             |  cast(coalesce(spc.ns, 0) AS INT) AS n_spans,
-             |  cast(d.n - length(k.clean) AS INT) AS chars_removed,
-             |  k.clean AS clean_text
-             |FROM d JOIN k USING (doc_id)
-             |LEFT JOIN spc USING (doc_id)""".stripMargin)),
+      Some(charRepeatsSql(charCutSql))),
 
     // Incremental substring index (d28) — the d13/d14/d16 persisted-
     // state discipline for the EXACT substring family: build the
@@ -1612,25 +1883,7 @@ object OpsQueries {
           d.filter(col("doc_id") >= cut), "text", "doc_id")
         SuffixArray.substrIndexSpans(grown, "doc_id")
       },
-      Some("""WITH d AS (SELECT doc_id, text, length(text) AS n
-             |  FROM documents),
-             |g AS (SELECT doc_id, cast(u.i AS INT) AS off,
-             |    substr(text, cast(u.i + 1 AS INT), 40) AS gram
-             |  FROM d, unnest(range(0, n - 39)) AS u(i) WHERE n >= 40),
-             |r AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-             |m AS (SELECT g.doc_id, g.off FROM g JOIN r USING (gram)),
-             |i1 AS (SELECT doc_id, off,
-             |    CASE WHEN off > coalesce(max(off + 39) OVER (
-             |        PARTITION BY doc_id ORDER BY off
-             |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-             |      -2) + 1 THEN 1 ELSE 0 END AS brk FROM m),
-             |i2 AS (SELECT doc_id, off,
-             |    sum(brk) OVER (PARTITION BY doc_id ORDER BY off) AS isl
-             |  FROM i1)
-             |SELECT doc_id, cast(min(off) AS INT) AS span_start,
-             |  cast(max(off) + 40 AS INT) AS span_end,
-             |  cast(max(off) + 40 - min(off) AS INT) AS span_len
-             |FROM i2 GROUP BY doc_id, isl""".stripMargin)),
+      Some(charRepeatsSql(charSpansSql))),
 
     // BUCKETED index persistence (d31): the production-volume layout —
     // keys and pair dictionary bucketed + sorted on (__r1, __r2), so
@@ -1651,25 +1904,7 @@ object OpsQueries {
           s"graft_gate_substr_$safe")
         SuffixArray.substrIndexSpans(loaded, "doc_id")
       },
-      Some("""WITH d AS (SELECT doc_id, text, length(text) AS n
-             |  FROM documents),
-             |g AS (SELECT doc_id, cast(u.i AS INT) AS off,
-             |    substr(text, cast(u.i + 1 AS INT), 40) AS gram
-             |  FROM d, unnest(range(0, n - 39)) AS u(i) WHERE n >= 40),
-             |r AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-             |m AS (SELECT g.doc_id, g.off FROM g JOIN r USING (gram)),
-             |i1 AS (SELECT doc_id, off,
-             |    CASE WHEN off > coalesce(max(off + 39) OVER (
-             |        PARTITION BY doc_id ORDER BY off
-             |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-             |      -2) + 1 THEN 1 ELSE 0 END AS brk FROM m),
-             |i2 AS (SELECT doc_id, off,
-             |    sum(brk) OVER (PARTITION BY doc_id ORDER BY off) AS isl
-             |  FROM i1)
-             |SELECT doc_id, cast(min(off) AS INT) AS span_start,
-             |  cast(max(off) + 40 AS INT) AS span_end,
-             |  cast(max(off) + 40 - min(off) AS INT) AS span_len
-             |FROM i2 GROUP BY doc_id, isl""".stripMargin)),
+      Some(charRepeatsSql(charSpansSql))),
 
     // Decontamination SURGERY (d32): the full production composition —
     // index the eval split once, screen the train split against it
@@ -1693,49 +1928,11 @@ object OpsQueries {
             "doc_id"),
           "text", "doc_id")
       },
-      Some("""WITH d AS (SELECT doc_id, text, length(text) AS n
-             |  FROM documents WHERE doc_id % 7 <> 0),
-             |e AS (SELECT doc_id, text, length(text) AS n
-             |  FROM documents WHERE doc_id % 7 = 0),
-             |gtr AS (SELECT doc_id, cast(u.i AS INT) AS off,
-             |    substr(text, cast(u.i + 1 AS INT), 40) AS gram
-             |  FROM d, unnest(range(0, n - 39)) AS u(i) WHERE n >= 40),
-             |gev AS (SELECT DISTINCT
-             |    substr(text, cast(u.i + 1 AS INT), 40) AS gram
-             |  FROM e, unnest(range(0, n - 39)) AS u(i) WHERE n >= 40),
-             |m AS (SELECT gtr.doc_id, gtr.off FROM gtr
-             |  JOIN gev USING (gram)),
-             |i1 AS (SELECT doc_id, off,
-             |    CASE WHEN off > coalesce(max(off + 39) OVER (
-             |        PARTITION BY doc_id ORDER BY off
-             |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-             |      -2) + 1 THEN 1 ELSE 0 END AS brk FROM m),
-             |i2 AS (SELECT doc_id, off,
-             |    sum(brk) OVER (PARTITION BY doc_id ORDER BY off) AS isl
-             |  FROM i1),
-             |sp AS (SELECT doc_id, cast(min(off) AS INT) AS ss,
-             |    cast(max(off) + 40 AS INT) AS se
-             |  FROM i2 GROUP BY doc_id, isl),
-             |gaps AS (
-             |  SELECT sp.doc_id,
-             |    coalesce(lag(sp.se) OVER (PARTITION BY sp.doc_id
-             |      ORDER BY sp.ss), 0) AS gs,
-             |    sp.ss AS ge
-             |  FROM sp
-             |  UNION ALL
-             |  SELECT d.doc_id, coalesce(max(sp.se), 0), max(d.n)
-             |  FROM d LEFT JOIN sp USING (doc_id) GROUP BY d.doc_id),
-             |k AS (SELECT g2.doc_id,
-             |    string_agg(substr(d.text, g2.gs + 1, g2.ge - g2.gs), ''
-             |      ORDER BY g2.gs) AS clean
-             |  FROM gaps g2 JOIN d USING (doc_id) GROUP BY g2.doc_id),
-             |spc AS (SELECT doc_id, count(*) AS ns FROM sp GROUP BY 1)
-             |SELECT d.doc_id, cast(d.n AS INT) AS n_chars,
-             |  cast(coalesce(spc.ns, 0) AS INT) AS n_spans,
-             |  cast(d.n - length(k.clean) AS INT) AS chars_removed,
-             |  k.clean AS clean_text
-             |FROM d JOIN k USING (doc_id)
-             |LEFT JOIN spc USING (doc_id)""".stripMargin)),
+      Some(charOverlapSql(
+        s"""${charDocsSql("d", " WHERE doc_id % 7 <> 0")},
+           |${charDocsSql("e", " WHERE doc_id % 7 = 0")}""".stripMargin,
+        charGramsSql("gtr", charOffCols, "d"),
+        charGramsSql("gev", "DISTINCT", "e"), charCutSql))),
 
     // Bucketed MinHash index persistence (d35): the d31
     // production-volume layout for the LSH family — banded rows
@@ -1803,25 +2000,7 @@ object OpsQueries {
           d.filter(col("doc_id") % 6 =!= 1), "text", "doc_id")
         SuffixArray.substrIndexSpans(compacted, "doc_id")
       },
-      Some("""WITH d AS (SELECT doc_id, text, length(text) AS n
-             |  FROM documents WHERE doc_id % 6 <> 1),
-             |g AS (SELECT doc_id, cast(u.i AS INT) AS off,
-             |    substr(text, cast(u.i + 1 AS INT), 40) AS gram
-             |  FROM d, unnest(range(0, n - 39)) AS u(i) WHERE n >= 40),
-             |r AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-             |m AS (SELECT g.doc_id, g.off FROM g JOIN r USING (gram)),
-             |i1 AS (SELECT doc_id, off,
-             |    CASE WHEN off > coalesce(max(off + 39) OVER (
-             |        PARTITION BY doc_id ORDER BY off
-             |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-             |      -2) + 1 THEN 1 ELSE 0 END AS brk FROM m),
-             |i2 AS (SELECT doc_id, off,
-             |    sum(brk) OVER (PARTITION BY doc_id ORDER BY off) AS isl
-             |  FROM i1)
-             |SELECT doc_id, cast(min(off) AS INT) AS span_start,
-             |  cast(max(off) + 40 AS INT) AS span_end,
-             |  cast(max(off) + 40 - min(off) AS INT) AS span_len
-             |FROM i2 GROUP BY doc_id, isl""".stripMargin)),
+      Some(charRepeatsSql(charSpansSql, " WHERE doc_id % 6 <> 1"))),
 
     // Component DELETION (d34): the backward half of the d14
     // incremental-clusters lifecycle. Deletion can fragment a cluster
@@ -1905,25 +2084,7 @@ object OpsQueries {
           d.filter(col("doc_id") % 6 === 1).select("doc_id"))
         SuffixArray.substrIndexSpans(afterDel, "doc_id")
       },
-      Some("""WITH d AS (SELECT doc_id, text, length(text) AS n
-             |  FROM documents WHERE doc_id % 6 <> 1),
-             |g AS (SELECT doc_id, cast(u.i AS INT) AS off,
-             |    substr(text, cast(u.i + 1 AS INT), 40) AS gram
-             |  FROM d, unnest(range(0, n - 39)) AS u(i) WHERE n >= 40),
-             |r AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-             |m AS (SELECT g.doc_id, g.off FROM g JOIN r USING (gram)),
-             |i1 AS (SELECT doc_id, off,
-             |    CASE WHEN off > coalesce(max(off + 39) OVER (
-             |        PARTITION BY doc_id ORDER BY off
-             |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-             |      -2) + 1 THEN 1 ELSE 0 END AS brk FROM m),
-             |i2 AS (SELECT doc_id, off,
-             |    sum(brk) OVER (PARTITION BY doc_id ORDER BY off) AS isl
-             |  FROM i1)
-             |SELECT doc_id, cast(min(off) AS INT) AS span_start,
-             |  cast(max(off) + 40 AS INT) AS span_end,
-             |  cast(max(off) + 40 - min(off) AS INT) AS span_len
-             |FROM i2 GROUP BY doc_id, isl""".stripMargin)),
+      Some(charRepeatsSql(charSpansSql, " WHERE doc_id % 6 <> 1"))),
 
     // Index-based incremental decontamination (d29) — the d27
     // contract served from a PERSISTED index: build the substring
@@ -1948,30 +2109,7 @@ object OpsQueries {
         SuffixArray.substrIndexContamination(idx,
           d.filter(col("doc_id") % 7 =!= 0), "text", "doc_id")
       },
-      Some("""WITH d AS (SELECT doc_id, text, length(text) AS n
-             |  FROM documents),
-             |gtr AS (SELECT doc_id, cast(u.i AS INT) AS off,
-             |    substr(text, cast(u.i + 1 AS INT), 40) AS gram
-             |  FROM d, unnest(range(0, n - 39)) AS u(i)
-             |  WHERE n >= 40 AND doc_id % 7 <> 0),
-             |gev AS (SELECT DISTINCT
-             |    substr(text, cast(u.i + 1 AS INT), 40) AS gram
-             |  FROM d, unnest(range(0, n - 39)) AS u(i)
-             |  WHERE n >= 40 AND doc_id % 7 = 0),
-             |m AS (SELECT gtr.doc_id, gtr.off FROM gtr
-             |  JOIN gev USING (gram)),
-             |i1 AS (SELECT doc_id, off,
-             |    CASE WHEN off > coalesce(max(off + 39) OVER (
-             |        PARTITION BY doc_id ORDER BY off
-             |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-             |      -2) + 1 THEN 1 ELSE 0 END AS brk FROM m),
-             |i2 AS (SELECT doc_id, off,
-             |    sum(brk) OVER (PARTITION BY doc_id ORDER BY off) AS isl
-             |  FROM i1)
-             |SELECT doc_id, cast(min(off) AS INT) AS span_start,
-             |  cast(max(off) + 40 AS INT) AS span_end,
-             |  cast(max(off) + 40 - min(off) AS INT) AS span_len
-             |FROM i2 GROUP BY doc_id, isl""".stripMargin)),
+      Some(charContaminationSql)),
 
     // Exact ANN baseline: brute-force cosine top-5 for the first 20
     // query vectors. IDs + rank only (the sim double stays out of the
@@ -1980,13 +2118,7 @@ object OpsQueries {
       (s, dir) => Similarity.bruteForceTopK(
           embs(s, dir).filter(col("vec_id") < 20), embs(s, dir), k = 5)
         .select("q_id", "n_id", "rank"),
-      Some("""SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-             |  row_number() OVER (PARTITION BY q.vec_id
-             |    ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC,
-             |             c.vec_id) AS rank
-             |FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-             |WHERE q.vec_id < 20
-             |QUALIFY rank <= 5""".stripMargin)),
+      Some(bruteTop5Sql)),
 
     // Approximate ANN: sign-LSH bucketed top-k (the scale path). Full
     // DuckDB oracle via the same inlined-hyperplane bucket expression as
@@ -2065,13 +2197,7 @@ object OpsQueries {
             nlist = 256, nprobe = 256, centroids = Some(cb))
           .select("q_id", "n_id", "rank")
       },
-      Some("""SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-             |  row_number() OVER (PARTITION BY q.vec_id
-             |    ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC,
-             |             c.vec_id) AS rank
-             |FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-             |WHERE q.vec_id < 20
-             |QUALIFY rank <= 5""".stripMargin)),
+      Some(bruteTop5Sql)),
 
     // Hierarchical (two-level coarse/fine) IVF — the composition that
     // carries IVF past one codebook's O(nlist·dim) per-row price:
@@ -2099,13 +2225,7 @@ object OpsQueries {
             nlist = 64, nprobe = 64, centroids = Some(cb))
           .select("q_id", "n_id", "rank")
       },
-      Some("""SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-             |  row_number() OVER (PARTITION BY q.vec_id
-             |    ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC,
-             |             c.vec_id) AS rank
-             |FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-             |WHERE q.vec_id < 20
-             |QUALIFY rank <= 5""".stripMargin)),
+      Some(bruteTop5Sql)),
 
     QueryDef("n07_ann_ivf_hier",
       (s, dir) => {
@@ -2116,13 +2236,7 @@ object OpsQueries {
             codebook = cb, nprobeCoarse = 16, nprobe = 256)
           .select("q_id", "n_id", "rank")
       },
-      Some("""SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-             |  row_number() OVER (PARTITION BY q.vec_id
-             |    ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC,
-             |             c.vec_id) AS rank
-             |FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-             |WHERE q.vec_id < 20
-             |QUALIFY rank <= 5""".stripMargin)),
+      Some(bruteTop5Sql)),
 
     // CCNet-style unigram LM scoring (perplexity filtering): vocabulary
     // = corpus' own top-V words (bounded ordered take, word tie-break),
@@ -2391,32 +2505,7 @@ object OpsQueries {
           col("doc_id") % 3 === 0, buckets = 1024)
         .select(col("doc_id"), col("n_grams"),
           round(col("log_weight"), 4).as("log_weight")),
-      Some("""WITH t AS (SELECT doc_id, (doc_id % 3 = 0) AS tgt,
-             |    list_filter(string_split_regex(lower(trim(text)), '\s+'),
-             |                x -> x <> '') AS toks FROM documents),
-             |u AS (SELECT doc_id, tgt, uu.w AS g
-             |  FROM t, unnest(toks) AS uu(w)),
-             |b2 AS (SELECT doc_id, tgt, toks[uu.j] || ' ' || toks[uu.j+1] AS g
-             |  FROM t, unnest(range(1, len(toks))) AS uu(j)),
-             |g AS (SELECT doc_id, tgt,
-             |    cast(('0x' || substr(md5(g), 1, 4))::INT % 1024 AS INT) AS b
-             |  FROM (SELECT * FROM u UNION ALL SELECT * FROM b2)),
-             |fit AS (SELECT b,
-             |    sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS ct,
-             |    sum(CASE WHEN NOT tgt THEN 1 ELSE 0 END) AS cr
-             |  FROM g GROUP BY 1),
-             |tot AS (SELECT sum(ct) AS tt, sum(cr) AS tr FROM fit),
-             |w AS (SELECT b,
-             |    ln(cast(ct + 1 AS DOUBLE) / cast(tt + 1024 AS DOUBLE))
-             |      - ln(cast(cr + 1 AS DOUBLE) / cast(tr + 1024 AS DOUBLE))
-             |      AS lw
-             |  FROM fit, tot),
-             |s AS (SELECT g.doc_id, count(*) AS ng, round(sum(w.lw), 4) AS lw
-             |  FROM g JOIN w USING (b) GROUP BY 1)
-             |SELECT d.doc_id, cast(coalesce(s.ng, 0) AS BIGINT) AS n_grams,
-             |  s.lw AS log_weight
-             |FROM (SELECT DISTINCT doc_id FROM documents) d
-             |LEFT JOIN s ON d.doc_id = s.doc_id""".stripMargin)),
+      Some(dsirWeightsSql())),
 
     // The BPE training kernel: frequency-weighted adjacent-pair counts
     // over the word table (initial character symbols), top-20 with the
@@ -2500,33 +2589,7 @@ object OpsQueries {
           .select(col("doc_id"), col("n_grams"),
             round(col("log_weight"), 4).as("log_weight"))
       },
-      Some("""WITH t AS (SELECT doc_id, (doc_id % 3 = 0) AS tgt,
-             |    list_filter(string_split_regex(lower(trim(text)), '\s+'),
-             |                x -> x <> '') AS toks FROM documents),
-             |u AS (SELECT doc_id, tgt, uu.w AS g
-             |  FROM t, unnest(toks) AS uu(w)),
-             |b2 AS (SELECT doc_id, tgt, toks[uu.j] || ' ' || toks[uu.j+1] AS g
-             |  FROM t, unnest(range(1, len(toks))) AS uu(j)),
-             |g AS (SELECT doc_id, tgt,
-             |    cast(('0x' || substr(md5(g), 1, 4))::INT % 1024 AS INT) AS b
-             |  FROM (SELECT * FROM u UNION ALL SELECT * FROM b2)),
-             |fit AS (SELECT b,
-             |    sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS ct,
-             |    sum(CASE WHEN NOT tgt THEN 1 ELSE 0 END) AS cr
-             |  FROM g GROUP BY 1),
-             |tot AS (SELECT sum(ct) AS tt, sum(cr) AS tr FROM fit),
-             |w AS (SELECT b,
-             |    ln(cast(ct + 1 AS DOUBLE) / cast(tt + 1024 AS DOUBLE))
-             |      - ln(cast(cr + 1 AS DOUBLE) / cast(tr + 1024 AS DOUBLE))
-             |      AS lw
-             |  FROM fit, tot),
-             |s AS (SELECT g.doc_id, count(*) AS ng, round(sum(w.lw), 4) AS lw
-             |  FROM g JOIN w USING (b) GROUP BY 1)
-             |SELECT d.doc_id, cast(coalesce(s.ng, 0) AS BIGINT) AS n_grams,
-             |  s.lw AS log_weight
-             |FROM (SELECT DISTINCT doc_id FROM documents
-             |      WHERE doc_id % 5 = 0) d
-             |LEFT JOIN s ON d.doc_id = s.doc_id""".stripMargin)),
+      Some(dsirWeightsSql(" WHERE doc_id % 5 = 0"))),
 
     // DSIR end-to-end: importance weights + seeded Gumbel-top-k
     // resampling — the pair of ops IS the published DSIR pipeline. The
@@ -2539,26 +2602,7 @@ object OpsQueries {
         Curation.dsirWeights(docs(s, dir), "text", "doc_id",
           col("doc_id") % 3 === 0, buckets = 1024),
         "doc_id", "log_weight", k = 50, seed = 7L),
-      Some("""WITH t AS (SELECT doc_id, (doc_id % 3 = 0) AS tgt,
-             |    list_filter(string_split_regex(lower(trim(text)), '\s+'),
-             |                x -> x <> '') AS toks FROM documents),
-             |u AS (SELECT doc_id, tgt, uu.w AS g
-             |  FROM t, unnest(toks) AS uu(w)),
-             |b2 AS (SELECT doc_id, tgt, toks[uu.j] || ' ' || toks[uu.j+1] AS g
-             |  FROM t, unnest(range(1, len(toks))) AS uu(j)),
-             |g AS (SELECT doc_id, tgt,
-             |    cast(('0x' || substr(md5(g), 1, 4))::INT % 1024 AS INT) AS b
-             |  FROM (SELECT * FROM u UNION ALL SELECT * FROM b2)),
-             |fit AS (SELECT b,
-             |    sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS ct,
-             |    sum(CASE WHEN NOT tgt THEN 1 ELSE 0 END) AS cr
-             |  FROM g GROUP BY 1),
-             |tot AS (SELECT sum(ct) AS tt, sum(cr) AS tr FROM fit),
-             |w AS (SELECT b,
-             |    ln(cast(ct + 1 AS DOUBLE) / cast(tt + 1024 AS DOUBLE))
-             |      - ln(cast(cr + 1 AS DOUBLE) / cast(tr + 1024 AS DOUBLE))
-             |      AS lw
-             |  FROM fit, tot),
+      Some(s"""WITH ${dsirFitSql("documents")},
              |s AS (SELECT g.doc_id, sum(w.lw) AS lwf
              |  FROM g JOIN w USING (b) GROUP BY 1),
              |sel AS (SELECT doc_id, lwf - ln(-ln(
@@ -2599,7 +2643,7 @@ object OpsQueries {
             batchSize = 16)
           .select("doc_id", "epoch", "step", "pos_in_batch")
       },
-      Some("""WITH ln AS (SELECT doc_id, u.l AS line
+      Some(s"""WITH ln AS (SELECT doc_id, u.l AS line
              |  FROM (SELECT doc_id, string_split(text, chr(10)) AS ls
              |        FROM documents), unnest(ls) AS u(l)),
              |la AS (SELECT doc_id, count(*) AS n_lines,
@@ -2612,7 +2656,7 @@ object OpsQueries {
              |    len(list_filter(toks, x -> regexp_matches(x, '[a-z]')))
              |      AS n_alpha
              |  FROM (SELECT doc_id,
-             |      list_filter(string_split_regex(lower(trim(text)), '\s+'),
+             |      list_filter(string_split_regex(lower(trim(text)), '\\s+'),
              |                  x -> x <> '') AS toks FROM documents)),
              |sig AS (SELECT d.doc_id, d.text, wa.nw,
              |    CASE WHEN wa.nw = 0 THEN 1 ELSE wa.nw END AS wden,
@@ -2648,26 +2692,7 @@ object OpsQueries {
              |    AND cast(n_ell AS DOUBLE) / n_lines <= 0.3
              |    AND cast(n_alpha AS DOUBLE) / wden >= 0.8
              |    AND n_stop >= 1),
-             |t AS (SELECT doc_id, (doc_id % 3 = 0) AS tgt,
-             |    list_filter(string_split_regex(lower(trim(text)), '\s+'),
-             |                x -> x <> '') AS toks FROM kept),
-             |u AS (SELECT doc_id, tgt, uu.w AS g
-             |  FROM t, unnest(toks) AS uu(w)),
-             |b2 AS (SELECT doc_id, tgt, toks[uu.j] || ' ' || toks[uu.j+1] AS g
-             |  FROM t, unnest(range(1, len(toks))) AS uu(j)),
-             |g AS (SELECT doc_id, tgt,
-             |    cast(('0x' || substr(md5(g), 1, 4))::INT % 1024 AS INT) AS b
-             |  FROM (SELECT * FROM u UNION ALL SELECT * FROM b2)),
-             |fit AS (SELECT b,
-             |    sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS ct,
-             |    sum(CASE WHEN NOT tgt THEN 1 ELSE 0 END) AS cr
-             |  FROM g GROUP BY 1),
-             |tot AS (SELECT sum(ct) AS tt, sum(cr) AS tr FROM fit),
-             |w AS (SELECT b,
-             |    ln(cast(ct + 1 AS DOUBLE) / cast(tt + 1024 AS DOUBLE))
-             |      - ln(cast(cr + 1 AS DOUBLE) / cast(tr + 1024 AS DOUBLE))
-             |      AS lw
-             |  FROM fit, tot),
+             |${dsirFitSql("kept")},
              |sc AS (SELECT g.doc_id, sum(w.lw) AS lwf
              |  FROM g JOIN w USING (b) GROUP BY 1),
              |sel AS (SELECT doc_id, lwf - ln(-ln(
@@ -3194,27 +3219,7 @@ object OpsQueries {
           .select("doc_id", "n_spans", "tokens_removed", "epoch", "step",
             "pos_in_batch")
       },
-      Some("""WITH t AS (SELECT doc_id,
-             |    string_split(trim(regexp_replace(lower(text), '\s+', ' ',
-             |                                     'g')), ' ') AS toks
-             |  FROM documents),
-             |n AS (SELECT doc_id, toks, len(toks) AS n FROM t),
-             |g AS (SELECT doc_id, cast(u.i AS INT) AS s,
-             |    cast(u.i + 7 AS INT) AS e,
-             |    array_to_string(toks[u.i:u.i+7], ' ') AS gram
-             |  FROM n, unnest(range(1, n - 6)) AS u(i) WHERE n >= 8),
-             |d AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-             |m AS (SELECT g.doc_id, g.s, g.e FROM g JOIN d USING (gram)),
-             |i1 AS (SELECT doc_id, s, e,
-             |    CASE WHEN s > coalesce(max(e) OVER (PARTITION BY doc_id
-             |        ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING
-             |        AND 1 PRECEDING), -1) + 1
-             |      THEN 1 ELSE 0 END AS brk FROM m),
-             |i2 AS (SELECT doc_id, s, e,
-             |    sum(brk) OVER (PARTITION BY doc_id ORDER BY s) AS isl
-             |  FROM i1),
-             |sp AS (SELECT doc_id, isl, min(s) AS ss, max(e) AS se
-             |  FROM i2 GROUP BY doc_id, isl),
+      Some(s"""WITH $tokenSpansSql,
              |agg AS (SELECT doc_id, count(*) AS n_spans,
              |    sum(se - ss + 1) AS removed FROM sp GROUP BY doc_id),
              |surv AS (SELECT n.doc_id,
@@ -3370,13 +3375,7 @@ object OpsQueries {
         Curation.decontaminate(docs(s, dir), evalSet, "text")
           .select("doc_id", "lang")
       },
-      Some("""WITH ev AS (
-             |  SELECT DISTINCT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-             |  FROM documents
-             |  WHERE ('0x' || substr(md5(cast(doc_id AS VARCHAR)), 1, 4))::INT < 6553)
-             |SELECT doc_id, lang FROM documents
-             |WHERE md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))
-             |      NOT IN (SELECT fp FROM ev)""".stripMargin)),
+      Some(exactDecontaminationSql)),
 
     // End-to-end curation pipeline: quality filter -> exact-dedup
     // winners -> 50% reproducible sample -> token-budget shards. Every
@@ -3433,13 +3432,7 @@ object OpsQueries {
             expectedEvalItems = 10000L, fpp = 0.01)
           .select("doc_id", "lang")
       },
-      Some("""WITH ev AS (
-             |  SELECT DISTINCT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-             |  FROM documents
-             |  WHERE ('0x' || substr(md5(cast(doc_id AS VARCHAR)), 1, 4))::INT < 6553)
-             |SELECT doc_id, lang FROM documents
-             |WHERE md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))
-             |      NOT IN (SELECT fp FROM ev)""".stripMargin)),
+      Some(exactDecontaminationSql)),
 
     // Gopher-style repetition quality signals (TextOps.repetition):
     // duplicate-word fraction inputs, top-word character mass, top
@@ -3748,13 +3741,7 @@ object OpsQueries {
     QueryDef("t21_unigram_tokenizer",
       (s, dir) => {
         import s.implicits._
-        val table = TextOps.bpeWordTable(docs(s, dir), "text",
-            maxWords = 100000).drop("syms")
-          .filter(length(col("word")) <= 12)
-          .orderBy(col("freq").desc, col("word")).limit(200)
-          .localCheckpoint()
-        val m0 = TextOps.unigramSeedModel(table, vocabSize = 120,
-          maxPieceLen = 3)
+        val (table, m0) = unigramFixture(s, dir)
         val m1 = TextOps.unigramEmStep(table, m0)
         val m2 = TextOps.unigramEmStep(table, m1)
         val seg = TextOps.unigramSegmentWords(table, m1)
@@ -3767,34 +3754,6 @@ object OpsQueries {
         seg.unionByName(vocabRows)
       },
       Some {
-        val wordTable =
-          """wd AS (SELECT word, count(*) AS freq FROM (
-            |    SELECT unnest(list_filter(
-            |      string_split_regex(lower(trim(text)), '\s+'),
-            |      x -> x <> '')) AS word FROM documents) GROUP BY 1),
-            |wt AS (SELECT word, freq FROM wd WHERE length(word) <= 12
-            |       ORDER BY freq DESC, word LIMIT 200)""".stripMargin
-        val seed =
-          """subs AS (SELECT substr(w.word, cast(t.i AS INT), cast(u.l AS INT)) AS piece,
-            |    w.freq
-            |  FROM wt w,
-            |    unnest(range(1, length(w.word) + 1)) AS t(i),
-            |    unnest(range(1, least(3, length(w.word) - t.i + 1) + 1)) AS u(l)),
-            |sc AS (SELECT piece, cast(sum(freq) AS BIGINT) AS cnt
-            |  FROM subs GROUP BY 1),
-            |v0sel AS (
-            |  SELECT piece, cnt FROM sc WHERE length(piece) = 1
-            |  UNION ALL
-            |  SELECT piece, cnt FROM (
-            |    SELECT piece, cnt,
-            |      row_number() OVER (ORDER BY cnt DESC, piece) AS rn
-            |    FROM sc WHERE length(piece) > 1)
-            |  WHERE rn <= 120 - (SELECT count(*) FROM sc
-            |                     WHERE length(piece) = 1)),
-            |v0 AS (SELECT piece, cnt,
-            |    cast(-round(1e6 * ln(cnt::DOUBLE /
-            |      (SELECT sum(cnt)::DOUBLE FROM v0sel))) AS BIGINT) AS cost
-            |  FROM v0sel)""".stripMargin
         // One Viterbi E-step under vocab ${v}: enumerate every piece
         // path (recursive CTE), keep the min-cost path per word with
         // the reversed-bounds tie-break, rebuild pieces from the
@@ -3828,8 +3787,9 @@ object OpsQueries {
              |       FROM $v vv LEFT JOIN c$k ci ON vv.piece = ci.piece)))
              |      AS BIGINT) AS cost
              |  FROM $v v LEFT JOIN c$k c ON v.piece = c.piece)""".stripMargin
-        s"""WITH RECURSIVE $wordTable,
-           |$seed,
+        s"""WITH RECURSIVE $unigramWordsSql,
+           |$unigramSeedSql,
+           |$unigramCostSql,
            |${emStage(1, "v0")},
            |${emStage(2, "v1")}
            |SELECT 'seg' AS chk, sg.word AS k,
@@ -3851,14 +3811,8 @@ object OpsQueries {
     QueryDef("t29_tokenizer_artifact",
       (s, dir) => {
         import s.implicits._
-        val table = TextOps.bpeWordTable(docs(s, dir), "text",
-            maxWords = 100000).drop("syms")
-          .filter(length(col("word")) <= 12)
-          .orderBy(col("freq").desc, col("word")).limit(200)
-          .localCheckpoint()
-        val m1 = TextOps.unigramEmStep(table,
-          TextOps.unigramSeedModel(table, vocabSize = 120,
-            maxPieceLen = 3))
+        val (table, m0) = unigramFixture(s, dir)
+        val m1 = TextOps.unigramEmStep(table, m0)
         val mDir = "/tmp/graft_gate_unigram_" +
           dir.replaceAll("[^A-Za-z0-9]", "_")
         TextOps.saveUnigramModel(s, m1, mDir)
@@ -3879,12 +3833,7 @@ object OpsQueries {
           .select(lit("vocab").as("chk"), col("k"), col("ok"))
         segOk.unionByName(vocabOk)
       },
-      Some("""WITH wd AS (SELECT word, count(*) AS freq FROM (
-             |    SELECT unnest(list_filter(
-             |      string_split_regex(lower(trim(text)), '\s+'),
-             |      x -> x <> '')) AS word FROM documents) GROUP BY 1),
-             |wt AS (SELECT word, freq FROM wd WHERE length(word) <= 12
-             |       ORDER BY freq DESC, word LIMIT 200),
+      Some(s"""WITH $unigramWordsSql,
              |subs AS (SELECT substr(w.word, cast(t.i AS INT),
              |      cast(u.l AS INT)) AS piece, w.freq
              |  FROM wt w,
@@ -3925,13 +3874,7 @@ object OpsQueries {
     QueryDef("t28_unigram_soft_em",
       (s, dir) => {
         import s.implicits._
-        val table = TextOps.bpeWordTable(docs(s, dir), "text",
-            maxWords = 100000).drop("syms")
-          .filter(length(col("word")) <= 12)
-          .orderBy(col("freq").desc, col("word")).limit(200)
-          .localCheckpoint()
-        val m0 = TextOps.unigramSeedModel(table, vocabSize = 120,
-          maxPieceLen = 3)
+        val (table, m0) = unigramFixture(s, dir)
         val expRows = TextOps.unigramExpectWords(table, m0)
           .select(col("word"), explode(col("expect")).as("x"))
           .select(lit("exp").as("chk"), col("word").as("k"),
@@ -3943,83 +3886,10 @@ object OpsQueries {
         expRows.unionByName(vocabRows)
       },
       Some {
-        val wordTable =
-          """wd AS (SELECT word, count(*) AS freq FROM (
-            |    SELECT unnest(list_filter(
-            |      string_split_regex(lower(trim(text)), '\s+'),
-            |      x -> x <> '')) AS word FROM documents) GROUP BY 1),
-            |wt AS (SELECT word, freq FROM wd WHERE length(word) <= 12
-            |       ORDER BY freq DESC, word LIMIT 200)""".stripMargin
-        val seed =
-          """subs AS (SELECT substr(w.word, cast(t.i AS INT), cast(u.l AS INT)) AS piece,
-            |    w.freq
-            |  FROM wt w,
-            |    unnest(range(1, length(w.word) + 1)) AS t(i),
-            |    unnest(range(1, least(3, length(w.word) - t.i + 1) + 1)) AS u(l)),
-            |sc AS (SELECT piece, cast(sum(freq) AS BIGINT) AS cnt
-            |  FROM subs GROUP BY 1),
-            |v0sel AS (
-            |  SELECT piece, cnt FROM sc WHERE length(piece) = 1
-            |  UNION ALL
-            |  SELECT piece, cnt FROM (
-            |    SELECT piece, cnt,
-            |      row_number() OVER (ORDER BY cnt DESC, piece) AS rn
-            |    FROM sc WHERE length(piece) > 1)
-            |  WHERE rn <= 120 - (SELECT count(*) FROM sc
-            |                     WHERE length(piece) = 1)),
-            |vp AS (SELECT piece, cnt::DOUBLE /
-            |    (SELECT sum(cnt)::DOUBLE FROM v0sel) AS p
-            |  FROM v0sel)""".stripMargin
-        val lattice =
-          """fwd AS (
-            |  SELECT word, 0 AS i, 1.0::DOUBLE AS a0, 0.0::DOUBLE AS am1,
-            |    0.0::DOUBLE AS am2
-            |  FROM wt
-            |  UNION ALL
-            |  SELECT f.word, f.i + 1,
-            |    coalesce(p1.p * f.a0, 0.0) + coalesce(p2.p * f.am1, 0.0)
-            |      + coalesce(p3.p * f.am2, 0.0),
-            |    f.a0, f.am1
-            |  FROM fwd f
-            |  LEFT JOIN vp p1 ON p1.piece = substr(f.word, f.i + 1, 1)
-            |  LEFT JOIN vp p2 ON f.i >= 1 AND p2.piece = substr(f.word, f.i, 2)
-            |  LEFT JOIN vp p3 ON f.i >= 2
-            |    AND p3.piece = substr(f.word, f.i - 1, 3)
-            |  WHERE f.i < length(f.word)),
-            |bwd AS (
-            |  SELECT word, length(word) AS j, 1.0::DOUBLE AS b0,
-            |    0.0::DOUBLE AS bp1, 0.0::DOUBLE AS bp2
-            |  FROM wt
-            |  UNION ALL
-            |  SELECT b.word, b.j - 1,
-            |    coalesce(q1.p * b.b0, 0.0) + coalesce(q2.p * b.bp1, 0.0)
-            |      + coalesce(q3.p * b.bp2, 0.0),
-            |    b.b0, b.bp1
-            |  FROM bwd b
-            |  LEFT JOIN vp q1 ON q1.piece = substr(b.word, b.j, 1)
-            |  LEFT JOIN vp q2 ON q2.piece = substr(b.word, b.j, 2)
-            |  LEFT JOIN vp q3 ON q3.piece = substr(b.word, b.j, 3)
-            |  WHERE b.j > 0),
-            |occ AS (
-            |  SELECT g.word, g.piece, fa.a0 * v.p * fb.b0 / fz.a0 AS e
-            |  FROM (SELECT w.word, cast(t.j AS INT) AS j,
-            |          cast(u.l AS INT) AS l,
-            |          substr(w.word, cast(t.j + 1 AS INT),
-            |            cast(u.l AS INT)) AS piece
-            |        FROM wt w,
-            |          unnest(range(0, length(w.word))) AS t(j),
-            |          unnest(range(1, least(3, length(w.word) - t.j) + 1))
-            |            AS u(l)) g
-            |  JOIN vp v USING (piece)
-            |  JOIN fwd fa ON fa.word = g.word AND fa.i = g.j
-            |  JOIN bwd fb ON fb.word = g.word AND fb.j = g.j + g.l
-            |  JOIN (SELECT word, a0 FROM fwd WHERE i = length(word)) fz
-            |    ON fz.word = g.word),
-            |softc AS (SELECT o.piece, sum(w.freq * o.e) AS s
-            |  FROM occ o JOIN wt w USING (word) GROUP BY 1)""".stripMargin
-        s"""WITH RECURSIVE $wordTable,
-           |$seed,
-           |$lattice
+        s"""WITH RECURSIVE $unigramWordsSql,
+           |$unigramSeedSql,
+           |$unigramProbSql,
+           |$unigramLatticeSql
            |SELECT 'exp' AS chk, word AS k, piece AS p,
            |  round(sum(e), 6) AS v
            |FROM occ GROUP BY word, piece
@@ -4049,13 +3919,7 @@ object OpsQueries {
     QueryDef("t30_unigram_prune",
       (s, dir) => {
         import s.implicits._
-        val table = TextOps.bpeWordTable(docs(s, dir), "text",
-            maxWords = 100000).drop("syms")
-          .filter(length(col("word")) <= 12)
-          .orderBy(col("freq").desc, col("word")).limit(200)
-          .localCheckpoint()
-        val m0 = TextOps.unigramSeedModel(table, vocabSize = 120,
-          maxPieceLen = 3)
+        val (table, m0) = unigramFixture(s, dir)
         val losses = TextOps.unigramPruneLosses(table, m0).toDF("p", "e6", "d")
         val expRows = losses.select(lit("exp").as("chk"),
           col("p").as("k"), col("e6").cast("double").as("v"))
@@ -4068,84 +3932,6 @@ object OpsQueries {
         expRows.unionByName(deltaRows).unionByName(vocabRows)
       },
       Some {
-        val wordTable =
-          """wd AS (SELECT word, count(*) AS freq FROM (
-            |    SELECT unnest(list_filter(
-            |      string_split_regex(lower(trim(text)), '\s+'),
-            |      x -> x <> '')) AS word FROM documents) GROUP BY 1),
-            |wt AS (SELECT word, freq FROM wd WHERE length(word) <= 12
-            |       ORDER BY freq DESC, word LIMIT 200)""".stripMargin
-        val seed =
-          """subs AS (SELECT substr(w.word, cast(t.i AS INT), cast(u.l AS INT)) AS piece,
-            |    w.freq
-            |  FROM wt w,
-            |    unnest(range(1, length(w.word) + 1)) AS t(i),
-            |    unnest(range(1, least(3, length(w.word) - t.i + 1) + 1)) AS u(l)),
-            |sc AS (SELECT piece, cast(sum(freq) AS BIGINT) AS cnt
-            |  FROM subs GROUP BY 1),
-            |v0sel AS (
-            |  SELECT piece, cnt FROM sc WHERE length(piece) = 1
-            |  UNION ALL
-            |  SELECT piece, cnt FROM (
-            |    SELECT piece, cnt,
-            |      row_number() OVER (ORDER BY cnt DESC, piece) AS rn
-            |    FROM sc WHERE length(piece) > 1)
-            |  WHERE rn <= 120 - (SELECT count(*) FROM sc
-            |                     WHERE length(piece) = 1)),
-            |vp AS (SELECT piece, cnt::DOUBLE /
-            |    (SELECT sum(cnt)::DOUBLE FROM v0sel) AS p
-            |  FROM v0sel),
-            |v0 AS (SELECT piece, cnt,
-            |    cast(-round(1e6 * ln(cnt::DOUBLE /
-            |      (SELECT sum(cnt)::DOUBLE FROM v0sel))) AS BIGINT) AS cost
-            |  FROM v0sel)""".stripMargin
-        val lattice =
-          """fwd AS (
-            |  SELECT word, 0 AS i, 1.0::DOUBLE AS a0, 0.0::DOUBLE AS am1,
-            |    0.0::DOUBLE AS am2
-            |  FROM wt
-            |  UNION ALL
-            |  SELECT f.word, f.i + 1,
-            |    coalesce(p1.p * f.a0, 0.0) + coalesce(p2.p * f.am1, 0.0)
-            |      + coalesce(p3.p * f.am2, 0.0),
-            |    f.a0, f.am1
-            |  FROM fwd f
-            |  LEFT JOIN vp p1 ON p1.piece = substr(f.word, f.i + 1, 1)
-            |  LEFT JOIN vp p2 ON f.i >= 1 AND p2.piece = substr(f.word, f.i, 2)
-            |  LEFT JOIN vp p3 ON f.i >= 2
-            |    AND p3.piece = substr(f.word, f.i - 1, 3)
-            |  WHERE f.i < length(f.word)),
-            |bwd AS (
-            |  SELECT word, length(word) AS j, 1.0::DOUBLE AS b0,
-            |    0.0::DOUBLE AS bp1, 0.0::DOUBLE AS bp2
-            |  FROM wt
-            |  UNION ALL
-            |  SELECT b.word, b.j - 1,
-            |    coalesce(q1.p * b.b0, 0.0) + coalesce(q2.p * b.bp1, 0.0)
-            |      + coalesce(q3.p * b.bp2, 0.0),
-            |    b.b0, b.bp1
-            |  FROM bwd b
-            |  LEFT JOIN vp q1 ON q1.piece = substr(b.word, b.j, 1)
-            |  LEFT JOIN vp q2 ON q2.piece = substr(b.word, b.j, 2)
-            |  LEFT JOIN vp q3 ON q3.piece = substr(b.word, b.j, 3)
-            |  WHERE b.j > 0),
-            |occ AS (
-            |  SELECT g.word, g.piece, fa.a0 * v.p * fb.b0 / fz.a0 AS e
-            |  FROM (SELECT w.word, cast(t.j AS INT) AS j,
-            |          cast(u.l AS INT) AS l,
-            |          substr(w.word, cast(t.j + 1 AS INT),
-            |            cast(u.l AS INT)) AS piece
-            |        FROM wt w,
-            |          unnest(range(0, length(w.word))) AS t(j),
-            |          unnest(range(1, least(3, length(w.word) - t.j) + 1))
-            |            AS u(l)) g
-            |  JOIN vp v USING (piece)
-            |  JOIN fwd fa ON fa.word = g.word AND fa.i = g.j
-            |  JOIN bwd fb ON fb.word = g.word AND fb.j = g.j + g.l
-            |  JOIN (SELECT word, a0 FROM fwd WHERE i = length(word)) fz
-            |    ON fz.word = g.word),
-            |softc AS (SELECT o.piece, sum(w.freq * o.e) AS s
-            |  FROM occ o JOIN wt w USING (word) GROUP BY 1)""".stripMargin
         val prune =
           """mp AS (SELECT piece, cost FROM v0 WHERE length(piece) > 1),
             |ap AS (
@@ -4174,9 +3960,11 @@ object OpsQueries {
             |                    WHERE length(piece) = 1)),
             |surv AS (SELECT piece FROM v0 WHERE length(piece) = 1
             |  UNION ALL SELECT piece FROM keepm)""".stripMargin
-        s"""WITH RECURSIVE $wordTable,
-           |$seed,
-           |$lattice,
+        s"""WITH RECURSIVE $unigramWordsSql,
+           |$unigramSeedSql,
+           |$unigramProbSql,
+           |$unigramCostSql,
+           |$unigramLatticeSql,
            |$prune
            |SELECT 'exp' AS chk, piece AS k, cast(e6 AS DOUBLE) AS v
            |FROM dl
@@ -4232,18 +4020,7 @@ object OpsQueries {
           .select(col("query_id"), col("doc_id"),
             round(col("score"), 4).as("score"), col("n_terms_hit"))
       },
-      Some(s"""WITH $bm25StatsSql,
-             |q(query_id, term) AS (VALUES $bm25QueryValuesSql)
-             |SELECT q.query_id, tf.doc_id,
-             |  round(sum(
-             |    $bm25ScoreSql
-             |  ), 4) AS score,
-             |  count(*) AS n_terms_hit
-             |FROM tf
-             |JOIN q USING (term)
-             |JOIN dfq USING (term)
-             |JOIN dl USING (doc_id), st
-             |GROUP BY 1, 2""".stripMargin)),
+      Some(bm25Sql())),
 
     // Asymmetric scalar-quantized ANN (n15, the FAISS `SQ8,Flat`
     // shape): corpus held as 1-byte-per-dim codes on a per-dim grid
@@ -4256,36 +4033,8 @@ object OpsQueries {
     // cross-engine double cosine is n01-proven on this data; id
     // tie-break keeps the cut total.
     QueryDef("n15_ann_sq8",
-      (s, dir) => {
-        val e = embs(s, dir)
-        val model = Embeddings.sq8Fit(e, "embedding", dim = 64)
-        Similarity.sq8TopK(e.filter(col("vec_id") < 20), e, k = 5, model)
-          .select("q_id", "n_id", "rank")
-      },
-      Some("""WITH mm AS (
-             |  SELECT cast(t.i AS INT) AS d,
-             |    min(e.embedding[t.i]::DOUBLE) AS lo,
-             |    max(e.embedding[t.i]::DOUBLE) AS hi
-             |  FROM embeddings e,
-             |    unnest(range(1, len(e.embedding) + 1)) AS t(i)
-             |  GROUP BY 1),
-             |dq AS (
-             |  SELECT e.vec_id,
-             |    list(CASE WHEN m.hi - m.lo <= 0 THEN m.lo
-             |         ELSE m.lo + greatest(0.0, least(255.0,
-             |           floor((e.embedding[m.d]::DOUBLE - m.lo) /
-             |             (m.hi - m.lo) * 255.0 + 0.5))) *
-             |           (m.hi - m.lo) / 255.0 END ORDER BY m.d) AS dqv
-             |  FROM embeddings e JOIN mm m ON true
-             |  GROUP BY e.vec_id)
-             |SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-             |  row_number() OVER (PARTITION BY q.vec_id
-             |    ORDER BY list_cosine_similarity(
-             |      list_transform(q.embedding, x -> x::DOUBLE), c.dqv) DESC,
-             |      c.vec_id) AS rank
-             |FROM embeddings q JOIN dq c ON q.vec_id <> c.vec_id
-             |WHERE q.vec_id < 20
-             |QUALIFY rank <= 5""".stripMargin)),
+      (s, dir) => sq8Top5(s, dir)(Similarity.sq8TopK(_, _, k = 5, _)),
+      Some(sq8Top5Sql)),
 
     // Incremental sample state (e05): the production-width incremental
     // composition — the mergeable md5-ranked bounded sample that every
@@ -4368,39 +4117,12 @@ object OpsQueries {
     // lost or duplicated by cell assignment breaks it); the oracle is
     // n15's — IVF probe-all and Flat are the same retrieval.
     QueryDef("n16_ann_ivf_sq8",
-      (s, dir) => {
-        val e = embs(s, dir)
-        val model = Embeddings.sq8Fit(e, "embedding", dim = 64)
+      (s, dir) => sq8Top5(s, dir) { (q, e, model) =>
         val dq = e.select(col("vec_id"),
           Embeddings.sq8Roundtrip(col("embedding"), model).as("embedding"))
-        Similarity.ivfTopK(e.filter(col("vec_id") < 20), dq, k = 5,
-            nlist = 16, nprobe = 16)
-          .select("q_id", "n_id", "rank")
+        Similarity.ivfTopK(q, dq, k = 5, nlist = 16, nprobe = 16)
       },
-      Some("""WITH mm AS (
-             |  SELECT cast(t.i AS INT) AS d,
-             |    min(e.embedding[t.i]::DOUBLE) AS lo,
-             |    max(e.embedding[t.i]::DOUBLE) AS hi
-             |  FROM embeddings e,
-             |    unnest(range(1, len(e.embedding) + 1)) AS t(i)
-             |  GROUP BY 1),
-             |dq AS (
-             |  SELECT e.vec_id,
-             |    list(CASE WHEN m.hi - m.lo <= 0 THEN m.lo
-             |         ELSE m.lo + greatest(0.0, least(255.0,
-             |           floor((e.embedding[m.d]::DOUBLE - m.lo) /
-             |             (m.hi - m.lo) * 255.0 + 0.5))) *
-             |           (m.hi - m.lo) / 255.0 END ORDER BY m.d) AS dqv
-             |  FROM embeddings e JOIN mm m ON true
-             |  GROUP BY e.vec_id)
-             |SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-             |  row_number() OVER (PARTITION BY q.vec_id
-             |    ORDER BY list_cosine_similarity(
-             |      list_transform(q.embedding, x -> x::DOUBLE), c.dqv) DESC,
-             |      c.vec_id) AS rank
-             |FROM embeddings q JOIN dq c ON q.vec_id <> c.vec_id
-             |WHERE q.vec_id < 20
-             |QUALIFY rank <= 5""".stripMargin)),
+      Some(sq8Top5Sql)),
 
     // SEMANTIC decontamination (d20): embedding near-matches of train
     // (vec_id % 9 != 0) against the eval benchmark (% 9 == 0) — the
@@ -4463,18 +4185,9 @@ object OpsQueries {
           .select(col("query_id"), col("doc_id"), col("fused_rank"),
             round(col("rrf"), 6).as("rrf"), col("n_channels"))
       },
-      Some(s"""WITH $bm25StatsSql,
-              |q(query_id, term) AS (VALUES $bm25QueryValuesSql),
+      Some(s"""WITH ${bm25StatsSql()},
               |bmscore AS (
-              |  SELECT q.query_id, tf.doc_id,
-              |    round(sum(
-              |      $bm25ScoreSql
-              |    ), 4) AS score
-              |  FROM tf
-              |  JOIN q USING (term)
-              |  JOIN dfq USING (term)
-              |  JOIN dl USING (doc_id), st
-              |  GROUP BY 1, 2),
+              |  ${bm25ScoresSql("")}),
               |lex AS (
               |  SELECT query_id, doc_id, row_number() OVER (
               |      PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank
@@ -4558,32 +4271,7 @@ object OpsQueries {
             "doc_id", "dhash", maxHamming = 3, maxBucket = 1000)
           .select("doc_a", "doc_b", "hamming")
       },
-      Some(s"""WITH $dhashCodesSql,
-              |chunks AS (
-              |  SELECT doc_id, ci,
-              |    (CASE WHEN ci // 2 = 0 THEN w0 ELSE w1 END
-              |      >> ((ci % 2) * 16)) & 65535 AS chunk
-              |  FROM codes, range(0, 4) t(ci)),
-              |bsz AS (SELECT ci, chunk, count(*) AS n FROM chunks
-              |        GROUP BY 1, 2),
-              |sized AS (
-              |  SELECT c.doc_id, c.ci, c.chunk FROM chunks c
-              |  JOIN bsz ON c.ci = bsz.ci AND c.chunk = bsz.chunk
-              |  WHERE bsz.n <= 1000),
-              |cand AS (
-              |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-              |  FROM sized a JOIN sized b
-              |    ON a.ci = b.ci AND a.chunk = b.chunk
-              |      AND a.doc_id < b.doc_id
-              |  WHERE a.doc_id % 3 = 0 OR b.doc_id % 3 = 0)
-              |SELECT doc_a, doc_b, hamming FROM (
-              |  SELECT doc_a, doc_b,
-              |    bit_count(xor(ca.w0, cb.w0)) +
-              |    bit_count(xor(ca.w1, cb.w1)) AS hamming
-              |  FROM cand
-              |  JOIN codes ca ON ca.doc_id = cand.doc_a
-              |  JOIN codes cb ON cb.doc_id = cand.doc_b)
-              |WHERE hamming <= 3""".stripMargin)),
+      Some(dhashPairsSql(" WHERE a.doc_id % 3 = 0 OR b.doc_id % 3 = 0"))),
 
     // FILTERED ANN (n20): top-k under a metadata predicate — the
     // vector-database staple ("nearest docs WHERE lang='en'"). In the
@@ -5139,31 +4827,7 @@ object OpsQueries {
             maxHamming = 3, maxBucket = 1000)
           .select("doc_a", "doc_b", "hamming")
       },
-      Some(s"""WITH $dhashCodesSql,
-              |chunks AS (
-              |  SELECT doc_id, ci,
-              |    (CASE WHEN ci // 2 = 0 THEN w0 ELSE w1 END
-              |      >> ((ci % 2) * 16)) & 65535 AS chunk
-              |  FROM codes, range(0, 4) t(ci)),
-              |bsz AS (SELECT ci, chunk, count(*) AS n FROM chunks
-              |        GROUP BY 1, 2),
-              |sized AS (
-              |  SELECT c.doc_id, c.ci, c.chunk FROM chunks c
-              |  JOIN bsz ON c.ci = bsz.ci AND c.chunk = bsz.chunk
-              |  WHERE bsz.n <= 1000),
-              |cand AS (
-              |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-              |  FROM sized a JOIN sized b
-              |    ON a.ci = b.ci AND a.chunk = b.chunk
-              |      AND a.doc_id < b.doc_id)
-              |SELECT doc_a, doc_b, hamming FROM (
-              |  SELECT doc_a, doc_b,
-              |    bit_count(xor(ca.w0, cb.w0)) +
-              |    bit_count(xor(ca.w1, cb.w1)) AS hamming
-              |  FROM cand
-              |  JOIN codes ca ON ca.doc_id = cand.doc_a
-              |  JOIN codes cb ON cb.doc_id = cand.doc_b)
-              |WHERE hamming <= 3""".stripMargin)),
+      Some(dhashPairsSql())),
 
     // Video scene-cut detection (m13): per-video lag window over the
     // REAL DIB-frame decode — a cut is an intensity jump
@@ -5389,28 +5053,12 @@ object OpsQueries {
     // the usual summation-order guard on the final per-(q,doc) sum.
     QueryDef("t24_bm25_incremental",
       (s, dir) => {
-        import s.implicits._
         val d = docs(s, dir)
-        val merged = TextOps.mergeBm25State(
-          TextOps.bm25State(d.filter(col("doc_id") % 2 === 0), "text", "doc_id"),
-          TextOps.bm25State(d.filter(col("doc_id") % 2 =!= 0), "text", "doc_id"))
-        TextOps.bm25ScoreWithState(merged, d, "text", "doc_id",
-            bm25QueryTerms.toDF("query_id", "term"))
-          .select(col("query_id"), col("doc_id"),
-            round(col("score"), 4).as("score"), col("n_terms_hit"))
+        bm25Serve(TextOps.mergeBm25State(
+          bm25State(d.filter(col("doc_id") % 2 === 0)),
+          bm25State(d.filter(col("doc_id") % 2 =!= 0))), d)
       },
-      Some(s"""WITH $bm25StatsSql,
-             |q(query_id, term) AS (VALUES $bm25QueryValuesSql)
-             |SELECT q.query_id, tf.doc_id,
-             |  round(sum(
-             |    $bm25ScoreSql
-             |  ), 4) AS score,
-             |  count(*) AS n_terms_hit
-             |FROM tf
-             |JOIN q USING (term)
-             |JOIN dfq USING (term)
-             |JOIN dl USING (doc_id), st
-             |GROUP BY 1, 2""".stripMargin)),
+      Some(bm25Sql())),
 
     // BM25 state PERSISTENCE (t34): the verb that makes the t24/t31
     // lifecycle real across runs — build the even-half state, SAVE it,
@@ -5422,50 +5070,16 @@ object OpsQueries {
     // downstream score would drift.
     QueryDef("t34_bm25_state_persist",
       (s, dir) => {
-        import s.implicits._
         val d = docs(s, dir)
         val stDir = "/tmp/graft_gate_bm25state_" +
           dir.replaceAll("[^A-Za-z0-9]", "_")
-        TextOps.saveBm25State(
-          TextOps.bm25State(d.filter(col("doc_id") % 2 === 0), "text",
-            "doc_id"), stDir)
-        val merged = TextOps.mergeBm25State(
+        TextOps.saveBm25State(bm25State(d.filter(col("doc_id") % 2 === 0)),
+          stDir)
+        bm25DeleteServe(TextOps.mergeBm25State(
           TextOps.loadBm25State(s, stDir),
-          TextOps.bm25State(d.filter(col("doc_id") % 2 =!= 0), "text",
-            "doc_id"))
-        val afterDelete = TextOps.subtractBm25State(merged,
-          TextOps.bm25State(d.filter(col("doc_id") % 5 === 2), "text",
-            "doc_id"))
-        TextOps.bm25ScoreWithState(afterDelete,
-            d.filter(col("doc_id") % 5 =!= 2), "text", "doc_id",
-            bm25QueryTerms.toDF("query_id", "term"))
-          .select(col("query_id"), col("doc_id"),
-            round(col("score"), 4).as("score"), col("n_terms_hit"))
+          bm25State(d.filter(col("doc_id") % 2 =!= 0))), d)
       },
-      Some(s"""WITH toks AS (
-             |  SELECT doc_id, unnest(list_filter(
-             |    string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '),
-             |    x -> x <> '')) AS term
-             |  FROM documents WHERE doc_id % 5 <> 2),
-             |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-             |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
-             |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-             |st AS (SELECT (SELECT count(*) FROM documents
-             |                WHERE doc_id % 5 <> 2)::DOUBLE AS n_docs,
-             |  (SELECT sum(tf) FROM tf)::DOUBLE /
-             |    (SELECT count(*) FROM documents
-             |     WHERE doc_id % 5 <> 2)::DOUBLE AS avgdl),
-             |q(query_id, term) AS (VALUES $bm25QueryValuesSql)
-             |SELECT q.query_id, tf.doc_id,
-             |  round(sum(
-             |    $bm25ScoreSql
-             |  ), 4) AS score,
-             |  count(*) AS n_terms_hit
-             |FROM tf
-             |JOIN q USING (term)
-             |JOIN dfq USING (term)
-             |JOIN dl USING (doc_id), st
-             |GROUP BY 1, 2""".stripMargin)),
+      Some(bm25Sql(" WHERE doc_id % 5 <> 2"))),
 
     // BM25 state DELETION (t31): the backward half of the t24
     // lifecycle — subtract a deleted batch's state from the corpus
@@ -5477,42 +5091,10 @@ object OpsQueries {
     // with the deleted fifth excluded.
     QueryDef("t31_bm25_delete",
       (s, dir) => {
-        import s.implicits._
         val d = docs(s, dir)
-        val afterDelete = TextOps.subtractBm25State(
-          TextOps.bm25State(d, "text", "doc_id"),
-          TextOps.bm25State(d.filter(col("doc_id") % 5 === 2), "text",
-            "doc_id"))
-        TextOps.bm25ScoreWithState(afterDelete,
-            d.filter(col("doc_id") % 5 =!= 2), "text", "doc_id",
-            bm25QueryTerms.toDF("query_id", "term"))
-          .select(col("query_id"), col("doc_id"),
-            round(col("score"), 4).as("score"), col("n_terms_hit"))
+        bm25DeleteServe(bm25State(d), d)
       },
-      Some(s"""WITH toks AS (
-             |  SELECT doc_id, unnest(list_filter(
-             |    string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '),
-             |    x -> x <> '')) AS term
-             |  FROM documents WHERE doc_id % 5 <> 2),
-             |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-             |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
-             |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-             |st AS (SELECT (SELECT count(*) FROM documents
-             |                WHERE doc_id % 5 <> 2)::DOUBLE AS n_docs,
-             |  (SELECT sum(tf) FROM tf)::DOUBLE /
-             |    (SELECT count(*) FROM documents
-             |     WHERE doc_id % 5 <> 2)::DOUBLE AS avgdl),
-             |q(query_id, term) AS (VALUES $bm25QueryValuesSql)
-             |SELECT q.query_id, tf.doc_id,
-             |  round(sum(
-             |    $bm25ScoreSql
-             |  ), 4) AS score,
-             |  count(*) AS n_terms_hit
-             |FROM tf
-             |JOIN q USING (term)
-             |JOIN dfq USING (term)
-             |JOIN dl USING (doc_id), st
-             |GROUP BY 1, 2""".stripMargin)),
+      Some(bm25Sql(" WHERE doc_id % 5 <> 2"))),
 
     // Per-group sketch-threshold cut (p21): the giant-group scale
     // path p20's scaladoc promises — 64-bin score histogram per

@@ -69,11 +69,11 @@ object RelationalQueries {
     memo.getOrElseUpdate((s, dir), build)
   }
 
-  // Semantic-dedup cache: the Batch1 warehouse and the full-rebuild
-  // warehouse share identical plans for every model outside the delta's
-  // reach (b1 differs from src only in the delta sources), so a naive
-  // per-warehouse .cache() caches the same plan twice — CacheManager
-  // "already cached" warnings and orphaned duplicate entries.
+  // The Batch1 warehouse and the full-rebuild warehouse share identical
+  // plans for every model outside the delta's reach (b1 differs from
+  // src only in the delta sources): CacheOnce caches each such plan
+  // once, where a per-warehouse .cache() logs a CacheManager "already
+  // cached" warning for the second.
   private def cacheOnce(df: DataFrame): DataFrame =
     graft.engine.CacheOnce(df)
 

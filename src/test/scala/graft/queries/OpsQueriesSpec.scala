@@ -10,4 +10,17 @@ class OpsQueriesSpec extends AnyFunSuite with Matchers {
     OpsQueries.sharedFixtures should not be empty
     OpsQueries.sharedFixtures.foreach(SparkEntry.queries.keySet should contain(_))
   }
+
+  // An oracle composed from SQL fragments: a fragment interpolated
+  // without its stripMargin would reach DuckDB as a syntax error only.
+  test("no oracle SQL line keeps a stripMargin margin") {
+    val margin = """^\s*\|(?!\|)""".r
+    val unstripped = for {
+      (gate, sql) <- SparkEntry.oracleSql.toSeq
+      line <- sql.linesIterator
+      if margin.findFirstIn(line).isDefined
+    } yield s"$gate: $line"
+    SparkEntry.oracleSql should not be empty
+    unstripped shouldBe empty
+  }
 }
