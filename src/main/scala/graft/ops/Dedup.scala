@@ -344,93 +344,6 @@ object Dedup {
     }
   }
 
-  /** Persist as two parquet tables under `dir` (the n21/n32 layout
-    * discipline): `meta` (format_version + build parameters, read back
-    * BY NAME) and `sigs` — the only corpus-sized piece, distributed
-    * end to end.
-    */
-  def saveMinHashIndex(index: MinHashIndex, dir: String): Unit = {
-    val spark = index.sigs.sparkSession
-    import spark.implicits._
-    Seq((1, index.k, index.bands, index.shingleN, index.seed))
-      .toDF("format_version", "k", "bands", "shingle_n", "seed")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    index.sigs.write.mode("overwrite").parquet(s"$dir/sigs")
-  }
-
-  /** Reload: meta collects one row; signatures stay a lazy scan. */
-  def loadMinHashIndex(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): MinHashIndex = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    require(meta.getAs[Int]("format_version") <= 1,
-      s"unsupported minhash index format_version " +
-        meta.getAs[Int]("format_version"))
-    MinHashIndex(spark.read.parquet(s"$dir/sigs"),
-      meta.getAs[Int]("k"), meta.getAs[Int]("bands"),
-      meta.getAs[Int]("shingle_n"), meta.getAs[Long]("seed"))
-  }
-
-  /** Bucketed index persistence — the d31 production-volume layout for
-    * the MinHash family: the BANDED rows (doc_id, sig, band_idx,
-    * band_hash — the explode paid once, at save time) written
-    * `bucketBy(band_idx, band_hash)` into a catalog table, so the pair
-    * readout's capping aggregate and self-join both read
-    * pre-partitioned data and exchange NOTHING corpus-sized
-    * ([[minhashIndexPairsBanded]]'s plan carries exactly one Exchange,
-    * on the tiny candidate-pair relation for its dedup — spec-pinned).
-    * At production volume that is the difference between a
-    * metadata-priced nightly dedup readout and re-shuffling 8·k bytes
-    * per document per band. The plain `sigs` table persists alongside
-    * (append/delete/screen verbs read it).
-    */
-  def saveMinHashIndexBanded(index: MinHashIndex, dir: String,
-                             tablePrefix: String,
-                             buckets: Int = 64): Unit = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val spark = index.sigs.sparkSession
-    import spark.implicits._
-    Seq((1, index.k, index.bands, index.shingleN, index.seed, buckets))
-      .toDF("format_version", "k", "bands", "shingle_n", "seed",
-        "buckets")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    index.sigs.write.mode("overwrite").parquet(s"$dir/sigs")
-    index.sigs.select(col("doc_id"), col("sig"),
-        posexplode(graft.functions.BandHashes.bandHashes(col("sig"),
-          index.bands)).as(Seq("band_idx", "band_hash")))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "band_idx", "band_hash")
-      .sortBy("band_idx", "band_hash")
-      .option("path", s"$dir/banded")
-      .saveAsTable(IndexIo.bucketedTableName(tablePrefix, "banded", dir))
-  }
-
-  /** Reload the bucketed layout: the rebuilt [[MinHashIndex]] (for the
-    * append/delete/screen verbs) plus the banded catalog table (for
-    * [[minhashIndexPairsBanded]]). The catalog name is session-scoped
-    * under the default in-memory catalog, but the bucketed FILES are
-    * durable — a fresh session re-registers the external table from
-    * `dir/banded` with the saved bucket spec, so the cross-run nightly
-    * readout works without a persistent metastore.
-    */
-  def loadMinHashIndexBanded(spark: org.apache.spark.sql.SparkSession,
-                             dir: String, tablePrefix: String)
-      : (MinHashIndex, DataFrame) = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    require(meta.getAs[Int]("format_version") <= 1,
-      s"unsupported minhash index format_version " +
-        meta.getAs[Int]("format_version"))
-    val banded = IndexIo.resolveBucketedTable(spark,
-      IndexIo.bucketedTableName(tablePrefix, "banded", dir),
-      s"$dir/banded", Seq("band_idx", "band_hash"),
-      meta.getAs[Int]("buckets"),
-      fallbackSchema = Some("doc_id BIGINT, sig ARRAY<BIGINT>, " +
-        "band_idx INT, band_hash BIGINT"))
-    (MinHashIndex(spark.read.parquet(s"$dir/sigs"),
-        meta.getAs[Int]("k"), meta.getAs[Int]("bands"),
-        meta.getAs[Int]("shingle_n"), meta.getAs[Long]("seed")),
-      banded)
-  }
-
   /** The pair readout over a PRE-BANDED bucketed table: identical
     * answers to [[minhashIndexPairs]], but the capping aggregate and
     * the bucket self-join inherit the on-disk partitioning — zero

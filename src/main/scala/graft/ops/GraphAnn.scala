@@ -681,216 +681,6 @@ object GraphAnn {
         col("e.score").as("sim"), col("n_visited"))
   }
 
-  /** Persist a PQ-compressed graph index: the [[saveGraphIndex]]
-    * layout plus a `codebook` table; nodes carry codes, never floats —
-    * what lands on disk is exactly the m-bytes-per-vector serve state.
-    */
-  def saveGraphPqIndex(index: GraphPqIndex, dir: String): Unit = {
-    val spark = index.nodes.sparkSession
-    import spark.implicits._
-    // rotated indexes write format_version 2: a pre-r11 reader would
-    // otherwise load the rotated codes and serve UNROTATED queries
-    // against them — silently garbage ADC ranks, the exact mismatch
-    // the threaded rotation exists to prevent
-    val fmt = if (index.rotation.isDefined) 2 else 1
-    Seq((fmt, index.cells.length, index.m, index.ks, index.dim,
-        index.rotation.isDefined, index.degree, index.crossDegree))
-      .toDF("format_version", "nlist", "m", "ks", "dim", "has_rotation",
-        "degree", "cross_degree")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    IndexIo.saveVectors(spark, s"$dir/cells", "cell_id", "centroid",
-      index.cells)
-    IndexIo.saveVectors(spark, s"$dir/codebook", "sub_id", "entries",
-      index.codebook)
-    index.rotation.foreach(IndexIo.saveRotation(spark, dir, _))
-    index.entries.write.mode("overwrite").parquet(s"$dir/entries")
-    index.nodes.write.mode("overwrite").parquet(s"$dir/nodes")
-  }
-
-  def loadGraphPqIndex(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): GraphPqIndex = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    require(meta.getAs[Int]("format_version") <= 2,
-      s"unsupported graph-pq index format_version " +
-        meta.getAs[Int]("format_version"))
-    val cells = IndexIo.loadVectors(spark, s"$dir/cells", "cell_id", "centroid")
-    val cb = IndexIo.loadVectors(spark, s"$dir/codebook", "sub_id", "entries")
-    // by-name with schema probe: pre-r11 metas have no has_rotation
-    val rotation =
-      if (meta.schema.fieldNames.contains("has_rotation") &&
-          meta.getAs[Boolean]("has_rotation"))
-        Some(IndexIo.loadRotation(spark, dir))
-      else None
-    // by-name with schema probe: older metas have no degree columns —
-    // 0 (unknown) skips the expansion budget guard for them
-    def intOr0(f: String): Int =
-      if (meta.schema.fieldNames.contains(f)) meta.getAs[Int](f) else 0
-    GraphPqIndex(spark.read.parquet(s"$dir/nodes"),
-      spark.read.parquet(s"$dir/entries"), cells, cb,
-      meta.getAs[Int]("m"), meta.getAs[Int]("ks"), meta.getAs[Int]("dim"),
-      rotation, intOr0("degree"), intOr0("cross_degree"))
-  }
-
-  /** Persist the index as four parquet tables under `dir` (the n21
-    * IVF-PQ layout discipline): `meta` (format_version + build
-    * parameters, read back BY NAME), `cells`, `entries`, `nodes`. The
-    * node table — the only corpus-sized piece — stays distributed end
-    * to end; build once, reload and serve forever.
-    */
-  /** The bounded artifacts (meta/cells/entries) both flat save
-    * layouts share — one writer so a build-param addition cannot
-    * silently fork the plain and bucketed flavors (the
-    * saveIvfPqArtifacts discipline).
-    */
-  private def saveGraphArtifacts(index: GraphIndex, dir: String,
-                                 buckets: Option[Int]): Unit = {
-    val spark = index.nodes.sparkSession
-    import spark.implicits._
-    // alpha rides as NaN-for-None (parquet-friendly; read back by
-    // name, and a pre-r10 meta without the column loads as None).
-    // α-pruned indexes write format_version 2: a pre-r10 READER
-    // (version <= 1, reads by name) would load the pruned edges
-    // without error and then append under the kNN merge rule —
-    // silently breaking the pruned index's rebuild-equivalence
-    // invariant. The version bump turns that into a fail-fast; plain
-    // kNN indexes stay at 1 for backward compatibility.
-    val fmt = if (index.alpha.isDefined) 2 else 1
-    Seq((fmt, index.cells.length, index.degree, index.crossDegree,
-        index.entriesPerCell, index.alpha.getOrElse(Double.NaN),
-        index.poolSize, buckets.getOrElse(0)))
-      .toDF("format_version", "nlist", "degree", "cross_degree",
-        "entries_per_cell", "alpha", "pool_size", "buckets")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    IndexIo.saveVectors(spark, s"$dir/cells", "cell_id", "centroid",
-      index.cells)
-    index.entries.write.mode("overwrite").parquet(s"$dir/entries")
-  }
-
-  def saveGraphIndex(index: GraphIndex, dir: String): Unit = {
-    saveGraphArtifacts(index, dir, None)
-    index.nodes.write.mode("overwrite").parquet(s"$dir/nodes")
-  }
-
-  /** Meta-row-driven reload shared by the plain and bucketed loaders
-    * (one meta read each). */
-  private def loadGraphIndexFrom(spark: org.apache.spark.sql.SparkSession,
-                                 dir: String,
-                                 meta: org.apache.spark.sql.Row,
-                                 nodes: DataFrame,
-                                 entriesOverride: Option[DataFrame] =
-                                   None): GraphIndex = {
-    require(meta.getAs[Int]("format_version") <= 2,
-      s"unsupported graph index format_version " +
-        meta.getAs[Int]("format_version"))
-    val cells = IndexIo.loadVectors(spark, s"$dir/cells", "cell_id", "centroid")
-    val hasAlpha = meta.schema.fieldNames.contains("alpha")
-    val alpha = if (hasAlpha && !meta.getAs[Double]("alpha").isNaN)
-      Some(meta.getAs[Double]("alpha")) else None
-    val poolSize = if (hasAlpha) meta.getAs[Int]("pool_size") else 0
-    GraphIndex(nodes,
-      entriesOverride.getOrElse(spark.read.parquet(s"$dir/entries")),
-      cells,
-      meta.getAs[Int]("degree"), meta.getAs[Int]("cross_degree"),
-      meta.getAs[Int]("entries_per_cell"), alpha, poolSize)
-  }
-
-  /** Reload a persisted index: bounded artifacts collect to the
-    * driver, the node table is a lazy parquet scan.
-    */
-  def loadGraphIndex(spark: org.apache.spark.sql.SparkSession,
-                     dir: String): GraphIndex = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    loadGraphIndexFrom(spark, dir, meta,
-      spark.read.parquet(s"$dir/nodes"))
-  }
-
-  /** Persist with the node table BUCKETED on n_id — the d31/d35
-    * production-volume layout applied to the graph tier: the serve's
-    * per-hop expansion (`frontier ⋈ nodes on n_id`) and candidate
-    * scoring both hash-join the corpus side on n_id, so in the
-    * shuffle-hash regime (million-query offline batches) a bucketed
-    * node scan arrives PRE-PARTITIONED and only the frontier/candidate
-    * side exchanges — per hop, per serve (gate n53 pins serve
-    * equality across layouts; the one-Exchange-per-hop plan is
-    * spec-pinned). The broadcast regime never exchanges the corpus
-    * anyway; bucketing is the same win for the append/delete verbs'
-    * n_id semi-joins. Catalog requirement and cross-session
-    * re-registration exactly as the substr/MinHash bucketed layouts.
-    */
-  def saveGraphIndexBucketed(index: GraphIndex, dir: String,
-                             tablePrefix: String,
-                             buckets: Int = 64): Unit = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    saveGraphArtifacts(index, dir, Some(buckets))
-    index.nodes.write.mode("overwrite")
-      .bucketBy(buckets, "n_id").sortBy("n_id")
-      .option("path", s"$dir/nodes")
-      .saveAsTable(IndexIo.bucketedTableName(tablePrefix, "nodes", dir))
-  }
-
-  /** Reload the bucketed layout; the catalog name is session-scoped
-    * under the default in-memory catalog but the bucketed FILES are
-    * durable — a fresh session re-registers the external table. (The
-    * plain [[loadGraphIndex]] also reads a bucketed dir correctly —
-    * it just loses the exchange-free property.)
-    */
-  def loadGraphIndexBucketed(spark: org.apache.spark.sql.SparkSession,
-                             dir: String, tablePrefix: String)
-      : GraphIndex = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    loadGraphIndexFrom(spark, dir, meta,
-      IndexIo.resolveBucketedTable(spark,
-        IndexIo.bucketedTableName(tablePrefix, "nodes", dir),
-        s"$dir/nodes", Seq("n_id"), meta.getAs[Int]("buckets")))
-  }
-
-  /** Persist a whole sharded graph deployment as ONE artifact: each
-    * shard at `dir/shard_<i>` (the [[saveGraphIndex]] layout) plus
-    * the FROZEN cell→shard routing map at `dir/cell_map`
-    * ([[IndexIo.saveCellMap]]) — the map is serving state a restart
-    * cannot recover from shard contents after drift, so the at-rest
-    * deployment carries it. Reload with [[loadGraphShards]] and every
-    * routed verb (scatter serve, routed append/delete, rebalance)
-    * picks up where the fleet left off.
-    */
-  def saveGraphShards(shards: Seq[GraphIndex], cellMap: Array[Int],
-                      dir: String): Unit = {
-    require(shards.nonEmpty, "saveGraphShards: no shards")
-    requireSharedCells("saveGraphShards", shards.map(_.cells))
-    IndexIo.requireCellMap("saveGraphShards", "cellMap", cellMap,
-      shards.head.cells.length, shards.length)
-    // disjoint per-shard directories: independent driver-sequenced
-    // write chains — overlap them on the shared bounded pool
-    IndexIo.runConcurrently(shards.zipWithIndex, shards.length) {
-      case (s, i) => saveGraphIndex(s, s"$dir/shard_$i")
-    }
-    IndexIo.saveCellMap(shards.head.nodes.sparkSession,
-      s"$dir/cell_map", cellMap, shards.length)
-  }
-
-  /** Reload a [[saveGraphShards]] deployment: (shards, cell→shard
-    * map). A drift-emptied shard reloads with empty node/entry tables
-    * under the shared artifacts ([[IndexIo.readOrEmpty]]); the
-    * embedding fallback type is the engine's production `float` —
-    * only an EMPTY table ever takes it.
-    */
-  def loadGraphShards(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): (Seq[GraphIndex], Array[Int]) = {
-    val (map, nShards) = IndexIo.loadCellMap(spark, s"$dir/cell_map")
-    // per-shard loads are independent driver-sequenced chains (footer
-    // reads + bounded artifact collects) — overlap them
-    (IndexIo.runConcurrently(0 until nShards, nShards) { i =>
-      val d = s"$dir/shard_$i"
-      val meta = spark.read.parquet(s"$d/meta").head()
-      loadGraphIndexFrom(spark, d, meta,
-        IndexIo.readOrEmpty(spark, s"$d/nodes",
-          "n_id BIGINT, emb ARRAY<FLOAT>, cell INT, cell2 INT, " +
-            "neighbors ARRAY<BIGINT>"),
-        entriesOverride = Some(IndexIo.readOrEmpty(spark,
-          s"$d/entries", "cell INT, entry_id BIGINT")))
-    }, map)
-  }
-
   /** Append a batch WITHOUT touching unaffected nodes, yet EXACTLY
     * rebuild-equivalent (gate n33 pins index equality with a from-
     * scratch build over the union). Under the α-prune rule, or on a
@@ -2570,69 +2360,6 @@ object GraphAnn {
       queries, floats, k)
   }
 
-  /** Persist the layered PQ index: the [[saveHnswIndex]] layout plus
-    * codebook and (when rotated) the OPQ model tables; nodes carry
-    * codes, never floats — what lands on disk is exactly the
-    * m-bytes-per-vector serve state. Rotated indexes write
-    * format_version 2 (the [[saveGraphPqIndex]] contract: a reader
-    * that ignored the rotation would serve unrotated queries against
-    * rotated codes — silently garbage ranks).
-    */
-  def saveHnswPqIndex(index: HnswPqIndex, dir: String): Unit = {
-    val spark = index.nodes.sparkSession
-    import spark.implicits._
-    val fmt = if (index.rotation.isDefined) 2 else 1
-    Seq((fmt, index.cells.length, index.m, index.ks, index.dim,
-        index.levelFanout, index.maxLevel, index.rotation.isDefined,
-        index.upperFloats.isDefined))
-      .toDF("format_version", "nlist", "m", "ks", "dim", "level_fanout",
-        "max_level", "has_rotation", "has_upper_floats")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    IndexIo.saveVectors(spark, s"$dir/cells", "cell_id", "centroid",
-      index.cells)
-    IndexIo.saveVectors(spark, s"$dir/codebook", "sub_id", "entries",
-      index.codebook)
-    index.rotation.foreach(IndexIo.saveRotation(spark, dir, _))
-    index.nodes.write.mode("overwrite").parquet(s"$dir/nodes")
-    index.adj.write.mode("overwrite").parquet(s"$dir/adj")
-    // the upper-layer float table (n/M rows) rides along: dropping it
-    // would only degrade the descent back to all-ADC, so no format
-    // bump — readers that find it serve the float-entry walk
-    index.upperFloats.foreach(_.write.mode("overwrite")
-      .parquet(s"$dir/upper_floats"))
-  }
-
-  /** Reload a persisted layered PQ index: bounded artifacts collect to
-    * the driver, node and adjacency tables stay lazy scans.
-    */
-  def loadHnswPqIndex(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): HnswPqIndex = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    require(meta.getAs[Int]("format_version") <= 2,
-      s"unsupported hnsw-pq index format_version " +
-        meta.getAs[Int]("format_version"))
-    val cells = IndexIo.loadVectors(spark, s"$dir/cells", "cell_id",
-      "centroid")
-    val cb = IndexIo.loadVectors(spark, s"$dir/codebook", "sub_id",
-      "entries")
-    val rotation =
-      if (meta.getAs[Boolean]("has_rotation"))
-        Some(IndexIo.loadRotation(spark, dir))
-      else None
-    // pre-r12 saves carry no upper-float table (and no meta column):
-    // load degrades to the all-ADC descent
-    val upperFloats =
-      if (meta.schema.fieldNames.contains("has_upper_floats") &&
-          meta.getAs[Boolean]("has_upper_floats"))
-        Some(spark.read.parquet(s"$dir/upper_floats"))
-      else None
-    HnswPqIndex(spark.read.parquet(s"$dir/nodes"),
-      spark.read.parquet(s"$dir/adj"), cells, cb,
-      meta.getAs[Int]("m"), meta.getAs[Int]("ks"),
-      meta.getAs[Int]("dim"), meta.getAs[Int]("level_fanout"),
-      meta.getAs[Int]("max_level"), rotation, upperFloats)
-  }
-
   /** HnswIndex is a public case class; resolve a hand-built index's
     * unresolved α-prune pool the way build does (the flat-append
     * lesson: passing 0 through hits the candidate top-k with k = 0).
@@ -2972,154 +2699,4 @@ object GraphAnn {
         max(size(col("neighbors"))).as("max_degree"),
         avg(size(col("neighbors"))).as("avg_degree"))
       .orderBy("layer")
-
-  /** Persist the layered index as four parquet tables under `dir`
-    * (the n21/n32 layout discipline): `meta` (format_version + build
-    * parameters, read back BY NAME), `cells`, `nodes`, `adj`. The
-    * node and adjacency tables — the corpus-sized pieces — stay
-    * distributed end to end.
-    */
-  /** The bounded artifacts (meta/cells) both layered save layouts
-    * share — one writer so a build-param addition cannot silently
-    * fork the plain and bucketed flavors. */
-  private def saveHnswArtifacts(index: HnswIndex, dir: String,
-                                buckets: Option[Int]): Unit = {
-    val spark = index.nodes.sparkSession
-    import spark.implicits._
-    // format_version 2 = STRIDED layer grids: the adjacency's
-    // cell/cell2 ids live on the hnswLayerCells grid, and that grid
-    // changed from a codebook prefix to a stride (the clustered-skew
-    // fix). A v1 artifact's cells are on the PREFIX grid, so the
-    // incremental verbs — which recompute cellsL — would compute
-    // affected sets on the wrong grid with no error; the reader
-    // rejects v1 instead.
-    Seq((2, index.cells.length, index.degree, index.crossDegree,
-        index.levelFanout, index.maxLevel,
-        index.alpha.getOrElse(Double.NaN), index.poolSize,
-        buckets.getOrElse(0)))
-      .toDF("format_version", "nlist", "degree", "cross_degree",
-        "level_fanout", "max_level", "alpha", "pool_size", "buckets")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    IndexIo.saveVectors(spark, s"$dir/cells", "cell_id", "centroid",
-      index.cells)
-  }
-
-  def saveHnswIndex(index: HnswIndex, dir: String): Unit = {
-    saveHnswArtifacts(index, dir, None)
-    index.nodes.write.mode("overwrite").parquet(s"$dir/nodes")
-    index.adj.write.mode("overwrite").parquet(s"$dir/adj")
-  }
-
-  /** Meta-row-driven reload shared by the plain and bucketed loaders
-    * (one meta read each). */
-  private def loadHnswIndexFrom(spark: org.apache.spark.sql.SparkSession,
-                                dir: String,
-                                meta: org.apache.spark.sql.Row,
-                                nodes: DataFrame, adj: DataFrame)
-      : HnswIndex = {
-    val fmt = meta.getAs[Int]("format_version")
-    require(fmt != 1,
-      "hnsw index format_version 1 predates the strided layer grids: " +
-        "its adjacency cell/cell2 ids live on the PREFIX grid while " +
-        "the append/delete/merge verbs recompute cells on the STRIDED " +
-        "grid — their affected sets would be silently wrong. Rebuild " +
-        "the index (or re-save it from a live HnswIndex) first")
-    require(fmt <= 2, s"unsupported hnsw index format_version $fmt")
-    val cells = IndexIo.loadVectors(spark, s"$dir/cells", "cell_id",
-      "centroid")
-    val alpha = if (meta.getAs[Double]("alpha").isNaN) None
-      else Some(meta.getAs[Double]("alpha"))
-    HnswIndex(nodes, adj, cells,
-      meta.getAs[Int]("degree"), meta.getAs[Int]("cross_degree"),
-      meta.getAs[Int]("level_fanout"), meta.getAs[Int]("max_level"),
-      alpha, meta.getAs[Int]("pool_size"))
-  }
-
-  /** Reload a persisted layered index: bounded artifacts collect to
-    * the driver, node and adjacency tables are lazy parquet scans.
-    */
-  def loadHnswIndex(spark: org.apache.spark.sql.SparkSession,
-                    dir: String): HnswIndex = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    loadHnswIndexFrom(spark, dir, meta,
-      spark.read.parquet(s"$dir/nodes"),
-      spark.read.parquet(s"$dir/adj"))
-  }
-
-  /** [[saveGraphIndexBucketed]] at the layered tier: nodes AND adj
-    * bucketed on n_id — the descent's per-layer expansion joins adj on
-    * n_id and its scoring joins nodes on n_id, so in the shuffle-hash
-    * regime both corpus-sized relations arrive pre-partitioned and
-    * only the frontier exchanges, per hop, per layer (gate n53;
-    * per-layer `filter(layer = l)` preserves the bucket partitioning).
-    */
-  def saveHnswIndexBucketed(index: HnswIndex, dir: String,
-                            tablePrefix: String,
-                            buckets: Int = 64): Unit = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    saveHnswArtifacts(index, dir, Some(buckets))
-    index.nodes.write.mode("overwrite")
-      .bucketBy(buckets, "n_id").sortBy("n_id")
-      .option("path", s"$dir/nodes")
-      .saveAsTable(IndexIo.bucketedTableName(tablePrefix, "nodes", dir))
-    index.adj.write.mode("overwrite")
-      .bucketBy(buckets, "n_id").sortBy("n_id")
-      .option("path", s"$dir/adj")
-      .saveAsTable(IndexIo.bucketedTableName(tablePrefix, "adj", dir))
-  }
-
-  /** Reload the bucketed layered layout (cross-session re-registration
-    * as in every bucketed family; the plain [[loadHnswIndex]] also
-    * reads these dirs, minus the exchange-free property).
-    */
-  def loadHnswIndexBucketed(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, tablePrefix: String)
-      : HnswIndex = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    val buckets = meta.getAs[Int]("buckets")
-    loadHnswIndexFrom(spark, dir, meta,
-      IndexIo.resolveBucketedTable(spark,
-        IndexIo.bucketedTableName(tablePrefix, "nodes", dir),
-        s"$dir/nodes", Seq("n_id"), buckets),
-      IndexIo.resolveBucketedTable(spark,
-        IndexIo.bucketedTableName(tablePrefix, "adj", dir),
-        s"$dir/adj", Seq("n_id"), buckets))
-  }
-
-  /** [[saveGraphShards]] at the layered tier: per-shard
-    * [[saveHnswIndex]] layouts plus the frozen routing map. */
-  def saveHnswShards(shards: Seq[HnswIndex], cellMap: Array[Int],
-                     dir: String): Unit = {
-    require(shards.nonEmpty, "saveHnswShards: no shards")
-    requireSharedCells("saveHnswShards", shards.map(_.cells))
-    IndexIo.requireCellMap("saveHnswShards", "cellMap", cellMap,
-      shards.head.cells.length, shards.length)
-    // disjoint per-shard directories: independent driver-sequenced
-    // write chains — overlap them on the shared bounded pool
-    IndexIo.runConcurrently(shards.zipWithIndex, shards.length) {
-      case (s, i) => saveHnswIndex(s, s"$dir/shard_$i")
-    }
-    IndexIo.saveCellMap(shards.head.nodes.sparkSession,
-      s"$dir/cell_map", cellMap, shards.length)
-  }
-
-  /** Reload a [[saveHnswShards]] deployment: (shards, cell→shard
-    * map); drift-emptied shards reload with empty tables (the
-    * [[loadGraphShards]] note). */
-  def loadHnswShards(spark: org.apache.spark.sql.SparkSession,
-                     dir: String): (Seq[HnswIndex], Array[Int]) = {
-    val (map, nShards) = IndexIo.loadCellMap(spark, s"$dir/cell_map")
-    // per-shard loads are independent driver-sequenced chains —
-    // overlap them
-    (IndexIo.runConcurrently(0 until nShards, nShards) { i =>
-      val d = s"$dir/shard_$i"
-      val meta = spark.read.parquet(s"$d/meta").head()
-      loadHnswIndexFrom(spark, d, meta,
-        IndexIo.readOrEmpty(spark, s"$d/nodes",
-          "n_id BIGINT, emb ARRAY<FLOAT>, cell INT, level INT"),
-        IndexIo.readOrEmpty(spark, s"$d/adj",
-          "layer INT, n_id BIGINT, cell INT, cell2 INT, " +
-            "neighbors ARRAY<BIGINT>"))
-    }, map)
-  }
 }

@@ -1,26 +1,432 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, count, count_distinct, element_at, lit}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, count, count_distinct, lit,
+  posexplode}
 
-/** Shared persistence scaffolding for the index families' bounded
-  * vector tables (coarse cells, PQ codebooks): one writer/reader pair
-  * instead of a copy per index flavor, so a layout change lands
-  * everywhere at once. Tables are tiny (nlist / m rows); the ordered
-  * collect-back is the codebook discipline.
+/** The one on-disk format of every persisted index artifact.
+  *
+  * An artifact directory holds a one-row `meta` table (`format_version`
+  * plus the kind's build parameters, always read back BY NAME), the
+  * kind's bounded vector tables (coarse cells, PQ codebook, OPQ
+  * rotation: collected back in id order), and its distributed tables.
+  * A [[Kind]] declares only those pieces; this object alone writes and
+  * reads them, fails fast on a version it cannot read, and owns the
+  * four layouts:
+  *  - plain: every table a parquet directory ([[Kind.save]] /
+  *    [[Kind.load]]);
+  *  - bucketed: tables with bucket keys written `bucketBy` into catalog
+  *    tables, re-registered from their files by a fresh session
+  *    ([[Kind.saveBucketed]] / [[Kind.loadBucketed]]);
+  *  - cell-partitioned: a table with a partition column written one
+  *    directory per value, read back by the plain load through
+  *    partition discovery ([[Kind.savePartitioned]]);
+  *  - sharded: every shard at `shard_<i>` in the cell-partitioned
+  *    layout plus the FROZEN cell→shard map at `cell_map`
+  *    ([[Kind.saveShards]] / [[Kind.loadShards]]).
   */
 private[graft] object IndexIo {
+  import Dedup.MinHashIndex
+  import GraphAnn.{GraphIndex, GraphPqIndex, HnswIndex, HnswPqIndex}
+  import Similarity.IvfPqIndex
+  import SuffixArray.SubstrIndex
+  import TextOps.UnigramModel
 
-  def saveVectors(spark: SparkSession, dir: String, idCol: String,
-                  vecCol: String, vecs: Array[Array[Double]]): Unit = {
+  /** One distributed table of a kind: `keys` are its bucket columns in
+    * the bucketed layout, `partition` its directory column in the
+    * cell-partitioned one, `empty` the schema a committed EMPTY
+    * relation reloads with (absent: an empty relation fails to load),
+    * and a `derived` table is written by the bucketed layout only.
+    * Tables with none of these need no declaration.
+    */
+  final case class Table(name: String, keys: Seq[String] = Nil,
+                         partition: Option[String] = None,
+                         empty: Option[String] = None,
+                         derived: Boolean = false)
+
+  /** A saved artifact as its kind's decode sees it: meta fields by
+    * name, tables and vectors read on demand in the artifact's layout.
+    */
+  final class Stored private[IndexIo] (meta: Row,
+                                       vecs: String => Array[Array[Double]],
+                                       tables: String => DataFrame) {
+    def version: Int = opt[Int]("format_version").getOrElse(0)
+    def apply[T](field: String): T = meta.getAs[T](field)
+    /** A field older writers did not stamp. */
+    def opt[T](field: String): Option[T] =
+      if (meta.schema.fieldNames.contains(field)) Some(meta.getAs[T](field))
+      else None
+    def table(name: String): DataFrame = tables(name)
+    def vectors(name: String): Array[Array[Double]] = vecs(name)
+    def rotation: Embeddings.PcaModel = Embeddings.PcaModel(
+      vecs("rotation_mean").head, vecs("rotation_eigenvalues").head,
+      vecs("rotation_basis"))
+  }
+
+  /** An artifact kind: `name` for messages, `version` the newest
+    * `format_version` this build reads (a meta stamped higher fails
+    * fast; a meta with no stamp is version 0).
+    */
+  abstract class Kind[I](val name: String, val version: Int) {
+    def meta(i: I): Seq[(String, Any)]
+    def frames(i: I): Seq[(String, DataFrame)]
+    def decode(a: Stored): I
+    /** The version a save stamps: older readers stay able to read the
+      * shapes that did not change. */
+    def stamp(i: I): Int = version
+    def vectors(i: I): Seq[(String, Array[Array[Double]])] = Nil
+    def tables: Seq[Table] = Nil
+
+    final def save(i: I, dir: String): Unit = write(i, dir, None, false)
+
+    final def load(spark: SparkSession, dir: String): I =
+      decode(open(spark, dir, None))
+
+    /** The bucketed layout: every table with bucket keys is written
+      * `bucketBy(buckets, keys).sortBy(keys)` into the catalog table
+      * [[bucketedTableName]](tablePrefix, table, dir), so reads that
+      * join or aggregate on those keys exchange nothing corpus-sized.
+      * The meta's `buckets` field (stamped 0 by the graph kinds' plain
+      * saves) carries the count.
+      */
+    final def saveBucketed(i: I, dir: String, tablePrefix: String,
+                           buckets: Int = 64): Unit = {
+      require(buckets >= 1, s"buckets must be >= 1, got $buckets")
+      write(i, dir, Some((tablePrefix, buckets)), false)
+    }
+
+    /** Reload the bucketed layout: the index plus its derived tables by
+      * name. The plain [[load]] reads the same directory, minus the
+      * bucket partitioning.
+      */
+    final def loadBucketed(spark: SparkSession, dir: String,
+                           tablePrefix: String)
+        : (I, Map[String, DataFrame]) = {
+      val a = open(spark, dir, Some(tablePrefix))
+      (decode(a), tables.filter(_.derived)
+        .map(t => t.name -> a.table(t.name)).toMap)
+    }
+
+    final def savePartitioned(i: I, dir: String): Unit =
+      write(i, dir, None, true)
+
+    /** Persist a sharded deployment as ONE artifact: the map is serving
+      * state a restart cannot recover from shard contents after drift,
+      * so it rides along ([[saveCellMap]]); the shard writes overlap on
+      * the bounded pool.
+      */
+    final def saveShards(shards: Seq[I], cellMap: Array[Int],
+                         dir: String): Unit = {
+      require(shards.nonEmpty, s"saveShards: no $name shards")
+      val shared = vectors(shards.head)
+      shards.tail.foreach(s => vectors(s).zip(shared).foreach {
+        case ((n, v), (_, w)) => require(v.length == w.length &&
+          v.zip(w).forall { case (x, y) => x.sameElements(y) },
+          s"saveShards: $name shards differ in $n — sharded builds " +
+            "must share ONE frozen codebook")
+      })
+      requireCellMap("saveShards", "cellMap", cellMap,
+        shared.toMap.apply("cells").length, shards.length)
+      runConcurrently(shards.zipWithIndex, shards.length) {
+        case (s, i) => write(s, s"$dir/shard_$i", None, true)
+      }
+      saveCellMap(sparkOf(shards.head), s"$dir/cell_map", cellMap,
+        shards.length)
+    }
+
+    /** Reload a [[saveShards]] deployment: (shards, cell→shard map). A
+      * drift-emptied shard reloads with empty tables (the declared
+      * `empty` schemas).
+      */
+    final def loadShards(spark: SparkSession, dir: String)
+        : (Seq[I], Array[Int]) = {
+      val (map, nShards) = loadCellMap(spark, s"$dir/cell_map")
+      (runConcurrently(0 until nShards, nShards)(i =>
+        load(spark, s"$dir/shard_$i")), map)
+    }
+
+    private def spec(n: String): Table =
+      tables.find(_.name == n).getOrElse(Table(n))
+
+    private def sparkOf(i: I): SparkSession = frames(i).head._2.sparkSession
+
+    private def write(i: I, dir: String, bucketed: Option[(String, Int)],
+                      partitioned: Boolean): Unit = {
+      val spark = sparkOf(i)
+      val fields = ("format_version" -> stamp(i)) +: meta(i)
+      spark.range(0, 1, 1, 1).select(bucketed.fold(fields)(b =>
+          fields.filterNot(_._1 == "buckets") :+ ("buckets" -> b._2))
+        .map { case (n, v) => lit(v).as(n) }: _*)
+        .write.mode("overwrite").parquet(s"$dir/meta")
+      vectors(i).foreach { case (n, v) =>
+        val (id, c) = vectorCols(n)
+        saveVectors(spark, s"$dir/$n", id, c, v)
+      }
+      for ((n, df) <- frames(i); t = spec(n)
+           if bucketed.isDefined || !t.derived) {
+        val path = s"$dir/$n"
+        (bucketed, t.partition) match {
+          case (Some((prefix, b)), _) if t.keys.nonEmpty =>
+            df.write.mode("overwrite")
+              .bucketBy(b, t.keys.head, t.keys.tail: _*)
+              .sortBy(t.keys.head, t.keys.tail: _*)
+              .option("path", path)
+              .saveAsTable(bucketedTableName(prefix, n, dir))
+          // one packed file per directory: the per-file overhead would
+          // otherwise dominate a probed read
+          case (_, Some(c)) if partitioned =>
+            df.repartition(col(c)).write.mode("overwrite").partitionBy(c)
+              .parquet(path)
+          case _ => df.write.mode("overwrite").parquet(path)
+        }
+      }
+    }
+
+    private def open(spark: SparkSession, dir: String,
+                     tablePrefix: Option[String]): Stored = {
+      val meta = spark.read.parquet(s"$dir/meta").head()
+      def vecs(n: String) = {
+        val (id, c) = vectorCols(n)
+        loadVectors(spark, s"$dir/$n", id, c)
+      }
+      def table(n: String): DataFrame = {
+        val t = spec(n)
+        val path = s"$dir/$n"
+        tablePrefix match {
+          case Some(prefix) if t.keys.nonEmpty =>
+            resolveBucketedTable(spark, bucketedTableName(prefix, n, dir),
+              path, t.keys, meta.getAs[Int]("buckets"),
+              fallbackSchema = t.empty)
+          case _ => t.empty.fold(spark.read.parquet(path))(
+            readOrEmpty(spark, path, _))
+        }
+      }
+      val a = new Stored(meta, vecs, table)
+      require(a.version <= version,
+        s"unsupported $name format_version ${a.version} (this build " +
+          s"reads up to $version) — rebuild the index")
+      a
+    }
+  }
+
+  private def vectorCols(table: String): (String, String) = table match {
+    case "cells" => ("cell_id", "centroid")
+    case "codebook" => ("sub_id", "entries")
+    case _ => ("row_id", "row")
+  }
+
+  /** The OPQ/PCA rotation tables of a rotated index. */
+  private def rotationVectors(r: Option[Embeddings.PcaModel]) =
+    r.toSeq.flatMap(r => Seq("rotation_basis" -> r.basis,
+      "rotation_mean" -> Array(r.mean),
+      "rotation_eigenvalues" -> Array(r.eigenvalues)))
+
+  private val graphNodes = "n_id BIGINT, emb ARRAY<FLOAT>, cell INT, " +
+    "cell2 INT, neighbors ARRAY<BIGINT>"
+  private val hnswNodes = "n_id BIGINT, emb ARRAY<FLOAT>, cell INT, level INT"
+  private val hnswAdj = "layer INT, n_id BIGINT, cell INT, cell2 INT, " +
+    "neighbors ARRAY<BIGINT>"
+
+  /** Flat graph index. Version 2 = α-pruned: a reader of version 1
+    * would append under the kNN merge rule and silently break the
+    * pruned index's rebuild-equivalence, so plain kNN indexes stay 1.
+    * `alpha` is NaN for None; metas older than α carry neither `alpha`
+    * nor `pool_size`.
+    */
+  object Graph extends Kind[GraphIndex]("graph index", 2) {
+    override def stamp(i: GraphIndex) = if (i.alpha.isDefined) 2 else 1
+    def meta(i: GraphIndex) = Seq("nlist" -> i.cells.length,
+      "degree" -> i.degree, "cross_degree" -> i.crossDegree,
+      "entries_per_cell" -> i.entriesPerCell,
+      "alpha" -> i.alpha.getOrElse(Double.NaN), "pool_size" -> i.poolSize,
+      "buckets" -> 0)
+    override def vectors(i: GraphIndex) = Seq("cells" -> i.cells)
+    override val tables = Seq(
+      Table("entries", empty = Some("cell INT, entry_id BIGINT")),
+      Table("nodes", Seq("n_id"), empty = Some(graphNodes)))
+    def frames(i: GraphIndex) = Seq("entries" -> i.entries,
+      "nodes" -> i.nodes)
+    def decode(a: Stored) = GraphIndex(a.table("nodes"),
+      a.table("entries"), a.vectors("cells"), a[Int]("degree"),
+      a[Int]("cross_degree"), a[Int]("entries_per_cell"),
+      a.opt[Double]("alpha").filterNot(_.isNaN),
+      a.opt[Int]("pool_size").getOrElse(0))
+  }
+
+  /** PQ graph index: nodes carry codes, never floats. Version 2 =
+    * rotated: a reader that ignored the rotation would serve unrotated
+    * queries against rotated codes. Older metas lack `has_rotation`
+    * and the degree columns (0 = unknown skips the expansion budget
+    * guard).
+    */
+  object GraphPq extends Kind[GraphPqIndex]("graph-pq index", 2) {
+    override def stamp(i: GraphPqIndex) = if (i.rotation.isDefined) 2 else 1
+    def meta(i: GraphPqIndex) = Seq("nlist" -> i.cells.length,
+      "m" -> i.m, "ks" -> i.ks, "dim" -> i.dim,
+      "has_rotation" -> i.rotation.isDefined, "degree" -> i.degree,
+      "cross_degree" -> i.crossDegree)
+    override def vectors(i: GraphPqIndex) = Seq("cells" -> i.cells,
+      "codebook" -> i.codebook) ++ rotationVectors(i.rotation)
+    def frames(i: GraphPqIndex) = Seq("entries" -> i.entries,
+      "nodes" -> i.nodes)
+    def decode(a: Stored) = GraphPqIndex(a.table("nodes"),
+      a.table("entries"), a.vectors("cells"), a.vectors("codebook"),
+      a[Int]("m"), a[Int]("ks"), a[Int]("dim"),
+      if (a.opt[Boolean]("has_rotation").contains(true)) Some(a.rotation)
+      else None,
+      a.opt[Int]("degree").getOrElse(0),
+      a.opt[Int]("cross_degree").getOrElse(0))
+  }
+
+  /** Layered index. Version 2 = STRIDED layer grids: a version-1
+    * artifact's adjacency cells live on the old PREFIX grid, where the
+    * incremental verbs would compute wrong affected sets with no error.
+    */
+  object Hnsw extends Kind[HnswIndex]("hnsw index", 2) {
+    def meta(i: HnswIndex) = Seq("nlist" -> i.cells.length,
+      "degree" -> i.degree, "cross_degree" -> i.crossDegree,
+      "level_fanout" -> i.levelFanout, "max_level" -> i.maxLevel,
+      "alpha" -> i.alpha.getOrElse(Double.NaN), "pool_size" -> i.poolSize,
+      "buckets" -> 0)
+    override def vectors(i: HnswIndex) = Seq("cells" -> i.cells)
+    override val tables = Seq(
+      Table("nodes", Seq("n_id"), empty = Some(hnswNodes)),
+      Table("adj", Seq("n_id"), empty = Some(hnswAdj)))
+    def frames(i: HnswIndex) = Seq("nodes" -> i.nodes, "adj" -> i.adj)
+    def decode(a: Stored) = {
+      require(a.version != 1,
+        "hnsw index format_version 1 predates the strided layer grids: " +
+          "its adjacency cell/cell2 ids live on the PREFIX grid while " +
+          "the append/delete/merge verbs recompute cells on the STRIDED " +
+          "grid — their affected sets would be silently wrong. Rebuild " +
+          "the index (or re-save it from a live HnswIndex) first")
+      HnswIndex(a.table("nodes"), a.table("adj"), a.vectors("cells"),
+        a[Int]("degree"), a[Int]("cross_degree"), a[Int]("level_fanout"),
+        a[Int]("max_level"), Some(a[Double]("alpha")).filterNot(_.isNaN),
+        a[Int]("pool_size"))
+    }
+  }
+
+  /** Layered PQ index; version 2 = rotated (the [[GraphPq]] reason).
+    * The upper-layer float table is optional (metas older than it
+    * lack `has_upper_floats`): without it the descent is all-ADC.
+    */
+  object HnswPq extends Kind[HnswPqIndex]("hnsw-pq index", 2) {
+    override def stamp(i: HnswPqIndex) = if (i.rotation.isDefined) 2 else 1
+    def meta(i: HnswPqIndex) = Seq("nlist" -> i.cells.length,
+      "m" -> i.m, "ks" -> i.ks, "dim" -> i.dim,
+      "level_fanout" -> i.levelFanout, "max_level" -> i.maxLevel,
+      "has_rotation" -> i.rotation.isDefined,
+      "has_upper_floats" -> i.upperFloats.isDefined)
+    override def vectors(i: HnswPqIndex) = Seq("cells" -> i.cells,
+      "codebook" -> i.codebook) ++ rotationVectors(i.rotation)
+    def frames(i: HnswPqIndex) = Seq("nodes" -> i.nodes, "adj" -> i.adj) ++
+      i.upperFloats.map("upper_floats" -> _)
+    def decode(a: Stored) = HnswPqIndex(a.table("nodes"),
+      a.table("adj"), a.vectors("cells"), a.vectors("codebook"),
+      a[Int]("m"), a[Int]("ks"), a[Int]("dim"), a[Int]("level_fanout"),
+      a[Int]("max_level"),
+      if (a[Boolean]("has_rotation")) Some(a.rotation) else None,
+      if (a.opt[Boolean]("has_upper_floats").contains(true))
+        Some(a.table("upper_floats"))
+      else None)
+  }
+
+  /** Residual IVF-PQ index. The cell-partitioned layout puts each
+    * inverted list in its own `codes/cell=<c>` directory, so a pruned
+    * serve reads only the probed ones; the plain load discovers the
+    * partitions, so both layouts stamp version 1.
+    */
+  object IvfPq extends Kind[IvfPqIndex]("IVF-PQ index", 1) {
+    def meta(i: IvfPqIndex) = Seq("m" -> i.m, "ks" -> i.ks,
+      "dim" -> i.dim, "nlist" -> i.cells.length)
+    override def vectors(i: IvfPqIndex) = Seq("cells" -> i.cells,
+      "codebook" -> i.codebook)
+    override val tables = Seq(Table("codes", partition = Some("cell"),
+      empty = Some("n_id BIGINT, codes ARRAY<INT>, cell INT")))
+    def frames(i: IvfPqIndex) = Seq("codes" -> i.codes)
+    def decode(a: Stored) = IvfPqIndex(a.vectors("cells"),
+      a.vectors("codebook"), a.table("codes"), a[Int]("m"), a[Int]("ks"),
+      a[Int]("dim"))
+  }
+
+  /** MinHash LSH index. The bucketed layout adds the BANDED rows (the
+    * explode paid once, at save) bucketed on (band_idx, band_hash),
+    * the input of [[Dedup.minhashIndexPairsBanded]].
+    */
+  object MinHash extends Kind[MinHashIndex]("minhash index", 1) {
+    def meta(i: MinHashIndex) = Seq("k" -> i.k, "bands" -> i.bands,
+      "shingle_n" -> i.shingleN, "seed" -> i.seed)
+    override val tables = Seq(Table("banded", Seq("band_idx", "band_hash"),
+      empty = Some("doc_id BIGINT, sig ARRAY<BIGINT>, band_idx INT, " +
+        "band_hash BIGINT"), derived = true))
+    def frames(i: MinHashIndex) = Seq("sigs" -> i.sigs,
+      "banded" -> i.sigs.select(col("doc_id"), col("sig"),
+        posexplode(graft.functions.BandHashes.bandHashes(col("sig"),
+          i.bands)).as(Seq("band_idx", "band_hash"))))
+    def decode(a: Stored) = MinHashIndex(a.table("sigs"), a[Int]("k"),
+      a[Int]("bands"), a[Int]("shingle_n"), a[Long]("seed"))
+  }
+
+  /** Substring index. `dict_pairs` and `keys` may legally be EMPTY
+    * (minLen 2: no doubling rounds; sub-minLen docs: no keys). Version
+    * 2 (dict_pairs also partitioned by width) is no longer written; it
+    * fails the version check and must be rebuilt.
+    */
+  object Substr extends Kind[SubstrIndex]("substr index", 1) {
+    def meta(i: SubstrIndex) = Seq("min_len" -> i.minLen,
+      "target_w" -> i.targetW, "stride" -> i.stride, "max_id" -> i.maxId)
+    override val tables = Seq(
+      Table("dict_pairs", Seq("__r1", "__r2"),
+        empty = Some("__w INT, __r1 BIGINT, __r2 BIGINT, __cls BIGINT")),
+      Table("keys", Seq("__r1", "__r2"),
+        empty = Some("__id BIGINT, __off BIGINT, __r1 BIGINT, __r2 BIGINT")))
+    def frames(i: SubstrIndex) = Seq("dict_chars" -> i.dictChars,
+      "dict_pairs" -> i.dictPairs, "keys" -> i.keys)
+    def decode(a: Stored) = SubstrIndex(a.table("dict_chars"),
+      a.table("dict_pairs"), a.table("keys"), a[Int]("min_len"),
+      a[Int]("target_w"), a[Long]("stride"), a[Long]("max_id"))
+  }
+
+  /** Unigram tokenizer model: counts AND fixed-point costs round-trip,
+    * so a reloaded model segments bit-identically; pieces reload in
+    * sorted order.
+    */
+  object Unigram extends Kind[UnigramModel]("unigram model", 1) {
+    def meta(m: UnigramModel) = Seq("max_piece_len" -> m.maxPieceLen)
+    def frames(m: UnigramModel) = Seq("pieces" ->
+      SparkSession.active.createDataFrame(m.pieces.indices.map(i =>
+        (m.pieces(i), m.counts(i), m.costInt(i)))).toDF("piece", "count",
+        "cost"))
+    def decode(a: Stored) = {
+      val rows = a.table("pieces").orderBy("piece").collect()
+      UnigramModel(rows.map(_.getAs[String]("piece")),
+        rows.map(_.getAs[Long]("count")), rows.map(_.getAs[Long]("cost")),
+        a[Int]("max_piece_len"))
+    }
+  }
+
+  /** BM25 corpus state (term, df, tf; the "" row is the doc-count
+    * sentinel): a nightly refresh loads, merges and saves it without
+    * re-scanning the corpus.
+    */
+  object Bm25 extends Kind[DataFrame]("bm25 state", 1) {
+    def meta(state: DataFrame) = Nil
+    def frames(state: DataFrame) = Seq("state" ->
+      state.select("term", "df", "tf"))
+    def decode(a: Stored) = a.table("state")
+  }
+
+  private def saveVectors(spark: SparkSession, dir: String, idCol: String,
+                          vecCol: String, vecs: Array[Array[Double]]): Unit = {
     import spark.implicits._
     vecs.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
       .toDF(idCol, vecCol)
       .write.mode("overwrite").parquet(dir)
   }
 
-  def loadVectors(spark: SparkSession, dir: String, idCol: String,
-                  vecCol: String): Array[Array[Double]] =
+  private def loadVectors(spark: SparkSession, dir: String, idCol: String,
+                          vecCol: String): Array[Array[Double]] =
     spark.read.parquet(dir).orderBy(idCol).collect()
       .map(r => r.getSeq[Double](r.fieldIndex(vecCol)).toArray)
 
@@ -32,8 +438,9 @@ private[graft] object IndexIo {
     * along because a drifted map may leave the highest shard with no
     * cells — max(shard)+1 would under-count the fleet.
     */
-  def saveCellMap(spark: SparkSession, dir: String, map: Array[Int],
-                  nShards: Int): Unit = {
+  private def saveCellMap(spark: SparkSession, dir: String,
+                          map: Array[Int],
+                          nShards: Int): Unit = {
     requireCellMap("saveCellMap", "cellMap", map, map.length, nShards)
     import spark.implicits._
     map.indices.map(c => (c + 1, map(c), nShards, map.length)).toDF(
@@ -75,28 +482,6 @@ private[graft] object IndexIo {
     requireCellMap("loadCellMap", "cellMap", map, map.length, nShards)
     (map, nShards)
   }
-
-  /** Persist a trained OPQ/PCA rotation under `dir` — ONE layout
-    * (basis/mean/eigenvalues tables) shared by every rotated index
-    * family, so a model-shape change cannot silently diverge between
-    * the flat and layered savers.
-    */
-  def saveRotation(spark: SparkSession, dir: String,
-                   rot: graft.ops.Embeddings.PcaModel): Unit = {
-    saveVectors(spark, s"$dir/rotation_basis", "row_id", "row", rot.basis)
-    saveVectors(spark, s"$dir/rotation_mean", "row_id", "row",
-      Array(rot.mean))
-    saveVectors(spark, s"$dir/rotation_eigenvalues", "row_id", "row",
-      Array(rot.eigenvalues))
-  }
-
-  def loadRotation(spark: SparkSession,
-                   dir: String): graft.ops.Embeddings.PcaModel =
-    graft.ops.Embeddings.PcaModel(
-      loadVectors(spark, s"$dir/rotation_mean", "row_id", "row").head,
-      loadVectors(spark, s"$dir/rotation_eigenvalues", "row_id",
-        "row").head,
-      loadVectors(spark, s"$dir/rotation_basis", "row_id", "row"))
 
   /** Cell→shard map validation shared by every routed verb (movers,
     * routed appends): length must cover the frozen codebook, ids must
@@ -213,7 +598,7 @@ private[graft] object IndexIo {
     * relation is indistinguishable from a crashed write and this guard
     * fails CLOSED (load throws) — re-enable the marker or re-save.
     */
-  private[ops] def relationCommitted(spark: SparkSession,
+  private def relationCommitted(spark: SparkSession,
                              location: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(location, "_SUCCESS")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
@@ -226,7 +611,7 @@ private[graft] object IndexIo {
     * [[resolveBucketedTable]]'s fallback, so both load paths agree on
     * which artifacts are legal.
     */
-  def readOrEmpty(spark: SparkSession, location: String,
+  private def readOrEmpty(spark: SparkSession, location: String,
                   fallbackSchema: String)
       : org.apache.spark.sql.DataFrame =
     try spark.read.parquet(location)
@@ -269,7 +654,6 @@ private[graft] object IndexIo {
   def resolveBucketedTable(spark: SparkSession, table: String,
                            location: String, bucketCols: Seq[String],
                            buckets: Int,
-                           partitionCols: Seq[String] = Nil,
                            fallbackSchema: Option[String] = None)
       : org.apache.spark.sql.DataFrame = {
     // table/prefix strings reach a CREATE TABLE statement verbatim —
@@ -310,18 +694,10 @@ private[graft] object IndexIo {
             fallbackSchema.getOrElse(throw e)
         }
       val cols = bucketCols.mkString(", ")
-      val partClause =
-        if (partitionCols.isEmpty) ""
-        else partitionCols.mkString(" PARTITIONED BY (", ", ", ")")
       val escapedLocation = location.replace("'", "''")
       spark.sql(s"CREATE TABLE $table ($schema) USING parquet" +
-        partClause +
         s" CLUSTERED BY ($cols) SORTED BY ($cols) INTO $buckets BUCKETS " +
         s"LOCATION '$escapedLocation'")
-      // a partitioned external table starts with an empty partition
-      // list — discover the on-disk directories or every read is empty
-      if (partitionCols.nonEmpty)
-        spark.sql(s"MSCK REPAIR TABLE $table")
     }
     spark.table(table)
   }

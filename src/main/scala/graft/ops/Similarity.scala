@@ -1093,7 +1093,7 @@ object Similarity {
     * + residual sub-codebooks) plus the PRE-ENCODED corpus. Building is
     * the expensive pass (assign + encode touch every vector); queries
     * against a built index never re-encode — they probe cells and
-    * ADC-rank stored codes only. [[saveIvfPqIndex]] / [[loadIvfPqIndex]]
+    * ADC-rank stored codes only. [[IndexIo.IvfPq]] save/load
     * round-trip the whole thing through parquet, which is what turns
     * the ANN tier from per-job training into a build-once / query-many
     * production index (FAISS `write_index`/`read_index`).
@@ -1127,58 +1127,6 @@ object Similarity {
         C.centroidResidual(col("embedding"), col("cell"), cellCb), cb, sub))
       .drop("embedding")
     IvfPqIndex(cellCb, cb, codes, m, ks, dim)
-  }
-
-  /** Persist an index as four parquet tables under `dir`: `meta`
-    * (single row of dimensions), `cells` (cell_id, centroid),
-    * `codebook` (sub_id, entries), `codes` (n_id, cell, codes). The
-    * encoded corpus — the only corpus-sized piece — stays distributed
-    * end to end; the trained artifacts are a few KB each. `codes` is
-    * written bucketed by nothing but partitioned as computed, so a
-    * reload scans only (n_id, cell, codes) — 16× less than the floats.
-    */
-  /** The bounded artifacts (meta/cells/codebook) both save layouts
-    * share — one writer so a meta schema change cannot silently fork
-    * the two flavors.
-    */
-  private def saveIvfPqArtifacts(index: IvfPqIndex, dir: String): Unit = {
-    val spark = index.codes.sparkSession
-    import spark.implicits._
-    Seq((1, index.m, index.ks, index.dim, index.cells.length))
-      .toDF("format_version", "m", "ks", "dim", "nlist")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    IndexIo.saveVectors(spark, s"$dir/cells", "cell_id", "centroid",
-      index.cells)
-    IndexIo.saveVectors(spark, s"$dir/codebook", "sub_id", "entries",
-      index.codebook)
-  }
-
-  def saveIvfPqIndex(index: IvfPqIndex, dir: String): Unit = {
-    saveIvfPqArtifacts(index, dir)
-    index.codes.write.mode("overwrite").parquet(s"$dir/codes")
-  }
-
-  /** Reload a persisted index. The trained artifacts (bounded: nlist
-    * and m rows) collect to the driver exactly as a fresh build leaves
-    * them; the encoded corpus is a lazy parquet scan.
-    */
-  def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-                     dir: String,
-                     codesOverride: Option[DataFrame] = None)
-      : IvfPqIndex = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    // by-name access, never ordinal: a reordered/extended meta schema must
-    // not silently swap m/ks/dim into a plausible-but-wrong index
-    val version =
-      if (meta.schema.fieldNames.contains("format_version"))
-        meta.getAs[Int]("format_version")
-      else 0 // pre-versioned round-8 layout: same named fields, no tag
-    require(version <= 1, s"unsupported IVF-PQ index format_version $version")
-    val cells = IndexIo.loadVectors(spark, s"$dir/cells", "cell_id", "centroid")
-    val cb = IndexIo.loadVectors(spark, s"$dir/codebook", "sub_id", "entries")
-    IvfPqIndex(cells, cb,
-      codesOverride.getOrElse(spark.read.parquet(s"$dir/codes")),
-      meta.getAs[Int]("m"), meta.getAs[Int]("ks"), meta.getAs[Int]("dim"))
   }
 
   /** Append a new vector batch to a built index WITHOUT retraining:
@@ -1454,88 +1402,11 @@ object Similarity {
       .select("q_id", "n_id", "rank", "adc")
   }
 
-  /** Persist with the code table PARTITIONED BY cell — the on-disk
-    * analog of FAISS's per-inverted-list storage: each coarse cell's
-    * codes land in their own directory, so a serve that probes nprobe
-    * of nlist cells can READ exactly those directories instead of
-    * scanning the whole encoded corpus ([[queryIvfPqIndexPruned]],
-    * gate n52). At 100 TB with nprobe/nlist ~ 1/256 that is the
-    * difference between a scan of the full code table per query batch
-    * and a scan of the probed slice.
-    *
-    * The meta tag stays format_version 1: unlike the bucketed-catalog
-    * layouts (where registration must DECLARE the partitioning — the
-    * substr v1/v2 lesson), plain `spark.read.parquet` discovers
-    * partition directories transparently, so [[loadIvfPqIndex]] reads
-    * both layouts correctly with no dispatch. The `cell` column comes
-    * back from the directory names (same int type, by-name access
-    * everywhere).
-    */
-  def saveIvfPqIndexPartitioned(index: IvfPqIndex, dir: String): Unit = {
-    saveIvfPqArtifacts(index, dir)
-    // repartition by cell first: without it every cell directory
-    // holds one fragment per shuffle partition, and at serving time
-    // the per-file overhead (footers, row-group minimums) dominates
-    // the probed reads. One packed file per inverted list is the
-    // FAISS contiguous-blob shape; the price is one shuffle at save,
-    // paid once. (Cells larger than a task's comfort split fine —
-    // parquet readers split files by row group.)
-    index.codes.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/codes")
-  }
-
-  /** Persist a whole sharded IVF-PQ deployment as ONE artifact:
-    * every shard cell-partitioned at `dir/shard_<i>` (the
-    * [[saveIvfPqIndexPartitioned]] layout, so a routed scatter
-    * against the reloaded fleet still reads only probed directories
-    * of touched shards) plus the FROZEN cell→shard routing map at
-    * `dir/cell_map` ([[IndexIo.saveCellMap]] — the map is what a
-    * restart cannot recover from shard contents). Empty shards
-    * persist fine (their code tables are empty; `n_shards` in the
-    * map artifact keeps the fleet width).
-    */
-  def saveIvfPqShards(shards: Seq[IvfPqIndex], cellMap: Array[Int],
-                      dir: String): Unit = {
-    require(shards.nonEmpty, "saveIvfPqShards: no shards")
-    requireSharedIvfPqArtifacts("saveIvfPqShards", shards)
-    IndexIo.requireCellMap("saveIvfPqShards", "cellMap", cellMap,
-      shards.head.cells.length, shards.length)
-    // disjoint per-shard directories: the shard writes are independent
-    // driver-sequenced job chains — run them on the shared bounded
-    // pool so one shard's commit latency overlaps another's write
-    IndexIo.runConcurrently(shards.zipWithIndex, shards.length) {
-      case (s, i) => saveIvfPqIndexPartitioned(s, s"$dir/shard_$i")
-    }
-    IndexIo.saveCellMap(shards.head.codes.sparkSession,
-      s"$dir/cell_map", cellMap, shards.length)
-  }
-
-  /** Reload a [[saveIvfPqShards]] deployment: (shards, cell→shard
-    * map), ready for the routed verbs (scatter serve, routed append/
-    * delete, rebalance). A drift-emptied shard reloads as an empty
-    * code table under the shared artifacts ([[IndexIo.readOrEmpty]]
-    * — a committed empty partitioned dir has no parquet footer to
-    * infer from).
-    */
-  def loadIvfPqShards(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): (Seq[IvfPqIndex], Array[Int]) = {
-    val (map, nShards) = IndexIo.loadCellMap(spark, s"$dir/cell_map")
-    // per-shard loads are independent driver-sequenced chains (footer
-    // reads + bounded artifact collects) — overlap them
-    (IndexIo.runConcurrently(0 until nShards, nShards) { i =>
-      val d = s"$dir/shard_$i"
-      loadIvfPqIndex(spark, d,
-        codesOverride = Some(IndexIo.readOrEmpty(spark, s"$d/codes",
-          "n_id BIGINT, codes ARRAY<INT>, cell INT")))
-    }, map)
-  }
-
   /** [[queryIvfPqIndex]] with the probed-cell set pushed to the SCAN
     * as a static partition filter: the distinct cells a query batch
     * probes are bounded by nlist — the same driver-held artifact the
     * probe expression already broadcasts — so collecting them is
-    * scale-free, and over a [[saveIvfPqIndexPartitioned]] layout the
+    * scale-free, and over a [[IndexIo.IvfPq]] `savePartitioned` layout the
     * codes scan then reads ONLY the probed directories
     * (PartitionFilters, spec-pinned; gate n52 pins result equality
     * with the unpruned serve). The price is one bounded driver job
@@ -1636,7 +1507,7 @@ object Similarity {
     * for IVF-PQ because a query's candidates live ONLY in its probed
     * cells (gate n56 pins routed ≡ unrouted ≡ merged). Each served
     * shard's scan also gets the probed-cell set as a static filter —
-    * over a [[saveIvfPqIndexPartitioned]] layout that prunes to the
+    * over a [[IndexIo.IvfPq]] `savePartitioned` layout that prunes to the
     * probed directories (the n52 discipline, per shard).
     */
   def queryIvfPqIndexScatter(queries: DataFrame, shards: Seq[IvfPqIndex],

@@ -964,143 +964,4 @@ object SuffixArray {
       .select((col("__id") - offset).as("__id"), col("__off"))
     islandSpans(marked, idCol, index.minLen)
   }
-
-  /** Persist the index as four parquet tables under `dir` (the
-    * t29/n32 layout discipline): meta (format_version + parameters,
-    * read back BY NAME), dict_chars, dict_pairs, keys.
-    *
-    * Production-volume note: an append's dictionary lookups hash-join
-    * the batch's pair relation against `dict_pairs` on (__r1, __r2),
-    * and `substrIndexSpans` aggregates `keys` on the same pair — at
-    * 100 TB both persisted relations should be written BUCKETED on
-    * (__r1, __r2) (`bucketBy` into a catalog table, one bucket file
-    * set per sort key) so those joins/aggregates co-locate and only
-    * the small batch side shuffles. Plain parquet here because the
-    * bucketed write path needs a table catalog (a metastore name, not
-    * a directory), which a library save to an arbitrary `dir` cannot
-    * assume; the layout and join keys are already bucketing-shaped.
-    */
-  def saveSubstrIndex(index: SubstrIndex, dir: String): Unit = {
-    val spark = index.keys.sparkSession
-    import spark.implicits._
-    Seq((1, index.minLen, index.targetW, index.stride, index.maxId))
-      .toDF("format_version", "min_len", "target_w", "stride", "max_id")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    index.dictChars.write.mode("overwrite").parquet(s"$dir/dict_chars")
-    index.dictPairs.write.mode("overwrite").parquet(s"$dir/dict_pairs")
-    index.keys.write.mode("overwrite").parquet(s"$dir/keys")
-  }
-
-  def loadSubstrIndex(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): SubstrIndex = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    // <= 2: a v2 (bucketed, width-partitioned) save reads fine through
-    // the plain path — partition discovery restores __w as a column.
-    // dict_pairs and keys may legally be EMPTY (minLen = 2 gives
-    // targetW = 1, so NO doubling rounds; sub-minLen docs leave no
-    // keys) — readOrEmpty keeps both loaders agreeing on which
-    // artifacts are loadable.
-    require(meta.getAs[Int]("format_version") <= 2,
-      s"unsupported substr index format_version " +
-        meta.getAs[Int]("format_version"))
-    SubstrIndex(spark.read.parquet(s"$dir/dict_chars"),
-      IndexIo.readOrEmpty(spark, s"$dir/dict_pairs",
-        "__w INT, __r1 BIGINT, __r2 BIGINT, __cls BIGINT"),
-      IndexIo.readOrEmpty(spark, s"$dir/keys",
-        "__id BIGINT, __off BIGINT, __r1 BIGINT, __r2 BIGINT"),
-      meta.getAs[Int]("min_len"), meta.getAs[Int]("target_w"),
-      meta.getAs[Long]("stride"), meta.getAs[Long]("max_id"))
-  }
-
-  /** Persist with the two corpus-sized relations BUCKETED on their
-    * join keys — the production-volume layout [[saveSubstrIndex]]'s
-    * note promises: `keys` and `dict_pairs` write through
-    * `bucketBy(buckets, __r1, __r2).sortBy(...)` into catalog tables
-    * (data under `dir`, names `<tablePrefix>_keys` /
-    * `<tablePrefix>_dict_pairs`), so a [[substrIndexSpans]] readout
-    * aggregates and joins WITHOUT ANY EXCHANGE of the key relation
-    * (spec-pinned plan), and an append's dictionary lookups co-locate
-    * the same way. Needs a table catalog — with the default in-memory
-    * catalog the bucketing metadata lives only for the session; a
-    * shared metastore makes it durable (the data files themselves are
-    * plain parquet either way).
-    */
-  def saveSubstrIndexBucketed(index: SubstrIndex, dir: String,
-                              tablePrefix: String,
-                              buckets: Int = 64,
-                              partitionDictByWidth: Boolean = false)
-      : Unit = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val spark = index.keys.sparkSession
-    import spark.implicits._
-    // format_version 2 = dict_pairs ALSO PARTITIONED BY (__w), so an
-    // append's doubling rounds each read exactly one width's slice as
-    // a GUARANTEED PartitionFilter (spec-pinned) instead of relying on
-    // parquet row-group stats. OPT-IN (round-13 revisit of the
-    // round-12 measurement): on today's width-sorted writes the stats
-    // already prune (bytes ratio 0.99) while the explicit partitions
-    // cost ~1.4× save wall in file-count/partition-resolution
-    // overhead — so the default buys the cheap save and keeps the
-    // stats-pruned reads, and a deployment that rewrites dictionaries
-    // with MIXED widths per file (where stats pruning degrades) opts
-    // into the guarantee. Version-1 artifacts are the unpartitioned
-    // layout; the loader registers each version with its own layout —
-    // registering a v1 save as partitioned would discover ZERO
-    // partitions and read a silently empty dictionary.
-    val fmt = if (partitionDictByWidth) 2 else 1
-    Seq((fmt, index.minLen, index.targetW, index.stride, index.maxId,
-        buckets))
-      .toDF("format_version", "min_len", "target_w", "stride", "max_id",
-        "buckets")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    index.dictChars.write.mode("overwrite").parquet(s"$dir/dict_chars")
-    // width is NOT a bucket column (bucketing keys stay the lookup
-    // pair), and the spans-path keys table is untouched either way
-    val dictWriter = index.dictPairs.write.mode("overwrite")
-    (if (partitionDictByWidth) dictWriter.partitionBy("__w")
-     else dictWriter)
-      .bucketBy(buckets, "__r1", "__r2").sortBy("__r1", "__r2")
-      .option("path", s"$dir/dict_pairs")
-      .saveAsTable(IndexIo.bucketedTableName(tablePrefix, "dict_pairs",
-        dir))
-    index.keys.write.mode("overwrite")
-      .bucketBy(buckets, "__r1", "__r2").sortBy("__r1", "__r2")
-      .option("path", s"$dir/keys")
-      .saveAsTable(IndexIo.bucketedTableName(tablePrefix, "keys", dir))
-  }
-
-  /** The catalog names are session-scoped under the default in-memory
-    * catalog but the bucketed FILES are durable: a fresh session
-    * re-registers the external tables from `dir` with the saved
-    * bucket spec, so the cross-run readout works without a metastore.
-    */
-  def loadSubstrIndexBucketed(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, tablePrefix: String)
-      : SubstrIndex = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    val version = meta.getAs[Int]("format_version")
-    require(version <= 2,
-      s"unsupported substr index format_version $version")
-    val buckets = meta.getAs[Int]("buckets")
-    // v1 saves wrote dict_pairs UNpartitioned; registering them with
-    // the v2 width-partition spec would discover zero partitions and
-    // read an empty dictionary with no error
-    val dictPartCols = if (version >= 2) Seq("__w") else Nil
-    val dictFallback =
-      if (version >= 2) "__r1 BIGINT, __r2 BIGINT, __cls BIGINT, __w INT"
-      else "__w INT, __r1 BIGINT, __r2 BIGINT, __cls BIGINT"
-    SubstrIndex(spark.read.parquet(s"$dir/dict_chars"),
-      IndexIo.resolveBucketedTable(spark,
-        IndexIo.bucketedTableName(tablePrefix, "dict_pairs", dir),
-        s"$dir/dict_pairs", Seq("__r1", "__r2"), buckets,
-        partitionCols = dictPartCols,
-        fallbackSchema = Some(dictFallback)),
-      IndexIo.resolveBucketedTable(spark,
-        IndexIo.bucketedTableName(tablePrefix, "keys", dir),
-        s"$dir/keys", Seq("__r1", "__r2"), buckets,
-        fallbackSchema =
-          Some("__id BIGINT, __off BIGINT, __r1 BIGINT, __r2 BIGINT")),
-      meta.getAs[Int]("min_len"), meta.getAs[Int]("target_w"),
-      meta.getAs[Long]("stride"), meta.getAs[Long]("max_id"))
-  }
 }

@@ -437,44 +437,6 @@ object TextOps {
     m
   }
 
-  /** Persist a trained unigram model as two parquet tables under
-    * `dir` — the "ship the tokenizer artifact" step every production
-    * pipeline ends with (SentencePiece's .model file, re-expressed as
-    * the engine's native tables): `meta` (format_version +
-    * max_piece_len, read back BY NAME) and `pieces` (piece, count,
-    * cost). Counts AND the fixed-point costs both round-trip, so a
-    * reloaded model segments bit-identically (gate t29).
-    */
-  def saveUnigramModel(spark: org.apache.spark.sql.SparkSession,
-                       model: UnigramModel, dir: String): Unit = {
-    import spark.implicits._
-    Seq((1, model.maxPieceLen))
-      .toDF("format_version", "max_piece_len")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    model.pieces.indices.map(i =>
-        (model.pieces(i), model.counts(i), model.costInt(i)))
-      .toDF("piece", "count", "cost")
-      .write.mode("overwrite").parquet(s"$dir/pieces")
-  }
-
-  /** Reload a persisted unigram model. Pieces come back sorted (the
-    * array order is not semantic — the segmenter's vocab is a map —
-    * but a canonical order keeps the artifact comparable).
-    */
-  def loadUnigramModel(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): UnigramModel = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    require(meta.getAs[Int]("format_version") <= 1,
-      s"unsupported unigram model format_version " +
-        meta.getAs[Int]("format_version"))
-    val rows = spark.read.parquet(s"$dir/pieces")
-      .orderBy("piece").collect()
-    UnigramModel(rows.map(_.getAs[String]("piece")),
-      rows.map(_.getAs[Long]("count")),
-      rows.map(_.getAs[Long]("cost")),
-      meta.getAs[Int]("max_piece_len"))
-  }
-
   /** Train a unigram tokenizer: seed from substring statistics, then
     * `emIters` hard-EM refinements — the SentencePiece training shape
     * (seed → EM → prune) with the EM expectation distributed and every
@@ -1538,36 +1500,6 @@ object TextOps {
       s"deleted state is not a subset of the corpus state: $bad terms " +
         "would go negative")
     out.filter(col("term") === "" || col("df") > 0)
-  }
-
-  /** Persist a BM25 corpus state as two parquet tables under `dir`
-    * (the n21/n32/d33 layout discipline): `meta` (format_version, read
-    * back BY NAME) and `state` (term, df, tf — Zipf-bounded, one row
-    * per distinct term plus the doc-count sentinel). This is the verb
-    * that makes the t24/t31 lifecycle real across RUNS: a nightly
-    * refresh loads yesterday's state, merges today's batch state,
-    * subtracts deletions, saves — the corpus text is never re-scanned.
-    */
-  def saveBm25State(state: org.apache.spark.sql.DataFrame,
-                    dir: String): Unit = {
-    val spark = state.sparkSession
-    import spark.implicits._
-    Seq(Tuple1(1)).toDF("format_version")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    state.select("term", "df", "tf")
-      .write.mode("overwrite").parquet(s"$dir/state")
-  }
-
-  /** Reload a persisted BM25 state: meta collects one row, the state
-    * stays a lazy scan. Fails fast on a future format_version.
-    */
-  def loadBm25State(spark: org.apache.spark.sql.SparkSession,
-                    dir: String): org.apache.spark.sql.DataFrame = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    require(meta.getAs[Int]("format_version") <= 1,
-      s"unsupported bm25 state format_version " +
-        meta.getAs[Int]("format_version"))
-    spark.read.parquet(s"$dir/state")
   }
 
   /** Score a batch of documents against an existing BM25 state WITHOUT

@@ -819,6 +819,46 @@ object OpsQueries {
        |FROM (SELECT DISTINCT doc_id FROM documents$where) d
        |LEFT JOIN s ON d.doc_id = s.doc_id""".stripMargin
 
+  /** The nearest-centroid CTEs of the IVF oracles (n03, n11, n26, d11,
+    * n63): `cent(cid, cemb)` is the first-`nlist` codebook and
+    * `sims(vec_id, <carry> cid, s)` the cosine of each embedding
+    * `where` keeps to each centroid. */
+  private def centSimsSql(nlist: Int, carry: String = "",
+                          where: String = ""): String =
+    s"""cent AS (
+       |  SELECT vec_id AS cid, embedding AS cemb
+       |  FROM embeddings WHERE vec_id < $nlist),
+       |sims AS (
+       |  SELECT e.vec_id,$carry c.cid,
+       |    list_cosine_similarity(e.embedding, c.cemb) AS s
+       |  FROM embeddings e, cent c$where)""".stripMargin
+
+  /** The t13/t14 closed-form line restructure: each document's
+    * normalized tokens cut into lines of doc_id % 5 + 3 tokens, line
+    * `j` (its tokens joined as `base`) rendered by `line(j, base)`, the
+    * lines newline-joined as `text2`. */
+  private def restructureLines(d: org.apache.spark.sql.DataFrame)(
+      line: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
+        org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
+    d.withColumn("__toks", split(TextOps.normalize(col("text")), " "))
+      .withColumn("__n", size(col("__toks")))
+      .withColumn("__k", (col("doc_id") % 5 + 3).cast("int"))
+      .withColumn("__nl", expr("(__n + __k - 1) div __k"))
+      .withColumn("text2", array_join(
+        transform(sequence(lit(0), col("__nl").cast("int") - 1),
+          j => line(j, array_join(
+            slice(col("__toks"), j * col("__k") + 1, col("__k")), " "))),
+        "\n"))
+
+  /** The oracle side of [[restructureLines]]: `t(doc_id, toks, k)` and
+    * `n(doc_id, toks, k, n)`. */
+  private val linesSql =
+    """t AS (SELECT doc_id,
+      |    string_split(trim(regexp_replace(lower(text), '\s+', ' ',
+      |                                     'g')), ' ') AS toks,
+      |    cast(doc_id % 5 + 3 AS INT) AS k FROM documents),
+      |n AS (SELECT doc_id, toks, k, len(toks) AS n FROM t)""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
 
     // Exact dedup: hash-groupBy.
@@ -1056,9 +1096,9 @@ object OpsQueries {
         val q = e.filter(col("vec_id") < 20)
         val idxDir = "/tmp/graft_gate_index_" +
           dir.replaceAll("[^A-Za-z0-9]", "_")
-        Similarity.saveIvfPqIndex(
+        IndexIo.IvfPq.save(
           Similarity.buildIvfPqIndex(e, nlist = 32, m = 16, ks = 64), idxDir)
-        val loaded = Similarity.loadIvfPqIndex(s, idxDir)
+        val loaded = IndexIo.IvfPq.load(s, idxDir)
         val got = Similarity.queryIvfPqIndex(q, loaded, 5, nprobe = 32)
           .select("q_id", "n_id", "rank")
         val base = Similarity.pqResidualTopK(q, e, 5, nlist = 32,
@@ -1288,13 +1328,7 @@ object OpsQueries {
             round(col("avg_cell"), 6).as("avg_cell"),
             round(col("skew"), 6).as("skew"))
       },
-      Some("""WITH cent AS (
-             |  SELECT vec_id AS cid, embedding AS cemb
-             |  FROM embeddings WHERE vec_id < 32),
-             |sims AS (
-             |  SELECT e.vec_id, c.cid,
-             |    list_cosine_similarity(e.embedding, c.cemb) AS s
-             |  FROM embeddings e, cent c),
+      Some(s"""WITH ${centSimsSql(32)},
              |cell AS (
              |  SELECT vec_id, cid + 1 AS cell FROM (
              |    SELECT vec_id, cid,
@@ -1418,13 +1452,7 @@ object OpsQueries {
     QueryDef("n11_cluster_purity",
       (s, dir) => Similarity.clusterPurity(embs(s, dir),
         Similarity.firstVectors(embs(s, dir), 16)),
-      Some("""WITH cent AS (
-             |  SELECT vec_id AS cid, embedding AS cemb
-             |  FROM embeddings WHERE vec_id < 16),
-             |sims AS (
-             |  SELECT e.vec_id, e.label, c.cid,
-             |    list_cosine_similarity(e.embedding, c.cemb) AS s
-             |  FROM embeddings e, cent c),
+      Some(s"""WITH ${centSimsSql(16, " e.label,")},
              |cell AS (
              |  -- CentroidAssign emits 1-based codebook positions; the
              |  -- first-16 scheme makes position = vec_id + 1
@@ -1898,9 +1926,9 @@ object OpsQueries {
           minLen = 40)
         val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
         val out = s"/tmp/graft_gate_substr_bucketed_$safe"
-        SuffixArray.saveSubstrIndexBucketed(idx, out,
+        IndexIo.Substr.saveBucketed(idx, out,
           s"graft_gate_substr_$safe", buckets = 16)
-        val loaded = SuffixArray.loadSubstrIndexBucketed(s, out,
+        val (loaded, _) = IndexIo.Substr.loadBucketed(s, out,
           s"graft_gate_substr_$safe")
         SuffixArray.substrIndexSpans(loaded, "doc_id")
       },
@@ -1948,11 +1976,11 @@ object OpsQueries {
         val idx = Dedup.buildMinHashIndex(d, "text", "doc_id")
         val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
         val out = s"/tmp/graft_gate_minhash_bucketed_$safe"
-        Dedup.saveMinHashIndexBanded(idx, out,
+        IndexIo.MinHash.saveBucketed(idx, out,
           s"graft_gate_minhash_$safe", buckets = 16)
-        val (loaded, banded) = Dedup.loadMinHashIndexBanded(s, out,
+        val (loaded, derived) = IndexIo.MinHash.loadBucketed(s, out,
           s"graft_gate_minhash_$safe")
-        Dedup.minhashIndexPairsBanded(banded, loaded.k)
+        Dedup.minhashIndexPairsBanded(derived("banded"), loaded.k)
           .select("doc_a", "doc_b")
       },
       Some(s"""WITH $trueJaccardSql
@@ -2054,8 +2082,8 @@ object OpsQueries {
           dir.replaceAll("[^A-Za-z0-9]", "_")
         val built = Dedup.buildMinHashIndex(
           d.filter(col("doc_id") % 5 =!= 0), "text", "doc_id")
-        Dedup.saveMinHashIndex(built, idxDir)
-        val loaded = Dedup.loadMinHashIndex(s, idxDir)
+        IndexIo.MinHash.save(built, idxDir)
+        val loaded = IndexIo.MinHash.load(s, idxDir)
         val appended = Dedup.appendToMinHashIndex(loaded,
           d.filter(col("doc_id") % 5 === 0), "text", "doc_id")
         val fin = Dedup.deleteFromMinHashIndex(appended,
@@ -2150,13 +2178,7 @@ object OpsQueries {
       (s, dir) => Similarity.ivfTopK(
           embs(s, dir).filter(col("vec_id") < 20), embs(s, dir), k = 5)
         .select("q_id", "n_id", "rank"),
-      Some("""WITH cent AS (
-             |  SELECT vec_id AS cid, embedding AS cemb
-             |  FROM embeddings WHERE vec_id < 16),
-             |sims AS (
-             |  SELECT e.vec_id, c.cid,
-             |    list_cosine_similarity(e.embedding, c.cemb) AS s
-             |  FROM embeddings e, cent c),
+      Some(s"""WITH ${centSimsSql(16)},
              |ranked AS (
              |  SELECT vec_id, cid,
              |    row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cid) AS rn
@@ -2277,25 +2299,12 @@ object OpsQueries {
     // index breaks clean_text equality.
     QueryDef("t13_line_clean",
       (s, dir) => {
-        val structured = docs(s, dir)
-          .withColumn("__toks", split(TextOps.normalize(col("text")), " "))
-          .withColumn("__n", size(col("__toks")))
-          .withColumn("__k", (col("doc_id") % 5 + 3).cast("int"))
-          .withColumn("__nl", expr("(__n + __k - 1) div __k"))
-          .withColumn("text2", array_join(
-            transform(sequence(lit(0), col("__nl").cast("int") - 1),
-              j => array_join(
-                slice(col("__toks"), j * col("__k") + 1, col("__k")), " ")),
-            "\n"))
+        val structured = restructureLines(docs(s, dir))((_, base) => base)
         TextOps.cleanLines(structured, "text2", "doc_id", minTokens = 3,
             banned = Seq("spark", "spill"), dedupLines = true)
           .select("doc_id", "n_lines", "n_kept", "clean_text")
       },
-      Some("""WITH t AS (SELECT doc_id,
-             |    string_split(trim(regexp_replace(lower(text), '\s+', ' ',
-             |                                     'g')), ' ') AS toks,
-             |    cast(doc_id % 5 + 3 AS INT) AS k FROM documents),
-             |n AS (SELECT doc_id, toks, k, len(toks) AS n FROM t),
+      Some(s"""WITH $linesSql,
              |ln AS (SELECT doc_id, cast(u.j AS INT) AS j,
              |    array_to_string(toks[u.j*k+1 : u.j*k+k], ' ') AS line
              |  FROM n, unnest(range(0, (n + k - 1) // k)) AS u(j)),
@@ -2328,29 +2337,16 @@ object OpsQueries {
     // compare bit-for-bit.
     QueryDef("t14_gopher_rules",
       (s, dir) => {
-        val structured = docs(s, dir)
-          .withColumn("__toks", split(TextOps.normalize(col("text")), " "))
-          .withColumn("__n", size(col("__toks")))
-          .withColumn("__k", (col("doc_id") % 5 + 3).cast("int"))
-          .withColumn("__nl", expr("(__n + __k - 1) div __k"))
-          .withColumn("text2", array_join(
-            transform(sequence(lit(0), col("__nl").cast("int") - 1),
-              j => {
-                val base = array_join(
-                  slice(col("__toks"), j * col("__k") + 1, col("__k")), " ")
-                val m = (col("doc_id") + j) % 4
-                when(m === 0, concat(lit("- "), base))
-                  .when(m === 1, concat(base, lit(" ...")))
-                  .otherwise(base)
-              }), "\n"))
+        val structured = restructureLines(docs(s, dir)) { (j, base) =>
+          val m = (col("doc_id") + j) % 4
+          when(m === 0, concat(lit("- "), base))
+            .when(m === 1, concat(base, lit(" ...")))
+            .otherwise(base)
+        }
         structured.select(col("doc_id") +:
           TextOps.gopherRules(col("text2")).map { case (n, c) => c.as(n) }: _*)
       },
-      Some("""WITH t AS (SELECT doc_id,
-             |    string_split(trim(regexp_replace(lower(text), '\s+', ' ',
-             |                                     'g')), ' ') AS toks,
-             |    cast(doc_id % 5 + 3 AS INT) AS k FROM documents),
-             |n AS (SELECT doc_id, toks, k, len(toks) AS n FROM t),
+      Some(s"""WITH $linesSql,
              |ln AS (SELECT doc_id, cast(u.j AS INT) AS j,
              |    CASE WHEN (doc_id + u.j) % 4 = 0
              |      THEN '- ' || array_to_string(toks[u.j*k+1 : u.j*k+k], ' ')
@@ -2367,7 +2363,7 @@ object OpsQueries {
              |      AS n_ell
              |  FROM ln GROUP BY doc_id),
              |w AS (SELECT doc_id,
-             |    unnest(string_split_regex(trim(t2), '\s+')) AS word FROM d),
+             |    unnest(string_split_regex(trim(t2), '\\s+')) AS word FROM d),
              |wa AS (SELECT doc_id, count(*) AS nw,
              |    sum(CASE WHEN regexp_matches(word, '[a-z]') THEN 1 ELSE 0
              |        END) AS n_alpha
@@ -3570,13 +3566,7 @@ object OpsQueries {
     // hence cid + 1) and the drop rule verbatim.
     QueryDef("d11_semdedup",
       (s, dir) => Similarity.semDedup(embs(s, dir), threshold = 0.35, nlist = 16),
-      Some("""WITH cent AS (
-             |  SELECT vec_id AS cid, embedding AS cemb
-             |  FROM embeddings WHERE vec_id < 16),
-             |sims AS (
-             |  SELECT e.vec_id, c.cid,
-             |    list_cosine_similarity(e.embedding, c.cemb) AS s
-             |  FROM embeddings e, cent c),
+      Some(s"""WITH ${centSimsSql(16)},
              |cell AS (
              |  SELECT vec_id, cid FROM sims
              |  QUALIFY row_number() OVER (PARTITION BY vec_id
@@ -3815,8 +3805,8 @@ object OpsQueries {
         val m1 = TextOps.unigramEmStep(table, m0)
         val mDir = "/tmp/graft_gate_unigram_" +
           dir.replaceAll("[^A-Za-z0-9]", "_")
-        TextOps.saveUnigramModel(s, m1, mDir)
-        val m2 = TextOps.loadUnigramModel(s, mDir)
+        IndexIo.Unigram.save(m1, mDir)
+        val m2 = IndexIo.Unigram.load(s, mDir)
         val segOk = TextOps.unigramSegmentWords(table, m1)
           .select(col("word"), col("pieces").as("a"))
           .join(TextOps.unigramSegmentWords(table, m2)
@@ -4457,8 +4447,8 @@ object OpsQueries {
           ks = 64, codebook = Some(cb), rotation = Some(model))
         val idxDir = "/tmp/graft_gate_hnswpqidx_" +
           dir.replaceAll("[^A-Za-z0-9]", "_")
-        GraphAnn.saveHnswPqIndex(idx, idxDir)
-        val loaded = GraphAnn.loadHnswPqIndex(s, idxDir)
+        IndexIo.HnswPq.save(idx, idxDir)
+        val loaded = IndexIo.HnswPq.load(s, idxDir)
         // ONE hop per layer, the n53 argument: the pin is round-trip
         // EQUALITY (pre-save vs reloaded serve over identical state),
         // which is hop-count-independent — extra hops only re-walk the
@@ -4644,8 +4634,8 @@ object OpsQueries {
           crossDegree = 2)
         val idxDir = "/tmp/graft_gate_graphidx_" +
           dir.replaceAll("[^A-Za-z0-9]", "_")
-        GraphAnn.saveGraphIndex(idx, idxDir)
-        val loaded = GraphAnn.loadGraphIndex(s, idxDir)
+        IndexIo.Graph.save(idx, idxDir)
+        val loaded = IndexIo.Graph.load(s, idxDir)
         def search(i: GraphAnn.GraphIndex) =
           GraphAnn.queryGraphIndex(q, i, k = 5, beam = 3, hops = 2)
             .select("q_id", "n_id", "rank")
@@ -5073,10 +5063,10 @@ object OpsQueries {
         val d = docs(s, dir)
         val stDir = "/tmp/graft_gate_bm25state_" +
           dir.replaceAll("[^A-Za-z0-9]", "_")
-        TextOps.saveBm25State(bm25State(d.filter(col("doc_id") % 2 === 0)),
+        IndexIo.Bm25.save(bm25State(d.filter(col("doc_id") % 2 === 0)),
           stDir)
         bm25DeleteServe(TextOps.mergeBm25State(
-          TextOps.loadBm25State(s, stDir),
+          IndexIo.Bm25.load(s, stDir),
           bm25State(d.filter(col("doc_id") % 2 =!= 0))), d)
       },
       Some(bm25Sql(" WHERE doc_id % 5 <> 2"))),
@@ -5745,8 +5735,8 @@ object OpsQueries {
               e.filter(col("vec_id") < 400),
               nlist = 16, degree = 4, crossDegree = 2, levelFanout = 4,
               maxLevel = 2)
-            GraphAnn.saveHnswIndex(idx, idxDir)
-            val loaded = GraphAnn.loadHnswIndex(s, idxDir)
+            IndexIo.Hnsw.save(idx, idxDir)
+            val loaded = IndexIo.Hnsw.load(s, idxDir)
             val appended = GraphAnn.appendToHnswIndex(loaded,
               e.filter(col("vec_id") >= 400 && col("vec_id") < 500))
             GraphAnn.deleteFromHnswIndex(appended,
@@ -6038,10 +6028,10 @@ object OpsQueries {
         val q = e.filter(col("vec_id") < 20)
         val idxDir = "/tmp/graft_gate_ivfpq_part_" +
           dir.replaceAll("[^A-Za-z0-9]", "_")
-        Similarity.saveIvfPqIndexPartitioned(
+        IndexIo.IvfPq.savePartitioned(
           Similarity.buildIvfPqIndex(e, nlist = 32, m = 16, ks = 64),
           idxDir)
-        val loaded = Similarity.loadIvfPqIndex(s, idxDir)
+        val loaded = IndexIo.IvfPq.load(s, idxDir)
         val all = Similarity.queryIvfPqIndexPruned(q, loaded, 5,
             nprobe = 32)
           .select("q_id", "n_id", "rank")
@@ -6097,14 +6087,14 @@ object OpsQueries {
             val hi = GraphAnn.buildHnswIndex(e, nlist = 16, degree = 4,
               crossDegree = 2, levelFanout = 4, maxLevel = 2,
               centroids = Some(cells))
-            GraphAnn.saveHnswIndexBucketed(hi, hDir, "gate_n53_hnsw",
+            IndexIo.Hnsw.saveBucketed(hi, hDir, "gate_n53_hnsw",
               buckets = 8)
             hi
           },
           {
             val gi = GraphAnn.buildGraphIndex(e, nlist = 16, degree = 4,
               crossDegree = 2, centroids = Some(cells))
-            GraphAnn.saveGraphIndexBucketed(gi, gDir, "gate_n53_graph",
+            IndexIo.Graph.saveBucketed(gi, gDir, "gate_n53_graph",
               buckets = 8)
             gi
           })
@@ -6127,11 +6117,9 @@ object OpsQueries {
         // independent eager chains — overlap them (par2 doc)
         val (hMem, hBkt, gMem, gBkt) = par4(
           hServe(h),
-          hServe(GraphAnn.loadHnswIndexBucketed(s, hDir,
-            "gate_n53_hnsw")),
+          hServe(IndexIo.Hnsw.loadBucketed(s, hDir, "gate_n53_hnsw")._1),
           gServe(g),
-          gServe(GraphAnn.loadGraphIndexBucketed(s, gDir,
-            "gate_n53_graph")))
+          gServe(IndexIo.Graph.loadBucketed(s, gDir, "gate_n53_graph")._1))
         val hOk = hMem.withColumnRenamed("rank", "r_mem")
           .join(hBkt.withColumnRenamed("rank", "r_bkt"),
             Seq("q_id", "n_id"), "full")
@@ -6783,14 +6771,8 @@ object OpsQueries {
             lit(mapOk).as("map_from_state_exact"),
             lit(mapMoved).as("map_moved"))
       },
-      Some("""WITH cent AS (
-             |  SELECT vec_id AS cid, embedding AS cemb
-             |  FROM embeddings WHERE vec_id < 16),
-             |sims AS (
-             |  SELECT e.vec_id, c.cid,
-             |    list_cosine_similarity(e.embedding, c.cemb) AS s
-             |  FROM embeddings e, cent c
-             |  WHERE e.vec_id >= 400 AND e.vec_id < 500),
+      Some(s"""WITH ${centSimsSql(16,
+               where = " WHERE e.vec_id >= 400 AND e.vec_id < 500")},
              |home AS (
              |  SELECT vec_id, cid FROM (
              |    SELECT vec_id, cid, row_number() OVER (
@@ -6921,11 +6903,11 @@ object OpsQueries {
         // save/load/append/rebalance actions. The three initial shard
         // builds also only share frozen artifacts (parSeq).
         val mergedOracle = par2({
-        Similarity.saveIvfPqShards(
+        IndexIo.IvfPq.saveShards(
           parSeq((0 until 3).map(i =>
             () => build(slice(base, map1, i)))), map1, dirA)
         }, build(e))._2
-        val (loadedA, mapA) = Similarity.loadIvfPqShards(s, dirA)
+        val (loadedA, mapA) = IndexIo.IvfPq.loadShards(s, dirA)
         val grown = Similarity.appendToIvfPqShards(loadedA, batch, mapA)
         // re-cut from STATE; if the append didn't shift the greedy
         // cut, stage the drift by re-homing the last shard's first
@@ -6944,9 +6926,9 @@ object OpsQueries {
                 "n65: shard 2 owns no non-empty cell — cannot stage drift"))
             val m = recut.clone(); m(b) = 1; m
           }
-        Similarity.saveIvfPqShards(
+        IndexIo.IvfPq.saveShards(
           Similarity.rebalanceIvfPqShards(grown, mapA, map2), map2, dirB)
-        val (loadedB, mapB) = Similarity.loadIvfPqShards(s, dirB)
+        val (loadedB, mapB) = IndexIo.IvfPq.loadShards(s, dirB)
         val mapOk = mapB.sameElements(map2) && !mapB.sameElements(map1)
         val q = e.filter(col("vec_id") < 20)
         val scatter = Similarity.queryIvfPqIndexScatter(q, loadedB, 5,

@@ -113,8 +113,8 @@ class DedupSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("mhidx").toString
     val idx = Dedup.buildMinHashIndex(docs, "text", "doc_id",
       k = 32, bands = 8, shingleN = 2, seed = 7L)
-    Dedup.saveMinHashIndex(idx, dir)
-    val loaded = Dedup.loadMinHashIndex(spark, dir)
+    IndexIo.MinHash.save(idx, dir)
+    val loaded = IndexIo.MinHash.load(spark, dir)
     loaded.k shouldBe 32
     loaded.bands shouldBe 8
     loaded.shingleN shouldBe 2
@@ -129,7 +129,7 @@ class DedupSpec extends SparkSpec {
       .toDF("format_version", "k", "bands", "shingle_n", "seed")
       .write.mode("overwrite").parquet(s"$dir/meta")
     val err = intercept[IllegalArgumentException] {
-      Dedup.loadMinHashIndex(spark, dir)
+      IndexIo.MinHash.load(spark, dir)
     }
     err.getMessage should include("format_version")
   }
@@ -137,10 +137,11 @@ class DedupSpec extends SparkSpec {
   test("bucketed minhash persistence: answers round-trip and the readout never exchanges the banded relation") {
     val dir = java.nio.file.Files.createTempDirectory("mhbkt").toString
     val idx = Dedup.buildMinHashIndex(docs, "text", "doc_id")
-    Dedup.saveMinHashIndexBanded(idx, dir, "minhash_bucketed_spec",
+    IndexIo.MinHash.saveBucketed(idx, dir, "minhash_bucketed_spec",
       buckets = 4)
-    val (loaded, banded) = Dedup.loadMinHashIndexBanded(spark, dir,
+    val (loaded, derived) = IndexIo.MinHash.loadBucketed(spark, dir,
       "minhash_bucketed_spec")
+    val banded = derived("banded")
     loaded.k shouldBe idx.k
     def pairSet(df: org.apache.spark.sql.DataFrame) = df
       .select("doc_a", "doc_b", "est_jaccard").collect()
@@ -162,13 +163,14 @@ class DedupSpec extends SparkSpec {
   test("bucketed minhash persistence survives catalog loss: load re-registers the external table") {
     val dir = java.nio.file.Files.createTempDirectory("mhcat").toString
     val idx = Dedup.buildMinHashIndex(docs, "text", "doc_id")
-    Dedup.saveMinHashIndexBanded(idx, dir, "mh_catalog_spec", buckets = 4)
+    IndexIo.MinHash.saveBucketed(idx, dir, "mh_catalog_spec", buckets = 4)
     // simulate a fresh session: the in-memory catalog entry is gone but
     // the bucketed files under dir/banded are durable (external table)
     spark.sql(s"DROP TABLE ${IndexIo.bucketedTableName("mh_catalog_spec",
       "banded", dir)}")
-    val (loaded, banded) = Dedup.loadMinHashIndexBanded(spark, dir,
+    val (loaded, derived) = IndexIo.MinHash.loadBucketed(spark, dir,
       "mh_catalog_spec")
+    val banded = derived("banded")
     def pairSet(df: org.apache.spark.sql.DataFrame) = df
       .select("doc_a", "doc_b", "est_jaccard").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet

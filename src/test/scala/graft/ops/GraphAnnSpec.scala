@@ -137,8 +137,8 @@ class GraphAnnSpec extends SparkSpec {
     val idx = GraphAnn.buildGraphIndex(corpus, nlist = 4, degree = 5,
       crossDegree = 2)
     val dir = java.nio.file.Files.createTempDirectory("graphidx").toString
-    GraphAnn.saveGraphIndex(idx, dir)
-    val loaded = GraphAnn.loadGraphIndex(spark, dir)
+    IndexIo.Graph.save(idx, dir)
+    val loaded = IndexIo.Graph.load(spark, dir)
     loaded.degree shouldBe 5
     loaded.crossDegree shouldBe 2
     loaded.cells.length shouldBe 4
@@ -155,8 +155,8 @@ class GraphAnnSpec extends SparkSpec {
     val idx = GraphAnn.buildGraphPqIndex(corpus, nlist = 4, degree = 5,
       crossDegree = 2, m = 4, ks = 16, dim = 16)
     val dir = java.nio.file.Files.createTempDirectory("graphpq").toString
-    GraphAnn.saveGraphPqIndex(idx, dir)
-    val loaded = GraphAnn.loadGraphPqIndex(spark, dir)
+    IndexIo.GraphPq.save(idx, dir)
+    val loaded = IndexIo.GraphPq.load(spark, dir)
     loaded.m shouldBe 4
     loaded.codebook.length shouldBe idx.codebook.length
     def run(i: GraphAnn.GraphPqIndex) =
@@ -288,13 +288,13 @@ class GraphAnnSpec extends SparkSpec {
       crossDegree = 2, alpha = Some(1.4))
     idx.poolSize shouldBe 21 // resolved default 3·(degree+crossDegree)
     val dir = java.nio.file.Files.createTempDirectory("graphprune").toString
-    GraphAnn.saveGraphIndex(idx, dir)
+    IndexIo.Graph.save(idx, dir)
     // α-pruned indexes write format_version 2 so a pre-r10 reader
     // (accepts <= 1) fails fast instead of appending under the kNN
     // merge rule and silently breaking rebuild-equivalence
     spark.read.parquet(s"$dir/meta").head()
       .getAs[Int]("format_version") shouldBe 2
-    val loaded = GraphAnn.loadGraphIndex(spark, dir)
+    val loaded = IndexIo.Graph.load(spark, dir)
     loaded.alpha shouldBe Some(1.4)
     loaded.poolSize shouldBe 21
     def run(i: GraphAnn.GraphIndex) =
@@ -384,12 +384,12 @@ class GraphAnnSpec extends SparkSpec {
       crossDegree = 2, m = 4, ks = 8, dim = 16, codebook = Some(cb),
       rotation = Some(model))
     val dir = java.nio.file.Files.createTempDirectory("graphopq").toString
-    GraphAnn.saveGraphPqIndex(idx, dir)
+    IndexIo.GraphPq.save(idx, dir)
     // rotated indexes write format_version 2: a pre-r11 reader would
     // serve unrotated queries against rotated codes — garbage ranks
     spark.read.parquet(s"$dir/meta").head()
       .getAs[Int]("format_version") shouldBe 2
-    val loaded = GraphAnn.loadGraphPqIndex(spark, dir)
+    val loaded = IndexIo.GraphPq.load(spark, dir)
     loaded.rotation.isDefined shouldBe true
     loaded.rotation.get.basis.map(_.toSeq).toSeq shouldBe
       model.basis.map(_.toSeq).toSeq
@@ -403,10 +403,10 @@ class GraphAnnSpec extends SparkSpec {
     val plain = GraphAnn.buildGraphPqIndex(corpus, nlist = 4, degree = 4,
       crossDegree = 2, m = 4, ks = 8, dim = 16)
     val dir2 = java.nio.file.Files.createTempDirectory("graphplain").toString
-    GraphAnn.saveGraphPqIndex(plain, dir2)
+    IndexIo.GraphPq.save(plain, dir2)
     spark.read.parquet(s"$dir2/meta").head()
       .getAs[Int]("format_version") shouldBe 1
-    GraphAnn.loadGraphPqIndex(spark, dir2).rotation shouldBe None
+    IndexIo.GraphPq.load(spark, dir2).rotation shouldBe None
   }
 
   test("offline serve plan: past the broadcast limit both joins go shuffle-hash") {
@@ -776,8 +776,8 @@ class GraphAnnSpec extends SparkSpec {
     val idx = GraphAnn.buildHnswIndex(corpus, nlist = 8, degree = 4,
       crossDegree = 2, levelFanout = 4, maxLevel = 2)
     val dir = java.nio.file.Files.createTempDirectory("hnswidx").toString
-    GraphAnn.saveHnswIndex(idx, dir)
-    val loaded = GraphAnn.loadHnswIndex(spark, dir)
+    IndexIo.Hnsw.save(idx, dir)
+    val loaded = IndexIo.Hnsw.load(spark, dir)
     loaded.levelFanout shouldBe 4
     loaded.maxLevel shouldBe 2
     loaded.alpha shouldBe None
@@ -793,7 +793,7 @@ class GraphAnnSpec extends SparkSpec {
         "level_fanout", "max_level", "alpha", "pool_size")
       .write.mode("overwrite").parquet(s"$dir/meta")
     val err = intercept[IllegalArgumentException] {
-      GraphAnn.loadHnswIndex(spark, dir)
+      IndexIo.Hnsw.load(spark, dir)
     }
     err.getMessage should include("format_version")
   }
@@ -1243,13 +1243,13 @@ class GraphAnnSpec extends SparkSpec {
       centroids = Some(cells))
     val hDir = java.nio.file.Files
       .createTempDirectory("hnswbkt").toString
-    GraphAnn.saveHnswIndexBucketed(h, hDir, "hnsw_bkt_spec",
+    IndexIo.Hnsw.saveBucketed(h, hDir, "hnsw_bkt_spec",
       buckets = 4)
     // fresh-session shape: catalog entries gone, bucketed files durable
     for (sfx <- Seq("nodes", "adj"))
       spark.sql(s"DROP TABLE ${IndexIo.bucketedTableName(
         "hnsw_bkt_spec", sfx, hDir)}")
-    val hB = GraphAnn.loadHnswIndexBucketed(spark, hDir, "hnsw_bkt_spec")
+    val (hB, _) = IndexIo.Hnsw.loadBucketed(spark, hDir, "hnsw_bkt_spec")
     def adjMap(i: GraphAnn.HnswIndex) = i.adj
       .select("layer", "n_id", "neighbors").collect()
       .map(r => (r.getInt(0), r.getLong(1)) -> r.getSeq[Long](2)).toMap
@@ -1274,17 +1274,17 @@ class GraphAnnSpec extends SparkSpec {
           .join(adj.filter(col("layer") === 0), Seq("n_id"))
           .queryExecution.executedPlan.toString).size
     hopExchanges(hB.adj) shouldBe 1
-    hopExchanges(GraphAnn.loadHnswIndex(spark, hDir).adj) shouldBe 2
+    hopExchanges(IndexIo.Hnsw.load(spark, hDir).adj) shouldBe 2
     // flat tier: same contract on the node table
     val g = GraphAnn.buildGraphIndex(corpus, nlist = 5, degree = 4,
       crossDegree = 2, centroids = Some(cells))
     val gDir = java.nio.file.Files
       .createTempDirectory("graphbkt").toString
-    GraphAnn.saveGraphIndexBucketed(g, gDir, "graph_bkt_spec",
+    IndexIo.Graph.saveBucketed(g, gDir, "graph_bkt_spec",
       buckets = 4)
     spark.sql(s"DROP TABLE ${IndexIo.bucketedTableName(
       "graph_bkt_spec", "nodes", gDir)}")
-    val gB = GraphAnn.loadGraphIndexBucketed(spark, gDir,
+    val (gB, _) = IndexIo.Graph.loadBucketed(spark, gDir,
       "graph_bkt_spec")
     def gRun(i: GraphAnn.GraphIndex, bf: Option[Boolean]) =
       GraphAnn.queryGraphIndex(queries, i, k = 4, beam = 3, hops = 2,
@@ -1609,8 +1609,8 @@ class GraphAnnSpec extends SparkSpec {
     }.getMessage should include("budget")
     val pqDir = java.nio.file.Files
       .createTempDirectory("graft_pq_budget").toString
-    GraphAnn.saveGraphPqIndex(pq, pqDir)
-    val back = GraphAnn.loadGraphPqIndex(spark, pqDir)
+    IndexIo.GraphPq.save(pq, pqDir)
+    val back = IndexIo.GraphPq.load(spark, pqDir)
     back.degree shouldBe 8
     back.crossDegree shouldBe 2
     // ...while a degree-unknown legacy index (0) skips the guard:

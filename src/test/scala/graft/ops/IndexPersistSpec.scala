@@ -25,8 +25,8 @@ class IndexPersistSpec extends SparkSpec {
     val idx = Similarity.buildIvfPqIndex(corpus, nlist = 8, m = 4, ks = 8,
       dim = dim)
     val dir = Files.createTempDirectory("graft_idx").toString
-    Similarity.saveIvfPqIndex(idx, dir)
-    val back = Similarity.loadIvfPqIndex(spark, dir)
+    IndexIo.IvfPq.save(idx, dir)
+    val back = IndexIo.IvfPq.load(spark, dir)
 
     back.m shouldBe idx.m
     back.ks shouldBe idx.ks
@@ -99,8 +99,8 @@ class IndexPersistSpec extends SparkSpec {
     val idx = Similarity.buildIvfPqIndex(corpus, nlist = 8, m = 4, ks = 8,
       dim = dim)
     val dir = Files.createTempDirectory("graft_idx2").toString
-    Similarity.saveIvfPqIndex(idx, dir)
-    val back = Similarity.loadIvfPqIndex(spark, dir)
+    IndexIo.IvfPq.save(idx, dir)
+    val back = IndexIo.IvfPq.load(spark, dir)
     val plan = Similarity.queryIvfPqIndex(
         corpus.filter(col("vec_id") < 3), back, 3, nprobe = 2)
       .queryExecution.executedPlan.toString
@@ -115,13 +115,13 @@ class IndexPersistSpec extends SparkSpec {
     val idx = Similarity.buildIvfPqIndex(corpus, nlist = 8, m = 4,
       ks = 8, dim = dim)
     val dir = Files.createTempDirectory("graft_idx_part").toString
-    Similarity.saveIvfPqIndexPartitioned(idx, dir)
+    IndexIo.IvfPq.savePartitioned(idx, dir)
     // the layout is real: one directory per coarse cell
     val cellDirs = new java.io.File(s"$dir/codes").listFiles()
       .filter(_.getName.startsWith("cell=")).map(_.getName).toSet
     cellDirs should not be empty
     // partition discovery restores the cell column — content equal
-    val back = Similarity.loadIvfPqIndex(spark, dir)
+    val back = IndexIo.IvfPq.load(spark, dir)
     def codeMap(i: Similarity.IvfPqIndex) = i.codes
       .select("n_id", "cell", "codes").collect()
       .map(r => r.getLong(0) -> ((r.getInt(1), r.getSeq[Byte](2))))
@@ -146,9 +146,9 @@ class IndexPersistSpec extends SparkSpec {
     // pruned serve (the filter is then a data filter, not a layout
     // contract)
     val plainDir = Files.createTempDirectory("graft_idx_plain").toString
-    Similarity.saveIvfPqIndex(idx, plainDir)
+    IndexIo.IvfPq.save(idx, plainDir)
     Similarity.queryIvfPqIndexPruned(q,
-        Similarity.loadIvfPqIndex(spark, plainDir), 3, nprobe = 2)
+        IndexIo.IvfPq.load(spark, plainDir), 3, nprobe = 2)
       .select("q_id", "n_id", "rank").collect().toSet shouldBe mem
   }
 
@@ -166,12 +166,12 @@ class IndexPersistSpec extends SparkSpec {
     val dirs = (0 until 3).map(i =>
       Files.createTempDirectory(s"graft_scat_shard$i").toString)
     (0 until 3).foreach { i =>
-      Similarity.saveIvfPqIndexPartitioned(Similarity.buildIvfPqIndex(
+      IndexIo.IvfPq.savePartitioned(Similarity.buildIvfPqIndex(
         sharded.filter(col("shard") === i).drop("shard"), nlist = 8,
         m = 4, ks = 8, dim = dim, centroids = Some(full.cells),
         codebook = Some(full.codebook)), dirs(i))
     }
-    val loaded = dirs.map(d => Similarity.loadIvfPqIndex(spark, d))
+    val loaded = dirs.map(d => IndexIo.IvfPq.load(spark, d))
     // exactness: routed scatter over the saved shards == the merged
     // in-memory serve, rank for rank
     val q = corpus.filter(col("vec_id") < 8)
@@ -221,8 +221,8 @@ class IndexPersistSpec extends SparkSpec {
         nlist = 8, m = 4, ks = 8, dim = dim,
         centroids = Some(full.cells), codebook = Some(full.codebook)))
     val dir = Files.createTempDirectory("graft_fleet").toString
-    Similarity.saveIvfPqShards(shards, drifted, dir)
-    val (back, mapBack) = Similarity.loadIvfPqShards(spark, dir)
+    IndexIo.IvfPq.saveShards(shards, drifted, dir)
+    val (back, mapBack) = IndexIo.IvfPq.loadShards(spark, dir)
     mapBack.toSeq shouldBe drifted.toSeq
     back.length shouldBe 3
     back(2).codes.count() shouldBe 0L
@@ -242,8 +242,8 @@ class IndexPersistSpec extends SparkSpec {
       buildG(Similarity.routeByCellMap(corpus, full.cells, mapG, 2)
         .filter(col("shard") === i).drop("shard")))
     val gDir = Files.createTempDirectory("graft_gfleet").toString
-    GraphAnn.saveGraphShards(gShards, mapG, gDir)
-    val (gBack, gMapBack) = GraphAnn.loadGraphShards(spark, gDir)
+    IndexIo.Graph.saveShards(gShards, mapG, gDir)
+    val (gBack, gMapBack) = IndexIo.Graph.loadShards(spark, gDir)
     gMapBack.toSeq shouldBe mapG.toSeq
     def nbrs(i: GraphAnn.GraphIndex) = i.nodes
       .select("n_id", "neighbors").collect()
@@ -258,8 +258,8 @@ class IndexPersistSpec extends SparkSpec {
       buildH(Similarity.routeByCellMap(corpus, full.cells, mapG, 2)
         .filter(col("shard") === i).drop("shard")))
     val hDir = Files.createTempDirectory("graft_hfleet").toString
-    GraphAnn.saveHnswShards(hShards, mapG, hDir)
-    val (hBack, hMapBack) = GraphAnn.loadHnswShards(spark, hDir)
+    IndexIo.Hnsw.saveShards(hShards, mapG, hDir)
+    val (hBack, hMapBack) = IndexIo.Hnsw.loadShards(spark, hDir)
     hMapBack.toSeq shouldBe mapG.toSeq
     def adjMap(i: GraphAnn.HnswIndex) = i.adj
       .select("layer", "n_id", "neighbors").collect()
@@ -284,6 +284,116 @@ class IndexPersistSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       IndexIo.loadCellMap(spark, tailDir)
     }.getMessage should include("tail truncation")
+  }
+
+  /** Every table under `dir` (a directory holding a `_SUCCESS` marker),
+    * keyed by its path below `dir`, as its sorted rows. */
+  private def tables(dir: String): Map[String, Seq[String]] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (new java.io.File(f, "_SUCCESS").exists()) Seq(f)
+      else Option(f.listFiles()).toSeq.flatten.filter(_.isDirectory)
+        .flatMap(walk)
+    walk(new java.io.File(dir)).map { f =>
+      f.getPath.stripPrefix(dir) -> (try spark.read.parquet(f.getPath)
+        .collect().map(_.toString).sorted.toSeq
+      catch { case _: org.apache.spark.sql.AnalysisException => Nil })
+    }.toMap
+  }
+
+  /** An index's scalar fields and driver-side arrays, tables elided. */
+  private def fields(x: Any): Any = x match {
+    case _: org.apache.spark.sql.Dataset[_] => "<table>"
+    case a: Array[_] => a.toSeq.map(fields)
+    case s: Seq[_] => s.map(fields)
+    case p: Product => p.productPrefix -> p.productIterator.map(fields).toList
+    case v => v
+  }
+
+  /** save → load → save leaves equal tables and equal scalar fields;
+    * then every meta stamped one version past the kind's fails fast
+    * with a message naming the kind. */
+  private def roundTrip[A](kind: IndexIo.Kind[_], layout: String, a: A)(
+      save: (A, String) => Unit, load: String => A): Unit =
+    withClue(s"${kind.name}, $layout layout: ") {
+      val d1 = Files.createTempDirectory("graft_codec").toString
+      val d2 = Files.createTempDirectory("graft_codec").toString
+      save(a, d1)
+      val b = load(d1)
+      save(b, d2)
+      tables(d2) shouldBe tables(d1)
+      fields(load(d2)) shouldBe fields(b)
+      tables(d1).keys.filter(_.endsWith("/meta")).foreach { m =>
+        val meta = spark.read.parquet(d1 + m)
+          .withColumn("format_version", lit(kind.version + 1))
+        spark.createDataFrame(java.util.Arrays.asList(meta.collect(): _*),
+          meta.schema).write.mode("overwrite").parquet(d1 + m)
+      }
+      val err = intercept[IllegalArgumentException](load(d1))
+      err.getMessage should include(kind.name)
+      err.getMessage should include("format_version")
+      err.getMessage should include("rebuild")
+    }
+
+  test("one codec: every kind round-trips in every layout it supports; a newer format_version fails fast") {
+    val corpus = vecs(80)
+      .select(col("vec_id"),
+        expr("transform(embedding, x -> cast(x as float))")
+          .as("embedding"))
+      .localCheckpoint()
+    val cells = Similarity.firstVectors(corpus, 4)
+    val ivf = Similarity.buildIvfPqIndex(corpus, nlist = 4, m = 4, ks = 8,
+      dim = dim, centroids = Some(cells))
+    val halves = Seq(corpus.filter(col("vec_id") % 2 === 0),
+      corpus.filter(col("vec_id") % 2 === 1))
+    val cellMap = Array(0, 1, 0, 1)
+    def graph(c: org.apache.spark.sql.DataFrame) =
+      GraphAnn.buildGraphIndex(c, nlist = 4, degree = 4, crossDegree = 2,
+        centroids = Some(cells))
+    def hnsw(c: org.apache.spark.sql.DataFrame) =
+      GraphAnn.buildHnswIndex(c, nlist = 4, degree = 4, crossDegree = 2,
+        levelFanout = 4, maxLevel = 1, centroids = Some(cells))
+    def ivfOf(c: org.apache.spark.sql.DataFrame) =
+      Similarity.buildIvfPqIndex(c, nlist = 4, m = 4, ks = 8, dim = dim,
+        centroids = Some(cells), codebook = Some(ivf.codebook))
+    val docs = Seq((1L, "the spark engine scales out the shuffle join"),
+        (2L, "the spark engine scales out the broadcast join"),
+        (3L, "a suffix array finds the repeated spans"))
+      .toDF("doc_id", "text")
+    val prefix = "graft_codec_spec"
+
+    def layouts[I](kind: IndexIo.Kind[I], i: I, names: String*): Unit = {
+      roundTrip(kind, "plain", i)(kind.save, kind.load(spark, _))
+      if (names.contains("bucketed"))
+        roundTrip(kind, "bucketed", i)(
+          kind.saveBucketed(_, _, prefix, buckets = 4),
+          kind.loadBucketed(spark, _, prefix)._1)
+      if (names.contains("partitioned"))
+        roundTrip(kind, "partitioned", i)(kind.savePartitioned,
+          kind.load(spark, _))
+    }
+    def sharded[I](kind: IndexIo.Kind[I], shards: Seq[I]): Unit =
+      roundTrip(kind, "sharded", shards)(
+        kind.saveShards(_, cellMap, _), kind.loadShards(spark, _)._1)
+
+    layouts(IndexIo.Graph, graph(corpus), "bucketed")
+    sharded(IndexIo.Graph, halves.map(graph))
+    layouts(IndexIo.GraphPq, GraphAnn.buildGraphPqIndex(corpus, nlist = 4,
+      degree = 4, crossDegree = 2, m = 4, ks = 8, dim = dim,
+      centroids = Some(cells)))
+    layouts(IndexIo.Hnsw, hnsw(corpus), "bucketed")
+    sharded(IndexIo.Hnsw, halves.map(hnsw))
+    layouts(IndexIo.HnswPq, GraphAnn.buildHnswPqIndex(corpus, nlist = 4,
+      degree = 4, crossDegree = 2, levelFanout = 4, maxLevel = 1, m = 4,
+      ks = 8, dim = dim, centroids = Some(cells)))
+    layouts(IndexIo.IvfPq, ivf, "partitioned")
+    sharded(IndexIo.IvfPq, halves.map(ivfOf))
+    layouts(IndexIo.MinHash, Dedup.buildMinHashIndex(docs, "text",
+      "doc_id", k = 16, bands = 4), "bucketed")
+    layouts(IndexIo.Substr, SuffixArray.buildSubstrIndex(docs, "text",
+      "doc_id", minLen = 8), "bucketed")
+    layouts(IndexIo.Unigram, TextOps.unigramTrain(docs, "text",
+      vocabSize = 24))
+    layouts(IndexIo.Bm25, TextOps.bm25State(docs, "text", "doc_id"))
   }
 
   test("resolveBucketedTable re-registers a stale same-name entry that points at a DIFFERENT directory") {

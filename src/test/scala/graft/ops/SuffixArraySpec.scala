@@ -209,8 +209,7 @@ class SuffixArraySpec extends SparkSpec {
       : (Set[(String, Long)], Set[(Int, Long, Long, Long)],
          Set[(Long, Long, Long, Long)]) = (
     i.dictChars.collect().map(r => (r.getString(0), r.getLong(1))).toSet,
-    // by NAME: the width-partitioned persisted layout reorders columns
-    // (partition col last)
+    // by NAME, so the comparison does not depend on column order
     i.dictPairs.select("__w", "__r1", "__r2", "__cls").collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSet,
@@ -406,9 +405,9 @@ class SuffixArraySpec extends SparkSpec {
     val idx = SuffixArray.buildSubstrIndex(all.toDF("doc_id", "text"),
       "text", "doc_id", minLen = 8)
     val dir = java.nio.file.Files.createTempDirectory("substrbkt").toString
-    SuffixArray.saveSubstrIndexBucketed(idx, dir, "substr_bucketed_spec",
-      buckets = 8, partitionDictByWidth = true)
-    val loaded = SuffixArray.loadSubstrIndexBucketed(spark, dir,
+    IndexIo.Substr.saveBucketed(idx, dir, "substr_bucketed_spec",
+      buckets = 8)
+    val (loaded, _) = IndexIo.Substr.loadBucketed(spark, dir,
       "substr_bucketed_spec")
     indexState(loaded) shouldBe indexState(idx)
     spansOf(loaded) shouldBe spansOf(idx)
@@ -425,15 +424,7 @@ class SuffixArraySpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     "Exchange hashpartitioning".r.findAllIn(spansPlan).size shouldBe 1
     spansPlan should include("Exchange hashpartitioning(__id")
-    // the pair dictionary is width-partitioned: each append round's
-    // per-width lookup reads only its slice (PartitionFilters at the
-    // scan), cutting the per-append dictionary bytes from
-    // rounds x |dict| to |dict|
-    val prunePlan = loaded.dictPairs.filter(col("__w") === 4)
-      .queryExecution.executedPlan.toString
-    prunePlan should include("PartitionFilters")
-    "\\(__w#\\d+ = 4\\)".r.findFirstIn(prunePlan) should not be empty
-    // an append on the loaded width-partitioned index still equals the
+    // an append on the loaded bucketed index still equals the
     // from-scratch union build
     val batch = Seq((500L, "zzqqzzqqzzqqzzqq")).toDF("doc_id", "text")
     val grown = SuffixArray.appendToSubstrIndex(loaded, batch, "text",
@@ -449,14 +440,14 @@ class SuffixArraySpec extends SparkSpec {
     val idx = SuffixArray.buildSubstrIndex(all.toDF("doc_id", "text"),
       "text", "doc_id", minLen = 8)
     val dir = java.nio.file.Files.createTempDirectory("substrcat").toString
-    SuffixArray.saveSubstrIndexBucketed(idx, dir, "substr_catalog_spec",
-      buckets = 4, partitionDictByWidth = true)
+    IndexIo.Substr.saveBucketed(idx, dir, "substr_catalog_spec",
+      buckets = 4)
     // simulate a fresh session: drop both catalog entries; the bucketed
     // files are durable (external tables)
     for (sfx <- Seq("dict_pairs", "keys"))
       spark.sql(s"DROP TABLE ${IndexIo.bucketedTableName(
         "substr_catalog_spec", sfx, dir)}")
-    val loaded = SuffixArray.loadSubstrIndexBucketed(spark, dir,
+    val (loaded, _) = IndexIo.Substr.loadBucketed(spark, dir,
       "substr_catalog_spec")
     indexState(loaded) shouldBe indexState(idx)
     spansOf(loaded) shouldBe spansOf(idx)
@@ -464,12 +455,6 @@ class SuffixArraySpec extends SparkSpec {
     val aggPlan = loaded.keys.groupBy("__r1", "__r2")
       .agg(count(lit(1))).queryExecution.executedPlan.toString
     aggPlan should not include "Exchange hashpartitioning"
-    // ... and the width partitions: a doubling round's per-width
-    // lookup prunes to its slice at the SCAN (re-registration included)
-    val prunePlan = loaded.dictPairs.filter(col("__w") === 4)
-      .queryExecution.executedPlan.toString
-    prunePlan should include("PartitionFilters")
-    "\\(__w#\\d+ = 4\\)".r.findFirstIn(prunePlan) should not be empty
   }
 
   test("singleton pruning is result-invisible: prune=false replays identical spans") {
@@ -519,8 +504,8 @@ class SuffixArraySpec extends SparkSpec {
     val idx = SuffixArray.buildSubstrIndex(all.toDF("doc_id", "text"),
       "text", "doc_id", minLen = 8, maxDocLen = 150)
     val dir = java.nio.file.Files.createTempDirectory("substridx").toString
-    SuffixArray.saveSubstrIndex(idx, dir)
-    val loaded = SuffixArray.loadSubstrIndex(spark, dir)
+    IndexIo.Substr.save(idx, dir)
+    val loaded = IndexIo.Substr.load(spark, dir)
     loaded.minLen shouldBe idx.minLen
     loaded.targetW shouldBe idx.targetW
     loaded.stride shouldBe idx.stride
@@ -563,7 +548,7 @@ class SuffixArraySpec extends SparkSpec {
     for (sfx <- Seq("dict_pairs", "keys"))
       spark.sql(s"DROP TABLE ${IndexIo.bucketedTableName(
         "substr_v1_spec", sfx, dir)}")
-    val loaded = SuffixArray.loadSubstrIndexBucketed(spark, dir,
+    val (loaded, _) = IndexIo.Substr.loadBucketed(spark, dir,
       "substr_v1_spec")
     loaded.dictPairs.count() shouldBe idx.dictPairs.count()
     indexState(loaded) shouldBe indexState(idx)
@@ -571,22 +556,22 @@ class SuffixArraySpec extends SparkSpec {
   }
 
   test("default bucketed save is the unpartitioned layout (v1) and round-trips") {
-    // round-13 trade: the explicit width partitions bought no bytes on
-    // width-sorted writes (stats already prune) and cost ~1.4× save
-    // wall, so the guarantee became opt-in — the DEFAULT save must
-    // stamp v1, skip the partition directories, and read back whole
+    // the explicit width partitions (the retired v2 layout) bought no
+    // bytes on width-sorted writes (stats already prune) and cost ~1.4×
+    // save wall: the bucketed save must stamp v1, skip the partition
+    // directories, and read back whole
     val all = randomCorpus(8, seed = 293)
     val idx = SuffixArray.buildSubstrIndex(all.toDF("doc_id", "text"),
       "text", "doc_id", minLen = 8)
     val dir = java.nio.file.Files.createTempDirectory("substrdef").toString
-    SuffixArray.saveSubstrIndexBucketed(idx, dir, "substr_default_spec",
+    IndexIo.Substr.saveBucketed(idx, dir, "substr_default_spec",
       buckets = 4)
     spark.read.parquet(s"$dir/meta").head()
       .getAs[Int]("format_version") shouldBe 1
     // no __w=... partition directories on disk
     new java.io.File(s"$dir/dict_pairs").listFiles()
       .count(_.getName.startsWith("__w=")) shouldBe 0
-    val loaded = SuffixArray.loadSubstrIndexBucketed(spark, dir,
+    val (loaded, _) = IndexIo.Substr.loadBucketed(spark, dir,
       "substr_default_spec")
     indexState(loaded) shouldBe indexState(idx)
     spansOf(loaded) shouldBe spansOf(idx)
@@ -610,32 +595,32 @@ class SuffixArraySpec extends SparkSpec {
     idx.dictPairs.count() shouldBe 0
     idx.keys.count() shouldBe 0
     val dir = java.nio.file.Files.createTempDirectory("substrmt").toString
-    SuffixArray.saveSubstrIndexBucketed(idx, dir, "substr_empty_spec",
+    IndexIo.Substr.saveBucketed(idx, dir, "substr_empty_spec",
       buckets = 4)
     for (sfx <- Seq("dict_pairs", "keys")) {
       val t = IndexIo.bucketedTableName("substr_empty_spec", sfx, dir)
       if (spark.catalog.tableExists(t)) spark.sql(s"DROP TABLE $t")
     }
-    val loaded = SuffixArray.loadSubstrIndexBucketed(spark, dir,
+    val (loaded, _) = IndexIo.Substr.loadBucketed(spark, dir,
       "substr_empty_spec")
     indexState(loaded) shouldBe indexState(idx)
     // both loaders agree on which artifacts are legal: the plain path
     // reads the same empty relations through the same fallback
-    indexState(SuffixArray.loadSubstrIndex(spark, dir)) shouldBe
+    indexState(IndexIo.Substr.load(spark, dir)) shouldBe
       indexState(idx)
     // ... but a MISSING relation directory is a broken artifact, not
     // an empty one — fail loudly instead of loading an empty table
     // (the silent-empty-load class the format dispatch exists to kill)
     val broken = java.nio.file.Files
       .createTempDirectory("substrbrk").toString
-    SuffixArray.saveSubstrIndexBucketed(idx, broken,
+    IndexIo.Substr.saveBucketed(idx, broken,
       "substr_broken_spec", buckets = 4)
     def rmr(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rmr); f.delete()
     }
     rmr(new java.io.File(s"$broken/keys"))
     an[Exception] should be thrownBy
-      SuffixArray.loadSubstrIndex(spark, broken).keys.count()
+      IndexIo.Substr.load(spark, broken).keys.count()
     // the degenerate state still appends: the union build from an
     // empty start equals the one-shot
     val batch = Seq((2L, "xyxy"), (3L, "xyxy")).toDF("doc_id", "text")

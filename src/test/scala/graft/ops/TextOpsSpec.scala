@@ -293,8 +293,8 @@ class TextOpsSpec extends SparkSpec {
       (2L, "spark join shuffle join")).toDF("doc_id", "text")
     val state = TextOps.bm25State(docs, "text", "doc_id")
     val dir = java.nio.file.Files.createTempDirectory("bm25st").toString
-    TextOps.saveBm25State(state, dir)
-    val loaded = TextOps.loadBm25State(spark, dir)
+    IndexIo.Bm25.save(state, dir)
+    val loaded = IndexIo.Bm25.load(spark, dir)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     rows(loaded) shouldBe rows(state)
@@ -310,7 +310,7 @@ class TextOpsSpec extends SparkSpec {
     spark.createDataFrame(Seq(Tuple1(7))).toDF("format_version")
       .write.mode("overwrite").parquet(s"$dir/meta")
     val err = intercept[IllegalArgumentException] {
-      TextOps.loadBm25State(spark, dir)
+      IndexIo.Bm25.load(spark, dir)
     }
     err.getMessage should include("format_version")
   }

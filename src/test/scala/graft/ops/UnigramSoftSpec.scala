@@ -88,8 +88,8 @@ class UnigramSoftSpec extends SparkSpec {
     val m1 = TextOps.unigramEmStep(table,
       TextOps.unigramSeedModel(table, 8, 2))
     val dir = java.nio.file.Files.createTempDirectory("unigram").toString
-    TextOps.saveUnigramModel(spark, m1, dir)
-    val m2 = TextOps.loadUnigramModel(spark, dir)
+    IndexIo.Unigram.save(m1, dir)
+    val m2 = IndexIo.Unigram.load(spark, dir)
     m2.maxPieceLen shouldBe m1.maxPieceLen
     m2.pieces.toSeq shouldBe m1.pieces.toSeq
     m2.counts.toSeq shouldBe m1.counts.toSeq

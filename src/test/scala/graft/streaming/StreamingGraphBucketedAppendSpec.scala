@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.ops.GraphAnn
+import graft.ops.{GraphAnn, IndexIo}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -34,7 +34,7 @@ class StreamingGraphBucketedAppendSpec extends SparkSpec {
       .createTempDirectory("graphbktA").toString
     val dirB = java.nio.file.Files
       .createTempDirectory("graphbktB").toString
-    GraphAnn.saveGraphIndexBucketed(idx0, dirA, "graph_bkt_stream",
+    IndexIo.Graph.saveBucketed(idx0, dirA, "graph_bkt_stream",
       buckets = 4)
     @volatile var cur = dirA
     @volatile var next = dirB
@@ -44,9 +44,9 @@ class StreamingGraphBucketedAppendSpec extends SparkSpec {
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         if (!batch.isEmpty) {
           val grown = GraphAnn.appendToGraphIndex(
-            GraphAnn.loadGraphIndexBucketed(spark, cur,
-              "graph_bkt_stream"), batch)
-          GraphAnn.saveGraphIndexBucketed(grown, next,
+            IndexIo.Graph.loadBucketed(spark, cur, "graph_bkt_stream")._1,
+            batch)
+          IndexIo.Graph.saveBucketed(grown, next,
             "graph_bkt_stream", buckets = 4)
           val t = cur; cur = next; next = t
         }
@@ -59,7 +59,7 @@ class StreamingGraphBucketedAppendSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
 
-    val loaded = GraphAnn.loadGraphIndexBucketed(spark, cur,
+    val (loaded, _) = IndexIo.Graph.loadBucketed(spark, cur,
       "graph_bkt_stream")
     val rebuilt = GraphAnn.buildGraphIndex(
       (0 until 90).map(i => (i.toLong, vec(i)))

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.ops.Similarity
+import graft.ops.{IndexIo, Similarity}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -34,7 +34,7 @@ class StreamingIvfPqAppendSpec extends SparkSpec {
       .createTempDirectory("ivfpqstreamA").toString
     val dirB = java.nio.file.Files
       .createTempDirectory("ivfpqstreamB").toString
-    Similarity.saveIvfPqIndexPartitioned(idx0, dirA)
+    IndexIo.IvfPq.savePartitioned(idx0, dirA)
     @volatile var cur = dirA
     @volatile var next = dirB
 
@@ -43,8 +43,8 @@ class StreamingIvfPqAppendSpec extends SparkSpec {
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         if (!batch.isEmpty) {
           val grown = Similarity.appendToIvfPqIndex(
-            Similarity.loadIvfPqIndex(spark, cur), batch)
-          Similarity.saveIvfPqIndexPartitioned(grown, next)
+            IndexIo.IvfPq.load(spark, cur), batch)
+          IndexIo.IvfPq.savePartitioned(grown, next)
           val t = cur; cur = next; next = t
         }
         ()
@@ -60,7 +60,7 @@ class StreamingIvfPqAppendSpec extends SparkSpec {
     new java.io.File(s"$cur/codes").listFiles()
       .count(_.getName.startsWith("cell=")) should be > 0
 
-    val loaded = Similarity.loadIvfPqIndex(spark, cur)
+    val loaded = IndexIo.IvfPq.load(spark, cur)
     // the appends encoded against the SAME frozen artifacts the base
     // build trained, so the rebuild oracle freezes them too
     val rebuilt = Similarity.buildIvfPqIndex(
